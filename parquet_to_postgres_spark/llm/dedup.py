@@ -8,8 +8,11 @@ signature — unlike Spark's murmur3 ``hash()`` vs DuckDB's ``hash()``,
 which disagree.  Hashing directly (no distinct+rank token dictionary)
 matters at 100 TB: under Heaps' law the vocabulary grows into the
 billions, and ANY global id-assignment step — even a two-phase ranked
-one — is an extra shuffle+join per signature job.  The md5 path needs
-zero shuffles before the per-doc aggregate.
+one — is an extra shuffle+join per signature job.  MinHash signatures
+have ONE implementation, the Arrow kernel :func:`minhash_profiles_arrow`,
+which finishes every signature in the scan stage with no shuffle; its
+aggregate form lives on only as the DuckDB oracle SQL
+(``queries.llm_q.minhash_profile_sql``).
 
 Scale notes: the banded LSH join groups by (band, key) so candidate
 generation is an equi-shuffle, never a cross join.  Exact dedup is a
@@ -87,85 +90,9 @@ def token_dictionary(tokens: DataFrame) -> DataFrame:
     ).withColumn("token_id", F.col("token_id").cast("int"))
 
 
-def _minhash_aggs(num_hashes: int) -> list[Column]:
-    # All mins read the pre-reduced ``vmod`` column (token_id mod P,
-    # projected once) so the modulo isn't re-evaluated per hash function.
-    aggs = []
-    for j in range(num_hashes):
-        a, b = hash_params(j)
-        aggs.append(
-            F.min(
-                (F.lit(a).cast("long") * F.col("vmod") + F.lit(b)) % MINHASH_P
-            ).alias(f"mh{j}")
-        )
-    return aggs
-
-
-def _units(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int | None
-) -> DataFrame:
-    """The (id, token) set a signature is computed over: char shingles
-    when ``shingle_n`` is given, whitespace word tokens otherwise.
-
-    The input is :func:`~..tables.spread` first: shingle explosion plus
-    128 hash-mins per doc is compute-bound, so an under-partitioned scan
-    (the one-row-group test fixtures) would pin the whole signature job
-    on one core.  No-ops when the scan already has cluster parallelism
-    (any real multi-file table)."""
-    df = spread(df)
-    if shingle_n is not None:
-        return shingles(df, shingle_n, text_col, id_col)
-    return tokenize(df, text_col, id_col)
-
-
-def _with_unit_ids(toks: DataFrame, id_col: str) -> DataFrame:
-    return toks.select(
-        id_col, unit_id("token").alias("token_id")
-    ).withColumn("vmod", F.col("token_id") % MINHASH_P)
-
-
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int | None = None,
-) -> DataFrame:
-    """Per-doc MinHash signature: one min-aggregate per hash function.
-
-    Dictionary-free: tokens hash directly via md5, so the WHOLE job is
-    explode → one shuffle (the per-doc aggregate) — no vocabulary
-    distinct, no rank, no dictionary join."""
-    with_ids = _with_unit_ids(_units(df, text_col, id_col, shingle_n), id_col)
-    return with_ids.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
-
-
-def minhash_profiles(
-    df: DataFrame,
-    num_hashes: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int | None = None,
-) -> DataFrame:
-    """Signature *and* token-id set in ONE aggregation per doc.
-
-    The token-id set rides along as a sorted long array so the LSH
-    verify stage can compute exact Jaccard with a per-row
-    ``array_intersect`` instead of re-tokenizing the corpus and
-    shuffle-joining candidate pairs against every (doc, token) row — the
-    latter is quadratic in duplicate-cluster size × tokens-per-doc and
-    dominated the runtime.  ``tokset`` holds the FULL 60-bit ids (not
-    the mod-P reduction), so set equality ≡ token-string equality up to
-    md5 truncation and the Jaccard is exact."""
-    with_ids = _with_unit_ids(_units(df, text_col, id_col, shingle_n), id_col)
-    return (
-        with_ids.groupBy(id_col)
-        .agg(
-            F.sort_array(F.collect_set("token_id")).alias("tokset"),
-            *_minhash_aggs(num_hashes),
-        )
-        .withColumn("sz", F.size("tokset").cast("long"))
-    )
+# Arrow ListArray offsets are int32: the kernel splits its output so no
+# emitted batch's token total passes this.
+_MAX_LIST_OFFSET = (1 << 31) - 1
 
 
 def minhash_profiles_arrow(
@@ -175,44 +102,48 @@ def minhash_profiles_arrow(
     id_col: str = "doc_id",
     shingle_n: int | None = 5,
 ) -> DataFrame:
-    """:func:`minhash_profiles`, computed ZERO-SHUFFLE in an Arrow/numpy
-    kernel — bit-identical values (same md5 60-bit unit ids, same affine
-    family, same int64 arithmetic; pinned by
+    """Per-doc MinHash profile ``(id_col, tokset, mh0..mh{k-1}, sz)``,
+    computed ZERO-SHUFFLE in an Arrow/numpy kernel — the package's one
+    MinHash signature implementation.
+
+    Units are the distinct character ``shingle_n``-grams of the text, or
+    its distinct single-space word tokens when ``shingle_n`` is None.
+    Each unit hashes to its md5 60-bit id; ``mh_j`` is the min of the
+    affine family ``h_j`` over the doc's ids, ``tokset`` the sorted id
+    set (FULL 60-bit ids, so the verify stage's Jaccard is exact) and
+    ``sz`` its size.  Values are bit-identical to the DuckDB SQL
+    ``queries.llm_q.minhash_profile_sql`` (pinned by
     tests/test_equivalence.py::test_minhash_profiles_arrow_equivalence).
+    A doc with no units — NULL text, or text shorter than the shingle
+    width — emits no row.  ``id_col`` keeps its input type.
 
-    Guide §4.2: the aggregate path explodes every distinct shingle into
-    a row, evaluates md5 + 128 affine mins per row in codegen, and
-    shuffles the per-doc partials; per-row expression evaluation of 128
-    aggregate updates is exactly the "bulk data manipulation" case where
-    handing whole batches to vectorized native code wins.  Here each
-    task shingles its docs in Python (with a per-task gram→id memo —
-    corpus shingle vocabularies repeat heavily), computes all
-    ``num_hashes`` mins per doc as one numpy broadcast
-    ``(A·v + B) mod P`` (chunked so a pathological multi-MB doc is
-    bounded at ~64 Mi of matrix instead of 128×|grams|), and emits ONE
-    row per doc — no explode, no exchange, the profile leaves the scan
-    stage finished.
-
-    At 100 TB the shape is strictly better than the aggregate path (the
-    per-doc aggregate shuffle disappears; the kernel is embarrassingly
-    parallel over scan splits).  The arithmetic bound is the module
-    header's: A_j·(v mod P) ≤ 9.2e18 < int64 max, so numpy int64 never
-    wraps.  Docs shorter than the shingle width emit no row, exactly
-    like the aggregate path's empty groupBy."""
+    Why a batch kernel: an explode → aggregate route evaluates md5 + 128
+    affine mins per shingle row in codegen and shuffles the per-doc
+    partials; handing whole batches to vectorized numpy wins (A/B 4.28 →
+    0.80 s, plans/r16/probes_batch1.log).  Each task shingles its docs
+    in Python (with a per-task gram→id memo — corpus shingle
+    vocabularies repeat heavily), computes all ``num_hashes`` mins per
+    doc as one numpy broadcast ``(A·v + B) mod P`` (chunked so a
+    pathological multi-MB doc is bounded at ~64 Mi of matrix instead of
+    128×|grams|), and emits ONE row per doc — no explode, no exchange,
+    the profile leaves the scan stage finished.  It is a plain
+    projection of its input, so it also runs on every micro-batch inside
+    ``foreachBatch``.  The arithmetic bound is the module header's:
+    A_j·(v mod P) ≤ 9.2e18 < int64 max, so numpy int64 never wraps."""
     import numpy as np
+    from pyspark.sql import types as T
 
     a_arr = [hash_params(j)[0] for j in range(num_hashes)]
     b_arr = [hash_params(j)[1] for j in range(num_hashes)]
     n = shingle_n
     p = MINHASH_P
     word_units = n is None
-    # explicit StructType so the tokset element type matches the
-    # aggregate path's collect_set exactly (containsNull=False)
-    from pyspark.sql import types as T
-
+    max_offset = _MAX_LIST_OFFSET
+    names = [id_col, "tokset", *[f"mh{j}" for j in range(num_hashes)], "sz"]
+    # explicit StructType: tokset elements are never NULL
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField(id_col, df.schema[id_col].dataType),
             T.StructField("tokset", T.ArrayType(T.LongType(), False)),
             *[
                 T.StructField(f"mh{j}", T.LongType())
@@ -241,12 +172,10 @@ def minhash_profiles_arrow(
             return r
 
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids: list[int] = []
+            keep: list[int] = []
             toksets: list[np.ndarray] = []
             sigs: list[np.ndarray] = []
-            for did, txt in zip(ids, texts):
+            for row, txt in enumerate(batch.column(1).to_pylist()):
                 if txt is None:
                     continue
                 if word_units:
@@ -269,30 +198,39 @@ def minhash_profiles_arrow(
                     np.minimum(
                         acc, ((A * chunk + B) % p).min(axis=1), out=acc
                     )
-                out_ids.append(did)
+                keep.append(row)
                 toksets.append(tids)
                 sigs.append(acc)
-            if not out_ids:
+            if not keep:
                 continue
-            lens = np.array([t.size for t in toksets], dtype=np.int32)
-            offsets = np.zeros(len(lens) + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
-            tok_col = pa.ListArray.from_arrays(
-                pa.array(offsets),
-                pa.array(np.concatenate(toksets), pa.int64()),
-            )
+            ids = batch.column(0).take(pa.array(keep, pa.int64()))
+            lens = np.array([t.size for t in toksets], dtype=np.int64)
+            ends = np.cumsum(lens)
+            flat = np.concatenate(toksets)
             sig = np.stack(sigs, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, pa.int64()),
-                    tok_col,
-                    *[pa.array(sig[j], pa.int64()) for j in range(num_hashes)],
-                    pa.array(lens.astype(np.int64), pa.int64()),
-                ],
-                names=[id_col, "tokset"]
-                + [f"mh{j}" for j in range(num_hashes)]
-                + ["sz"],
-            )
+            # one RecordBatch per run of docs whose token total fits the
+            # int32 offsets; a single doc is always emitted whole
+            lo = 0
+            while lo < len(keep):
+                base = ends[lo] - lens[lo]
+                hi = max(
+                    lo + 1,
+                    int(np.searchsorted(ends, base + max_offset, "right")),
+                )
+                offsets = np.concatenate(([0], ends[lo:hi] - base))
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        ids.slice(lo, hi - lo),
+                        pa.ListArray.from_arrays(
+                            pa.array(offsets.astype(np.int32)),
+                            pa.array(flat[base : ends[hi - 1]]),
+                        ),
+                        *[pa.array(sig[j, lo:hi]) for j in range(num_hashes)],
+                        pa.array(lens[lo:hi]),
+                    ],
+                    names=names,
+                )
+                lo = hi
 
     return spread(df).select(id_col, text_col).mapInArrow(kernel, schema)
 
@@ -334,14 +272,7 @@ def band_keys(
     """(id, band, key) LSH band keys from a signature frame — the ONE
     derivation shared by pair generation (:func:`minhash_band_pairs`),
     the corpus band store, and streaming dedup, so keys can never drift
-    between the batch and streaming paths.
-
-    Rows with a NULL signature (``minhash_signatures_rowwise`` emits
-    all-NULL ``mh*`` for docs shorter than the shingle width) produce NO
-    band keys: ``concat_ws`` skips NULLs, so without the guard every
-    empty-unit doc would collapse onto key ``""`` in every band and all
-    short docs would become mutual near-duplicates.  Filtering here
-    matches the aggregate path's emit-no-row semantics exactly."""
+    between the batch and streaming paths."""
     n_bands = num_hashes // rows_per_band
     band_structs = []
     for bidx in range(n_bands):
@@ -355,68 +286,9 @@ def band_keys(
             )
         )
     return (
-        signatures.where(F.col("mh0").isNotNull())
-        .select(id_col, F.explode(F.array(*band_structs)).alias("bk"))
+        signatures.select(id_col, F.explode(F.array(*band_structs)).alias("bk"))
         .select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     )
-
-
-def minhash_signatures_rowwise(
-    df: DataFrame,
-    num_hashes: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int | None = 5,
-) -> DataFrame:
-    """Per-ROW MinHash signature via higher-order functions — ZERO
-    shuffles: shingle set, md5 unit ids, and all ``num_hashes`` mins are
-    computed row-wise over the scan, with no aggregate and no exchange.
-    (The one Generate node — an explode of a single-element array — is
-    a row-preserving projection barrier binding the unit-id array, not
-    a fan-out; see the comment at the return.)
-
-    Values are IDENTICAL to :func:`minhash_signatures` (same unit ids,
-    same affine family — equivalence-tested); the difference is purely
-    physical.  This is the signature path for STREAMING input, where a
-    pre-join aggregation would demand watermark state: a stateless
-    projection composes with any stream.  For batch it trades the
-    explode→aggregate's map-side combine for straight-line per-row
-    compute — same asymptotics, no exchange at all.  A doc shorter than
-    the shingle width gets NULL signature columns (its unit set is
-    empty; the aggregate path simply emits no row)."""
-    if shingle_n is not None:
-        units = char_ngrams(text_col, shingle_n)
-    else:
-        units = F.array_distinct(F.split(F.col(text_col), " "))
-    vmods = F.transform(
-        units,
-        lambda u: F.conv(F.substring(F.md5(u), 1, 15), 16, 10).cast("long")
-        % MINHASH_P,
-    )
-    # closure factory: PySpark reads a defaulted lambda's arity as the
-    # HOF's argument count, so the constants must be captured, not
-    # defaulted
-    def affine(a: int, b: int):
-        return lambda v: (F.lit(a).cast("long") * v + F.lit(b)) % MINHASH_P
-
-    sig_cols = []
-    for j in range(num_hashes):
-        a, b = hash_params(j)
-        sig_cols.append(
-            F.array_min(F.transform(F.col("__vmods"), affine(a, b))).alias(
-                f"mh{j}"
-            )
-        )
-    # Generate barrier (explode of a one-element array): the md5 unit-id
-    # transform is evaluated exactly once per row and the num_hashes
-    # array_min folds reference the materialized attribute — a plain
-    # withColumn projection leaves the optimizer free to inline the
-    # shingle+md5 work into each of the 128 references (measured ~28%
-    # slower at sf0.1; the round-8 projection-binding pattern, see
-    # similarity._pq_barrier).  Values are bit-identical.
-    return df.select(
-        id_col, F.explode(F.array(vmods)).alias("__vmods")
-    ).select(id_col, *sig_cols)
 
 
 def corpus_band_store(
@@ -435,7 +307,9 @@ def corpus_band_store(
     (:func:`~..operators.write_bucketed`) so every subsequent dedup
     semi-join is shuffle-free on the store side; its size is
     n_docs × n_bands rows of small strings — a fraction of the corpus."""
-    sigs = minhash_signatures(corpus, num_hashes, text_col, id_col, shingle_n)
+    sigs = minhash_profiles_arrow(
+        corpus, num_hashes, text_col, id_col, shingle_n
+    )
     return (
         band_keys(sigs, num_hashes, rows_per_band, id_col)
         .select("band", "key")
@@ -457,15 +331,16 @@ def near_dedup_against_store(
 
     This is the incremental-ingest dedup shape (new crawl batch vs
     everything already in the training set).  Signatures come from the
-    ZERO-shuffle row-wise path, so the whole operation is: projection →
-    band explode → (band, key) semi-join → distinct matched ids →
-    anti-join.  Candidate-level filtering (no exact-Jaccard verify):
-    with 8-row bands a collision implies high similarity with
+    zero-shuffle Arrow kernel :func:`minhash_profiles_arrow`, so the
+    whole operation is: per-batch kernel → band explode → (band, key)
+    semi-join → distinct matched ids → anti-join.  Candidate-level
+    filtering (no exact-Jaccard verify): with 8-row bands a collision
+    implies high similarity with
     overwhelming probability, and at ingest time a false DROP of a
     borderline near-duplicate is the cheap error direction.  Callers
     needing verified drops join the survivors of a
     :func:`minhash_band_pairs`-style candidate check instead."""
-    sigs = minhash_signatures_rowwise(
+    sigs = minhash_profiles_arrow(
         batch, num_hashes, text_col, id_col, shingle_n
     )
     bands = band_keys(sigs, num_hashes, rows_per_band, id_col)
@@ -477,21 +352,23 @@ def near_dedup_against_store(
     return batch.join(matched, id_col, "left_anti")
 
 
-def profile_jaccard(profiles: DataFrame, pairs: DataFrame) -> DataFrame:
+def profile_jaccard(
+    profiles: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
     """Exact token-set Jaccard for candidate pairs, from the precomputed
-    token-id arrays in :func:`minhash_profiles`.
+    token-id arrays in :func:`minhash_profiles_arrow`.
 
     Per-pair cost is one ``array_intersect`` over two small int arrays —
     no shuffle beyond the two equi-joins that attach the arrays.  At
     100 TB the profiles side is hash-partitioned on doc id and the pair
     list is the small side; only candidates pay the exact cost."""
     pa = profiles.select(
-        F.col("doc_id").alias("id_a"),
+        F.col(id_col).alias("id_a"),
         F.col("tokset").alias("ts_a"),
         F.col("sz").alias("sz_a"),
     )
     pb = profiles.select(
-        F.col("doc_id").alias("id_b"),
+        F.col(id_col).alias("id_b"),
         F.col("tokset").alias("ts_b"),
         F.col("sz").alias("sz_b"),
     )
@@ -617,23 +494,6 @@ def char_ngrams(text_col: str, n: int = 3) -> Column:
     )
 
 
-def shingles(
-    df: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, token) pairs where the unit is a distinct character n-gram.
-
-    Character shingles (Broder's original MinHash unit) are the right
-    granularity for near-dup detection on natural-language corpora: the
-    shingle space is combinatorially larger than the word vocabulary, so
-    unrelated documents share few shingles even when they share most of
-    their WORDS.  (On this synthetic corpus the word vocabulary is 31
-    tokens and every doc uses ~27 of them — word-level Jaccard is ~0.77
-    between ALL pairs and word-level LSH degenerates to all-pairs.)"""
-    return df.select(
-        id_col, F.explode(char_ngrams(text_col, n)).alias("token")
-    )
-
-
 # canonical home is ..checkpoint (bench.py uses them too); aliased here
 # because connected_components is their primary in-package consumer
 _persistent_rdd_ids = persistent_rdd_ids
@@ -753,13 +613,11 @@ def near_dedup_corpus(
     in no near-dup pair pass through without joining the component
     computation at all (left-anti style via a left join on the kept /
     dropped mapping, which is tiny relative to the corpus)."""
-    # r16: the Arrow/numpy profile kernel (bit-identical values, zero
-    # shuffle — guide §4.2; interleaved A/B 4.28 → 0.80 s).
     profiles = stable_checkpoint(
         minhash_profiles_arrow(df, num_hashes, text_col, id_col, shingle_n)
     )
     pairs = minhash_band_pairs(profiles, num_hashes, rows_per_band, id_col)
-    dup_pairs = profile_jaccard(profiles, pairs).where(
+    dup_pairs = profile_jaccard(profiles, pairs, id_col).where(
         F.col("jaccard") >= threshold
     )
     comps = connected_components(dup_pairs)

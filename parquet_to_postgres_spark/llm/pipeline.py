@@ -255,7 +255,10 @@ def curate_increment(
     exact dedup (within the increment, then anti-join the historical
     ``exact_store`` of md5 keys) → MinHash near-dedup (within the
     increment, then band-key semi-join against the historical
-    ``band_store``, :func:`~.dedup.near_dedup_against_store`).
+    ``band_store``, :func:`~.dedup.near_dedup_against_store`).  The
+    increment's band keys come from ONE pass of the zero-shuffle Arrow
+    MinHash kernel :func:`~.dedup.minhash_profiles_arrow`, shared by
+    the store check and the returned band delta.
 
     Returns ``(survivors, report, exact_keys_delta, band_rows_delta)``:
     the caller WRITES the two deltas into the stores (bucketed on their
@@ -274,7 +277,7 @@ def curate_increment(
     from .dedup import (
         band_keys,
         dedup_repeated_spans,
-        minhash_signatures_rowwise,
+        minhash_profiles_arrow,
         near_dedup_corpus,
     )
     from .text import normalize_text, normalize_unicode, scrub_pii
@@ -357,9 +360,7 @@ def curate_increment(
     # each re-shingled and re-hashed the batch from scratch — two full
     # extra passes of 128 hash evaluations per shingle).
     bands = band_keys(
-        minhash_signatures_rowwise(
-            cur, num_hashes, text_col, id_col, shingle_n
-        ),
+        minhash_profiles_arrow(cur, num_hashes, text_col, id_col, shingle_n),
         num_hashes,
         rows_per_band,
         id_col,

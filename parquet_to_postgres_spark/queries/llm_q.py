@@ -128,18 +128,58 @@ def corpus_preprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- L2 ----
 
 
-def _minhash_oracle(
-    num_hashes: int = 128,
-    rows_per_band: int = 8,
-    thresh: float = 0.8,
-    shingle_n: int = 5,
-) -> str:
+def minhash_profile_sql(
+    num_hashes: int = 128, shingle_n: int | None = 5
+) -> tuple[str, str]:
+    """DuckDB twin of :func:`~..llm.dedup.minhash_profiles_arrow` over
+    the ``documents`` table: ``(ctes, select)``.
+
+    ``ctes`` defines ``toks`` (distinct ``(doc_id, token)`` units: char
+    ``shingle_n``-grams, or word tokens when ``shingle_n`` is None),
+    ``tid`` (each unit's md5 id mod P) and ``sigs`` (the per-doc
+    ``mh*`` min-aggregate).  ``select`` reads them as the kernel's
+    profile: ``doc_id, tokset, mh0.., sz``.  Run ``WITH {ctes} {select}``."""
+    if shingle_n is None:
+        units = "unnest(string_split(text, ' '))"
+    else:
+        units = f"""unnest([substr(text, i, {shingle_n})
+                     for i in range(1, len(text) - {shingle_n - 2})])"""
     sig_cols = []
     for j in range(num_hashes):
         a, b = D.hash_params(j)
         sig_cols.append(
             f"MIN(({a} * vmod + {b}) % {D.MINHASH_P}) AS mh{j}"
         )
+    ctes = f"""toks AS (
+      SELECT DISTINCT doc_id,
+             {units} AS token
+      FROM documents
+    ),
+    tid AS (
+      SELECT doc_id,
+             {D.UNIT_ID_SQL.format(col="token")} % {D.MINHASH_P} AS vmod
+      FROM toks
+    ),
+    sigs AS (SELECT doc_id, {", ".join(sig_cols)} FROM tid GROUP BY doc_id)"""
+    mh = ", ".join(f"mh{j}" for j in range(num_hashes))
+    select = f"""
+    SELECT doc_id, tokset, {mh}, CAST(len(tokset) AS BIGINT) AS sz
+    FROM sigs JOIN (
+      SELECT doc_id,
+             list_sort(list(DISTINCT {D.UNIT_ID_SQL.format(col="token")}))
+               AS tokset
+      FROM toks GROUP BY doc_id
+    ) USING (doc_id)"""
+    return ctes, select
+
+
+def _minhash_oracle(
+    num_hashes: int = 128,
+    rows_per_band: int = 8,
+    thresh: float = 0.8,
+    shingle_n: int = 5,
+) -> str:
+    ctes, _ = minhash_profile_sql(num_hashes, shingle_n)
     n_bands = num_hashes // rows_per_band
     band_selects = []
     for bidx in range(n_bands):
@@ -152,18 +192,7 @@ def _minhash_oracle(
         )
     bands_sql = " UNION ALL ".join(band_selects)
     return f"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id,
-             unnest([substr(text, i, {shingle_n})
-                     for i in range(1, len(text) - {shingle_n - 2})]) AS token
-      FROM documents
-    ),
-    tid AS (
-      SELECT doc_id,
-             {D.UNIT_ID_SQL.format(col="token")} % {D.MINHASH_P} AS vmod
-      FROM toks
-    ),
-    sigs AS (SELECT doc_id, {", ".join(sig_cols)} FROM tid GROUP BY doc_id),
+    WITH {ctes},
     bands AS ({bands_sql}),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -194,12 +223,16 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Unit is the character shingle, not the word token: the shingle space
     is combinatorially large, so unrelated docs rarely collide (word
-    tokens degenerate on narrow vocabularies — see llm/dedup.shingles).
+    tokens degenerate on narrow vocabularies: on this synthetic corpus
+    the word vocabulary is 31 tokens and every doc uses ~27 of them, so
+    word-level Jaccard is ~0.77 between ALL pairs and word-level LSH
+    degenerates to all-pairs).
     Banding is the textbook 128 permutations in 16 bands of 8 rows —
     ~95% recall at Jaccard 0.8, ~0.1% collision rate for the
     corpus-typical 0.2–0.35 pairs, so candidates stay ~linear in the
-    true-near-dup count.  Signatures are dictionary-free (md5 unit ids):
-    the whole profile job is one shuffle.
+    true-near-dup count.  Profiles come from the Arrow MinHash kernel
+    (dictionary-free md5 unit ids), which finishes in the scan stage
+    with no shuffle.
 
     At 100 TB: candidate generation is an equi-shuffle on (band, key);
     only candidate pairs pay the exact-Jaccard array intersect."""
@@ -207,17 +240,12 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Eager checkpoint: the profile subtree feeds banding AND both
     # sides of the verify join, and those consumers launch concurrently
     # (broadcast exchanges are eager) — an unmaterialized subtree would
-    # race and recompute shingle+dict+agg 3x.  stable_checkpoint
+    # race and recompute the signature kernel 3x.  stable_checkpoint
     # materializes eagerly and truncates lineage, and upgrades to a
     # reliable cluster-FS checkpoint when the session has a checkpoint
     # dir (local blocks die with an executor).
     from ..checkpoint import stable_checkpoint
 
-    # r16: profiles come from the Arrow/numpy kernel — bit-identical
-    # values (pinned by test_minhash_profiles_arrow_equivalence), zero
-    # shuffle: the per-doc aggregate exchange disappears and the
-    # signature job finishes in the scan stage (guide §4.2; interleaved
-    # A/B 4.28 → 0.80 s, plans/r16/probes_batch1.log).
     profiles = stable_checkpoint(
         D.minhash_profiles_arrow(t.documents, shingle_n=5)
     )

@@ -564,14 +564,15 @@ def stream_near_dedup_writer(
     """foreachBatch hook: near-dedup every micro-batch against a corpus
     band store, then write the survivors through the batch sink.
 
-    The incremental-ingest shape at 100 TB: signatures are the
-    ZERO-shuffle row-wise MinHash (a stateless projection — legal on a
-    stream, where a pre-join aggregation would demand watermark state),
-    and the only join is a (band, key) equi-semi-join against the store
-    (shuffle-free when the store is bucketed on those keys).  Inside
-    foreachBatch the micro-batch is a plain DataFrame, so the exact
-    batch operator (:func:`~..llm.dedup.near_dedup_against_store`) runs
-    unchanged — streaming and batch dedup cannot diverge.
+    The incremental-ingest shape at 100 TB: signatures come from the
+    zero-shuffle Arrow MinHash kernel
+    (:func:`~..llm.dedup.minhash_profiles_arrow`), run per micro-batch,
+    so no stream state is needed, and the only join is a (band, key)
+    equi-semi-join against the store (shuffle-free when the store is
+    bucketed on those keys).  Inside foreachBatch the micro-batch is a
+    plain DataFrame, so the exact batch operator
+    (:func:`~..llm.dedup.near_dedup_against_store`) runs unchanged —
+    streaming and batch dedup cannot diverge.
 
     ``band_store`` is a DataFrame or a parquet PATH (str).  A store
     that is MUTATED between triggers (``corpus_band_store(delta)

@@ -135,7 +135,7 @@ def test_salted_agg_equals_plain_groupby(spark):
 def test_minhash_signature_is_set_function(spark):
     """Signatures depend only on the token SET — word order and repeats
     must not matter (set semantics of the shingle stage)."""
-    from parquet_to_postgres_spark.llm.dedup import minhash_profiles
+    from parquet_to_postgres_spark.llm.dedup import minhash_profiles_arrow
 
     df = spark.createDataFrame(
         [
@@ -145,54 +145,75 @@ def test_minhash_signature_is_set_function(spark):
         ],
         "doc_id long, text string",
     )
-    out = minhash_profiles(df).toPandas().set_index("doc_id")
+    out = minhash_profiles_arrow(df, shingle_n=None).toPandas().set_index(
+        "doc_id"
+    )
     sig = lambda i: tuple(out.loc[i][f"mh{j}"] for j in range(8))  # noqa: E731
     assert sig(1) == sig(2), "order/multiplicity changed the signature"
     assert sig(1) != sig(3), "different token sets must (generically) differ"
     assert list(out.loc[1]["tokset"]) == list(out.loc[2]["tokset"])
 
 
-def test_minhash_profiles_arrow_equivalence(spark):
-    """The zero-shuffle Arrow/numpy profile kernel must be BIT-identical
-    to the aggregate path — same md5 60-bit unit ids, same affine mins,
-    same sorted token-id set — on the real fixture (the declared-query
-    config: char-5-gram shingles) and in word-token mode, including the
-    edge cases: doc shorter than the shingle width (emits NO row, like
-    the empty groupBy), empty text, NULL text, repeated tokens, runs of
-    spaces (empty word tokens)."""
-    from parquet_to_postgres_spark.llm.dedup import (
-        minhash_profiles,
-        minhash_profiles_arrow,
+def test_minhash_profiles_arrow_equivalence(spark, duck):
+    """The Arrow/numpy profile kernel must be BIT-identical to its DuckDB
+    aggregate twin — same md5 60-bit unit ids, same affine mins, same
+    sorted token-id set — on the real fixture (the declared-query
+    config: char-5-gram shingles) and, in both shingle and word-token
+    mode, on the edge cases: doc shorter than the shingle width (emits
+    NO row), empty text, NULL text, repeated tokens, runs of spaces
+    (empty word tokens)."""
+    import duckdb
+    import pandas as pd
+
+    from parquet_to_postgres_spark.llm.dedup import minhash_profiles_arrow
+    from parquet_to_postgres_spark.queries.llm_q import minhash_profile_sql
+    from parquet_to_postgres_spark.tables import load_table
+
+    from ._compare import assert_matches_oracle
+
+    def twin(num_hashes, shingle_n):
+        ctes, select = minhash_profile_sql(num_hashes, shingle_n)
+        return f"WITH {ctes} {select}"
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    assert_matches_oracle(
+        minhash_profiles_arrow(docs, shingle_n=5), duck, twin(128, 5)
     )
+
+    rows = [
+        (1, "abc"),  # shorter than shingle width 5 -> no row
+        (2, ""),  # empty text -> no row in shingle mode
+        (3, None),  # NULL text -> no row
+        (4, "abcdefgh abcdefgh"),  # repeated shingles collapse
+        (5, "alpha  beta   beta"),  # runs of spaces -> empty tokens
+    ]
+    edge = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    for shingle_n in (5, None):
+        assert_matches_oracle(
+            minhash_profiles_arrow(edge, num_hashes=16, shingle_n=shingle_n),
+            con,
+            twin(16, shingle_n),
+            name=f"shingle_n={shingle_n}",
+        )
+    con.close()
+
+
+def test_minhash_profiles_arrow_splits_list_offsets(spark, monkeypatch):
+    """An output batch whose tokset total would pass the int32 list
+    offset limit is split into several RecordBatches; the rows are the
+    same as unsplit.  The limit is lowered to ~3 fixture docs' tokens,
+    so batches split both between docs and around single docs."""
+    from parquet_to_postgres_spark.llm import dedup as D
     from parquet_to_postgres_spark.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    agg = minhash_profiles(docs, shingle_n=5)
-    arw = minhash_profiles_arrow(docs, shingle_n=5)
-    # same column names and types (nullability flags differ — mapInArrow
-    # outputs are nullable; the gate compares names + values, and no
-    # declared output type changes)
-    assert [(f.name, f.dataType) for f in agg.schema.fields] == [
-        (f.name, f.dataType) for f in arw.schema.fields
-    ]
-    assert canon(agg.toPandas()) == canon(arw.toPandas())
-
-    edge = spark.createDataFrame(
-        [
-            (1, "abc"),  # shorter than shingle width 5 -> no row
-            (2, ""),  # empty text -> no row in shingle mode
-            (3, None),  # NULL text -> no row
-            (4, "abcdefgh abcdefgh"),  # repeated shingles collapse
-            (5, "alpha  beta   beta"),  # runs of spaces -> empty tokens
-        ],
-        "doc_id long, text string",
-    )
-    for shingle_n in (5, None):
-        a = minhash_profiles(edge, num_hashes=16, shingle_n=shingle_n)
-        b = minhash_profiles_arrow(edge, num_hashes=16, shingle_n=shingle_n)
-        assert canon(a.toPandas()) == canon(b.toPandas()), (
-            f"shingle_n={shingle_n}"
-        )
+    whole = canon(D.minhash_profiles_arrow(docs, num_hashes=16).toPandas())
+    monkeypatch.setattr(D, "_MAX_LIST_OFFSET", 1000)
+    split = canon(D.minhash_profiles_arrow(docs, num_hashes=16).toPandas())
+    assert len(whole) == 500
+    assert split == whole
 
 
 def _random_docs(spark, n, seed=23):
@@ -253,7 +274,7 @@ def test_minhash_band_pairs_equal_bruteforce_band_sharing(spark):
     from parquet_to_postgres_spark.llm import dedup as D
 
     docs = _random_docs(spark, 40, seed=31)
-    profiles = D.minhash_profiles(docs, num_hashes=16)
+    profiles = D.minhash_profiles_arrow(docs, num_hashes=16, shingle_n=None)
     pairs = D.minhash_band_pairs(profiles, num_hashes=16, rows_per_band=4)
     pdf = profiles.toPandas().set_index("doc_id")
 
@@ -428,13 +449,11 @@ def test_connected_components_fused_init_edge_cases(spark):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_near_dedup_corpus_keeps_one_per_cluster(spark):
-    """Planted near-dups collapse to their min-id representative;
-    unrelated docs survive."""
-    from parquet_to_postgres_spark.llm.dedup import near_dedup_corpus
-
+def _planted_clusters(spark):
+    """Ten distinctive long random texts; docs 0..2 each get two near
+    copies (100+i, 200+i) with a tiny suffix edit -> 3-doc clusters."""
     rng = random.Random(41)
-    # distinctive long random texts; duplicates get a tiny suffix edit
+
     def mktext():
         return " ".join(
             "".join(rng.choices("abcdefghijklmnop", k=8)) for _ in range(30)
@@ -444,14 +463,54 @@ def test_near_dedup_corpus_keeps_one_per_cluster(spark):
     for i in range(10):
         t = mktext()
         rows.append((i, t))
-        if i < 3:  # plant two near-copies of docs 0..2 -> 3-doc clusters
+        if i < 3:
             rows.append((100 + i, t + " x"))
             rows.append((200 + i, t + " y"))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_near_dedup_corpus_keeps_one_per_cluster(spark):
+    """Planted near-dups collapse to their min-id representative;
+    unrelated docs survive."""
+    from parquet_to_postgres_spark.llm.dedup import near_dedup_corpus
+
     kept = sorted(
-        r["doc_id"] for r in near_dedup_corpus(df, threshold=0.8).collect()
+        r["doc_id"]
+        for r in near_dedup_corpus(_planted_clusters(spark), threshold=0.8)
+        .collect()
     )
     assert kept == list(range(10))  # reps 0..2 kept, 100/200-series dropped
+
+
+def test_near_dedup_id_column_name_and_type(spark):
+    """``near_dedup_corpus`` and ``near_dedup_against_store`` honour a
+    non-``doc_id`` id column of any type: ``long``, ``int`` and
+    (zero-padded, so string order is numeric order) ``string`` ids give
+    the same survivors, and the id column keeps its type."""
+    from parquet_to_postgres_spark.llm import dedup as D
+
+    base = _planted_clusters(spark)
+    store = D.corpus_band_store(base.where(F.col("doc_id") < 3))
+    ids = {
+        "long": F.col("doc_id"),
+        "int": F.col("doc_id").cast("int"),
+        "string": F.lpad(F.col("doc_id").cast("string"), 4, "0"),
+    }
+    survivors = {}
+    for typ, id_expr in ids.items():
+        df = base.select(id_expr.alias("id"), "text")
+        corpus = D.near_dedup_corpus(df, threshold=0.8, id_col="id")
+        fresh = D.near_dedup_against_store(df, store, id_col="id")
+        for out in (corpus, fresh):
+            assert out.schema["id"].dataType == df.schema["id"].dataType
+        survivors[typ] = [
+            sorted(int(r["id"]) for r in out.collect())
+            for out in (corpus, fresh)
+        ]
+    assert survivors["long"][0] == list(range(10))
+    assert survivors["long"][1] == list(range(3, 10))
+    assert survivors["int"] == survivors["long"]
+    assert survivors["string"] == survivors["long"]
 
 
 def test_distributed_cumsum_equals_global_window(spark):

@@ -130,27 +130,10 @@ def test_token_dictionary_has_no_global_window(spark):
     assert "windowspecdefinition(__pid" in p
 
 
-def test_minhash_profiles_single_logical_shuffle(spark):
-    # Dictionary-free signatures: the profile job must be explode ->
-    # per-doc aggregate.  Exactly 2 exchanges allowed — the opt-in
-    # compute spread (round-robin) and the groupBy(doc_id) hash
-    # partitioning.  A third would mean a dictionary join / rank crept
-    # back onto the signature path.
-    from parquet_to_postgres_spark.llm import dedup as D
-    from parquet_to_postgres_spark.tables import Catalog
-
-    t = Catalog(spark, SF_SMOKE)
-    p = plan(D.minhash_profiles(t.documents, shingle_n=5), mode="simple")
-    assert p.count("Exchange") == 2
-    assert "hashpartitioning(doc_id" in p
-    assert "Join" not in p and "Window" not in p
-
-
 def test_minhash_profiles_arrow_zero_shuffle(spark):
-    # r16 kernel pin: the Arrow profile path (now feeding
-    # minhash_near_dup and near_dedup_corpus) must finish in the scan
-    # stage — exactly ONE Exchange (the opt-in compute spread), no
-    # aggregate exchange, and the Python boundary is MapInArrow
+    # The one MinHash kernel must finish in the scan stage — exactly ONE
+    # Exchange (the opt-in compute spread), no aggregate exchange, no
+    # dictionary join or rank, and the Python boundary is MapInArrow
     # (batched), never BatchEvalPython (row-at-a-time).
     from parquet_to_postgres_spark.llm import dedup as D
     from parquet_to_postgres_spark.tables import Catalog

@@ -1,5 +1,5 @@
 """Incremental near-dedup against a historical corpus — batch operator,
-zero-shuffle row-wise signatures, and the streaming foreachBatch path.
+Arrow-kernel signatures, and the streaming foreachBatch path.
 
 The contract under test: streaming ingest drops exactly the documents
 the BATCH operator would drop (same band keys, same store), because
@@ -26,36 +26,16 @@ def _docs(spark):
     return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
 
 
-def test_rowwise_signatures_equal_aggregate_signatures(spark):
-    """The HOF per-row signature path must produce bit-identical values
-    to the explode→aggregate path (same unit ids, same affine family)."""
-    docs = _docs(spark)
-    agg = D.minhash_signatures(docs, num_hashes=N_HASHES, shingle_n=5)
-    row = D.minhash_signatures_rowwise(docs, num_hashes=N_HASHES, shingle_n=5)
-    assert agg.columns == row.columns
-    assert agg.exceptAll(row).count() == 0
-    assert row.exceptAll(agg).count() == 0
-    # and the physical difference is real: no Exchange anywhere
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        row.explain(mode="simple")
-    assert "Exchange" not in buf.getvalue()
-
-
-def test_band_keys_skip_null_signatures(spark):
-    """Docs shorter than the shingle width get all-NULL rowwise
-    signatures; band_keys must emit NO keys for them (matching the
-    aggregate path's emit-no-row semantics).  Without the guard every
-    short doc lands on key "" in every band and they all become mutual
-    near-duplicates."""
+def test_band_keys_skip_short_docs(spark):
+    """Docs with no shingle (shorter than the shingle width, empty)
+    get no signature row, so band_keys emits NO keys for them and no
+    key is "" — otherwise every short doc would land on one key in
+    every band and they would all become mutual near-duplicates."""
     docs = spark.createDataFrame(
         [(1, "abc"), (2, "xy"), (3, ""), (4, "a real document long enough")],
         "doc_id long, text string",
     )
-    sigs = D.minhash_signatures_rowwise(docs, num_hashes=N_HASHES, shingle_n=5)
+    sigs = D.minhash_profiles_arrow(docs, num_hashes=N_HASHES)
     bands = D.band_keys(sigs, num_hashes=N_HASHES)
     keyed = {r["doc_id"] for r in bands.select("doc_id").distinct().collect()}
     assert keyed == {4}
@@ -76,7 +56,7 @@ def test_near_dedup_against_store_drops_exactly_banded_matches(spark):
 
     # ground truth straight from the band definition
     bands = D.band_keys(
-        D.minhash_signatures(docs, num_hashes=N_HASHES, shingle_n=5),
+        D.minhash_profiles_arrow(docs, num_hashes=N_HASHES),
         num_hashes=N_HASHES,
     )
     expected_dropped = {
