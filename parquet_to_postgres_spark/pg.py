@@ -15,14 +15,20 @@ end-to-end anyway, through the server's native bulk interface:
   fastest ingest path, and the pattern production Spark→PG pipelines
   use ("unload + COPY") when per-row JDBC INSERT is the bottleneck;
 - reads come back as bounded-range parallel ``COPY ... TO STDOUT``
-  scans — the read-side analogue of Spark's partitioned JDBC read.
+  scans — the read-side analogue of Spark's partitioned JDBC read —
+  parsed into typed Arrow batches in the Python worker.
 
-Scale notes.  CSV lines are rendered JVM-side with ``F.to_csv`` (exact,
-vectorized, inside whole-stage codegen); the Python half of the
+Scale notes.  Writes: CSV lines are rendered JVM-side with ``F.to_csv``
+(exact, vectorized, inside whole-stage codegen); the Python half of the
 ``mapInPandas`` sink only pipes bytes into ONE ``psql`` subprocess per
 partition, so concurrent connections are bounded by the partition count
 exactly like ``JdbcSink.num_partitions`` (the reference's 10-permit
-semaphore, ``main.rs:68``).  On a real cluster each executor streams its
+semaphore, ``main.rs:68``).  Reads: one task per range scan, placed by
+``spark.range`` (no shuffle); each task streams its psql's CSV stdout
+through ``pyarrow.csv.open_csv`` typed by the declared schema and hands
+the batches to Spark through ``mapInArrow`` — no per-row Python and no
+JVM re-parse.  NULL is CSV's unquoted empty field and ``''`` is ``""``,
+so the two never collide.  On a real cluster each executor streams its
 partitions straight to the server — no driver funnel; the driver only
 runs DDL.  The embedded server manager below exists for tests: point
 ``conninfo`` at any real host to use the sink against one.
@@ -30,10 +36,13 @@ runs DDL.  The embedded server manager below exists for tests: point
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import subprocess
+import tempfile
 from dataclasses import dataclass, field
+from typing import IO, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,17 +232,11 @@ def shared_postgres() -> EmbeddedPostgres | None:
     return srv
 
 
-def run_psql(
-    conninfo: dict[str, str],
-    sql: str,
-    tuples_only: bool = True,
-    stdin: str | None = None,
-    stdin_bytes: bytes | None = None,
-) -> str:
-    """Client-side psql call — used from the driver (DDL) AND from
-    executor tasks (COPY), so it depends only on the conninfo dict.
-    ``stdin_bytes`` feeds COPY FROM STDIN (FORMAT BINARY) — psql
-    forwards the stream to the server unaltered while in copy mode."""
+def _psql_argv(
+    conninfo: dict[str, str], sql: str, tuples_only: bool = True
+) -> list[str]:
+    """The one psql command line: connection flags, stop on the first
+    error, no ~/.psqlrc, no chatter."""
     cmd = [
         "psql",
         "-h",
@@ -249,10 +252,23 @@ def run_psql(
     ]
     if tuples_only:
         cmd.append("-At")
-    cmd += ["-c", sql]
+    return cmd + ["-c", sql]
+
+
+def run_psql(
+    conninfo: dict[str, str],
+    sql: str,
+    tuples_only: bool = True,
+    stdin: str | None = None,
+    stdin_bytes: bytes | None = None,
+) -> str:
+    """Client-side psql call — used from the driver (DDL) AND from
+    executor tasks (COPY), so it depends only on the conninfo dict.
+    ``stdin_bytes`` feeds COPY FROM STDIN (FORMAT BINARY) — psql
+    forwards the stream to the server unaltered while in copy mode."""
     binary = stdin_bytes is not None
     r = subprocess.run(
-        cmd,
+        _psql_argv(conninfo, sql, tuples_only),
         input=stdin_bytes if binary else stdin,
         capture_output=True,
         text=not binary,
@@ -266,33 +282,55 @@ def run_psql(
     return r.stdout.decode("utf-8", "replace") if binary else r.stdout
 
 
+@contextlib.contextmanager
+def _psql_stdout(conninfo: dict[str, str], sql: str) -> Iterator[IO[bytes]]:
+    """psql's stdout as a binary pipe, for output too large to hold.
+
+    stderr goes to a temporary file, so psql can never block on a full
+    stderr pipe while the caller reads stdout.  After the caller has read
+    to EOF, a nonzero exit raises with psql's stderr; if the caller
+    raises instead (a closed generator included), psql is killed."""
+    with tempfile.TemporaryFile() as err:
+        proc = subprocess.Popen(
+            _psql_argv(conninfo, sql, tuples_only=False),
+            stdout=subprocess.PIPE,
+            stderr=err,
+            cwd="/",
+        )
+        try:
+            yield proc.stdout
+        except BaseException:
+            proc.kill()
+            raise
+        finally:
+            proc.stdout.close()
+            rc = proc.wait()
+        if rc != 0:
+            err.seek(0)
+            msg = err.read().decode("utf-8", "replace")
+            raise RuntimeError(f"psql failed ({sql[:120]!r}): {msg[-2000:]}")
+
+
 # ----------------------------------------------------------- CSV wire ----
 
-# One option set shared by the write (F.to_csv) and read (F.from_csv)
-# sides so the wire format can never drift.  escape='"' doubles embedded
+# Options of the write side's F.to_csv.  escape='"' doubles embedded
 # quotes (RFC 4180) — Postgres CSV's QUOTE/ESCAPE default; Spark's own
 # default escape is backslash, which Postgres CSV would read literally.
-# NULL rides as unquoted-empty, empty string as "" — both servers make
-# that distinction in CSV mode.
+# NULL rides as unquoted-empty, empty string as "" — Postgres makes that
+# distinction in CSV mode, and COPY TO writes it the same way, which is
+# what read_back's Arrow parse relies on.  Spark's CSV writer trims
+# leading/trailing whitespace by default; Postgres CSV keeps it, so the
+# trims are off or " a " would land as "a".
 _CSV_OPTS = {
     "escape": '"',
     "nullValue": "",
     "emptyValue": '""',
+    "ignoreLeadingWhiteSpace": "false",
+    "ignoreTrailingWhiteSpace": "false",
     "timestampFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS",
     "timestampNTZFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS",
     "dateFormat": "yyyy-MM-dd",
 }
-
-# On READ the option meanings shift: `emptyValue` is the replacement
-# for an empty QUOTED field (write-side it is the rendering of an empty
-# string), and the parser nulls an UNQUOTED empty field regardless of
-# `nullValue`.  So reads use a sentinel NULL marker: COPY out prints
-# NULLs as __PGNULL__ and FORCE_QUOTE * quotes every non-null value
-# (including ''), which parses unambiguously.  Corner case: a data
-# value equal to the sentinel itself would be nulled (Spark applies
-# nullValue to quoted fields too) — the inherent CSV-wire ambiguity.
-_PG_NULL = "__PGNULL__"
-_CSV_READ_OPTS = {**_CSV_OPTS, "emptyValue": "", "nullValue": _PG_NULL}
 
 
 def prepare_for_copy(df: DataFrame) -> DataFrame:
@@ -680,14 +718,25 @@ def read_back(
     num_partitions: int = 4,
 ) -> DataFrame:
     """Parallel COPY-out read: ``num_partitions`` bounded-range
-    ``COPY (SELECT ...) TO STDOUT (FORMAT CSV)`` scans, one per Spark
-    partition, parsed JVM-side with ``from_csv`` under the same wire
-    options the sink wrote with.
+    ``COPY (SELECT * FROM table WHERE ...) TO STDOUT (FORMAT CSV)`` scans,
+    one per Spark partition, each parsed into typed Arrow batches inside
+    the Python worker (``mapInArrow``).
+
+    The table's columns must be in ``schema``'s order.  Postgres CSV
+    writes NULL as an unquoted empty field and the empty string as
+    ``""``; the Arrow parse keeps that distinction, so every string
+    value — whatever its text — reads back as itself.  Numbers
+    (``NaN``/``±Infinity`` included), decimals, dates and booleans
+    arrive typed; timestamps (cast in the session time zone), bytea
+    (``\\x`` hex) and nested types (JSON) arrive as text and are decoded
+    JVM-side.
 
     Ranges only steer split boundaries — the edge scans are unbounded
     below/above, so rows outside [lower, upper) still arrive (the JDBC
     partitioned-read contract, queries/etl_q.py:154).  Without a
     partition column the whole table comes over one connection."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     if partition_column is None:
@@ -707,78 +756,57 @@ def read_back(
                 conds.append(f"{partition_column} < {hi}")
             wheres.append(f" WHERE {' AND '.join(conds)}" if conds else "")
 
-    # string columns come straight through CSV; binary/nested/boolean get
-    # a text staging column then a JVM-side decode back to the declared
-    # type (Postgres COPY CSV spells booleans `t`/`f`, which from_csv
-    # would null out).
     stage_fields, decode_cols = [], []
     for f_ in schema.fields:
-        if isinstance(f_.dataType, T.BooleanType):
-            stage_fields.append(T.StructField(f_.name, T.StringType(), True))
-            decode_cols.append(
-                F.when(
-                    F.col(f_.name).isNotNull(),
-                    F.col(f_.name).isin("t", "true", "TRUE", "1"),
-                ).alias(f_.name)
-            )
-        elif isinstance(f_.dataType, (T.TimestampType, T.TimestampNTZType)):
+        c, dt = F.col(f_.name), f_.dataType
+        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
             # COPY out trims trailing zeros ("23:59:59", "…59.5"); the
-            # fixed-width from_csv format would null those, but the
-            # string→timestamp CAST takes variable-length fractions.
-            stage_fields.append(T.StructField(f_.name, T.StringType(), True))
-            decode_cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
-        elif isinstance(f_.dataType, T.BinaryType):
-            stage_fields.append(T.StructField(f_.name, T.StringType(), True))
-            decode_cols.append(
-                F.unhex(F.expr(f"substring(`{f_.name}`, 3)")).alias(f_.name)
-            )
-        elif isinstance(f_.dataType, (T.ArrayType, T.MapType, T.StructType)):
-            stage_fields.append(T.StructField(f_.name, T.StringType(), True))
-            decode_cols.append(
-                F.from_json(F.col(f_.name), f_.dataType).alias(f_.name)
-            )
+            # string→timestamp CAST takes variable-length fractions
+            decoded = c.cast(dt)
+        elif isinstance(dt, T.BinaryType):
+            decoded = F.unhex(F.expr(f"substring(`{f_.name}`, 3)"))
+        elif isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+            decoded = F.from_json(c, dt)
         else:
-            stage_fields.append(T.StructField(f_.name, f_.dataType, True))
-            decode_cols.append(F.col(f_.name))
+            stage_fields.append(T.StructField(f_.name, dt, True))
+            decode_cols.append(c)
+            continue
+        stage_fields.append(T.StructField(f_.name, T.StringType(), True))
+        decode_cols.append(decoded.alias(f_.name))
     stage_schema = T.StructType(stage_fields)
-
+    arrow_schema = to_arrow_schema(stage_schema)
     conninfo = dict(conninfo)
-    ranges = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(wheres)], "part int, whereclause string"
-    ).repartition(len(wheres), "part")
 
     def _copy_out(batches):
-        import pandas as pd
+        from pyarrow import csv
 
-        for pdf in batches:
-            for w in pdf["whereclause"]:
-                out = run_psql(
-                    conninfo,
-                    f"COPY (SELECT * FROM {table}{w}) TO STDOUT "
-                    f"(FORMAT CSV, NULL '{_PG_NULL}', FORCE_QUOTE *)",
-                    tuples_only=False,
+        read_opts = csv.ReadOptions(column_names=arrow_schema.names)
+        parse_opts = csv.ParseOptions(newlines_in_values=True)
+        convert_opts = csv.ConvertOptions(
+            column_types=arrow_schema,
+            null_values=[""],
+            strings_can_be_null=True,
+            quoted_strings_can_be_null=False,
+            true_values=["t"],
+            false_values=["f"],
+        )
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                sql = (
+                    f"COPY (SELECT * FROM {table}{wheres[i]}) "
+                    "TO STDOUT (FORMAT CSV)"
                 )
-                # a quoted field may contain literal newlines, so a
-                # physical line is not a record: accumulate until the
-                # quote count is even (escape='"' doubles embedded
-                # quotes, so every complete record has even parity).
-                records, buf, quotes = [], [], 0
-                for ln in out.split("\n"):
-                    buf.append(ln)
-                    quotes += ln.count('"')
-                    if quotes % 2 == 0:
-                        records.append("\n".join(buf))
-                        buf, quotes = [], 0
-                if records and records[-1] == "":
-                    records.pop()  # trailing newline artifact
-                if records:
-                    yield pd.DataFrame({"line": records})
+                with _psql_stdout(conninfo, sql) as out:
+                    # an empty scan writes nothing, which open_csv refuses
+                    if out.peek(1):
+                        yield from csv.open_csv(
+                            out, read_opts, parse_opts, convert_opts
+                        )
 
-    raw = ranges.mapInPandas(_copy_out, schema="line string")
-    stage_ddl = ", ".join(
-        f"`{f_.name}` {f_.dataType.simpleString()}" for f_ in stage_schema.fields
+    # one range element per partition: task i scans wheres[i], no shuffle
+    n = len(wheres)
+    return (
+        spark.range(0, n, 1, n)
+        .mapInArrow(_copy_out, stage_schema)
+        .select(*decode_cols)
     )
-    parsed = raw.select(
-        F.from_csv(F.col("line"), stage_ddl, _CSV_READ_OPTS).alias("r")
-    ).select("r.*")
-    return parsed.select(*decode_cols)

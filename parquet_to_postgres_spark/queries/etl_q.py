@@ -416,10 +416,12 @@ def etl_pg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Readback fan-out tracks cluster cores up to a bounded
         # connection cap (r15): each COPY TO STDOUT connection is
         # single-threaded server-side, so parallel scans overlap until
-        # the server saturates — measured 2.04 s (8 conns) → 1.50 s
-        # (16) → 1.32 s (24) for the 600k-row readback; 16 is the
-        # knee, and the cap keeps a huge cluster from opening hundreds
-        # of connections.  Results are partition-count-independent
+        # the server saturates — measured on the earlier read path
+        # (shuffle-placed scans, JVM from_csv re-parse) at 2.04 s
+        # (8 conns) → 1.50 s (16) → 1.32 s (24) for the 600k-row
+        # readback; 16 was the knee there and is not re-measured on the
+        # Arrow path.  The cap keeps a huge cluster from opening
+        # hundreds of connections.  Results are partition-count-independent
         # (bounded-range scans partition the same row set).  The WRITE
         # stays at 8: measured flat 8 vs 16 (COPY-in is server-write
         # bound), so more connections buy nothing.

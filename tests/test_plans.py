@@ -182,7 +182,34 @@ def test_spread_noop_when_parallel_enough(spark):
     shuffled = spark.range(1000).coalesce(1)
     assert spread(shuffled) is shuffled  # no file lineage -> untouched
     onefile = load_table(spark, SF_SMOKE, "documents")
-    assert spread(onefile).rdd.getNumPartitions() >= 8
+    target = spark.sparkContext.defaultParallelism
+    assert spread(onefile).rdd.getNumPartitions() == target
+    assert spread(onefile, min_partitions=8).rdd.getNumPartitions() == 8
+
+
+def test_pg_read_back_is_shuffle_free_arrow(spark):
+    """Postgres read-back places one range scan per task with no
+    shuffle and parses the COPY-out CSV in the Arrow worker: no
+    Exchange, no JVM CSV parse, one MapInArrow.  Building the plan runs
+    no psql, so no server is needed."""
+    from parquet_to_postgres_spark.pg import read_back
+
+    df = read_back(
+        spark,
+        {"host": "/nonexistent", "user": "nobody", "dbname": "none"},
+        "t",
+        "id long, name string, price decimal(12,2), at timestamp, "
+        "blob binary, tags array<string>",
+        partition_column="id",
+        lower=0,
+        upper=100,
+        num_partitions=4,
+    )
+    p = plan(df)
+    assert "MapInArrow" in p
+    for absent in ("Exchange", "from_csv", "CsvToStructs"):
+        assert absent not in p, f"read-back plan has {absent}"
+    assert df.rdd.getNumPartitions() == 4
 
 
 def test_filter_pushdown_survives_spread(spark):

@@ -14,6 +14,7 @@ Skipped cleanly when no postgres toolchain is installed.
 from __future__ import annotations
 
 import datetime
+import math
 from decimal import Decimal
 
 import pytest
@@ -283,14 +284,20 @@ def test_partition_tagged_copy_is_task_retry_idempotent(spark, pgsrv):
     assert first == docs.count() == second
 
 
+FLOAT32_MIN_DENORMAL = 2.0**-149
+FLOAT32_MAX = (2.0 - 2.0**-23) * 2.0**127
+
+
 def _binary_tricky_df(spark):
     """The tricky frame plus the IEEE/integer edge values binary must
-    carry bit-exactly: NaN, +-Inf, -0.0, Long.MIN/MAX, pre-2000
-    temporals, and NUMERIC at precision/scale edges."""
+    carry bit-exactly: NaN, +-Inf, -0.0, Long.MIN/MAX, Byte.MIN/MAX,
+    float32 denormal/max, pre-2000 temporals, and NUMERIC at
+    precision/scale edges."""
     schema = T.StructType(
         [
             T.StructField("id", T.LongType(), False),
             T.StructField("small", T.ShortType(), True),
+            T.StructField("tiny", T.ByteType(), True),
             T.StructField("big", T.LongType(), True),
             T.StructField("flag", T.BooleanType(), True),
             T.StructField("ratio", T.DoubleType(), True),
@@ -313,23 +320,28 @@ def _binary_tricky_df(spark):
         ]
     )
     rows = [
-        (1, 7, 2**63 - 1, True, float("nan"), -2.25, 'comma, "quote"',
+        (1, 7, 127, 2**63 - 1, True, float("nan"), -2.25, 'comma, "quote"',
          b"\x00\xff", datetime.date(1999, 12, 31),
          datetime.datetime(1969, 12, 31, 23, 59, 59, 999999),
          datetime.datetime(1969, 12, 31, 23, 59, 59, 999999),
          Decimal("99999999.99"), Decimal("123456789.12345678901"),
          ["a", "b"]),
-        (2, -32768, -(2**63), False, float("inf"), None, "line1\nline2",
+        (2, -32768, -128, -(2**63), False, float("inf"), None, "line1\nline2",
          b"", datetime.date(2000, 1, 1),
          datetime.datetime(2024, 6, 15, 2, 30, 0, 123456),
          datetime.datetime(2024, 6, 15, 2, 30, 0, 123456),
          Decimal("-0.01"), Decimal("-0.00000000001"), []),
-        (3, 32767, 0, None, -0.0, float("-inf"), "", None, None, None,
+        (3, 32767, 0, 0, None, -0.0, float("-inf"), "", None, None, None,
          None, Decimal("0.00"), None, ["été", "中文"]),
-        (4, None, None, True, 3.14159, 0.0, None, b"\xde\xad", None,
+        (4, None, None, None, True, 3.14159, 0.0, None, b"\xde\xad", None,
          datetime.datetime(2000, 1, 1, 0, 0, 0),
          datetime.datetime(2000, 2, 29, 12, 0, 0),
          None, Decimal("999999999.99999999999"), None),
+        # float32 extremes: the smallest denormal and the largest finite
+        (5, None, -1, None, None, None, FLOAT32_MIN_DENORMAL, None, None,
+         None, None, None, None, None, None),
+        (6, None, 1, None, None, None, FLOAT32_MAX, None, None, None, None,
+         None, None, None, None),
     ]
     return spark.createDataFrame(rows, schema)
 
@@ -356,16 +368,16 @@ def test_copy_binary_matches_csv_wire(spark, pgsrv):
         pgsrv.conninfo(),
         """
         SELECT count(*) FROM (
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
+          SELECT id, small, tiny, big, flag, ratio::text, r4::text, name,
                  blob, day, at, attz, price, fine, tags FROM wire_csv
           EXCEPT ALL
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
+          SELECT id, small, tiny, big, flag, ratio::text, r4::text, name,
                  blob, day, at, attz, price, fine, tags FROM wire_binary
           UNION ALL
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
+          SELECT id, small, tiny, big, flag, ratio::text, r4::text, name,
                  blob, day, at, attz, price, fine, tags FROM wire_binary
           EXCEPT ALL
-          SELECT id, small, big, flag, ratio::text, r4::text, name,
+          SELECT id, small, tiny, big, flag, ratio::text, r4::text, name,
                  blob, day, at, attz, price, fine, tags FROM wire_csv) x;
         """,
     ).strip()
@@ -373,7 +385,7 @@ def test_copy_binary_matches_csv_wire(spark, pgsrv):
     n = P.run_psql(
         pgsrv.conninfo(), "SELECT count(*) FROM wire_binary;"
     ).strip()
-    assert n == "4"
+    assert n == "6"
     # jsonb payload is real jsonb through the binary wire too
     j = P.run_psql(
         pgsrv.conninfo(),
@@ -382,10 +394,42 @@ def test_copy_binary_matches_csv_wire(spark, pgsrv):
     assert j == "中文"
 
 
+def _assert_rows_exact(got, want):
+    """Row-by-row equality by id that also compares NaN (by isnan) and
+    the sign of a float zero, which Row equality cannot see."""
+    got = sorted(got, key=lambda r: r["id"])
+    want = sorted(want, key=lambda r: r["id"])
+    assert [r["id"] for r in got] == [r["id"] for r in want]
+    for g, w in zip(got, want):
+        assert g.__fields__ == w.__fields__
+        for name in w.__fields__:
+            a, b = g[name], w[name]
+            where = (w["id"], name, a, b)
+            if isinstance(b, float) and math.isnan(b):
+                assert isinstance(a, float) and math.isnan(a), where
+                continue
+            assert a == b, where
+            if isinstance(b, float):
+                assert math.copysign(1.0, a) == math.copysign(1.0, b), where
+
+
+def _read_tricky(spark, pgsrv, table, df):
+    return P.read_back(
+        spark,
+        pgsrv.conninfo(),
+        table,
+        df.schema,
+        partition_column="id",
+        lower=2,
+        upper=4,
+        num_partitions=2,
+    ).collect()
+
+
 def test_copy_binary_roundtrip_read_back(spark, pgsrv):
     """Binary-written rows read back value-exact through the bounded
     parallel COPY-out path (same assertion family as the csv twin)."""
-    df = _binary_tricky_df(spark).where("id <> 1")  # NaN != NaN in Row eq
+    df = _binary_tricky_df(spark)
     P.PostgresCopySink(
         pgsrv.conninfo(),
         "wire_rt",
@@ -393,19 +437,87 @@ def test_copy_binary_roundtrip_read_back(spark, pgsrv):
         num_partitions=2,
         wire_format="binary",
     ).write(df)
+    _assert_rows_exact(_read_tricky(spark, pgsrv, "wire_rt", df), df.collect())
+
+
+def test_csv_wire_edge_values_read_back(spark, pgsrv):
+    """The edge frame through the CSV wire reads back value-exact: the
+    COPY-out text of NaN/±Infinity/-0, float4 denormal and max, integer
+    extremes, session-zone timestamps, high-scale NUMERIC, bytea and
+    JSONB each parse to the value written."""
+    df = _binary_tricky_df(spark)
+    P.PostgresCopySink(
+        pgsrv.conninfo(), "wire_csv_rt", mode="overwrite", num_partitions=2
+    ).write(df)
+    _assert_rows_exact(
+        _read_tricky(spark, pgsrv, "wire_csv_rt", df), df.collect()
+    )
+
+
+def test_null_sentinel_text_and_empty_string_read_back(spark, pgsrv):
+    """A string whose text looks like a NULL marker is data: NULL, ''
+    and '__PGNULL__' (the marker of an earlier read wire) — and the
+    spellings a CSV reader nulls by default, and whitespace a CSV
+    writer trims by default — all round-trip exactly."""
+    texts = [None, "", "__PGNULL__", "NULL", "null", "NA", "N/A", "NaN",
+             " ", "  pad  ", "\ttab\t"]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "id long, name string"
+    )
+    P.PostgresCopySink(
+        pgsrv.conninfo(), "null_marks", mode="overwrite", num_partitions=1
+    ).write(df)
+    back = P.read_back(spark, pgsrv.conninfo(), "null_marks", df.schema)
+    got = sorted((r["id"], r["name"]) for r in back.collect())
+    assert got == list(enumerate(texts))
+
+
+def test_read_back_empty_table(spark, pgsrv):
+    """A 0-row table reads back as 0 rows in the declared schema, over
+    one connection and over several."""
+    df = _binary_tricky_df(spark).where("id < 0")
+    P.PostgresCopySink(
+        pgsrv.conninfo(), "empty_rt", mode="overwrite", num_partitions=2
+    ).write(df)
+    declared = [(f.name, f.dataType) for f in df.schema.fields]
+    for kw in ({}, {"partition_column": "id", "lower": 0, "upper": 10,
+                    "num_partitions": 3}):
+        back = P.read_back(spark, pgsrv.conninfo(), "empty_rt", df.schema, **kw)
+        assert [(f.name, f.dataType) for f in back.schema.fields] == declared
+        assert back.collect() == []
+
+
+def test_read_back_reports_psql_error(spark, pgsrv):
+    """A failed scan raises with psql's own message, not an empty or
+    partial result."""
+    back = P.read_back(spark, pgsrv.conninfo(), "no_such_table", "id long")
+    with pytest.raises(Exception, match="no_such_table.*does not exist"):
+        back.collect()
+
+
+def test_read_back_empty_middle_ranges(spark, pgsrv):
+    """Rows clustered at both ends of [lower, upper), plus rows outside
+    it, with the middle ranges empty: the read returns exactly the
+    table's rows."""
+    ids = [-5, 0, 1, 2, 997, 998, 999, 5000]
+    df = spark.createDataFrame(
+        [(i, f"r{i}") for i in ids], "id long, name string"
+    )
+    P.PostgresCopySink(
+        pgsrv.conninfo(), "sparse_rt", mode="overwrite", num_partitions=2
+    ).write(df)
     back = P.read_back(
         spark,
         pgsrv.conninfo(),
-        "wire_rt",
+        "sparse_rt",
         df.schema,
         partition_column="id",
-        lower=2,
-        upper=4,
-        num_partitions=2,
+        lower=0,
+        upper=1000,
+        num_partitions=10,
     )
-    got = sorted(back.collect(), key=lambda r: r["id"])
-    want = sorted(df.collect(), key=lambda r: r["id"])
-    assert got == want
+    assert back.rdd.getNumPartitions() == 10
+    assert sorted(back.collect()) == sorted(df.collect())
 
 
 def test_copy_binary_refusal_is_non_destructive(spark, pgsrv):
