@@ -317,7 +317,6 @@ def label_centroids(
     vectors: DataFrame,
     by: str = "label",
     vec_col: str = "embedding",
-    dim_hint: int | None = None,
 ) -> DataFrame:
     """Per-group dimension-wise centroid, exactly (one row per (group,
     pos)).  The IVF coarse-quantizer building block.
@@ -327,34 +326,11 @@ def label_centroids(
     end — so Spark and DuckDB agree bit-for-bit, unlike a double `avg`
     whose partition-order drift breaks hash gates.
 
-    ``dim_hint`` (r12): callers that already know the vector depth
-    (kmeans_lloyd probes it anyway) pass it so deep vectors route to
-    the fused numpy partial-sum pass (:func:`_label_partials_np`) —
-    same N·d-explode-free shape as the Lloyd round updates, same
-    bit-parity ledger.  Default None keeps the expression path (the
-    d=64 gate queries pay no probe job and no Python boundary)."""
-    if (
-        dim_hint is not None
-        and dim_hint > _ARGMIN_LITERAL_MAX_D
-        and _BIG_ARGMIN_IMPL == "numpy"
-        # fused only for label types whose null-ness survives the
-        # Arrow->pandas boundary losslessly: a float/double label
-        # column renders BOTH null and NaN as NaN in pandas, but Spark
-        # groups NaN separately from null — those (and any exotic
-        # types) stay on the expression path (r12 review finding)
-        and isinstance(
-            vectors.schema[by].dataType,
-            (
-                T.ByteType,
-                T.ShortType,
-                T.IntegerType,
-                T.LongType,
-                T.StringType,
-                T.BooleanType,
-            ),
-        )
-    ):
-        return _label_partials_np(vectors, by, vec_col)
+    One route at every depth: the posexplode aggregate the DuckDB
+    oracles replay.  It groups any label type with Spark's semantics
+    (null labels form one group, a NaN label its own), which an
+    Arrow/pandas kernel cannot — pandas renders both null and NaN float
+    labels as NaN."""
     ex = vectors.select(by, F.posexplode(vec_col).alias("pos0", "val"))
     return (
         ex.groupBy(by, (F.col("pos0") + 1).cast("long").alias("pos"))
@@ -371,169 +347,14 @@ def label_centroids(
     )
 
 
-_NULL_LABEL = object()  # Spark groups null labels together; so do we
-
-
-def _label_partials_np(
-    vectors: DataFrame, by: str, vec_col: str
-) -> DataFrame:
-    """Fused deep-vector twin of the :func:`label_centroids` explode:
-    per-partition int64 fixed-point sums + per-pos counts PER LABEL in
-    one ``mapInPandas`` pass, then the same (label, pos)-grain
-    aggregate and division.  Bit-parity ledger as the Lloyd fused
-    updates: :func:`_round_scaled_fixed` rounding, order-independent
-    int64 totals, per-pos counts so ragged rows contribute exactly the
-    positions posexplode would, null labels form one group (Spark's
-    groupBy semantics), null vectors contribute nothing."""
-    import numpy as np
-
-    by_field = vectors.schema[by]
-    # INTEGRAL labels cross the boundary as STRINGS: pandas upcasts a
-    # nullable int batch to float64, and float round-trip corrupts
-    # labels past 2^53 (r12 review finding) — long<->string casts are
-    # exact at any width, bijective (no leading zeros), and the final
-    # select casts back, so groups and dtypes are unchanged
-    integral = isinstance(
-        by_field.dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    )
-    wire_by_dt = T.StringType() if integral else by_field.dataType
-    part_schema = T.StructType(
-        [
-            T.StructField(by, wire_by_dt, True),
-            T.StructField("sums", T.ArrayType(T.LongType(), False), False),
-            T.StructField("cnts", T.ArrayType(T.LongType(), False), False),
-        ]
-    )
-
-    def partials(batches):
-        import pandas as pd
-
-        store: dict = {}  # label -> [sums int64[], cnts int64[]]
-
-        def norm(lab):
-            # null-like -> the one null group (Spark groupBy
-            # semantics); with integral labels stringified up front,
-            # no numeric identity can be lost here
-            if lab is None or (isinstance(lab, float) and lab != lab):
-                return _NULL_LABEL
-            return lab
-
-        def entry(lab, need: int):
-            e = store.get(lab)
-            if e is None:
-                e = [
-                    np.zeros(need, dtype=np.int64),
-                    np.zeros(need, dtype=np.int64),
-                ]
-                store[lab] = e
-            elif e[0].size < need:  # ragged: grow to the longest seen
-                for i in (0, 1):
-                    g = np.zeros(need, dtype=np.int64)
-                    g[: e[i].size] = e[i]
-                    e[i] = g
-            return e
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            labels = pdf[by].to_numpy()
-            raw = pdf[vec_col].to_numpy()
-            lens = {(-1 if x is None else len(x)) for x in raw}
-            lens.discard(-1)
-            if len(lens) == 1:
-                # uniform-length fast path: factorize labels, batch
-                # round, scatter-add per label index
-                d0 = lens.pop()
-                keep = np.fromiter(
-                    (x is not None for x in raw), dtype=bool, count=len(raw)
-                )
-                X = np.stack(
-                    [x for x in raw if x is not None]
-                ).astype(np.float64) if keep.any() else None
-                if X is None or d0 == 0:
-                    continue
-                labs = [
-                    norm(l)
-                    for l, k in zip(labels.tolist(), keep.tolist())
-                    if k
-                ]
-                codes, uniq = pd.factorize(
-                    pd.Series(labs, dtype=object), use_na_sentinel=False
-                )
-                bs = np.zeros((len(uniq), d0), dtype=np.int64)
-                bc = np.zeros((len(uniq), d0), dtype=np.int64)
-                for s0 in range(0, X.shape[0], 2048):
-                    xr = _round_scaled_fixed(np, X[s0 : s0 + 2048])
-                    np.add.at(bs, codes[s0 : s0 + 2048], xr)
-                    np.add.at(bc, codes[s0 : s0 + 2048], 1)
-                for ix, lab in enumerate(uniq):
-                    e = entry(lab, d0)
-                    e[0][:d0] += bs[ix]
-                    e[1][:d0] += bc[ix]
-            else:
-                for lab, x in zip(labels.tolist(), raw):
-                    if x is None or len(x) == 0:
-                        continue
-                    xr = _round_scaled_fixed(
-                        np, np.asarray(x, dtype=np.float64)
-                    )
-                    e = entry(norm(lab), xr.size)
-                    e[0][: xr.size] += xr
-                    e[1][: xr.size] += 1
-        rows = [
-            (
-                None if lab is _NULL_LABEL else lab,
-                e[0].tolist(),
-                e[1].tolist(),
-            )
-            for lab, e in store.items()
-        ]
-        if rows:
-            import pandas as pd
-
-            yield pd.DataFrame(rows, columns=[by, "sums", "cnts"])
-
-    by_in = (
-        F.col(by).cast("string").alias(by) if integral else F.col(by)
-    )
-    pz = (
-        vectors.select(by_in, vec_col)
-        .mapInPandas(partials, part_schema)
-        .select(
-            by,
-            F.posexplode(F.arrays_zip("sums", "cnts")).alias("pos0", "sc"),
-        )
-    )
-    by_out = (
-        F.col(by).cast(by_field.dataType).alias(by)
-        if integral
-        else F.col(by)
-    )
-    return (
-        pz.groupBy(by, (F.col("pos0") + 1).cast("long").alias("pos"))
-        .agg(F.sum("sc.sums").alias("s"), F.sum("sc.cnts").alias("c"))
-        .where(F.col("c") > 0)
-        .select(
-            by_out,
-            "pos",
-            (
-                F.col("s").cast("double")
-                / (F.lit(float(CENTROID_SCALE)) * F.col("c"))
-            ).alias("centroid_val"),
-        )
-    )
-
-
 def _centroid_arrays(
     vectors: DataFrame,
     by: str = "label",
     vec_col: str = "embedding",
-    dim_hint: int | None = None,
 ) -> DataFrame:
     """(group, centroid array<double>) — pos-ordered, from label_centroids."""
     return (
-        label_centroids(vectors, by, vec_col, dim_hint=dim_hint)
+        label_centroids(vectors, by, vec_col)
         .groupBy(by)
         .agg(
             F.transform(
@@ -567,7 +388,8 @@ def ann_topk_ivf(
     cents = _centroid_arrays(corpus, by).select(
         F.col(by).alias("cell"), "centroid"
     )
-    dim = _first_dim(corpus, vec_col)  # probe ONCE for both assigns
+    # collected once for both assignments
+    cents = _local_frame(corpus.sparkSession, cents.collect(), cents.schema)
 
     def assign(
         df: DataFrame, id_alias: str, vec_alias: str, probes: int
@@ -575,7 +397,7 @@ def ann_topk_ivf(
         pre = df.select(
             F.col(id_col).alias(id_alias), F.col(vec_col).alias(vec_alias)
         )
-        return _nearest_cells(pre, cents, probes, vec_alias, dim=dim)
+        return _nearest_cells(pre, cents, probes, vec_alias)
 
     c = assign(corpus, "neighbor_id", "cvec", 1).withColumn("cnrm", norm("cvec"))
     q = assign(queries, "query_id", "qvec", n_probes).withColumn(
@@ -598,9 +420,7 @@ def _first_dim(df: DataFrame, col: str) -> int:
     """Dimension of the frame's vector column — ONE-row limit scan (a
     single tiny task; array lengths are not in the schema).  NULL
     vectors are filtered BEFORE the probe: .first() returns an
-    arbitrary row, and a null first vector would return 0 and silently
-    route a deep corpus down the interpreted expression path (r11
-    second-pass review finding)."""
+    arbitrary row, and a null first vector would return 0."""
     r = (
         df.where(F.col(col).isNotNull())
         .select(F.size(col).alias("d"))
@@ -609,115 +429,50 @@ def _first_dim(df: DataFrame, col: str) -> int:
     return int(r["d"]) if r is not None and r["d"] is not None else 0
 
 
-def _nearest_cells(
-    df: DataFrame,
-    cents: DataFrame,
-    probes: int,
-    vec_alias: str,
-    dim: int | None = None,
-) -> DataFrame:
-    """Route the IVF cell assignment by vector depth (VERDICT r10
-    item 1): shallow vectors keep the expression scan (no driver
-    collect, no Python boundary); past :data:`_ARGMIN_LITERAL_MAX_D`
-    the interpreted fold is compute-bound (~2 GFLOP per pass at d=512)
-    and the numpy ``mapInPandas`` twin does the identical arithmetic in
-    C — bit-identical cells, zero shuffle either way (parity pinned in
-    tests/test_ann_recall.py; walls in BASELINE.md r11)."""
-    if dim is None:
-        dim = _first_dim(df, vec_alias)
-    if dim > _ARGMIN_LITERAL_MAX_D and _BIG_ARGMIN_IMPL == "numpy":
-        return _nearest_cells_np(df, cents, probes, vec_alias)
-    return _nearest_cells_expr(df, cents, probes, vec_alias)
+def _local_frame(spark, rows, schema: T.StructType) -> DataFrame:
+    """``rows`` as a driver-local relation (LocalTableScan).  The
+    assignment kernels collect their model frame on the driver:
+    collecting a local relation runs no Spark job, while a
+    ``createDataFrame(list)`` frame is an RDD scan whose every collect
+    is a job with a Python task per partition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-
-def _nearest_cells_expr(
-    df: DataFrame, cents: DataFrame, probes: int, vec_alias: str
-) -> DataFrame:
-    """Append ``cell``: each row exploded to its ``probes`` nearest
-    coarse cells by cosine-to-centroid (score desc, ties to the lower
-    cell) as a pure scan — the r10 audit twin of :func:`_nearest_cell`
-    and :func:`_pq_codes_bcast` for the IVF assignment.
-
-    The centroid set rides ONE single-row broadcast array (distributed
-    ``collect_list``, no driver collect) and the per-row top-``probes``
-    is ``slice(array_sort(struct(-score, cell)), 1, probes)`` — the
-    former ``row_number`` window hash-partitioned AND sorted all N·k
-    scored rows (vectors riding along) for what is a per-row
-    selection.  Negating the score for the ascending sort is exact in
-    IEEE, so the (score desc, cell asc) winner order is bit-identical
-    for every comparable score; the one divergence is a zero-norm
-    centroid's NaN score, which the window's desc order put FIRST
-    (every row would probe that degenerate cell) and the ascending
-    -score sort puts LAST — the new behavior is the defensible one,
-    and a mean-of-unit-vectors centroid is zero only on exact
-    cancellation.  All incoming columns pass through."""
-    # the centroid norm is a property of the centroid — compute it ONCE
-    # per cell here, not once per (row, cell) inside the scan (the old
-    # window form recomputed it per scored row; same double either way:
-    # sqrt(dot(c, c)) is deterministic)
-    cent_row = cents.select(
-        "cell", "centroid", norm("centroid").alias("cnrm")
-    ).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("cell"), F.col("centroid"), F.col("cnrm"))
-            )
-        ).alias("__cents")
-    ).where(
-        # the single-row agg emits one row even over ZERO centroids;
-        # unfiltered, probes==1 would assign NULL cell to every corpus
-        # row (nulls into downstream joins) while probes>1's explode
-        # drops all rows.  Dropping the empty-array row makes both
-        # branches match the prior crossJoin form: zero output rows on
-        # a degenerate centroid set.
-        F.size("__cents") > 0
-    )
-    vec = F.col(vec_alias)
-    cands = F.transform(
-        F.col("__cents"),
-        lambda s: F.struct(
-            (-(dot(vec, s["centroid"]) / s["cnrm"])).alias("nscore"),
-            s["cell"].alias("cell"),
-        ),
-    )
-    cols = list(df.columns)
-    joined = df.crossJoin(F.broadcast(cent_row))
-    if probes == 1:
-        # the corpus side (the N-row side) always takes this branch:
-        # array_min is one O(k) pass with no sorted-copy allocation and
-        # no Generate — same winner as slice(array_sort(...), 1, 1)
-        return joined.select(
-            *cols, F.array_min(cands)["cell"].alias("cell")
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows],
+            schema=to_arrow_schema(schema),
         )
-    top = F.slice(F.array_sort(cands), 1, probes)
-    return (
-        joined.select(*cols, F.explode(top).alias("__t"))
-        .select(*cols, F.col("__t.cell").alias("cell"))
     )
 
 
 def _collect_cells(cents: DataFrame) -> "list[tuple]":
-    """(cell, centroid) rows sorted ascending by cell — the numpy
-    twins' model collect.  Bounded by the same discipline that lets
-    the expression paths broadcast the model: k·d doubles, never
-    corpus-proportional."""
+    """(cell, centroid) rows sorted ascending by cell — the assignment
+    kernels' model collect.  Bounded like every model here: k·d
+    doubles, never corpus-proportional."""
     return sorted(
         (r["cell"], list(r["centroid"])) for r in cents.collect()
     )
 
 
-def _nearest_cells_np(
+def _nearest_cells(
     df: DataFrame, cents: DataFrame, probes: int, vec_alias: str
 ) -> DataFrame:
-    """Numpy twin of :func:`_nearest_cells_expr` — identical cells by
-    construction: the negated-cosine is the SAME left-fold dot (one
-    multiply + one add per dimension in ascending order over float64),
-    the same per-cell ``sqrt(dot(c, c))`` norm, division then
-    negation; candidates are laid out cell-ascending so ``argmin``
-    (first minimum) and the stable argsort both break score ties to
-    the LOWER cell; numpy sorts NaN scores last exactly like Spark's
-    ascending struct sort, and the probes==1 argmin masks NaN to +inf
-    (struct-min's NaN-loses rule)."""
+    """Append ``cell``: each row exploded to its ``probes`` nearest
+    coarse cells by cosine-to-centroid (score desc, ties to the lower
+    cell) as a zero-shuffle Arrow-batched numpy scan: the centroid set
+    is collected once (k·d doubles) and rides the task closure.
+
+    The negated cosine ``-(dot(v, c) / sqrt(dot(c, c)))`` is a left
+    fold in float64 — one multiply and one add per dimension in
+    ascending order, never ``np.sum`` or a matmul — so it is the same
+    double as :func:`dot`/:func:`norm` and the DuckDB oracle's
+    ``list_reduce``.  Candidates are laid out cell-ascending, so
+    ``argmin`` (first minimum) and the stable argsort break score ties
+    to the LOWER cell.  NaN scores sort last (the probes==1 argmin
+    masks them to +inf).  A NULL or wrong-length vector scores NaN
+    against every cell and so probes the lowest cells.  All incoming
+    columns pass through; zero centroids → zero rows."""
     import numpy as np
 
     rows = _collect_cells(cents)
@@ -727,8 +482,6 @@ def _nearest_cells_np(
     )
     out_schema = T.StructType(list(df.schema.fields) + [cell_field])
     if not rows:
-        # degenerate centroid set -> zero rows, same as the expression
-        # branches (r10 ADVICE semantics)
         return df.select(
             *cols, F.lit(0).cast(cell_field.dataType).alias("cell")
         ).where(F.lit(False))
@@ -736,22 +489,14 @@ def _nearest_cells_np(
     C = np.array([cen for _, cen in rows], dtype=np.float64)
     k, d = C.shape
     cn = np.zeros(k, dtype=np.float64)
-    for t in range(d):  # left-fold: parity with norm()'s aggregate
+    for t in range(d):  # left fold, as norm()'s aggregate
         cn += C[:, t] * C[:, t]
     cnrm = np.sqrt(cn)
 
     def assign(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            # degenerate rows (NULL vector or wrong length) must match
-            # the expression twin, which null-propagates the fold into
-            # a null nscore for EVERY candidate — null sorts first in
-            # Spark's struct ordering, so such a row probes the LOWEST
-            # cells (r11 review finding; parity-pinned against the
-            # expression twin on dirty frames)
             X, _ = _stack_padded(np, pdf[vec_alias].to_numpy(), d)
             n = X.shape[0]
             dots = np.zeros((n, k), dtype=np.float64)
@@ -759,9 +504,6 @@ def _nearest_cells_np(
                 dots += X[:, t, None] * C[None, :, t]
             with np.errstate(divide="ignore", invalid="ignore"):
                 nscore = -(dots / cnrm[None, :])
-            # NaN rows (from the NaN padding of degenerate vectors, or
-            # genuine NaN elements) collapse to "all candidates equal"
-            # -> lowest cells, the same winners as the null-first sort
             if probes == 1:
                 masked = np.where(np.isnan(nscore), np.inf, nscore)
                 out = pdf.copy()
@@ -794,11 +536,11 @@ def _nearest_cells_l2(
     recall with no error anywhere.
 
     Only the QUERY side ever multi-probes, and query sets are bounded,
-    so this stays the broadcast-array expression scan at every depth —
-    the corpus-scale assignments (probes=1) go through
-    :func:`_nearest_cell`, which has the deep-vector numpy route.  All
-    incoming columns pass through; zero centroids → zero rows (the
-    family's degenerate-model contract)."""
+    so this is a broadcast-array expression scan (the IVF-PQ oracle
+    replays it) — the corpus-scale assignments (probes=1) go through
+    the numpy kernel :func:`_nearest_cell`.  All incoming columns pass
+    through; zero centroids → zero rows (the family's degenerate-model
+    contract)."""
     cent_row = (
         cents.select("cell", "centroid")
         .agg(
@@ -826,23 +568,21 @@ def _nearest_cells_l2(
 
 
 def _stack_padded(np, vals, d: int, mode: str = "exact"):
-    """(n, d) float64 from a column of per-row arrays, tolerating the
-    dirty shapes the expression twins tolerate, with the twins' OWN
-    degeneracy rules:
+    """(n, d) float64 from a column of per-row arrays, tolerating dirty
+    rows with the assignment kernels' degeneracy rules:
 
-    - ``mode='exact'`` (the zip_with folds in the nearest-cell twins):
-      ``zip_with`` pads the SHORTER side with null, so ANY length
-      mismatch — longer or shorter — null-propagates into the whole
-      fold; such rows become all-NaN here, which the NaN masking
-      resolves to the same lowest-cell winners.
-    - ``mode='slice'`` (the PQ twin): the expression path slices the
-      first m·d elements, so LONGER rows are normal and only the
-      subspaces touching a SHORT row's missing tail degenerate —
-      truncate long rows, NaN-pad short ones.
+    - ``mode='exact'`` (the nearest-cell kernels, whose folds follow
+      ``zip_with``: the shorter side pads with null): ANY length
+      mismatch — longer or shorter — or a NULL vector makes the whole
+      row NaN, which the NaN masking resolves to the lowest cell(s).
+    - ``mode='slice'`` (the PQ kernels, which read the first m·d
+      elements): LONGER rows truncate and are normal; a SHORT row keeps
+      its real prefix and NaN-pads the tail, so only the subspaces the
+      missing tail touches degenerate (to code 0).
 
-    Returns ``(X, degenerate)`` — the mask marks rows whose fold the
-    expression twin would NULL (callers that emit a dist/score column
-    surface null there, not the padding NaN)."""
+    Returns ``(X, degenerate)`` — the mask marks the rows whose fold is
+    NULL (callers that emit a dist column surface null there, not the
+    padding NaN)."""
     clean = True
     for x in vals:
         if x is None or len(x) != d:
@@ -867,6 +607,48 @@ def _stack_padded(np, vals, d: int, mode: str = "exact"):
         else:
             degenerate[i] = True
     return out, degenerate
+
+
+def _sq_dists(np, X, C):
+    """(n, k) squared L2 distances from rows ``X`` (n, d) to centroids
+    ``C`` (k, d): the :func:`sq_dist` left fold in float64 — subtract,
+    multiply, add per dimension in ascending order, never ``np.sum``
+    (pairwise association) or the matmul identity (different
+    rounding) — so each distance is the double Spark and DuckDB folds
+    compute."""
+    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    for t in range(C.shape[1]):
+        diff = X[:, t, None] - C[None, :, t]
+        acc += diff * diff
+    return acc
+
+
+def _argmin_l2(np, X, C):
+    """Per row, the index of the nearest centroid in ``C``: the first
+    minimum (ties to the LOWER index), NaN distances masked to +inf (an
+    all-NaN row picks index 0)."""
+    acc = _sq_dists(np, X, C)
+    np.copyto(acc, np.inf, where=np.isnan(acc))
+    return acc.argmin(axis=1)
+
+
+def _pq_model(np, cmap: dict, m: int, n_codes: int):
+    """The ``{(subspace, code): centroid}`` codebook map as an (m,
+    codes, d) float64 array."""
+    return np.array(
+        [[cmap[(j, c)] for c in range(n_codes)] for j in range(m)],
+        dtype=np.float64,
+    )
+
+
+def _pq_argmin(np, vs, model):
+    """(n, m) PQ codes of the rows ``vs`` (n, m·d) against ``model``
+    (m, codes, d): :func:`_argmin_l2` per contiguous subspace."""
+    m, _, d = model.shape
+    return np.stack(
+        [_argmin_l2(np, vs[:, j * d : (j + 1) * d], model[j]) for j in range(m)],
+        axis=1,
+    )
 
 
 def int_dot(a: Column | str, b: Column | str) -> Column:
@@ -1074,19 +856,13 @@ def ann_topk_all_methods(
         sc = corpus.sparkSession.sparkContext
         before = persistent_rdd_ids(sc)
         # r15 (guide §2.6): the two prep materializations are
-        # independent jobs over disjoint inputs, and the IVF dimension
-        # probe reads ONE row of the raw corpus — the same vector
-        # column _ann_prep aliases through untouched, so
-        # _first_dim(corpus) == _first_dim(cprep) by construction.
-        # Overlapping the three on driver threads removes two
-        # sequential job walls from every cold call; each leg is the
-        # identical job it was sequentially, so results are unchanged.
+        # independent jobs over disjoint inputs; overlapping them on
+        # driver threads removes one sequential job wall from every
+        # cold call, and each leg is the identical job it was
+        # sequentially, so results are unchanged.
         try:
-            cprep, (qprep, ivf_dim) = overlap(
-                [
-                    lambda q=qprep: stable_checkpoint(q),
-                    lambda: _first_dim(corpus, vec_col),
-                ],
+            cprep, (qprep,) = overlap(
+                [lambda q=qprep: stable_checkpoint(q)],
                 main=lambda c=cprep: stable_checkpoint(c),
             )
         except BaseException:
@@ -1104,12 +880,10 @@ def ann_topk_all_methods(
             handle_out.append(
                 AnnPrepHandle(sc, persistent_rdd_ids(sc) - before)
             )
-    else:
-        ivf_dim = _first_dim(corpus, vec_col)
-        if handle_out is not None:
-            handle_out.append(
-                AnnPrepHandle(corpus.sparkSession.sparkContext, set())
-            )
+    elif handle_out is not None:
+        handle_out.append(
+            AnnPrepHandle(corpus.sparkSession.sparkContext, set())
+        )
     masks = F.array(
         *[F.lit(m) for m in lsh_probe_masks(n_bits, n_probes_lsh)]
     )
@@ -1154,8 +928,8 @@ def ann_topk_all_methods(
     cents = _centroid_arrays(
         cprep.select(F.col(by), F.col("vec").alias("embedding")), by
     ).select(F.col(by).alias("cell"), "centroid")
-    # ivf_dim was probed above (ONCE for both assigns), overlapped with
-    # the prep checkpoints on the checkpoint path.
+    # collected once for both assignments
+    cents = _local_frame(corpus.sparkSession, cents.collect(), cents.schema)
 
     def assign(prep: DataFrame, id_alias: str, vec_alias: str, probes: int):
         pre = prep.select(
@@ -1163,7 +937,7 @@ def ann_topk_all_methods(
             F.col("vec").alias(vec_alias),
             F.col("nrm").alias("__nrm"),
         )
-        return _nearest_cells(pre, cents, probes, vec_alias, dim=ivf_dim)
+        return _nearest_cells(pre, cents, probes, vec_alias)
 
     c_ivf = assign(cprep, "neighbor_id", "cvec", 1).withColumnRenamed(
         "__nrm", "cnrm"
@@ -1482,11 +1256,10 @@ def kmeans_lloyd(
 ) -> tuple[DataFrame, DataFrame, int]:
     """Lloyd's k-means — the iterative-algorithm shape on Spark: per
     round ONE Spark job (assignment scan + model-grain mean exchange),
-    with the k·d centroid MODEL held driver-side between rounds (r12;
-    it is the same bounded grain the assignment broadcasts anyway, so
-    the per-round stable_checkpoint materialization and separate
-    shift-scalar job the r11 shape paid are gone — no lineage growth
-    to stop).
+    with the k·d centroid MODEL held driver-side between rounds (it is
+    the same bounded grain the assignment ships anyway, so no per-round
+    checkpoint or separate shift-scalar job — no lineage growth to
+    stop).
 
     Returns ``(assignments(id, cell, dist), centroids(cell, centroid),
     n_iterations)``.
@@ -1495,20 +1268,18 @@ def kmeans_lloyd(
       centroids (:func:`label_centroids` — k = distinct labels); pass
       ``init`` as a ``(cell, centroid array<double>)`` frame to seed
       differently.  No RNG anywhere, so runs are bit-reproducible.
-    - **Assignment** is a zero-shuffle scan: the centroid set rides a
-      single-row broadcast (d ≤ 256, :func:`_nearest_cell_expr`) or
-      the task closure of the numpy ``mapInPandas`` twin (d > 256) —
-      min-distance cell with total-order (dist, cell) tie breaks,
-      bit-identical across routes.
-    - **Update**: fixed-point int64 per-(cell, pos) means
-      (order-independent — the same determinism contract as
-      :func:`label_centroids`).  d ≤ 256: posexplode + map-side
-      combined aggregate.  d > 256: FUSED into the assignment pass
-      (:func:`_cell_partial_means_np`) — the corpus never explodes;
-      the exchange is k·d·P model cells, corpus-independent.  An
-      emptied cluster keeps its previous centroid instead of
-      vanishing; merge + max-shift convergence are k-row driver
-      loops over the identical IEEE doubles.
+    - **Round**: :func:`_cell_partial_means_np` — one Arrow-batched
+      numpy pass runs the :func:`_nearest_cell` argmin (min-distance
+      cell, total-order (dist, cell) ties) AND accumulates per-(cell,
+      pos) fixed-point int64 partial sums, so the corpus never
+      explodes; the round's one exchange is k·d·P model cells,
+      corpus-independent.  Means are order-independent (the
+      :func:`label_centroids` determinism contract).  An emptied
+      cluster keeps its previous centroid instead of vanishing; merge
+      + max-shift convergence are k-row driver loops over the
+      identical IEEE doubles.
+    - **Final assignment**: one zero-shuffle :func:`_nearest_cell` scan
+      against the returned centroids.
 
     At 100 TB: per-round cost = one corpus scan + one model-grain
     exchange; rounds are the only serial dimension.  This is exactly
@@ -1523,21 +1294,16 @@ def kmeans_lloyd(
     v = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
-    dim = _first_dim(v, "vec")  # probe ONCE: routes init AND rounds
     init_df = (
         init
         if init is not None
-        else _centroid_arrays(
-            vectors, "label", vec_col, dim_hint=dim
-        ).select(F.col("label").cast("int").alias("cell"), "centroid")
+        else _centroid_arrays(vectors, "label", vec_col).select(
+            F.col("label").cast("int").alias("cell"), "centroid"
+        )
     )
-    # The centroid MODEL lives on the driver between rounds (r12,
-    # VERDICT r11 item 2): it is k·d doubles — the same bounded grain
-    # the assignment collects/broadcasts anyway — and holding it here
-    # collapses each round from three actions (update agg +
-    # stable_checkpoint materialization + shift scalar) to ONE Spark
-    # job; merge/coalesce-empties/shift are k-row Python loops on the
-    # identical IEEE values, and round-to-round state is a literal
+    # The centroid MODEL lives on the driver between rounds: it is k·d
+    # doubles, merge/coalesce-empties/shift are k-row Python loops on
+    # the identical IEEE values, and round-to-round state is a literal
     # re-embed (Python float IS the double), so nothing drifts.
     spark = vectors.sparkSession
     cell_dt = init_df.schema["cell"].dataType
@@ -1550,55 +1316,15 @@ def kmeans_lloyd(
         ]
     )
     cents_rows = _collect_cells(init_df)  # [(cell, [double...])], sorted
-
-    def cents_df() -> DataFrame:
-        return spark.createDataFrame(
-            [(c, list(cen)) for c, cen in cents_rows], cent_schema
-        )
-
-    use_np = dim > _ARGMIN_LITERAL_MAX_D and _BIG_ARGMIN_IMPL == "numpy"
     iterations = 0
     for _ in range(max_iterations):
         iterations += 1
         if not cents_rows:
             break  # nothing to iterate on; empty model stays empty
-        if use_np:
-            # fused assignment + fixed-point partial sums: the corpus
-            # never explodes, the one exchange is k·d·P model cells
-            new = _cell_partial_means_np(v, cents_rows)
-            new_map = {
-                cents_rows[r["cell_ix"]][0]: list(r["centroid"])
-                for r in new.collect()  # <= k rows
-            }
-        else:
-            # nearest-centroid as a ZERO-shuffle scan (r10, twin of
-            # _pq_codes_bcast): the former N·k crossJoin + min_by
-            # aggregate re-shuffled every row's vector once per round;
-            # the posexplode mean is the round's one exchange
-            # (map-side combined to k·d cells per partition)
-            assigned = _nearest_cell_expr(v, cents_df())
-            ex = assigned.select(
-                "cell", F.posexplode("vec").alias("pos", "val")
-            )
-            new0 = ex.groupBy("cell", "pos").agg(
-                (
-                    F.sum(
-                        F.round(
-                            F.col("val").cast("double") * CENTROID_SCALE
-                        ).cast("long")
-                    ).cast("double")
-                    / (F.lit(float(CENTROID_SCALE)) * F.count(F.lit(1)))
-                ).alias("cv")
-            )
-            new = new0.groupBy("cell").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("centroid")
-            )
-            new_map = {
-                r["cell"]: list(r["centroid"]) for r in new.collect()
-            }
+        new_map = {
+            cents_rows[r["cell_ix"]][0]: list(r["centroid"])
+            for r in _cell_partial_means_np(v, cents_rows).collect()
+        }  # <= k rows
         # emptied clusters keep their previous centroid; convergence
         # is the max element shift — both k-grain, both driver-side
         shift = 0.0
@@ -1620,36 +1346,27 @@ def kmeans_lloyd(
     # assignments are scored against the FINAL centroid set so
     # (assignments, centroids) are mutually consistent: every point's
     # cell IS its nearest returned centroid.  One zero-shuffle pass.
-    cents = cents_df()
-    assigned = _nearest_cell(v, cents, dim=dim)
+    cents = _local_frame(spark, cents_rows, cent_schema)
+    assigned = _nearest_cell(v, cents)
     out = assigned.select(F.col("id").alias(id_col), "cell", "dist")
     return out, cents, iterations
 
 
-def _nearest_cell(
-    v: DataFrame, cents: DataFrame, dim: int | None = None
-) -> DataFrame:
-    """Route the Lloyd assignment by vector depth — the
-    :func:`_nearest_cells` twin (VERDICT r10 item 1): expression scan
-    for shallow vectors, numpy ``mapInPandas`` past
-    :data:`_ARGMIN_LITERAL_MAX_D`, bit-identical (cell, dist) either
-    way (parity pinned in tests/test_ann_recall.py)."""
-    if dim is None:
-        dim = _first_dim(v, "vec")
-    if dim > _ARGMIN_LITERAL_MAX_D and _BIG_ARGMIN_IMPL == "numpy":
-        return _nearest_cell_np(v, cents)
-    return _nearest_cell_expr(v, cents)
+def _nearest_cell(v: DataFrame, cents: DataFrame) -> DataFrame:
+    """(id, vec, cell, dist): the L2 nearest centroid per row — the
+    Lloyd and IVF-PQ encode assignment — as a zero-shuffle Arrow-batched
+    numpy scan; the centroid set is collected once (k·d doubles) and
+    rides the task closure.
 
-
-def _nearest_cell_np(v: DataFrame, cents: DataFrame) -> DataFrame:
-    """Numpy twin of :func:`_nearest_cell_expr`: the same
-    :func:`sq_dist` left-fold per dimension in ascending order over
-    float64 (subtract, multiply, add — IEEE-deterministic), centroids
-    laid out cell-ascending so the first-minimum argmin IS the
-    tie-to-lower-cell struct-min, NaN distances masked to +inf (an
-    all-NaN row keeps its NaN dist and cell 0, exactly the struct-min
-    outcome).  The returned ``dist`` is the winning fold double,
-    bit-identical to the expression path's."""
+    ``dist`` is the :func:`sq_dist` left fold in float64 — subtract,
+    multiply, add per dimension in ascending order, never ``np.sum`` or
+    the matmul identity — so it is the same double the DuckDB oracles
+    compute.  Centroids are laid out cell-ascending, so the
+    first-minimum argmin breaks ties to the LOWER cell; NaN distances
+    are masked to +inf, so an all-NaN row (a NaN element) lands on the
+    lowest cell with a NaN dist.  A NULL or wrong-length vector also
+    lands on the lowest cell, with a NULL dist.  Zero centroids → zero
+    rows."""
     import numpy as np
 
     rows = _collect_cells(cents)
@@ -1671,7 +1388,7 @@ def _nearest_cell_np(v: DataFrame, cents: DataFrame) -> DataFrame:
         ).where(F.lit(False))
     cells_np = np.array([c for c, _ in rows])
     C = np.array([cen for _, cen in rows], dtype=np.float64)
-    k, d = C.shape
+    d = C.shape[1]
 
     def assign(batches):
         import pandas as pd
@@ -1681,19 +1398,12 @@ def _nearest_cell_np(v: DataFrame, cents: DataFrame) -> DataFrame:
                 continue
             X, degenerate = _stack_padded(np, pdf["vec"].to_numpy(), d)
             n = X.shape[0]
-            acc = np.zeros((n, k), dtype=np.float64)
-            for t in range(d):  # left-fold order: bit-parity
-                diff = X[:, t, None] - C[None, :, t]
-                acc += diff * diff
-            masked = np.where(np.isnan(acc), np.inf, acc)
-            idx = masked.argmin(axis=1)
-            # a NULL/wrong-length vector's fold is NULL in the
-            # expression twin (zip_with null padding) — but a genuine
-            # NaN ELEMENT's fold is NaN, and the two must stay
+            acc = _sq_dists(np, X, C)
+            idx = np.where(np.isnan(acc), np.inf, acc).argmin(axis=1)
+            # NULL (degenerate row) and NaN (NaN element) must stay
             # distinct through Arrow: an explicit-mask FloatingArray
             # nulls ONLY the degenerate rows (an object column would
-            # fold NaN into null — r11 second-pass review finding,
-            # confirmed by repro)
+            # fold NaN into null)
             dist = pd.arrays.FloatingArray(
                 acc[np.arange(n), idx], degenerate.copy()
             )
@@ -1712,17 +1422,17 @@ def _nearest_cell_np(v: DataFrame, cents: DataFrame) -> DataFrame:
 def _cell_partial_means_np(
     v: DataFrame, cents_rows: "list[tuple]"
 ) -> DataFrame:
-    """Fused kmeans Lloyd UPDATE — the :func:`_pq_partial_means_np`
-    twin at whole-vector grain: one ``mapInPandas`` pass runs the
-    :func:`_nearest_cell_np` argmin AND accumulates per-(cell, pos)
-    int64 fixed-point partial sums, replacing the N·d posexplode hash
-    aggregate with a k·d·P-cell model-grain exchange.  Same parity
-    ledger as the PQ twin (argmin association/ties/NaN, HALF_UP
-    rounding via :func:`_round_scaled_fixed`, per-pos counts for
-    ragged rows, shared :func:`_fixed_point_mean` division).  Returns
-    ``(cell, centroid)`` — the Lloyd round's `new` frame.  Per-task
-    state is 2·k·d int64 — the same bounded-model discipline as the
-    broadcast the assignment already rides."""
+    """One kmeans Lloyd round — the :func:`_pq_partial_means_np` twin
+    at whole-vector grain: one ``mapInPandas`` pass runs the
+    :func:`_nearest_cell` argmin AND accumulates per-(cell, pos) int64
+    fixed-point partial sums, so the one exchange is k·d·P model cells,
+    never the N·d exploded corpus.  The means are the
+    :func:`label_centroids` arithmetic: HALF_UP rounding via
+    :func:`_round_scaled_fixed`, order-independent int64 totals,
+    per-pos counts (a short row contributes only its real positions),
+    and the shared :func:`_fixed_point_mean` division.  Returns
+    ``(cell_ix, centroid)`` — the index into ``cents_rows``.  Per-task
+    state is 2·k·d int64."""
     import numpy as np
 
     C = np.array([cen for _, cen in cents_rows], dtype=np.float64)
@@ -1746,12 +1456,7 @@ def _cell_partial_means_np(
             raw = pdf["vec"].to_numpy()
             X, _ = _stack_padded(np, raw, d)
             n = X.shape[0]
-            acc = np.zeros((n, k), dtype=np.float64)
-            for t in range(d):  # left-fold order: bit-parity
-                diff = X[:, t, None] - C[None, :, t]
-                acc += diff * diff
-            np.copyto(acc, np.inf, where=np.isnan(acc))  # dist unused
-            idx = acc.argmin(axis=1)
+            idx = _argmin_l2(np, X, C)
             clean = np.fromiter(
                 (x is not None and len(x) == d for x in raw),
                 dtype=bool,
@@ -1810,47 +1515,6 @@ def _cell_partial_means_np(
     # (cell_ix, centroid): the caller maps ix -> cell id driver-side
     # (it holds cents_rows anyway), keeping the cell dtype exact
     return _fixed_point_mean(per_pos, ["cell_ix"])
-
-
-def _nearest_cell_expr(v: DataFrame, cents: DataFrame) -> DataFrame:
-    """(id, vec, cell, dist): nearest centroid per row as a zero-shuffle
-    scan.  The centroid set rides ONE single-row broadcast
-    (``array<struct<cell, centroid>>`` — the same bounded-model
-    discipline as every broadcast model here, but WITHOUT a driver
-    collect: the array is built by a distributed ``collect_list``
-    aggregate) and the argmin is a per-row ``array_min`` over
-    ``(dist, cell)`` structs — the same :func:`sq_dist` fold and the
-    same min-by-``(dist, cell)`` winner as the former N·k
-    crossJoin + min_by aggregate, bit-identically, with no exchange on
-    the corpus side.  ``array_sort`` on the centroid list is for plan
-    stability only; ``array_min`` is order-independent and ties break
-    on the cell VALUE either way."""
-    cent_row = cents.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("cell"), F.col("centroid")))
-        ).alias("__cents")
-    ).where(
-        # drop the always-emitted single agg row when the centroid set
-        # is empty — otherwise array_min over an empty array assigns
-        # NULL cell to every row, where the former crossJoin + min_by
-        # form produced zero rows (same rationale as _nearest_cells)
-        F.size("__cents") > 0
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("__cents"),
-            lambda s: F.struct(
-                sq_dist(F.col("vec"), s["centroid"]).alias("dist"),
-                s["cell"].alias("cell"),
-            ),
-        )
-    )
-    return v.crossJoin(F.broadcast(cent_row)).select(
-        "id",
-        "vec",
-        best["cell"].alias("cell"),
-        best["dist"].alias("dist"),
-    )
 
 
 def semantic_dedup(
@@ -1973,30 +1637,6 @@ def _subvectors(
     ).select("id", "p.subspace", "p.subvec")
 
 
-def _subspace_means(assigned: DataFrame) -> DataFrame:
-    """Fixed-point per-(subspace, code) mean of subvec rows — the same
-    order-independent int64-sum determinism contract as kmeans_lloyd."""
-    ex = assigned.select(
-        "subspace", "code", F.posexplode("subvec").alias("pos", "val")
-    )
-    per_pos = ex.groupBy("subspace", "code", "pos").agg(
-        (
-            F.sum(
-                F.round(F.col("val").cast("double") * CENTROID_SCALE).cast(
-                    "long"
-                )
-            ).cast("double")
-            / (F.lit(float(CENTROID_SCALE)) * F.count(F.lit(1)))
-        ).alias("cv")
-    )
-    return per_pos.groupBy("subspace", "code").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-            lambda s: s["cv"],
-        ).alias("centroid")
-    )
-
-
 def _round_scaled_fixed(np, x):
     """int64 fixed-point of ``round(x * CENTROID_SCALE)`` with SPARK's
     Round semantics — HALF_UP away from zero on the double value.
@@ -2012,8 +1652,8 @@ def _round_scaled_fixed(np, x):
     up across the boundary: s = 0.49999999999999994 → floor gives 1,
     Spark gives 0 — verified against Spark in
     tests/test_ann_recall.py).  |s| ≥ 2^52 is already integral.
-    Non-finite values are out of contract (the expression path raises
-    under ANSI when casting NaN to long)."""
+    Non-finite values are refused (Spark's cast raises under ANSI when
+    casting NaN to long)."""
     # Few-pass form (r12: these ops are memory-bandwidth-bound across
     # 32 parallel workers, so every avoided temporary matters):
     # frac = s - floor(s) is computed EXACTLY for |s| < 2^52 (both
@@ -2029,18 +1669,14 @@ def _round_scaled_fixed(np, x):
     if not np.isfinite(s).all():
         # fail-LOUD: astype(int64) on a non-finite is platform-defined
         # (INT64_MIN on x86) and would silently poison the fixed-point
-        # sums (r12 review finding).  The expression twin raises under
-        # ANSI for a genuine NaN/Inf element; for a NULL element it
-        # computes (sum skips, count includes) — but NULL and NaN are
-        # INDISTINGUISHABLE after the Arrow float64 boundary, so the
-        # fused routes refuse BOTH rather than guess.  Route-parity is
-        # scoped to finite, non-null vector elements; this divergence
-        # is a loud error, never silent drift.
+        # sums (r12 review finding).  Spark's own cast raises under
+        # ANSI for a NaN/Inf element; a NULL element is
+        # INDISTINGUISHABLE from NaN after the Arrow float64 boundary,
+        # so the kernels refuse both rather than guess.
         raise ValueError(
             "fixed-point centroid mean: non-finite vector element "
             "(null and NaN elements are indistinguishable after Arrow; "
-            "the fused route refuses both — clean the vectors or use "
-            "_BIG_ARGMIN_IMPL='bcast' for the expression semantics)"
+            "the kernel refuses both — clean the vectors)"
         )
     f = np.floor(s)
     frac = s - f
@@ -2053,10 +1689,9 @@ def _round_scaled_fixed(np, x):
 
 def _fixed_point_mean(per_pos_src: DataFrame, keys: "list[str]") -> DataFrame:
     """(keys..., pos, s, c) partial totals -> (keys..., centroid): the
-    ONE expression shared by the fused numpy updates and (shape-wise)
-    ``_subspace_means`` — ``cv = s.cast(double) / (SCALE * c)`` then
-    pos-sorted array assembly, so fused and exploded routes divide the
-    same int64 totals by the same counts with the same double ops."""
+    ONE division shared by the numpy Lloyd updates —
+    ``cv = s.cast(double) / (SCALE * c)``, the :func:`label_centroids`
+    expression, then pos-sorted array assembly."""
     per_pos = per_pos_src.where(F.col("c") > 0).select(
         *keys,
         "pos",
@@ -2081,52 +1716,38 @@ def _pq_partial_means_np(
     n_codes: int,
     codes_col: str | None = None,
 ) -> DataFrame:
-    """Fused big-model Lloyd UPDATE (r12, VERDICT r11 item 2): ONE
+    """One PQ Lloyd round (or, with ``codes_col``, the init means): ONE
     ``mapInPandas`` pass computes the :func:`_pq_codes_np` argmin AND
     accumulates per-(subspace, code, pos) int64 fixed-point partial
-    sums in C, so the corpus never explodes into the N·m·d-row hash
-    aggregate that dominated the 1M×d512 train wall (BASELINE.md r11:
-    2.6× train step for the last 2× of corpus was this aggregate).
+    sums in C, so the corpus never explodes into an N·m·d-row hash
+    aggregate (BASELINE.md r11: that aggregate stepped the 1M×d512
+    train 2.6× for 2× corpus).
 
     Per-partition output is the bounded MODEL grain — ≤ m·codes rows
-    of two d-long arrays — so the one remaining exchange is
-    m·codes·d·P cells, corpus-independent.  Bit-parity with
-    ``_subspace_means(assigned)``:
+    of two d-long arrays — so the one exchange is m·codes·d·P cells,
+    corpus-independent.  The arithmetic:
 
-    - assignment: the identical left-fold argmin as `_pq_codes_np`
-      (same association, tie-to-lower-code, NaN→+inf);
+    - assignment: the :func:`_pq_codes_np` left-fold argmin (same
+      association, tie-to-lower-code, NaN→+inf);
     - per-element rounding: :func:`_round_scaled_fixed` reproduces
       ``F.round(val·SCALE).cast(long)`` exactly (HALF_UP on the
       double, boundary-exact — see its docstring);
     - totals: int64 sums are associative/commutative, so partition
-      grouping cannot change them; counts ride per-pos so RAGGED rows
-      contribute exactly the positions their ``slice`` would (missing
-      (code,pos) cells stay absent, matching the exploded form);
-    - division: :func:`_fixed_point_mean` — same expression shape as
-      ``_subspace_means``, same operand values, same IEEE ops.
+      grouping cannot change them; counts ride per-pos so a SHORT row
+      contributes exactly the positions of its ``slice`` (missing
+      (code, pos) cells stay absent);
+    - division: :func:`_fixed_point_mean`.
 
-    Returns the same ``(subspace, code, centroid)`` frame as
-    ``_subspace_means`` over the same assignment.
+    Returns ``(subspace, code, centroid)``.
 
-    ``codes_col`` (r12): a pre-computed ``array<int>`` column of m
+    ``codes_col``: a pre-computed ``array<int>`` column of m
     per-subspace codes — the partial sums then skip the argmin
-    entirely.  This is how pq_train's INIT pass fuses: the hash codes
+    entirely.  This is how pq_train's INIT pass runs: the hash codes
     (``pmod(xxhash64(id, j), codes)``) stay a JVM expression — never
-    re-implemented Python-side — and only the N·m·d explode is
-    replaced."""
+    re-implemented Python-side."""
     import numpy as np
 
-    model = (
-        None
-        if codes_col is not None
-        else np.array(
-            [
-                [[float(x) for x in cmap[(j, c)]] for c in range(n_codes)]
-                for j in range(m)
-            ],
-            dtype=np.float64,
-        )
-    )  # (m, codes, d)
+    model = None if codes_col is not None else _pq_model(np, cmap, m, n_codes)
     part_schema = T.StructType(
         [
             T.StructField("subspace", T.IntegerType(), False),
@@ -2152,16 +1773,7 @@ def _pq_partial_means_np(
                     [list(c) for c in pdf[codes_col]], dtype=np.int64
                 )
             else:
-                codes = np.empty((n, m), dtype=np.int64)
-                for j in range(m):  # same argmin as _pq_codes_np
-                    sub = vs[:, j * d : (j + 1) * d]
-                    cents = model[j]
-                    acc = np.zeros((n, n_codes), dtype=np.float64)
-                    for t in range(d):  # left-fold order: bit-parity
-                        diff = sub[:, t, None] - cents[None, :, t]
-                        acc += diff * diff
-                    np.copyto(acc, np.inf, where=np.isnan(acc))
-                    codes[:, j] = np.argmin(acc, axis=1)
+                codes = _pq_argmin(np, vs, model)
             # rows with >= m·d elements contribute full slices —
             # vectorized; SHORT rows replicate slice/posexplode
             # semantics (only their real positions) row-by-row
@@ -2227,270 +1839,48 @@ def _pq_partial_means_np(
 
 
 def _pq_barrier(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, __v) with the vector expression evaluated exactly once per
-    row behind a Generate barrier (explode of a one-element array) —
-    CollapseProject cannot inline the caller's possibly-expensive vector
-    expression (``_unit``'s interpreted transform) into the m·codes·d
-    element_at references of the argmin forest.  Null vectors drop."""
+    """(id, __v): the PQ kernels' input projection.  Null vectors drop
+    (no codes can be assigned)."""
     v = F.col(vec_col)
     return vectors.where(v.isNotNull()).select(
-        F.col(id_col).alias("id"), F.explode(F.array(v)).alias("__v")
+        F.col(id_col).alias("id"), v.alias("__v")
     )
-
-
-# Which argmin representation a PQ model gets, decided by MEASUREMENT
-# (r9; full A/B table in BASELINE.md "Argmin representation shootout"):
-#
-# - SMALL models (the default 8x16x8 family): ONE projection with the
-#   full literal forest, evaluated by Spark's INTERPRETED projection
-#   with subexpression elimination.  janino cannot compile the ~30
-#   KLoC class (64 KB method limit), and every compiled alternative we
-#   built LOST to the interpreted form on real data: chunked
-#   projections behind Generate barriers compiled fine but their big
-#   methods sit past HotSpot's DontCompileHugeMethods JIT threshold
-#   (~8 KB bytecode), so they run on the JVM *bytecode* interpreter —
-#   measured 23.9 s vs 11.9 s interpreted at 128k x 64 dims — and
-#   JIT-sized micro-chunks only reached parity (12.0 s) because per-
-#   barrier row overhead ate the win.  The interpreted projection's
-#   small, JIT-hot eval loops are the fastest local form; what we DO
-#   skip is the doomed whole-stage compile attempt: a no-op
-#   CodegenFallback term (:func:`_no_wsc`) keeps the operator out of
-#   WholeStageCodegen entirely (measured ~1.3 s/job saved at 128k,
-#   recurring per Lloyd round because fresh centroid literals defeat
-#   the code cache).
-# - BIG models (past the gates below) route to the numpy mapInPandas
-#   argmin (:func:`_pq_codes_np`, r11): same zero-shuffle scan shape,
-#   but the identical left-fold arithmetic runs in C instead of
-#   Spark's interpreted expression evaluator — train 11.7× / encode
-#   11.1× faster at 512k×d512 with bit-identical codes (BASELINE.md
-#   r11 table; parity pinned across all three routes in
-#   tests/test_ann_recall.py).  The r10 broadcast-DATA expression scan
-#   (:func:`_pq_codes_bcast`) remains as the measurable A/B twin
-#   (`_BIG_ARGMIN_IMPL='bcast'`); it had already replaced the r9
-#   explode + join + two-keyed-aggregation form whose shuffle was
-#   corpus-linear.
-_ARGMIN_LITERAL_MAX_TERMS = 8192
-_ARGMIN_LITERAL_MAX_D = 256
-
-
-def _no_wsc(col: Column) -> Column:
-    """Wrap a projection expression with a no-op CodegenFallback term
-    so Spark never ATTEMPTS whole-stage codegen for its operator.
-
-    ``aggregate(array(0), 0, +)`` is a higher-order function — always
-    CodegenFallback, never foldable — evaluating to 0; riding it in
-    the element_at index leaves the value untouched for ~ns/row while
-    excluding the operator from WSCG, so the per-job janino attempt at
-    the giant argmin class (which ALWAYS fails) is skipped.  Pinned in
-    tests/test_plans.py (the argmin projection must sit outside every
-    WholeStageCodegen region)."""
-    zero = F.aggregate(F.array(F.lit(0)), F.lit(0), lambda a, x: a + x)
-    return F.element_at(F.array(col), (F.lit(1) + zero).cast("int"))
-
-
-def _argmin_code_exprs(
-    cmap: dict, m: int, d: int, n_codes: int
-) -> "list[Column]":
-    """Per-subspace nearest-code expressions over the barrier column
-    ``__v``: scalar element_at + arithmetic trees with ``array_min``
-    over ``(dist, code)`` structs for the argmin; ties go to the lower
-    code.  Left-to-right + matches sq_dist's fold association, so the
-    doubles are bit-identical to scoring against the same centroids
-    (and to :func:`_pq_codes_bcast`'s zip_with fold)."""
-    bv = F.col("__v")
-    per_sub = []
-    for j in range(m):
-        elems = [
-            F.element_at(bv, j * d + t + 1).cast("double") for t in range(d)
-        ]
-        cand = []
-        for c in range(n_codes):
-            cent = cmap[(j, c)]
-            dist = None
-            for t in range(d):
-                term = (elems[t] - F.lit(float(cent[t]))) * (
-                    elems[t] - F.lit(float(cent[t]))
-                )
-                dist = term if dist is None else dist + term
-            cand.append(F.struct(dist.alias("dist"), F.lit(c).alias("code")))
-        per_sub.append(F.array_min(F.array(*cand))["code"])
-    return per_sub
-
-
-def _pq_codes_frame(
-    base: DataFrame,
-    cmap: dict,
-    m: int,
-    d: int,
-    n_codes: int,
-    carry_vec: bool = False,
-) -> DataFrame:
-    """(id[, __v], codes array<int>) over a :func:`_pq_barrier` frame.
-
-    Small models: one literal-forest projection (see the section
-    comment for why the interpreted projection is the measured-fastest
-    local form and how :func:`_no_wsc` skips the doomed compile
-    attempt), with the codes array bound once behind a Generate
-    barrier — downstream consumers (the ADC scan reads
-    element_at(codes, j+1) m times) would otherwise inline the whole
-    forest m times.  Models past :data:`_ARGMIN_LITERAL_MAX_TERMS`
-    total terms (or deeper than :data:`_ARGMIN_LITERAL_MAX_D` per
-    subspace) take :func:`_pq_codes_bcast`; both paths share sq_dist's
-    left-fold association, so a model near the boundary gets the same
-    codes either way.
-
-    ``carry_vec`` keeps ``__v`` in the output (pq_train's mean-update
-    stage slices it); pq_encode drops it."""
-    if m * n_codes * d > _ARGMIN_LITERAL_MAX_TERMS or d > _ARGMIN_LITERAL_MAX_D:
-        if _BIG_ARGMIN_IMPL == "bcast":  # probe/A-B escape hatch
-            return _pq_codes_bcast(base, cmap, m, d, n_codes, carry_vec)
-        return _pq_codes_np(base, cmap, m, d, n_codes, carry_vec)
-    keep = ["id"] + (["__v"] if carry_vec else [])
-    codes = _no_wsc(F.array(*_argmin_code_exprs(cmap, m, d, n_codes)))
-    scored = base.select(*keep, codes.alias("__codes"))
-    return scored.select(
-        *keep, F.explode(F.array("__codes")).alias("codes")
-    )
-
-
-def _pq_codes_bcast(
-    base: DataFrame,
-    cmap: dict,
-    m: int,
-    d: int,
-    n_codes: int,
-    carry_vec: bool = False,
-) -> DataFrame:
-    """(id[, __v], codes) via ONE broadcast of the codebooks as DATA —
-    the argmin for models too big to embed as literal expressions (see
-    :func:`_pq_codes_frame`'s gate).
-
-    The whole model rides a single-row broadcast crossJoin as a nested
-    ``array<array<array<double>>>`` column (``[subspace][code] ->
-    centroid``, m·codes·d doubles — a few MB at the gate boundary) and
-    the per-subspace argmin is a pure per-row expression:
-    ``array_min`` over ``transform(model[j], (cent, c) ->
-    (sq_dist, c))`` — the same zip_with left-fold and tie-to-lower-code
-    struct-min as the literal forest, so both gate sides agree
-    bit-exactly.  ZERO shuffle, no grouping, no surrogate keys: the
-    r10 big-model probe measured the previous explode + broadcast-join
-    + two-keyed-aggregation form at 737 MB of corpus-LINEAR shuffle
-    for a 16k×d512 train (it re-shuffled ``__v`` — d doubles per row —
-    through both aggregations each Lloyd round; walls in BASELINE.md);
-    this scan form does the identical flops in place, needs none of
-    the r9 content-key/duplicate-multiplicity machinery (rows are
-    never grouped, so duplicate ids and exact-duplicate rows pass
-    through untouched and nothing depends on a retry-stable surrogate),
-    and leaves the mean-update aggregate as the round's ONLY exchange —
-    m·codes·d cells, model-bounded (BASELINE.md r10 big-model row).
-
-    The codes array is bound behind the same Generate barrier as the
-    literal path so downstream ``element_at(codes, j+1)`` consumers
-    cannot re-inline the argmin m times."""
-    spark = base.sparkSession
-    model = [
-        [[float(x) for x in cmap[(j, c)]] for c in range(n_codes)]
-        for j in range(m)
-    ]
-    mdf = spark.createDataFrame(
-        [(model,)], "__model array<array<array<double>>>"
-    )
-    keep = ["id"] + (["__v"] if carry_vec else [])
-
-    def sub_code(j: int) -> Column:
-        subvec = F.slice(F.col("__v"), j * d + 1, d)
-        cands = F.transform(
-            F.element_at(F.col("__model"), j + 1),
-            lambda cent, c: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        subvec,
-                        cent,
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                ).alias("dist"),
-                c.alias("code"),
-            ),
-        )
-        return F.array_min(cands)["code"]
-
-    codes = F.array(*[sub_code(j) for j in range(m)])
-    scored = base.crossJoin(F.broadcast(mdf)).select(
-        *keep, codes.alias("__codes")
-    )
-    return scored.select(
-        *keep, F.explode(F.array("__codes")).alias("codes")
-    )
-
-
-# Big-model argmin implementation: 'numpy' (Arrow-batched mapInPandas,
-# the r11 default) or 'bcast' (the r10 broadcast-data expression scan,
-# kept as the A/B twin the parity tests and probes compare against).
-_BIG_ARGMIN_IMPL = "numpy"
 
 
 def _pq_codes_np(
-    base: DataFrame,
-    cmap: dict,
-    m: int,
-    d: int,
-    n_codes: int,
-    carry_vec: bool = False,
+    base: DataFrame, cmap: dict, m: int, d: int, n_codes: int
 ) -> DataFrame:
-    """(id[, __v], codes) via an Arrow-batched numpy argmin — the
-    big-model assignment path (VERDICT r10 item 1).
+    """(id, codes) over a :func:`_pq_barrier` frame — the PQ argmin as
+    a zero-shuffle Arrow-batched numpy scan.  The model (m·codes·d
+    doubles) rides the task closure (PySpark ships large closures via
+    its own broadcast); rows are never grouped, so duplicate ids and
+    exact-duplicate rows pass through as they are.
 
-    Same shuffle story as :func:`_pq_codes_bcast` — ZERO: the model
-    rides the task closure (PySpark ships large closures via its own
-    broadcast), rows are never grouped, and the scan stays a per-batch
-    map.  What changes is the FLOP engine: Spark's interpreted
-    expression evaluator walks ~2 GFLOP of zip_with folds per
-    assignment pass at d=512, where numpy does the identical
-    arithmetic in C (measured order-of-magnitude train/encode wall
-    drop — BASELINE.md r11 big-model table).
+    The arithmetic is pinned against the DuckDB twin in
+    tests/test_equivalence.py:
 
-    Bit-parity with both expression paths is engineered, not hoped:
-
-    - the distance is the SAME left-fold — ``acc += diff * diff`` per
-      dimension in ascending order over float64 operands (one subtract,
-      one multiply, one add per term, IEEE-deterministic), never
-      ``np.sum`` (pairwise association) or the matmul identity
-      (different rounding);
-    - inputs are widened float->double BEFORE arithmetic, matching the
-      fold's per-element cast;
+    - the distance is the :func:`sq_dist` left fold — ``acc += diff *
+      diff`` per dimension in ascending order over float64 operands
+      (one subtract, one multiply, one add per term), never ``np.sum``
+      (pairwise association) or the matmul identity (different
+      rounding);
+    - inputs are widened float->double BEFORE arithmetic;
     - ties go to the LOWER code: ``np.argmin`` returns the first
-      minimum and codes are laid out ascending — the struct-min rule;
-    - NaN distances sort AFTER every finite/infinite distance (Spark
-      orders NaN greatest): NaNs are masked to +inf before the argmin,
-      so an all-NaN row yields code 0 exactly like the struct-min of
-      all-NaN structs.  The one undetectable divergence is a genuine
-      +inf distance tying against a masked NaN at a lower code — both
-      sides need squared terms overflowing 1e308, unreachable for unit
-      or near-unit embeddings.
-
-    Codes-level equality across all three routes is pinned in
-    tests/test_ann_recall.py (adversarial ties included)."""
+      minimum and codes are laid out ascending;
+    - NaN distances are masked to +inf before the argmin, so an
+      all-NaN subspace (a NaN element, or the missing tail of a SHORT
+      row) yields code 0; a LONGER row's extra elements are ignored."""
     import numpy as np
 
-    model = np.array(
+    model = _pq_model(np, cmap, m, n_codes)
+    out_schema = T.StructType(
         [
-            [[float(x) for x in cmap[(j, c)]] for c in range(n_codes)]
-            for j in range(m)
-        ],
-        dtype=np.float64,
-    )  # (m, codes, d)
-    keep = ["id"] + (["__v"] if carry_vec else [])
-    id_field = base.schema["id"]
-    out_fields = [id_field]
-    if carry_vec:
-        out_fields.append(base.schema["__v"])
-    out_fields.append(
-        T.StructField("codes", T.ArrayType(T.IntegerType(), False), False)
+            base.schema["id"],
+            T.StructField(
+                "codes", T.ArrayType(T.IntegerType(), False), False
+            ),
+        ]
     )
-    out_schema = T.StructType(out_fields)
 
     def assign(batches):
         import pandas as pd
@@ -2498,31 +1888,12 @@ def _pq_codes_np(
         for pdf in batches:
             if not len(pdf):
                 continue
-            # mode='slice': longer rows truncate like the expression
-            # slice, shorter rows NaN-pad (their tail subspaces fold to
-            # all-equal -> code 0, exactly the null-propagated winner)
             vs, _ = _stack_padded(
                 np, pdf["__v"].to_numpy(), m * d, mode="slice"
             )
-            n = vs.shape[0]
-            codes = np.empty((n, m), dtype=np.int32)
-            for j in range(m):
-                sub = vs[:, j * d : (j + 1) * d]
-                cents = model[j]
-                acc = np.zeros((n, n_codes), dtype=np.float64)
-                for t in range(d):  # left-fold order: bit-parity
-                    diff = sub[:, t, None] - cents[None, :, t]
-                    acc += diff * diff
-                np.copyto(acc, np.inf, where=np.isnan(acc))
-                codes[:, j] = np.argmin(acc, axis=1)
-            out = {"id": pdf["id"]}
-            if carry_vec:
-                out["__v"] = pdf["__v"]
-            out["codes"] = list(codes)
-            yield pd.DataFrame(out, columns=keep + ["codes"])
+            codes = _pq_argmin(np, vs, model).astype(np.int32)
+            yield pd.DataFrame({"id": pdf["id"], "codes": list(codes)})
 
-    # the INPUT always ships __v (the argmin reads it); carry_vec only
-    # controls whether it survives into the output schema
     return base.select("id", "__v").mapInPandas(assign, out_schema)
 
 
@@ -2556,18 +1927,11 @@ def pq_train(
     The vector is split into ``m`` contiguous sub-vectors of ``dim/m``
     dims; subspace ``j`` gets its own ``codes``-entry codebook.  The
     codebooks are a BOUNDED model (``m × codes`` rows), so each Lloyd
-    round collects them to the driver and embeds them as literals in a
-    scan-level argmin (:func:`_pq_codes_frame` — no join, no window):
-    per round exactly one corpus scan + one (subspace, code, pos)-grain
-    map-side-combinable fixed-point mean.  (Round 8: the former
-    broadcast-join + interpreted sq_dist fold assignment cost ~98 s/4
-    rounds at 128k vectors; the literal-argmin form ran the same
-    rounds in ~12 s.  Round 9 MEASURED every compiled alternative and
-    kept the interpreted projection — see the section comment at
-    :data:`_ARGMIN_LITERAL_MAX_TERMS` — adding the `_no_wsc` poison
-    that skips the doomed per-round janino attempt.  Round 10 probed
-    the oversized-model gate at d=512 and replaced its join form with
-    the zero-shuffle broadcast-data scan :func:`_pq_codes_bcast`.)
+    round collects them to the driver and runs
+    :func:`_pq_partial_means_np`: one Arrow-batched numpy pass does the
+    argmin AND the fixed-point partial sums, so per round there is
+    exactly one corpus scan and one (subspace, code, pos)-grain
+    exchange — no join, no window, no exploded corpus.
 
     Deterministic throughout: init assigns ``pmod(xxhash64(id,
     subspace), codes)`` (no RNG), means are order-independent int64
@@ -2583,43 +1947,22 @@ def pq_train(
         raise ValueError(f"dim={dim} not divisible by m={m}")
     d = dim // m
     base = _pq_barrier(vectors, id_col, vec_col)
-    fused = (
-        m * codes * d > _ARGMIN_LITERAL_MAX_TERMS
-        or d > _ARGMIN_LITERAL_MAX_D
-    ) and _BIG_ARGMIN_IMPL == "numpy"
-    if fused:
-        # INIT fused too (r12): the hash codes stay the identical JVM
-        # expression (`pmod(xxhash64(id, j), codes)` — F.lit(j) is the
-        # same int32 literal _subvectors puts in its structs, so the
-        # hash bits match), and the N·m·d explode of _subspace_means
-        # is replaced by the same model-grain partial-sum pass the
-        # Lloyd rounds use.  Null vectors contribute nothing either
-        # way (_pq_barrier drops them; their exploded slices were
-        # empty).
-        coded = base.withColumn(
-            "__codes0",
-            F.array(
-                *[
-                    F.pmod(
-                        F.xxhash64(F.col("id"), F.lit(j)), F.lit(codes)
-                    ).cast("int")
-                    for j in range(m)
-                ]
-            ),
-        )
-        init = _pq_partial_means_np(
-            coded, None, m, d, codes, codes_col="__codes0"
-        )
-    else:
-        sub = _subvectors(vectors, m, d, id_col, vec_col)
-        init = _subspace_means(
-            sub.withColumn(
-                "code",
-                F.pmod(F.xxhash64("id", "subspace"), F.lit(codes)).cast(
+    # INIT: the hash codes stay a JVM expression (`pmod(xxhash64(id,
+    # j), codes)`, j an int32 literal); the same partial-sum pass as
+    # the Lloyd rounds takes the means.  Null vectors contribute
+    # nothing (_pq_barrier drops them).
+    coded = base.withColumn(
+        "__codes0",
+        F.array(
+            *[
+                F.pmod(F.xxhash64(F.col("id"), F.lit(j)), F.lit(codes)).cast(
                     "int"
-                ),
-            )
-        )
+                )
+                for j in range(m)
+            ]
+        ),
+    )
+    init = _pq_partial_means_np(coded, None, m, d, codes, codes_col="__codes0")
     # Densify: every (subspace, code) cell must exist even when the
     # hash init left it memberless (small corpora / unlucky hashes).
     # The ADC lookup table is POSITIONAL (index j*codes+code over the
@@ -2630,38 +1973,8 @@ def pq_train(
     for r in init.collect():  # bounded: <= m·codes rows
         cmap[(r["subspace"], r["code"])] = list(r["centroid"])
     for _ in range(max_iterations):
-        if fused:
-            # big models (r12): argmin + fixed-point partial sums in
-            # ONE numpy scan — the N·m·d posexplode aggregate that
-            # stepped the 1M×d512 train 2.6× for 2× corpus
-            # (BASELINE.md r11) never materializes
-            means = _pq_partial_means_np(base, cmap, m, d, codes)
-        else:
-            # Stage a: the literal argmin scan (_pq_codes_frame — the
-            # measured-fastest interpreted projection, WSCG attempt
-            # skipped).  Stage b: explode cheap attribute references
-            # (element_at/slice on columns) into the (subspace, code,
-            # subvec) grain the mean update needs.
-            scored = _pq_codes_frame(
-                base, cmap, m, d, codes, carry_vec=True
-            )
-            parts = F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("subspace"),
-                        F.element_at(F.col("codes"), j + 1).alias("code"),
-                        F.slice(F.col("__v"), j * d + 1, d).alias(
-                            "subvec"
-                        ),
-                    )
-                    for j in range(m)
-                ]
-            )
-            assigned = scored.select(
-                "id", F.explode(parts).alias("p")
-            ).select("id", "p.subspace", "p.code", "p.subvec")
-            means = _subspace_means(assigned)
         shift = 0.0
+        means = _pq_partial_means_np(base, cmap, m, d, codes)
         for r in means.collect():  # <= m·codes rows
             key = (r["subspace"], r["code"])
             new_cent = list(r["centroid"])
@@ -2672,9 +1985,16 @@ def pq_train(
             cmap[key] = new_cent
         if shift < tol:
             break
-    return vectors.sparkSession.createDataFrame(
+    return _local_frame(
+        vectors.sparkSession,
         [(j, c, cmap[(j, c)]) for j in range(m) for c in range(codes)],
-        "subspace int, code int, centroid array<double>",
+        T.StructType(
+            [
+                T.StructField("subspace", T.IntegerType()),
+                T.StructField("code", T.IntegerType()),
+                T.StructField("centroid", T.ArrayType(T.DoubleType())),
+            ]
+        ),
     )
 
 
@@ -2688,27 +2008,18 @@ def pq_encode(
 ) -> DataFrame:
     """Encode vectors to their PQ codes: ``(id, codes array<int>)``.
 
-    ZERO-shuffle for bounded models: the codebooks (``m × codes`` rows
-    — same collect discipline as every broadcast model here) are
-    embedded as literal arrays and the per-subspace argmin becomes a
-    pure scan expression (``array_min`` over ``(dist, code)`` structs
-    — min dist, ties to the lower code, exactly the former
-    join + min_by winner on the same IEEE fold).  Encode is the one
-    pass that must touch EVERY corpus vector at 100 TB; as a scan it
-    has no exchange, no aggregate, no join (round-8: the previous
-    explode+join+min_by shape pushed N·m·codes rows through two
-    aggregates — 151 s at 128k vectors vs ~10 s for the scan form,
-    and the gap widens with N since the scan is shuffle-free; the r9
-    shootout in BASELINE.md is why the scan runs as an INTERPRETED
-    projection with the whole-stage compile attempt deliberately
-    skipped).  Models past the literal gate take the broadcast-join
-    argmin — see :func:`_pq_codes_frame`.  ``dim``-dim floats become ``m``
-    small ints (64 doubles →
-    8 bytes at m=8), the 64× footprint drop that lets a 100 TB
-    corpus's index fit hot.  Null vectors are dropped (no codes can be
-    assigned).  ``m`` is INFERRED from the codebooks (they define the
-    subspace decomposition); the parameter is kept for signature
-    stability but a disagreeing value is ignored."""
+    ZERO-shuffle: the codebooks (``m × codes`` rows — the same collect
+    discipline as every model here) are collected once and the
+    per-subspace argmin (min distance, ties to the lower code) runs as
+    the Arrow-batched numpy scan :func:`_pq_codes_np` — no exchange, no
+    aggregate, no join.  Encode is the one pass that must touch EVERY
+    corpus vector at 100 TB, and it stays a map at any model size.
+    ``dim``-dim floats become ``m`` small ints (64 doubles → 8 bytes at
+    m=8), the 64× footprint drop that lets a 100 TB corpus's index fit
+    hot.  Null vectors are dropped (no codes can be assigned).  ``m``
+    is INFERRED from the codebooks (they define the subspace
+    decomposition); the parameter is kept for signature stability but
+    a disagreeing value is ignored."""
     cb_rows = codebooks.collect()  # bounded: m·codes tiny rows
     cb = {(r["subspace"], r["code"]): r["centroid"] for r in cb_rows}
     # m is a property OF the codebooks — infer it rather than trusting
@@ -2737,15 +2048,7 @@ def pq_encode(
             f"codebooks are not a dense (subspace, code) grid; missing "
             f"{missing[:4]}{'...' if len(missing) > 4 else ''}"
         )
-    # Generate barrier (input): see _pq_barrier — without it,
-    # CollapseProject inlines the caller's vector expression (e.g. the
-    # interpreted `_unit` transform) into every element_at of the
-    # argmin forest (measured ~1 ms/row at 128k vectors).  The argmin
-    # itself is _pq_codes_frame: the measured-fastest interpreted
-    # literal projection (WSCG attempt skipped) or the broadcast-join
-    # path for oversized models.
-    base = _pq_barrier(vectors, id_col, vec_col)
-    return _pq_codes_frame(base, cb, m, d, n_codes, carry_vec=False)
+    return _pq_codes_np(_pq_barrier(vectors, id_col, vec_col), cb, m, d, n_codes)
 
 
 def ann_topk_pq(
@@ -3112,7 +2415,6 @@ def hash_seed_centroids(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Deterministic label-free k-means seeding: hash-bucket vectors
     into ``k`` pseudo-groups (``pmod(xxhash64(id), k)``) and take each
@@ -3127,7 +2429,7 @@ def hash_seed_centroids(
     seeded = vectors.withColumn(
         "__seed", F.pmod(F.xxhash64(F.col(id_col)), F.lit(k)).cast("int")
     )
-    return _centroid_arrays(seeded, "__seed", vec_col, dim_hint=dim).select(
+    return _centroid_arrays(seeded, "__seed", vec_col).select(
         F.col("__seed").cast("int").alias("cell"), "centroid"
     )
 
@@ -3167,9 +2469,7 @@ def ivfpq_train(
         F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
     )
     if centroids is None:
-        init = hash_seed_centroids(
-            c_unit, n_cells, id_col="cid", vec_col="cvec", dim=dim
-        )
+        init = hash_seed_centroids(c_unit, n_cells, id_col="cid", vec_col="cvec")
         assigned, centroids, _ = kmeans_lloyd(
             c_unit,
             max_iterations=coarse_iterations,
@@ -3187,7 +2487,7 @@ def ivfpq_train(
     # (r12 review finding).
     named = c_unit.select(F.col("cid").alias("id"), F.col("cvec").alias("vec"))
     residuals = (
-        _nearest_cell(named, centroids.select("cell", "centroid"), dim=dim)
+        _nearest_cell(named, centroids.select("cell", "centroid"))
         .join(F.broadcast(centroids), "cell")
         .select(
             F.col("id").alias("cid"),
@@ -3229,7 +2529,7 @@ def ivfpq_encode(
     codes array<int>)`` — the inverted-list entry.  One linear pass:
     the cell assignment is the zero-shuffle :func:`_nearest_cell`
     scan, the residual is an element-wise ``zip_with``, and
-    :func:`pq_encode` is itself a scan for bounded models.  dim-dim
+    :func:`pq_encode` is itself a scan.  dim-dim
     floats become one small int + m codes."""
     c_unit = corpus.where(_nonzero_vec(vec_col)).select(
         F.col(id_col).alias("id"), _unit(vec_col).alias("vec")
@@ -3237,11 +2537,8 @@ def ivfpq_encode(
     # L2 assignment (the Lloyd metric — NOT the cosine probe of
     # ann_topk_ivf): the inverted-list cell must be the vector's
     # nearest centroid under the same metric the residual ADC
-    # approximates, or probes and lists disagree.  _nearest_cell has
-    # the deep-vector numpy route.
-    assigned = _nearest_cell(
-        c_unit, centroids.select("cell", "centroid"), dim=dim
-    ).select(F.col("id").alias("cid"), F.col("vec").alias("cvec"), "cell")
+    # approximates, or probes and lists disagree.
+    assigned = _nearest_cell(c_unit, centroids.select("cell", "centroid")).select(F.col("id").alias("cid"), F.col("vec").alias("cvec"), "cell")
     residuals = assigned.join(F.broadcast(centroids), "cell").select(
         "cid",
         "cell",

@@ -256,30 +256,36 @@ def _psql_argv(
 
 
 def run_psql(
-    conninfo: dict[str, str],
-    sql: str,
-    tuples_only: bool = True,
-    stdin: str | None = None,
-    stdin_bytes: bytes | None = None,
+    conninfo: dict[str, str], sql: str, tuples_only: bool = True
 ) -> str:
-    """Client-side psql call — used from the driver (DDL) AND from
-    executor tasks (COPY), so it depends only on the conninfo dict.
-    ``stdin_bytes`` feeds COPY FROM STDIN (FORMAT BINARY) — psql
-    forwards the stream to the server unaltered while in copy mode."""
-    binary = stdin_bytes is not None
+    """Client-side psql call from the driver (DDL, queries); it depends
+    only on the conninfo dict.  Executor-side COPY goes through
+    :func:`_copy_in` and :func:`_psql_stdout`."""
     r = subprocess.run(
         _psql_argv(conninfo, sql, tuples_only),
-        input=stdin_bytes if binary else stdin,
         capture_output=True,
-        text=not binary,
+        text=True,
         cwd="/",
     )
-    err = (
-        r.stderr.decode("utf-8", "replace") if binary else r.stderr
+    if r.returncode != 0:
+        raise RuntimeError(f"psql failed ({sql[:120]!r}): {r.stderr[-2000:]}")
+    return r.stdout
+
+
+def _copy_in(conninfo: dict[str, str], sql: str, payload: bytes) -> int:
+    """Run ``sql`` (ending in ``COPY ... FROM STDIN``) fed with
+    ``payload``; return the row count the server reports in its
+    ``COPY n`` command tag, which psql prints only without ``-q``."""
+    r = subprocess.run(
+        [a for a in _psql_argv(conninfo, sql) if a != "-q"],
+        input=payload,
+        capture_output=True,
+        cwd="/",
     )
     if r.returncode != 0:
+        err = r.stderr.decode("utf-8", "replace")
         raise RuntimeError(f"psql failed ({sql[:120]!r}): {err[-2000:]}")
-    return r.stdout.decode("utf-8", "replace") if binary else r.stdout
+    return int(r.stdout.split()[-1])
 
 
 @contextlib.contextmanager
@@ -528,6 +534,14 @@ class PostgresCopySink:
     flattening — but the wire is Postgres's native COPY protocol, so the
     *dialect* DDL (JSONB/BYTEA/NUMERIC, ``schema_to_pg_ddl``) actually
     executes on the server the reference targets.
+
+    Every task checks the row count the server reports for its COPY
+    against the rows it shipped and raises on a mismatch.  One value
+    cannot travel on the CSV wire: text whose multi-line string holds
+    a line that is exactly ``\\.`` (psql's end-of-data marker reads it
+    even inside quotes; the server then rejects the cut-off record
+    loudly).  A record that is ``\\.`` as a whole is quoted and loads.
+    Use ``wire_format="binary"`` for such text.
     """
 
     conninfo: dict[str, str]
@@ -599,8 +613,13 @@ class PostgresCopySink:
         if binary:
             lines = binary_copy_tuples(prepared)
         else:
+            line = F.to_csv(F.struct(*prepared.columns), _CSV_OPTS)
+            # psql ends COPY data at a line that is exactly \. — quoted,
+            # it is the same CSV value and no longer an end marker
             lines = prepared.select(
-                F.to_csv(F.struct(*prepared.columns), _CSV_OPTS).alias("line")
+                F.when(line == "\\.", F.lit('"\\."'))
+                .otherwise(line)
+                .alias("line")
             )
         conninfo, table = dict(self.conninfo), self.table
         tagged = self.partition_tag
@@ -636,9 +655,14 @@ class PostgresCopySink:
                     payload = (
                         _PGCOPY_HEADER + b"".join(chunks) + _PGCOPY_TRAILER
                     )
-                    run_psql(conninfo, copy, stdin_bytes=payload)
                 else:
-                    run_psql(conninfo, copy, stdin="\n".join(chunks) + "\n")
+                    payload = ("\n".join(chunks) + "\n").encode()
+                loaded = _copy_in(conninfo, copy, payload)
+                if loaded != n:
+                    raise RuntimeError(
+                        f"COPY into {table} loaded {loaded} rows of the "
+                        f"{n} this task shipped"
+                    )
             yield pd.DataFrame({"n": [n]})
 
         # the aggregate is the action that runs the COPY tasks; its value

@@ -262,9 +262,9 @@ def test_pq_topk_infers_shape_from_caller_codebooks(spark):
 
 def test_pq_argmin_budget_holds_for_every_shape(spark):
     """r9 review finding: the argmin must behave for ANY (m, codes,
-    d), not just the default — oversized models route to the
-    broadcast-join argmin, small ones to the literal forest, and both
-    paths must equal the flat numpy argmin exactly."""
+    d), not just the default — the default model, a deep subspace and
+    a many-codes model must each equal the flat numpy argmin
+    exactly."""
     import random
 
     import numpy as np
@@ -279,32 +279,23 @@ def test_pq_argmin_budget_holds_for_every_shape(spark):
             for j in range(m)
             for c in range(codes)
         }
-        vecs = spark.range(n).select(
+        base = spark.range(n).select(
             "id",
             F.transform(
                 F.sequence(F.lit(1), F.lit(dim)),
                 lambda i: F.sin(F.col("id") * i),
-            ).alias("vec"),
-        )
-        base = vecs.select(
-            "id", F.explode(F.array("vec")).alias("__v")
+            ).alias("__v"),
         ).localCheckpoint()
         return d, cmap, base
 
-    # (shape, expects-literal-path): default, deep-chained, many-codes
     shapes = [
-        ((8, 16, 64, 120), True),
-        ((2, 4, 2048, 40), False),  # d=1024 > depth gate -> bcast path
-        ((1, 300, 64, 40), False),  # 19200 terms > term gate -> bcast path
+        (8, 16, 64, 120),  # the default model
+        (2, 4, 2048, 40),  # d=1024 per subspace
+        (1, 300, 64, 40),  # 300 codes
     ]
-    for (m, codes, dim, n), literal in shapes:
+    for m, codes, dim, n in shapes:
         d, cmap, base = make(m, codes, dim, n)
-        gate = (
-            m * codes * d <= S._ARGMIN_LITERAL_MAX_TERMS
-            and d <= S._ARGMIN_LITERAL_MAX_D
-        )
-        assert gate == literal, (m, codes, dim)
-        rows = S._pq_codes_frame(base, cmap, m, d, codes).collect()
+        rows = S._pq_codes_np(base, cmap, m, d, codes).collect()
         vrows = {
             r["id"]: np.array(r["__v"], dtype=float)
             for r in base.collect()
@@ -323,374 +314,80 @@ def test_pq_argmin_budget_holds_for_every_shape(spark):
                 )
 
 
-def test_pq_bigmodel_argmin_preserves_duplicate_ids(spark):
-    """Dirty-input parity across the literal/join gate (r9 review
-    finding): duplicate vec_ids must each keep their OWN codes on the
-    big-model path, exactly as the literal path preserves them (r10:
-    the broadcast-data scan never groups, so this holds structurally —
-    the pin guards any future re-grouping)."""
-    import random
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    rng = random.Random(5)
-    m, codes, d = 1, 300, 64  # 19200 terms -> bcast path
-    assert m * codes * d > S._ARGMIN_LITERAL_MAX_TERMS
-    cmap = {
-        (0, c): [rng.uniform(-1, 1) for _ in range(d)] for c in range(codes)
-    }
-    va = [rng.uniform(-1, 1) for _ in range(d)]
-    vb = [rng.uniform(-1, 1) for _ in range(d)]
-    base = spark.createDataFrame(
-        [(7, va), (7, vb)], "id long, __v array<double>"
-    )
-    rows = S._pq_codes_frame(base, cmap, m, d, codes).collect()
-    assert len(rows) == 2 and all(r["id"] == 7 for r in rows)
-    got = sorted(tuple(r["codes"]) for r in rows)
-    want = sorted(
-        (
-            int(
-                np.argmin(
-                    [
-                        float(
-                            np.sum(
-                                (np.array(v) - np.array(cmap[(0, c)])) ** 2
-                            )
-                        )
-                        for c in range(codes)
-                    ]
-                )
-            ),
-        )
-        for v in (va, vb)
-    )
-    assert got == want
-
-
-def test_pq_bcast_argmin_preserves_exact_duplicate_multiplicity(spark):
-    """r10: the big-model argmin is now a zero-shuffle broadcast-data
-    scan (_pq_codes_bcast) — rows are never grouped, so EXACT-duplicate
-    rows (same id and vector) must pass through as-is: three identical
-    input rows yield three identical output rows, and the carry_vec
-    form keeps the vector on each.  (The r9 join form needed content
-    keys + counted-explode restoration for this; the scan form gets it
-    structurally.)"""
-    import random
-
-    rng = random.Random(11)
-    m, codes, d = 2, 3, 8
-    cmap = {
-        (j, c): [rng.uniform(-1, 1) for _ in range(d)]
-        for j in range(m)
-        for c in range(codes)
-    }
-    v = [rng.uniform(-1, 1) for _ in range(m * d)]
-    w = [rng.uniform(-1, 1) for _ in range(m * d)]
-    base = spark.createDataFrame(
-        [(7, v), (7, v), (7, v), (9, w)], "id long, __v array<double>"
-    )
-    for carry in (False, True):
-        rows = S._pq_codes_bcast(
-            base, cmap, m, d, codes, carry_vec=carry
-        ).collect()
-        assert sorted(r["id"] for r in rows) == [7, 7, 7, 9]
-        by_id = {}
-        for r in rows:
-            by_id.setdefault(r["id"], []).append(tuple(r["codes"]))
-        assert len(set(by_id[7])) == 1 and len(by_id[7]) == 3
-        if carry:
-            assert all(
-                list(r["__v"]) == (v if r["id"] == 7 else w) for r in rows
-            )
-
-
-def test_pq_bcast_argmin_plan_is_shuffle_free(spark):
-    """r10 scale pin, r11 tightened: the big-model assignment must add
-    NO Exchange.  The default (numpy mapInPandas) route ships the model
-    in the task closure — zero Exchange of ANY kind; the bcast
-    expression twin is allowed exactly its single-row model
-    BroadcastExchange.  Any other exchange means the corpus (including
-    the carried d-double vector) is being re-shuffled every Lloyd
-    round — the 737 MB/16k-vector regression the r10 probe caught in
-    the old join form."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(3)
-    m, codes, d = 1, 300, 64  # 19200 terms -> big-model gate
-    assert m * codes * d > S._ARGMIN_LITERAL_MAX_TERMS
-    cmap = {
-        (0, c): [rng.uniform(-1, 1) for _ in range(d)] for c in range(codes)
-    }
-    base = (
-        spark.range(50)
-        .select(
-            "id",
-            F.transform(
-                F.sequence(F.lit(1), F.lit(d)),
-                lambda i: F.sin(F.col("id") * i),
-            ).alias("__v"),
-        )
-        .localCheckpoint()
-    )
-    out = S._pq_codes_frame(base, cmap, m, d, codes)
-    p = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in p, p[:800]
-    assert "MapInPandas" in p, p[:800]
-    assert out.count() == 50
-
-    bcast = S._pq_codes_bcast(base, cmap, m, d, codes)
-    pb = bcast._jdf.queryExecution().executedPlan().toString()
-    # the model's single-row BroadcastExchange is the point; any OTHER
-    # exchange is a corpus shuffle and fails the pin
-    assert "Exchange" not in pb.replace("BroadcastExchange", "BX"), pb[:800]
-    assert "BroadcastExchange" in pb
-    assert bcast.count() == 50
-
-
-def test_pq_argmin_three_routes_bit_identical_codes(spark):
-    """VERDICT r10 item 1 parity pin: the numpy mapInPandas argmin, the
-    broadcast-data expression scan, and (where the gate admits it) the
-    literal forest must emit BIT-IDENTICAL codes — including the
-    adversarial cases where only the pinned semantics separate
-    implementations: exact duplicate centroids (tie must go to the
-    lower code in every route), float32 inputs (cast-to-double before
-    arithmetic), and an all-NaN row (struct-min of all-NaN -> code 0;
-    numpy masks NaN to +inf)."""
-    import random
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    rng = random.Random(11)
-    m, codes, d = 2, 150, 64  # 19200 terms -> big-model gate
-    assert m * codes * d > S._ARGMIN_LITERAL_MAX_TERMS
-    cmap = {
-        (j, c): [rng.uniform(-1, 1) for _ in range(d)]
-        for j in range(m)
-        for c in range(codes)
-    }
-    # adversarial ties: code 40 duplicates code 7 exactly in subspace 0,
-    # and codes 99/100 duplicate each other in subspace 1
-    cmap[(0, 40)] = list(cmap[(0, 7)])
-    cmap[(1, 100)] = list(cmap[(1, 99)])
-
-    vecs = [
-        [rng.uniform(-1, 1) for _ in range(m * d)] for _ in range(60)
-    ]
-    # rows pinned ONTO the duplicated centroids so the tie is exercised
-    vecs.append(list(cmap[(0, 40)]) + list(cmap[(1, 100)]))
-    vecs.append([float("nan")] * (m * d))
-    # float32 ROUND-TRIP values (python floats, so createDataFrame
-    # accepts them; the array<float> column stores the float32 bits)
-    rows = [
-        (i, [float(np.float32(x)) for x in v]) for i, v in enumerate(vecs)
-    ]
-    base = spark.createDataFrame(
-        rows, "id long, __v array<float>"
-    ).localCheckpoint()
-
-    def codes_of(df):
-        return {
-            r["id"]: tuple(r["codes"]) for r in df.orderBy("id").collect()
-        }
-
-    got_np = codes_of(S._pq_codes_np(base, cmap, m, d, codes))
-    got_bc = codes_of(S._pq_codes_bcast(base, cmap, m, d, codes))
-    assert got_np == got_bc
-    # tie rows landed on the LOWER duplicate
-    assert got_np[60] == (7, 99)
-    assert got_np[61] == (0, 0)  # all-NaN distances -> code 0 everywhere
-
-    # carry_vec parity: __v passes through both routes untouched
-    with_v = S._pq_codes_np(base, cmap, m, d, codes, carry_vec=True)
-    assert with_v.columns == ["id", "__v", "codes"]
-    r0 = with_v.where("id = 0").collect()[0]
-    assert np.array_equal(
-        np.array(r0["__v"], dtype=np.float32),
-        np.array(vecs[0], dtype=np.float32),
-    )
-
-    # a small literal-gate model: all three routes agree
-    m2, codes2, d2 = 2, 8, 16
-    cmap2 = {
-        (j, c): [rng.uniform(-1, 1) for _ in range(d2)]
-        for j in range(m2)
-        for c in range(codes2)
-    }
-    cmap2[(0, 5)] = list(cmap2[(0, 2)])
-    base2 = spark.createDataFrame(
-        [
-            (i, [rng.uniform(-1, 1) for _ in range(m2 * d2)])
-            for i in range(40)
-        ]
-        + [(40, list(cmap2[(0, 5)]) * 2)],
-        "id long, __v array<double>",
-    ).localCheckpoint()
-    lit = codes_of(S._pq_codes_frame(base2, cmap2, m2, d2, codes2))
-    np_r = codes_of(S._pq_codes_np(base2, cmap2, m2, d2, codes2))
-    bc_r = codes_of(S._pq_codes_bcast(base2, cmap2, m2, d2, codes2))
-    assert lit == np_r == bc_r
-    assert lit[40][0] == 2  # duplicate-centroid tie -> lower code
-
-
-def test_nearest_cell_numpy_twin_bit_identical(spark):
-    """VERDICT r10 item 1 (kmeans/IVF leg): past d=256 the assignment
-    scans route to numpy twins; (cell, dist) must be BIT-identical to
-    the expression scans — duplicate centroids tie to the lower cell,
-    dist is the same left-fold double, and the probes>1 explode emits
-    the same (row, cell) multiset in the same best-first order."""
-    import random
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    rng = random.Random(23)
-    d, k = 512, 6  # d > _ARGMIN_LITERAL_MAX_D -> numpy route
-    assert d > S._ARGMIN_LITERAL_MAX_D
-    cent_rows = [(c, [rng.uniform(-1, 1) for _ in range(d)]) for c in range(k)]
-    cent_rows[4] = (4, list(cent_rows[1][1]))  # duplicate of cell 1
-    cents = spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).localCheckpoint()
-
-    vecs = [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(40)]
-    vecs.append((40, list(cent_rows[1][1])))  # lands ON the duplicate
-    v = spark.createDataFrame(
-        vecs, "id long, vec array<double>"
-    ).localCheckpoint()
-
-    got_np = {
-        r["id"]: (r["cell"], repr(r["dist"]))
-        for r in S._nearest_cell_np(v, cents).collect()
-    }
-    got_ex = {
-        r["id"]: (r["cell"], repr(r["dist"]))
-        for r in S._nearest_cell_expr(v, cents).collect()
-    }
-    assert got_np == got_ex
-    assert got_np[40][0] == 1  # tie -> lower cell
-    # the dispatcher picks the numpy route at this depth
-    plan = (
-        S._nearest_cell(v, cents)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    assert "MapInPandas" in plan
-
-    pre = v.select(F.col("id").alias("neighbor_id"), F.col("vec").alias("cvec"))
-    for probes in (1, 3):
-        a = sorted(
-            (r["neighbor_id"], r["cell"])
-            for r in S._nearest_cells_np(pre, cents, probes, "cvec").collect()
-        )
-        b = sorted(
-            (r["neighbor_id"], r["cell"])
-            for r in S._nearest_cells_expr(
-                pre, cents, probes, "cvec"
-            ).collect()
-        )
-        assert a == b, probes
-    # empty centroid set: numpy twin matches the r10 ADVICE semantics
-    none = cents.where(F.lit(False)).localCheckpoint()
-    assert S._nearest_cell_np(v, none).count() == 0
-    assert S._nearest_cells_np(pre, none, 2, "cvec").count() == 0
-
-
-def test_numpy_twins_tolerate_dirty_vectors(spark):
-    """r11 review finding: the numpy twins must not crash on — and
-    must MATCH the expression twins over — dirty frames: NULL vectors
-    and wrong-length vectors.  zip_with pads the shorter side with
-    null, so ANY length mismatch null-propagates the fold; the winner
-    is the lowest cell and the dist/score surfaces as null."""
+def test_numpy_kernels_tolerate_dirty_vectors(spark):
+    """r11 review finding: the assignment kernels must not crash on
+    dirty frames, and must give each dirty row the outcome the DuckDB
+    golden tests pin (tests/test_equivalence.py): a NULL or
+    wrong-length vector lands on the LOWEST cell with a NULL dist (the
+    zip_with fold pads the shorter side with null), and the multi-probe
+    assignment sends it to the lowest cells; a NaN ELEMENT keeps a NaN
+    dist, distinct from null through Arrow; the PQ kernel reads the
+    first m·d elements, so a long row encodes as its truncation and a
+    short row's missing tail subspace gets code 0."""
+    import math
     import random
 
     from pyspark.sql import functions as F
 
     rng = random.Random(31)
-    d, k = 300, 4  # d > 256 -> numpy route
+    d, k = 300, 4
+    cent_rows = [(c, [rng.uniform(-1, 1) for _ in range(d)]) for c in range(k)]
     cents = spark.createDataFrame(
-        [(c, [rng.uniform(-1, 1) for _ in range(d)]) for c in range(k)],
-        "cell int, centroid array<double>",
+        cent_rows, "cell int, centroid array<double>"
     ).localCheckpoint()
+    clean = [rng.uniform(-1, 1) for _ in range(d)]
     rows = [
-        (0, [rng.uniform(-1, 1) for _ in range(d)]),  # clean
+        (0, clean),                                   # clean
         (1, None),                                    # NULL vector
         (2, [1.0] * (d - 5)),                         # short
         (3, [1.0] * (d + 5)),                         # long
+        (4, [1.0, float("nan")] + [1.0] * (d - 2)),   # NaN element
     ]
     v = spark.createDataFrame(
         rows, "id long, vec array<double>"
     ).localCheckpoint()
-
-    def canon(df):
-        return sorted(
-            (r["id"], r["cell"], repr(r["dist"])) for r in df.collect()
-        )
-
-    got_np = canon(S._nearest_cell_np(v, cents))
-    got_ex = canon(S._nearest_cell_expr(v, cents))
-    assert got_np == got_ex, (got_np, got_ex)
-    by_id = {i: (c, dist) for i, c, dist in got_np}
+    got = {
+        r["id"]: (r["cell"], r["dist"])
+        for r in S._nearest_cell(v, cents).collect()
+    }
+    want0 = min(
+        range(k),
+        key=lambda c: sum((a - b) ** 2 for a, b in zip(clean, cent_rows[c][1])),
+    )
+    assert got[0][0] == want0 and got[0][1] is not None
     for i in (1, 2, 3):
-        assert by_id[i][1] == "None", by_id  # degenerate -> null dist
-
-    # NaN ELEMENT (correct length) is NOT degenerate: the fold is NaN
-    # in both twins, and null-vs-NaN must stay distinct through Arrow
-    # (r11 second-pass review finding, repro'd pre-fix)
-    import math
-
-    nanv = spark.createDataFrame(
-        [(9, [1.0, float("nan")] + [1.0] * (d - 2))],
-        "id long, vec array<double>",
-    ).localCheckpoint()
-    rn = S._nearest_cell_np(nanv, cents).collect()[0]
-    re_ = S._nearest_cell_expr(nanv, cents).collect()[0]
-    assert rn["cell"] == re_["cell"]
-    assert math.isnan(rn["dist"]) and math.isnan(re_["dist"])
+        assert got[i] == (0, None), (i, got[i])
+    assert got[4][0] == 0 and math.isnan(got[4][1])
 
     pre = v.select(F.col("id").alias("neighbor_id"), F.col("vec").alias("cvec"))
     for probes in (1, 2):
-        a = sorted(
-            (r["neighbor_id"], r["cell"])
-            for r in S._nearest_cells_np(pre, cents, probes, "cvec").collect()
-        )
-        b = sorted(
-            (r["neighbor_id"], r["cell"])
-            for r in S._nearest_cells_expr(
-                pre, cents, probes, "cvec"
-            ).collect()
-        )
-        assert a == b, (probes, a, b)
+        cells = {}
+        for r in S._nearest_cells(pre, cents, probes, "cvec").collect():
+            cells.setdefault(r["neighbor_id"], []).append(r["cell"])
+        for i in (1, 2, 3, 4):
+            assert sorted(cells[i]) == list(range(probes)), (probes, i, cells)
 
-    # PQ twin: slice semantics — longer rows are NORMAL, short rows
-    # degrade only the subspaces their missing tail touches
-    m, codes, dsub = 2, 150, 32  # 9600 terms -> big-model gate
-    assert m * codes * dsub > S._ARGMIN_LITERAL_MAX_TERMS
+    m, codes, dsub = 2, 150, 32
     cmap = {
         (j, c): [rng.uniform(-1, 1) for _ in range(dsub)]
         for j in range(m)
         for c in range(codes)
     }
+    full = [rng.uniform(-1, 1) for _ in range(m * dsub)]
     base = spark.createDataFrame(
         [
-            (0, [rng.uniform(-1, 1) for _ in range(m * dsub)]),
-            (1, [rng.uniform(-1, 1) for _ in range(m * dsub + 7)]),  # long
-            (2, [rng.uniform(-1, 1) for _ in range(dsub + 3)]),      # short
+            (0, full),
+            (1, full + [rng.uniform(-1, 1) for _ in range(7)]),  # long
+            (2, full[: dsub + 3]),                               # short
         ],
         "id long, __v array<double>",
     ).localCheckpoint()
-    got_np2 = {
+    codes_of = {
         r["id"]: tuple(r["codes"])
         for r in S._pq_codes_np(base, cmap, m, dsub, codes).collect()
     }
-    got_bc2 = {
-        r["id"]: tuple(r["codes"])
-        for r in S._pq_codes_bcast(base, cmap, m, dsub, codes).collect()
-    }
-    assert got_np2 == got_bc2, (got_np2, got_bc2)
-    assert got_np2[2][1] == 0  # the tail subspace of the short row
+    assert codes_of[1] == codes_of[0]  # long row = its truncation
+    assert codes_of[2] == (codes_of[0][0], 0)  # short tail -> code 0
 
 
 def test_round_scaled_fixed_matches_spark_round(spark):
@@ -742,150 +439,108 @@ def test_round_scaled_fixed_matches_spark_round(spark):
     assert got.tolist() == want
 
 
-def test_kmeans_fused_update_route_bit_identical(spark, monkeypatch):
-    """r12 (VERDICT r11 item 2): past d=256 kmeans_lloyd fuses the
-    Lloyd mean update into the numpy assignment scan
-    (_cell_partial_means_np).  Centroids and assignments must be
-    BIT-identical to the expression route (bcast assignment +
-    posexplode fixed-point aggregate) — ragged and null rows
-    included."""
+def _fixed_point_means(np, groups):
+    """Python reference of the Lloyd mean update: ``groups`` maps a key
+    to the vectors assigned to it; each position's mean is the int64
+    sum of HALF_UP-rounded ``x·SCALE`` over the vectors that HAVE that
+    position, divided by SCALE·count — a short vector contributes only
+    its real positions."""
+    out = {}
+    for key, vecs in groups.items():
+        n = max(len(x) for x in vecs)
+        s = [0] * n
+        c = [0] * n
+        for x in vecs:
+            xr = S._round_scaled_fixed(np, np.asarray(x, dtype=np.float64))
+            for t, val in enumerate(xr.tolist()):
+                s[t] += val
+                c[t] += 1
+        out[key] = tuple(
+            repr(float(s[t]) / (float(S.CENTROID_SCALE) * c[t]))
+            for t in range(n)
+            if c[t]
+        )
+    return out
+
+
+def _ref_argmin(vec, cents):
+    """Nearest centroid index by the left-fold squared distance, ties to
+    the lower index; a vector whose length differs from the centroids'
+    (the zip_with null fold) goes to index 0."""
+    if len(vec) != len(cents[0]):
+        return 0
+    best, best_d = 0, None
+    for i, cen in enumerate(cents):
+        acc = 0.0
+        for a, b in zip(vec, cen):
+            acc += (a - b) * (a - b)
+        if best_d is None or acc < best_d:
+            best, best_d = i, acc
+    return best
+
+
+def test_lloyd_updates_match_python_reference(spark):
+    """The numpy Lloyd rounds of kmeans_lloyd and pq_train equal a plain
+    Python fold of the same arithmetic, dirty rows included: a SHORT
+    vector contributes only its real positions to its (lowest-cell)
+    assignment, a NULL vector contributes nothing.  A vector longer
+    than the centroid dim is refused loudly by kmeans_lloyd (a
+    per-position update would silently grow the centroid)."""
     import random
+
+    import numpy as np
 
     rng = random.Random(31)
-    d, k, n = 300, 4, 120
-    assert d > S._ARGMIN_LITERAL_MAX_D
-    rows = [
-        (i, i % k, [rng.uniform(-1, 1) for _ in range(d)])
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<double>"
-    ).localCheckpoint()
-    dirty = spark.createDataFrame(
-        rows
-        + [(n, 0, [0.25] * (d - 7))]  # short row: real prefix only
-        + [(n + 1, 1, None)],  # null row: no contribution
-        "vec_id long, label int, embedding array<double>",
-    ).localCheckpoint()
-
-    def run(frame):
-        a, c, it = S.kmeans_lloyd(frame, max_iterations=4)
-        cents = {
-            r["cell"]: tuple(repr(x) for x in r["centroid"])
-            for r in c.collect()
-        }
-        assign = {
-            r["vec_id"]: (r["cell"], repr(r["dist"]))
-            for r in a.collect()
-        }
-        return cents, assign, it
-
-    for frame in (df, dirty):
-        monkeypatch.setattr(S, "_BIG_ARGMIN_IMPL", "numpy")
-        cn, an, itn = run(frame)
-        monkeypatch.setattr(S, "_BIG_ARGMIN_IMPL", "bcast")
-        cb, ab, itb = run(frame)
-        assert cn == cb
-        assert an == ab
-        assert itn == itb
-
-    # longer-than-model vectors refuse loudly on the fused route (the
-    # exploded form would silently grow the centroid array)
-    import pytest as _pytest
-
-    monkeypatch.setattr(S, "_BIG_ARGMIN_IMPL", "numpy")
-    too_long = spark.createDataFrame(
-        rows + [(n, 2, [0.5] * (d + 3))],
-        "vec_id long, label int, embedding array<double>",
-    )
-    clean_init = spark.createDataFrame(
-        [(c, [0.1 * c] * d) for c in range(k)],
-        "cell int, centroid array<double>",
-    )
-    with _pytest.raises(Exception, match="longer"):
-        S.kmeans_lloyd(too_long, max_iterations=1, init=clean_init)
-
-
-def test_pq_train_fused_update_bit_identical(spark, monkeypatch):
-    """r12: big-model pq_train fuses the (subspace, code, pos) mean
-    update into the numpy argmin scan (_pq_partial_means_np).  The
-    trained codebooks must be BIT-identical to the bcast
-    expression-scan + posexplode-update route, ragged rows included."""
-    import random
-
-    rng = random.Random(53)
-    m, codes, dim = 2, 150, 128  # m*codes*(dim/m) > literal gate
-    d = dim // m
-    assert m * codes * d > S._ARGMIN_LITERAL_MAX_TERMS
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(180)
-    ]
-    vecs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).localCheckpoint()
-
-    def books(impl):
-        monkeypatch.setattr(S, "_BIG_ARGMIN_IMPL", impl)
-        got = S.pq_train(
-            vecs, m=m, codes=codes, max_iterations=3, dim=dim
+    d, k, n = 12, 4, 40
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(n)]
+    rows += [(n, [0.25] * (d - 5)), (n + 1, None)]
+    v = spark.createDataFrame(rows, "id long, vec array<double>")
+    cents = [[rng.uniform(-1, 1) for _ in range(d)] for _ in range(k)]
+    got = {
+        r["cell_ix"]: tuple(repr(x) for x in r["centroid"])
+        for r in S._cell_partial_means_np(
+            v, list(enumerate(cents))
         ).collect()
-        return {
-            (r["subspace"], r["code"]): tuple(
-                repr(x) for x in r["centroid"]
-            )
-            for r in got
-        }
+    }
+    groups = {}
+    for _, x in rows:
+        if x is not None:
+            groups.setdefault(_ref_argmin(x, cents), []).append(x)
+    assert got == _fixed_point_means(np, groups)
 
-    assert books("numpy") == books("bcast")
+    init = spark.createDataFrame(
+        list(enumerate(cents)), "cell int, centroid array<double>"
+    )
+    too_long = spark.createDataFrame(
+        rows[:n] + [(n, [0.5] * (d + 3))],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="longer"):
+        S.kmeans_lloyd(too_long, max_iterations=1, init=init)
 
-    # RAGGED rows: one-round parity of the fused partial means against
-    # the exploded _subspace_means over the bcast assignment.  (A short
-    # row makes its starved (code, pos) cells produce SHORTER centroids
-    # — a ragged cmap neither numpy assignment route can re-ingest, so
-    # full multi-round train parity is pinned on clean corpora above;
-    # the UPDATE semantics themselves must still agree row-for-row.)
-    import random as _random
-
-    rng2 = _random.Random(97)
+    m, codes, dsub = 2, 8, 6
     cmap = {
-        (j, c): [rng2.uniform(-1, 1) for _ in range(d)]
+        (j, c): [rng.uniform(-1, 1) for _ in range(dsub)]
         for j in range(m)
         for c in range(codes)
     }
-    ragged = spark.createDataFrame(
-        [(i, v) for i, v in rows[:60]]
-        + [(500, [0.125] * (dim - 5)), (501, [0.5] * 3)],
-        "id long, __v array<double>",
-    ).localCheckpoint()
-
-    def means_of(df):
-        return {
-            (r["subspace"], r["code"]): tuple(
-                repr(x) for x in r["centroid"]
-            )
-            for r in df.collect()
-        }
-
-    fused = means_of(S._pq_partial_means_np(ragged, cmap, m, d, codes))
-    monkeypatch.setattr(S, "_BIG_ARGMIN_IMPL", "bcast")
-    scored = S._pq_codes_bcast(ragged, cmap, m, d, codes, carry_vec=True)
-    from pyspark.sql import functions as F
-
-    parts = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("subspace"),
-                F.element_at(F.col("codes"), j + 1).alias("code"),
-                F.slice(F.col("__v"), j * d + 1, d).alias("subvec"),
-            )
-            for j in range(m)
-        ]
-    )
-    assigned = scored.select("id", F.explode(parts).alias("p")).select(
-        "id", "p.subspace", "p.code", "p.subvec"
-    )
-    exploded = means_of(S._subspace_means(assigned))
-    assert fused == exploded
+    prow = [(i, [rng.uniform(-1, 1) for _ in range(m * dsub)]) for i in range(n)]
+    prow += [(500, [0.125] * (m * dsub - 2)), (501, [0.5] * 3)]
+    base = spark.createDataFrame(prow, "id long, __v array<double>")
+    got = {
+        (r["subspace"], r["code"]): tuple(repr(x) for x in r["centroid"])
+        for r in S._pq_partial_means_np(base, cmap, m, dsub, codes).collect()
+    }
+    groups = {}
+    for _, x in prow:
+        for j in range(m):
+            sub = x[j * dsub : (j + 1) * dsub]
+            if not sub:
+                continue
+            books = [cmap[(j, c)] for c in range(codes)]
+            code = _ref_argmin(sub, books)
+            groups.setdefault((j, code), []).append(sub)
+    assert got == _fixed_point_means(np, groups)
 
 
 def test_round_scaled_fixed_refuses_non_finite():
@@ -900,61 +555,10 @@ def test_round_scaled_fixed_refuses_non_finite():
             S._round_scaled_fixed(np, np.array([0.5, bad]))
 
 
-def test_label_centroids_fused_route_bit_identical(spark):
-    """r12: deep vectors route label_centroids through the fused
-    partial-sum pass (dim_hint > 256).  Must be BIT-identical to the
-    posexplode expression form on adversarial inputs: null labels (one
-    group, Spark semantics), an int label column WITH nulls (pandas
-    upcasts that batch to float64 — 3 and 3.0 must stay one group),
-    ragged vectors (per-pos counts), null/empty vectors (no
-    contribution), string labels."""
-    import random
-
-    rng = random.Random(77)
-    d = 300
-    assert d > S._ARGMIN_LITERAL_MAX_D
-
-    def vec():
-        return [rng.uniform(-1, 1) for _ in range(d)]
-
-    int_rows = (
-        [(i % 3, vec()) for i in range(40)]
-        + [(None, vec()), (None, vec())]
-        + [(1, None), (2, [0.5] * (d - 11)), (0, [])]
-    )
-    str_rows = [(chr(97 + i % 4) * 2, vec()) for i in range(30)] + [
-        (None, vec())
-    ]
-    for rows, schema in (
-        (int_rows, "label int, embedding array<double>"),
-        (str_rows, "label string, embedding array<double>"),
-    ):
-        df = spark.createDataFrame(rows, schema).localCheckpoint()
-
-        def canon(frame):
-            return sorted(
-                (repr(r["label"]), r["pos"], repr(r["centroid_val"]))
-                for r in frame.collect()
-            )
-
-        fused = canon(S._label_partials_np(df, "label", "embedding"))
-        expr = canon(S.label_centroids(df, "label", "embedding"))
-        assert fused == expr, schema
-        # the dim_hint router picks the fused path at this depth
-        routed = canon(
-            S.label_centroids(df, "label", "embedding", dim_hint=d)
-        )
-        assert routed == expr
-
-
-def test_label_centroids_float_labels_stay_on_expression_path(spark):
-    """r12 review finding: a float/double label column renders both
-    null and NaN as NaN across the Arrow boundary, but Spark groups
-    NaN separately from null — so the fused route refuses those types
-    and the dim_hint router must return the EXPRESSION result (NaN
-    and null labels as distinct groups)."""
-    import math
-
+def test_label_centroids_keep_nan_and_null_labels_apart(spark):
+    """r12 review finding: Spark groups a NaN label apart from a null
+    label — the reason label_centroids stays the posexplode aggregate
+    (an Arrow/pandas kernel renders both as NaN)."""
     d = 300
     rows = [
         (1.5, [0.1] * d),
@@ -963,18 +567,12 @@ def test_label_centroids_float_labels_stay_on_expression_path(spark):
         (None, [0.7] * d),
     ]
     df = spark.createDataFrame(rows, "label double, embedding array<double>")
-
-    def canon(frame):
-        return sorted(
-            (repr(r["label"]), r["pos"], repr(r["centroid_val"]))
-            for r in frame.collect()
-        )
-
-    routed = canon(S.label_centroids(df, "label", "embedding", dim_hint=d))
-    expr = canon(S.label_centroids(df, "label", "embedding"))
-    assert routed == expr
-    labels = {l for (l, _, _) in routed}
-    assert "None" in labels and "nan" in labels  # distinct groups
+    got = {
+        repr(r["label"]): r["centroid_val"]
+        for r in S.label_centroids(df, "label", "embedding").collect()
+        if r["pos"] == 1
+    }
+    assert got == {"1.5": 0.2, "nan": 0.5, "None": 0.7}
 
 
 # ------------------------------------------------------------ IVF-PQ ----

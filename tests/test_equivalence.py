@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import random
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from ._compare import canon
@@ -214,6 +215,221 @@ def test_minhash_profiles_arrow_splits_list_offsets(spark, monkeypatch):
     split = canon(D.minhash_profiles_arrow(docs, num_hashes=16).toPandas())
     assert len(whole) == 500
     assert split == whole
+
+
+# ------------------------------------------- ANN assignment kernels ----
+#
+# Golden tests of the numpy assignment kernels against DuckDB SQL that
+# folds the same distances left to right and orders candidates by the
+# same (distance, id) key.  Each runs at the fixture depth (d=64, the
+# 8x16x8 PQ model) and on the same vectors repeated ten times (d=640;
+# PQ subspaces of 320).
+
+
+def _sql_fold(expr: str, n: int) -> str:
+    """DuckDB left fold of ``expr`` (a lambda body over ``i``) for
+    i = 1..n — the order numpy's per-dimension ``acc +=`` takes."""
+    return (
+        f"list_reduce(list_transform(range(1, {n + 1}), i -> {expr}), "
+        "(x, y) -> x + y)"
+    )
+
+
+_GOLDEN_VECS = pa.schema(
+    [
+        ("rid", pa.int64()),
+        ("vec_id", pa.int64()),
+        ("label", pa.int32()),
+        ("embedding", pa.list_(pa.float32())),
+    ]
+)
+
+
+def _golden_vectors(spark, copies: int):
+    """(rid, vec_id, label, embedding) rows: the sf0.001 embeddings with
+    each vector repeated ``copies`` times, then the adversarial rows —
+    NULL, short, long, empty and NaN-element vectors, a duplicate id
+    carrying another vector, and an exact duplicate row."""
+    fixture = (
+        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        .orderBy("vec_id")
+        .collect()
+    )
+    rows = [
+        (r["vec_id"], r["label"], list(r["embedding"]) * copies)
+        for r in fixture
+    ]
+    v0, v1 = rows[0][2], rows[1][2]
+    d = len(v0)
+    rows += [
+        (9001, 0, None),
+        (9002, 0, v0[: d - 3]),
+        (9003, 0, v0 + [0.5, 0.5]),
+        (9004, 0, []),
+        (9005, 0, [v0[0], float("nan")] + v0[2:]),
+        (rows[2][0], 0, v1),
+        rows[3],
+    ]
+    return [(rid, *row) for rid, row in enumerate(rows)], len(fixture)
+
+
+def _golden_frame(spark, con, name, rows, arrow_schema):
+    """``rows`` as one Arrow table, registered in DuckDB as ``name`` and
+    returned as a Spark frame — both engines read the same bits."""
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], arrow_schema
+    )
+    con.register(name, table)
+    return spark.createDataFrame(table)
+
+
+def _golden_rows(rows):
+    return sorted(tuple(repr(x) for x in r) for r in rows)
+
+
+def test_nearest_cell_kernels_match_duckdb(spark):
+    """``_nearest_cells`` (cosine, probes 1 and 2) and ``_nearest_cell``
+    (L2 cell and dist) equal the DuckDB fold on the fixture and on the
+    deep vectors.  The centroids are the label centroids plus an exact
+    duplicate of one of them under a higher cell id, so every row near
+    it ties and must take the LOWER cell.  A NULL or wrong-length
+    vector scores NULL against every cell (the zip_with fold) and
+    lands on the lowest cell(s) with a NULL dist; a NaN element scores
+    NaN and keeps a NaN dist."""
+    import duckdb
+
+    from parquet_to_postgres_spark.llm import similarity as S
+
+    for copies in (1, 10):
+        con = duckdb.connect()
+        rows, n_fixture = _golden_vectors(spark, copies)
+        vecs = _golden_frame(spark, con, "vecs", rows, _GOLDEN_VECS)
+        d = len(rows[0][3])
+        cent_rows = sorted(
+            (r["label"], list(r["centroid"]))
+            for r in S._centroid_arrays(
+                vecs.where(F.col("rid") < n_fixture), "label", "embedding"
+            ).collect()
+        )
+        tied, dup = cent_rows[1][0], cent_rows[-1][0] + 1
+        cent_rows.append((dup, list(cent_rows[1][1])))
+        cents = _golden_frame(
+            spark, con, "cents", cent_rows,
+            pa.schema([("cell", pa.int32()), ("centroid", pa.list_(pa.float64()))]),
+        )
+        same_len = "len(v.embedding) = len(c.centroid)"
+        dot = _sql_fold("CAST(v.embedding[i] AS DOUBLE) * c.centroid[i]", d)
+        cc = _sql_fold("c.centroid[i] * c.centroid[i]", d)
+        diff = "(CAST(v.embedding[i] AS DOUBLE) - c.centroid[i])"
+        sqd = _sql_fold(f"{diff} * {diff}", d)
+
+        pre = vecs.select(
+            "rid", F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        )
+        for probes in (1, 2):
+            got = S._nearest_cells(pre, cents, probes, "vec").select(
+                "rid", "id", "cell"
+            )
+            want = con.sql(f"""
+              SELECT rid, id, cell FROM (
+                SELECT v.rid, v.vec_id AS id, c.cell,
+                       ROW_NUMBER() OVER (
+                         PARTITION BY v.rid
+                         ORDER BY CASE WHEN {same_len}
+                                       THEN -({dot} / sqrt({cc})) END
+                                  NULLS LAST, c.cell) AS rn
+                FROM vecs v CROSS JOIN cents c
+              ) WHERE rn <= {probes}
+            """).fetchall()
+            assert _golden_rows(got.collect()) == _golden_rows(want), (
+                copies, probes,
+            )
+            # the tie really occurs: it sends some row to the lower cell
+            # (probes 1) and puts both twins in some row's pair (probes 2)
+            by_rid = {}
+            for rid, _, cell in want:
+                by_rid.setdefault(rid, set()).add(cell)
+            if probes == 1:
+                assert {tied} in by_rid.values()
+                assert {dup} not in by_rid.values()
+            else:
+                assert {tied, dup} in by_rid.values()
+
+        got = S._nearest_cell(
+            vecs.select(
+                F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+            ),
+            cents,
+        ).select("id", "cell", "dist")
+        want = con.sql(f"""
+          SELECT id, cell, dist FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                        PARTITION BY rid ORDER BY dist NULLS LAST, cell) AS rn
+            FROM (
+              SELECT v.rid, v.vec_id AS id, c.cell,
+                     CASE WHEN {same_len} THEN {sqd} END AS dist
+              FROM vecs v CROSS JOIN cents c
+            )
+          ) WHERE rn = 1
+        """).fetchall()
+        assert _golden_rows(got.collect()) == _golden_rows(want), copies
+        con.close()
+
+
+def test_pq_encode_matches_duckdb(spark):
+    """``pq_encode`` equals the DuckDB per-subspace argmin (left-fold
+    squared distance, ties to the lower code) for the 8x16x8 model and
+    a model with 320-dim subspaces, both trained by ``pq_train``.  One
+    codebook entry duplicates another so exact ties occur.  NULL
+    vectors drop; a long row encodes as its truncation; a short or
+    empty row's missing subspaces and a NaN element's subspace get code
+    0; duplicate ids and exact duplicate rows each keep their row."""
+    import duckdb
+
+    from parquet_to_postgres_spark.llm import similarity as S
+
+    for copies, m, codes in ((1, 8, 16), (10, 2, 8)):
+        con = duckdb.connect()
+        rows, n_fixture = _golden_vectors(spark, copies)
+        vecs = _golden_frame(spark, con, "vecs", rows, _GOLDEN_VECS)
+        dim = len(rows[0][3])
+        d = dim // m
+        trained = S.pq_train(
+            vecs.where(F.col("rid") < n_fixture),
+            m=m, codes=codes, max_iterations=2, dim=dim,
+        ).collect()
+        books = {(r["subspace"], r["code"]): list(r["centroid"]) for r in trained}
+        books[(0, 5)] = list(books[(0, 2)])
+        book_rows = [(j, c, cen) for (j, c), cen in sorted(books.items())]
+        cb = _golden_frame(
+            spark, con, "books", book_rows,
+            pa.schema([
+                ("subspace", pa.int32()), ("code", pa.int32()),
+                ("centroid", pa.list_(pa.float64())),
+            ]),
+        )
+        diff = f"(CAST(v.embedding[b.subspace * {d} + i] AS DOUBLE) - b.centroid[i])"
+        got = S.pq_encode(vecs, cb, dim=dim).select("id", "codes")
+        want = con.sql(f"""
+          WITH best AS (
+            SELECT * FROM (
+              SELECT *, ROW_NUMBER() OVER (
+                          PARTITION BY rid, subspace
+                          ORDER BY dist NULLS LAST, code) AS rn
+              FROM (
+                SELECT v.rid, v.vec_id, b.subspace, b.code,
+                       {_sql_fold(f"{diff} * {diff}", d)} AS dist
+                FROM vecs v CROSS JOIN books b
+                WHERE v.embedding IS NOT NULL
+              )
+            ) WHERE rn = 1
+          )
+          SELECT vec_id AS id, list(code ORDER BY subspace) AS codes
+          FROM best GROUP BY rid, vec_id
+        """).fetchall()
+        assert len(want) == len(rows) - 1  # the NULL vector drops
+        assert _golden_rows(got.collect()) == _golden_rows(want), copies
+        con.close()
 
 
 def _random_docs(spark, n, seed=23):

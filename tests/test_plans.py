@@ -514,8 +514,8 @@ def test_pq_adc_scan_corpus_side_unshuffled(spark):
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     # the LUT build's reassembly aggregate is map-side combinable
     assert "partial_collect_list" in p
-    # encode is a pure scan (round 8): literal codebooks, argmin as an
-    # array_min expression — NO exchange, join, or aggregate anywhere
+    # encode is a pure scan: collected codebooks, numpy argmin in a
+    # mapInPandas map — NO exchange, join, or aggregate anywhere
     c_unit = corpus.select(
         F.col("vec_id").alias("cid"), S._unit("embedding").alias("cvec")
     )
@@ -523,16 +523,11 @@ def test_pq_adc_scan_corpus_side_unshuffled(spark):
     assert "Exchange" not in pe and "Join" not in pe and "Aggregate" not in pe
 
 
-def test_pq_argmin_projection_skips_whole_stage_codegen(spark):
-    """r9: the literal argmin forest can never janino-compile (64 KB
-    method limit) and every compiled rewrite measured SLOWER than the
-    interpreted projection (BASELINE.md shootout) — so the design is
-    to not even ATTEMPT the doomed compile: the _no_wsc poison must
-    keep the argmin Project OUTSIDE every WholeStageCodegen region
-    (no '*(' prefix on its executed-plan line).  If this pin breaks,
-    either the poison was optimized away (compile stall returns, one
-    per Lloyd round) or someone re-inlined the forest into a codegen
-    stage (bytecode-interpreter slowdown returns)."""
+def test_pq_encode_is_one_map_in_pandas_scan(spark):
+    """pq_encode must stay a map at any model size: the codebooks ride
+    the task closure and the argmin runs in one MapInPandas node, so
+    the plan has no Exchange of any kind (a corpus shuffle per encode
+    would be the scale bug)."""
     from pyspark.sql import functions as F
 
     from parquet_to_postgres_spark.llm import similarity as S
@@ -542,15 +537,10 @@ def test_pq_argmin_projection_skips_whole_stage_codegen(spark):
     corpus = emb.where(F.col("vec_id") >= 5)
     cb = S.pq_train(corpus, max_iterations=1).localCheckpoint(eager=True)
     enc = S.pq_encode(corpus, cb)
+    p = enc._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in p, p[:800]
+    assert "Exchange" not in p, p[:800]
     assert enc.count() == corpus.count()
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    argmin_lines = [
-        ln for ln in plan.split("\n")
-        if "__codes" in ln and "Project" in ln
-    ]
-    assert argmin_lines, "argmin projection not found in executed plan"
-    for ln in argmin_lines:
-        assert "*(" not in ln.split("Project")[0], ln[:120]
 
 
 def test_bpe_tokenize_adds_no_exchange(spark):
@@ -706,12 +696,11 @@ def test_predict_lang_model_joins_broadcast(spark):
 
 
 def test_kmeans_assignment_plan_is_shuffle_free(spark):
-    """r10 scale pin (twin of the PQ big-model pin): the Lloyd
-    assignment pass must put NO exchange on the corpus side — the
-    centroid set rides a single-row BroadcastExchange and the argmin
-    is a per-row expression.  Any other Exchange means assignment is
-    re-shuffling the corpus (vectors included) every round — the shape
-    the r10 rewrite removed."""
+    """r10 scale pin (twin of the pq_encode pin): the Lloyd assignment
+    pass must put NO exchange on the corpus side — the centroid set
+    rides the task closure and the argmin runs in a MapInPandas map.
+    An Exchange means assignment is re-shuffling the corpus (vectors
+    included) every round — the shape the r10 rewrite removed."""
     from pyspark.sql import functions as F
 
     from parquet_to_postgres_spark.llm import similarity as S
@@ -724,12 +713,8 @@ def test_kmeans_assignment_plan_is_shuffle_free(spark):
     v = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     out = S._nearest_cell(v, cents.localCheckpoint())
     p = out._jdf.queryExecution().executedPlan().toString()
-    # the centroid list's own tiny aggregate may exchange; the corpus
-    # side may not — strip the broadcast subtree marker and require the
-    # only Exchange nodes to be broadcast ones
-    assert "Exchange" not in p.replace("BroadcastExchange", "BX").replace(
-        "Exchange SinglePartition", "SP-agg", 1
-    ), p[:800]
+    assert "MapInPandas" in p, p[:800]
+    assert "Exchange" not in p, p[:800]
     assert out.count() == emb.count()
 
 
@@ -737,7 +722,7 @@ def test_ivf_assignment_plan_has_no_window(spark):
     """r10 scale pin: IVF cell assignment must be a pure scan — the
     former row_number window hash-partitioned AND sorted all N·k
     scored rows (vectors riding along).  The executed plan of the
-    assignment side may contain no Window and no non-broadcast
+    assignment side is a MapInPandas map with no Window and no
     Exchange."""
     from pyspark.sql import functions as F
 
@@ -755,22 +740,17 @@ def test_ivf_assignment_plan_has_no_window(spark):
     out = S._nearest_cells(pre, cents, 2, "cvec")
     p = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in p, p[:500]
-    # allowed exchanges: the model BroadcastExchange and the k-row
-    # centroid-list SinglePartition aggregate; a hash/range exchange
-    # would mean the CORPUS is being shuffled for a per-row selection
-    assert "Exchange hashpartitioning" not in p, p[:800]
-    assert "Exchange rangepartitioning" not in p, p[:800]
+    assert "MapInPandas" in p, p[:800]
+    assert "Exchange" not in p, p[:800]
     assert out.count() == emb.count() * 2
 
 
 def test_cell_assignment_empty_centroids_yield_zero_rows(spark):
-    """r10 ADVICE: the single-row collect_list aggregate emits one row
-    even over ZERO centroids; unguarded, _nearest_cell(s) assigned a
-    NULL cell to every corpus row on the probes==1 array_min branch
-    (nulls leaking into downstream joins) while the probes>1 explode
-    dropped all rows.  Both helpers must match the prior crossJoin
-    form: zero output rows on a degenerate centroid set — and the
-    OUTPUT SCHEMA must be unchanged so downstream selects still bind."""
+    """r10 ADVICE: a degenerate (empty) centroid set must yield ZERO
+    output rows from both assignment kernels, for every probe count —
+    never a NULL cell on every corpus row (nulls leaking into
+    downstream joins) — and the OUTPUT SCHEMA must be unchanged so
+    downstream selects still bind."""
     from pyspark.sql import functions as F
 
     from parquet_to_postgres_spark.llm import similarity as S

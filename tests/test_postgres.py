@@ -472,6 +472,22 @@ def test_null_sentinel_text_and_empty_string_read_back(spark, pgsrv):
     assert got == list(enumerate(texts))
 
 
+def test_csv_wire_carries_end_of_data_marker_text(spark, pgsrv):
+    """A record that is exactly ``\\.`` is psql's end-of-data line; on
+    the CSV wire it must load as data, not silently end the COPY and
+    drop the rows after it.  The binary wire carries it as any text."""
+    texts = ["a", "\\.", "b", "c"]
+    df = spark.createDataFrame([(t,) for t in texts], "name string")
+    for wire in ("csv", "binary"):
+        table = f"eod_marker_{wire}"
+        P.PostgresCopySink(
+            pgsrv.conninfo(), table, mode="overwrite", num_partitions=1,
+            wire_format=wire,
+        ).write(df)
+        got = P.run_psql(pgsrv.conninfo(), f"SELECT name FROM {table}")
+        assert sorted(got.splitlines()) == sorted(texts), wire
+
+
 def test_read_back_empty_table(spark, pgsrv):
     """A 0-row table reads back as 0 rows in the declared schema, over
     one connection and over several."""

@@ -172,16 +172,13 @@ def widen(emb, dim: int = 64, factor: int = 8):
 def bigmodel_probe(spark) -> list[dict]:
     """VERDICT r9 item 5: probe the BIG-model argmin route.
 
-    m=16, codes=64, d=512 puts the model at m*codes*d = 524,288 floats
-    and d > _ARGMIN_LITERAL_MAX_D, so every assignment (each Lloyd
-    round, the encode pass, and the store-side encode in
-    write_pq_index) routes to the big-model argmin that the 1M-vector
-    r8 table never touched (it ran the literal-forest path).  The
-    probe's first r10 run measured the then-current explode +
-    broadcast-join + two-keyed-aggregation form (``_pq_codes_join``)
-    at 773 s train / 737 MB corpus-LINEAR shuffle for 16k×d512 — which
-    drove its replacement by the zero-shuffle broadcast-data scan
-    ``_pq_codes_bcast``.  Passing now = train/encode walls grow
+    m=16, codes=64, d=512 puts the model at m*codes*d = 524,288 floats,
+    well past the 1M-vector r8 table's default 8x16x8 model, through
+    every assignment (each Lloyd round, the encode pass, and the
+    store-side encode in write_pq_index).  The probe's first r10 run
+    measured the then-current explode + broadcast-join +
+    two-keyed-aggregation form at 773 s train / 737 MB corpus-LINEAR
+    shuffle for 16k×d512.  Passing now = train/encode walls grow
     ~linearly with N while train shuffle stays MODEL-bounded (the
     mean-update aggregate's m*codes*(d/m) cells are the only
     exchange) and encode/query shuffle ~0."""
