@@ -35,7 +35,7 @@ from parquet_to_postgres_spark.operators import (
 from .conftest import SF_SMOKE
 
 # r16 (VERDICT r15 item 6): sketch/attribution/rollup op battery —
-# excluded from the default (< 15 min) run; `pytest -m slow` runs it.
+# excluded from the default run but for its `smoke` case; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 T0 = datetime(2024, 1, 1)
@@ -165,6 +165,7 @@ def test_attribution_validation_and_nulls(spark):
 FIXTURE_TOUCHES = ["click", "view", "signup"]
 
 
+@pytest.mark.smoke
 def test_attribution_matches_duckdb_on_fixture(spark, duck):
     """All three models over the events fixture equal the correlated-SQL
     twin row-for-row (purchase attributed to click/view/signup, 1h

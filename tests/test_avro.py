@@ -23,7 +23,7 @@ from parquet_to_postgres_spark.etl import read_source
 from .conftest import SF_SMOKE
 
 # r16 (VERDICT r15 item 6): avro codec/resolution matrix —
-# excluded from the default (< 15 min) run; `pytest -m slow` runs it.
+# excluded from the default run but for its `smoke` case; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 
@@ -31,6 +31,7 @@ def _multiset(df):
     return sorted(map(tuple, df.collect()))
 
 
+@pytest.mark.smoke
 def test_avro_roundtrip_lineitem_timestamps(spark):
     """lineitem (bigint/int/double/string/timestamp_ntz) survives a
     4-partition write + distributed read bit-exactly; the temporal

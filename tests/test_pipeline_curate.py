@@ -14,7 +14,7 @@ from .conftest import SF_SMOKE
 import pytest
 
 # r16 (VERDICT r15 item 6): full 9-stage curation funnel, minutes per pass —
-# excluded from the default (< 15 min) run; `pytest -m slow` runs it.
+# excluded from the default run but for its `smoke` case; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
 
 
@@ -77,6 +77,7 @@ def test_curate_end_to_end_with_export(spark):
         assert back.count() == report.manifest["train"]["__total__"]
 
 
+@pytest.mark.smoke
 def test_curate_deterministic_and_optional_stages(spark):
     docs = _docs(spark).limit(150)
     a, ra = curate_corpus(docs)
