@@ -1,11 +1,10 @@
 """Driver-thread job overlap (guide §2.6) — the ONE implementation.
 
-Three r15 call sites (the multi-source writes, the dual streaming
-harness runs, the IVF-PQ shape leg) originally hand-rolled the same
-start/join/capture/re-raise scaffolding around ``InheritableThread``
-and immediately diverged on the subtle parts (whether threads are
-joined when the MAIN thread raises; where captured errors go).  This
-helper owns those invariants:
+Two r15 call sites (the multi-source writes, the IVF-PQ shape leg)
+originally hand-rolled the same start/join/capture/re-raise
+scaffolding around ``InheritableThread`` and immediately diverged on
+the subtle parts (whether threads are joined when the MAIN thread
+raises; where captured errors go).  This helper owns those invariants:
 
 - background callables run on ``InheritableThread`` (JVM thread-locals
   — job descriptions, scheduler pools — propagate to the child jobs);

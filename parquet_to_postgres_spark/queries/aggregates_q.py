@@ -242,9 +242,8 @@ def salted_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rotated out of the 50-slot registry in round 14 (slot given to
     attribution_report, the same events/user grain); A1 stays declared
-    via pricing_summary, and the skew-salting machinery keeps its
-    hot-key scale probe (tools/scale_probe.py SKEWED) plus full oracle
-    coverage in tests/test_registry.py."""
+    via pricing_summary, and the skew-salting machinery keeps its full
+    oracle coverage in tests/test_registry.py."""
     from ..operators import salted_agg
 
     t = Catalog(spark, sf_dir)

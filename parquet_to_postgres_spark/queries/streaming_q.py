@@ -9,7 +9,6 @@ late-drop) withholds the final open window by design → rows-only.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import streaming as ST
 from . import register
@@ -47,52 +46,13 @@ from . import register
 )
 def stream_windowed_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1+T2: tumbling 1-day and sliding 1-day/12-hour window aggs over
-    the same stream, facet-tagged in one declared query (two real
-    streaming runs, complete mode).  Every event lands in exactly one
-    tumbling window and exactly two sliding windows; the oracle expands
-    the sliding overlap explicitly.
-
-    The two streams are INDEPENDENT (separate sources, separate state,
-    separate memory sinks), so they run CONCURRENTLY from two driver
-    threads (guide §2.6 — actions are only sequential because driver
-    code calls them sequentially): each availableNow micro-batch pays a
-    fixed harness cost (state-store setup, sink bootstrap, scheduling)
-    that the overlap absorbs, and neither stream's rows depend on the
-    other, so results are per-stream identical to the sequential runs.
-    The overlap runs through :func:`..concurrency.overlap`
-    (InheritableThread propagates the session's JVM thread-locals;
-    threads are always joined; a failure is re-raised, not swallowed).
-    Measured r15: 2.27 s sequential → 1.38 s concurrent (min of 3,
-    idle box)."""
-    from ..concurrency import overlap
-
-    _, (tumbling_df, sliding_df) = overlap(
-        [
-            lambda: ST.run_stream_to_df(
-                ST.tumbling_window_counts(ST.events_stream(spark, sf_dir)),
-                "complete",
-            ),
-            lambda: ST.run_stream_to_df(
-                ST.sliding_window_counts(ST.events_stream(spark, sf_dir)),
-                "complete",
-            ),
-        ]
+    the same stream, facet-tagged in one declared query (one streaming
+    run, one stateful aggregation, complete mode).  Every event lands in
+    exactly one tumbling window and exactly two sliding windows; the
+    oracle expands the sliding overlap explicitly."""
+    return ST.run_stream_to_df(
+        ST.windowed_counts(ST.events_stream(spark, sf_dir)), "complete"
     )
-    tumbling = tumbling_df.select(
-        F.lit("tumbling").alias("facet"),
-        "win_start",
-        "event_type",
-        "n_events",
-        "total_value",
-    )
-    sliding = sliding_df.select(
-        F.lit("sliding").alias("facet"),
-        "win_start",
-        F.lit(None).cast("string").alias("event_type"),
-        "n_events",
-        "total_value",
-    )
-    return tumbling.unionByName(sliding)
 
 
 # ------------------------------------------------------------------ T3 ----

@@ -14,14 +14,11 @@ from .ops import (
     run_stream_to_df,
     run_stream_to_sink,
     session_windows,
-    sliding_window_counts,
     stateful_user_totals,
-    stateful_user_totals_tws,
     stream_stream_click_attribution,
     streaming_dedup_keys,
-    tumbling_window_counts,
-    tws_available,
     watermarked_late_drop,
+    windowed_counts,
 )
 
 __all__ = [
@@ -31,12 +28,9 @@ __all__ = [
     "run_stream_to_df",
     "run_stream_to_sink",
     "session_windows",
-    "sliding_window_counts",
     "stateful_user_totals",
-    "stateful_user_totals_tws",
     "stream_stream_click_attribution",
     "streaming_dedup_keys",
-    "tumbling_window_counts",
-    "tws_available",
     "watermarked_late_drop",
+    "windowed_counts",
 ]

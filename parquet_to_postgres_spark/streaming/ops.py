@@ -22,17 +22,12 @@ a real cluster; only the source/sink bindings are test-local.
 from __future__ import annotations
 
 import itertools
-import threading
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from ..tables import normalize_events_ts
 from pyspark.sql.types import (
@@ -55,16 +50,6 @@ _SINK_IDS = itertools.count()
 # schema is well under a gigabyte.
 MAX_MEMORY_SINK_ROWS = 5_000_000
 
-# run_stream_to_df's refcounted harness-conf guard (see its body): the
-# harness conf keys are session-scoped (each SparkSession owns its
-# SQLConf), so the guard state is keyed BY SESSION — a process-wide
-# refcount would let two different sessions share one save/restore
-# cycle and cross-restore each other's conf (r15 review finding).
-# Entries are removed at depth 0, so the dict never outlives its
-# sessions.
-_HARNESS_LOCK = threading.Lock()
-_HARNESS_STATE: "dict[SparkSession, dict]" = {}
-
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as an unbounded stream (schema from the batch
@@ -84,9 +69,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def run_stream_to_df(
-    result: DataFrame, output_mode: str, rocksdb: bool = False
-) -> DataFrame:
+def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) and return
     the final result via a memory sink.
 
@@ -95,10 +78,11 @@ def run_stream_to_df(
     that fixed cost 4x vs the batch default.  (On a real cluster size
     this to key cardinality / executor count, not to the batch value.)
 
-    ``rocksdb=True`` pins the RocksDB state store provider for this
-    query — required by ``transformWithStateInPandas``, and the
-    production-recommended provider for any large-state query (state
-    lives off-heap on local disk instead of the executor heap).
+    The 8-partition regime is set on the session for the query's run and
+    the previous value is restored afterwards, also when the query fails
+    to start.  Harness runs on one session are therefore sequential: two
+    overlapped runs would each save the other's 8 and one could leave it
+    set.
 
     LIFETIME CONTRACT (driver ADVICE r8): the returned frame is backed
     by ``localCheckpoint`` blocks and is NOT recomputable — its
@@ -112,52 +96,8 @@ def run_stream_to_df(
     (bench) or the same test before any release, which is why the
     fast in-memory copy is the right default here."""
     spark = result.sparkSession
-    # Harness conf is SESSION-scoped, so concurrent harness runs on the
-    # SAME session (the r15 stream_windowed_aggs overlap — guide §2.6)
-    # must not each save/restore it independently: two overlapped saves
-    # race and the last exiter can "restore" the other run's 8, leaking
-    # shuffle.partitions=8 into the rest of the session.  A PER-SESSION
-    # refcounted guard sets the regime once (first entrant saves the
-    # true previous values) and restores once (last exiter) — concurrent
-    # same-session runs share the 8-partition regime, which is exactly
-    # what they want, while runs on a DIFFERENT session get their own
-    # independent cycle (a process-wide refcount would cross-restore
-    # sessions — r15 review finding).  A rocksdb run flips a second
-    # conf key (the state-store provider), so it must hold its
-    # session's regime EXCLUSIVELY: overlapping it with a non-rocksdb
-    # run would silently run that stream on RocksDB too.
-    with _HARNESS_LOCK:
-        st = _HARNESS_STATE.get(spark)
-        if st is not None and (rocksdb or st["rocksdb"]):
-            raise RuntimeError(
-                "run_stream_to_df: a rocksdb=True harness run cannot "
-                "overlap another harness run on the same session — the "
-                "state-store provider is session-scoped. Run it alone."
-            )
-        if st is None:
-            st = {
-                "depth": 1,
-                "rocksdb": rocksdb,
-                "prev": {
-                    "spark.sql.shuffle.partitions": spark.conf.get(
-                        "spark.sql.shuffle.partitions"
-                    ),
-                    "spark.sql.streaming.stateStore.providerClass": (
-                        spark.conf.get(
-                            "spark.sql.streaming.stateStore.providerClass"
-                        )
-                    ),
-                },
-            }
-            _HARNESS_STATE[spark] = st
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            if rocksdb:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    ROCKSDB_PROVIDER,
-                )
-        else:
-            st["depth"] += 1
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         name = f"stream_sink_{next(_SINK_IDS)}"
         q = (
@@ -169,13 +109,7 @@ def run_stream_to_df(
         )
         q.awaitTermination()
     finally:
-        with _HARNESS_LOCK:
-            st = _HARNESS_STATE[spark]
-            st["depth"] -= 1
-            if st["depth"] == 0:
-                for k, v in st["prev"].items():
-                    spark.conf.set(k, v)
-                del _HARNESS_STATE[spark]
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # Copy the sink's rows out via localCheckpoint and DROP the memory
     # table: every sink pins its full result set in driver memory for
     # the session lifetime otherwise, and the fresh name per call makes
@@ -221,47 +155,57 @@ def run_stream_to_df(
     return out
 
 
-# ------------------------------------------------------------------ T1 ----
+# --------------------------------------------------------------- T1+T2 ----
+
+_DAY_US = 86_400_000_000
+_HALF_DAY_US = _DAY_US // 2
 
 
-def tumbling_window_counts(stream: DataFrame) -> DataFrame:
-    """T1: tumbling 1-day windows per event type.
+def windowed_counts(stream: DataFrame) -> DataFrame:
+    """T1+T2 in one stateful aggregation, rows tagged by ``facet``:
 
-    Windows align to the epoch in session time (UTC here), so the batch
-    twin is ``date_trunc('day', ts)``.  Money sums use the exact-decimal
-    strategy (_util.py) for order-independent doubles."""
-    return (
-        stream.groupBy(F.window("ts", "1 day"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)"))
-            .cast("double")
-            .alias("total_value"),
+    - ``tumbling``: 1-day windows per ``event_type``;
+    - ``sliding``: 1-day windows every 12 hours over all events
+      (``event_type`` NULL).  Each event lands in exactly 1 tumbling
+      and 2 sliding windows, starting at floor_12h(ts) and 12 h before.
+
+    Window starts align to the epoch, as ``F.window`` does (session time
+    is UTC, so the batch twin is ``date_trunc('day', ts)``).  They are
+    computed with ``pmod`` over ``unix_micros`` because Spark rejects
+    two ``window()`` expressions in one projection, and ``date_trunc``
+    would follow the session time zone instead of the epoch.  A NULL
+    ``ts`` is in no window (``F.window`` drops it too).  Each event
+    explodes into its three (facet, start, event_type) keys, so both
+    facets share one source, one shuffle and one state store.  Money
+    sums use the exact-decimal strategy (_util.py) for
+    order-independent doubles."""
+    us = F.unix_micros("ts")
+    day = us - F.pmod(us, F.lit(_DAY_US))
+    half = us - F.pmod(us, F.lit(_HALF_DAY_US))
+    no_type = F.lit(None).cast("string")
+
+    def key(facet, start_us, event_type):
+        return F.struct(
+            F.lit(facet).alias("facet"),
+            F.timestamp_micros(start_us).alias("win_start"),
+            event_type.alias("event_type"),
         )
-        .select(
-            F.col("window.start").alias("win_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+
+    keys = F.array(
+        key("tumbling", day, F.col("event_type")),
+        key("sliding", half, no_type),
+        key("sliding", half - F.lit(_HALF_DAY_US), no_type),
     )
-
-
-# ------------------------------------------------------------------ T2 ----
-
-
-def sliding_window_counts(stream: DataFrame) -> DataFrame:
-    """T2: sliding windows, 1-day length every 12 hours — each event
-    lands in exactly 2 windows (starts: floor_12h(ts) and that − 12h)."""
     return (
-        stream.groupBy(F.window("ts", "1 day", "12 hours"))
+        stream.where(F.col("ts").isNotNull())
+        .select(F.explode(keys).alias("w"), "value")
+        .groupBy("w.facet", "w.win_start", "w.event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,2)"))
             .cast("double")
             .alias("total_value"),
         )
-        .select(F.col("window.start").alias("win_start"), "n_events", "total_value")
     )
 
 
@@ -381,104 +325,6 @@ def stateful_user_totals(stream: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class _UserTotalsProcessor(StatefulProcessor):
-    """Spark-4 ``transformWithStateInPandas`` twin of
-    :func:`_user_totals_fn` — the successor stateful-operator API
-    (typed composite state, timers, per-state TTL) over the same
-    integer-cents accumulation, so both T6 surfaces share semantics and
-    one oracle.
-
-    Timer/TTL surfaces are exercised on every input batch without
-    affecting output (the VERDICT r3 item-4 ask): a far-future
-    processing-time timer is registered, listed, and deleted (arming
-    real timer state in the store), and a TTL'd value state records the
-    last-seen processing time (1 h TTL — never expires inside a test
-    run, so results stay deterministic; in production the TTL reaps
-    state for keys gone quiet).
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-        self._last_seen = handle.getValueState(
-            "last_seen", "seen_ms long", ttlDurationMs=3_600_000
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._totals.exists():
-            n, cents = self._totals.get()
-        else:
-            n, cents = 0, 0
-        for pdf in rows:
-            n += len(pdf)
-            # Half-away-from-zero (matches SQL round(); see _user_totals_fn)
-            v = pdf["value"].to_numpy()
-            v = v[~np.isnan(v)]  # see _user_totals_fn: SQL sum() skips NULLs
-            cents += int(
-                (np.sign(v) * np.floor(np.abs(v) * 100 + 0.5))
-                .astype("int64")
-                .sum()
-            )
-        self._totals.update((n, cents))
-
-        now_ms = timerValues.getCurrentProcessingTimeInMs()
-        self._last_seen.update((now_ms,))
-        # register → list → delete a far-future timer: the timer store
-        # round-trips real state but never fires inside the run
-        self._handle.registerTimer(now_ms + 86_400_000)
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def tws_available() -> bool:
-    """True iff ``transformWithStateInPandas`` can actually run here.
-
-    The Spark-4 stateful API talks to a Python-side state server over a
-    protobuf protocol, so it needs the ``google.protobuf`` wheel at
-    runtime — unlike ``applyInPandasWithState``, which rides the plain
-    Arrow channel.  Environments without protobuf (this sandbox) keep
-    the operator importable and its plan buildable; only execution is
-    gated, and ``stream_user_totals`` stays on the Arrow-channel API."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """T6 on the Spark-4 API: ``transformWithStateInPandas`` running
-    per-user totals (exact integer cents), with timer + TTL state
-    surfaces armed per batch.
-
-    Requires the RocksDB state store provider — set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    :data:`ROCKSDB_PROVIDER` before starting the query (the test
-    harness :func:`run_stream_to_df` does this automatically via
-    ``rocksdb=True``)."""
-    # Same §4 projection as the applyInPandasWithState twin: the
-    # processor reads only the key and ``value``.
-    return stream.select("user_id", "value").groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserTotalsProcessor(),
-        outputStructType=_T6_OUTPUT,
-        outputMode="update",
-        timeMode="processingTime",
     )
 
 

@@ -1171,34 +1171,6 @@ def test_interval_overlap_join_equals_naive_theta(spark):
         assert set(got) == naive, f"w={w}: pair set diverges from theta join"
 
 
-def test_dedup_probe_cipher_is_bijective_and_copy_distinct():
-    """tools/dedup_scale_probe's constant-dup-rate claim rests on the
-    per-copy substitution cipher being a true bijection on [a-zA-Z0-9]
-    (within-copy shingle Jaccard preserved exactly) that differs between
-    copies (cross-copy shingle overlap ~0).  Pin both properties, plus
-    determinism, so a refactor can't silently turn the probe's linear
-    pair growth into an artifact."""
-    import string
-    import sys
-
-    sys.path.insert(0, "tools")
-    from dedup_scale_probe import ALPHABET, cipher_for_copy
-
-    assert cipher_for_copy(0) is None
-    seen = set()
-    for k in range(1, 31):
-        m = cipher_for_copy(k)
-        assert m is not None and len(m) == len(ALPHABET)
-        # bijection, class-preserving: each alphabet class permutes
-        # within itself (case/digit structure of the text is preserved)
-        assert sorted(m[:26]) == list(string.ascii_lowercase)
-        assert sorted(m[26:52]) == list(string.ascii_uppercase)
-        assert sorted(m[52:]) == list(string.digits)
-        assert m == cipher_for_copy(k), "cipher must be deterministic"
-        assert m not in seen, f"copies must get distinct ciphers (k={k})"
-        seen.add(m)
-
-
 def test_semantic_dedup_known_survivors(spark):
     """SemDeDup with explicit clusters on a hand-built fixture: within
     cluster 0, vectors 1/2 are near-identical (drop 2, keep 1) and 3 is

@@ -44,6 +44,7 @@ def _py_ngrams(s: str, n: int) -> list[str]:
     return out
 
 
+@pytest.mark.smoke
 @PROP
 @given(st.lists(TEXT, min_size=1, max_size=8), st.integers(2, 5))
 def test_char_ngrams_matches_python(spark, texts, n):

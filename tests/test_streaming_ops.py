@@ -127,42 +127,6 @@ def test_idempotent_sink_replayed_batch_no_double_insert(spark):
         assert spark.read.parquet(f"{d}/plain").count() == 2 * replay_df.count()
 
 
-def test_tws_user_totals_plan_builds(spark):
-    """transformWithStateInPandas (the Spark-4 successor stateful API):
-    the operator's streaming plan must BUILD against the real stream —
-    analysis catches schema/key/output-mode mistakes — even where the
-    runtime protobuf dependency is missing."""
-    result = ops.stateful_user_totals_tws(ops.events_stream(spark, SF_SMOKE))
-    assert result.isStreaming
-    assert set(result.columns) == {"user_id", "n_events", "sum_cents"}
-
-
-@pytest.mark.skipif(
-    not ops.tws_available(),
-    reason="transformWithStateInPandas needs google.protobuf at runtime; "
-    "not shipped in this environment (applyInPandasWithState covers T6)",
-)
-def test_tws_user_totals_matches_batch(spark):
-    """Where protobuf exists, the new-API operator must produce exactly
-    the batch per-user totals (same contract as stateful_user_totals)."""
-    got = ops.run_stream_to_df(
-        ops.stateful_user_totals_tws(ops.events_stream(spark, SF_SMOKE)),
-        "update",
-        rocksdb=True,
-    )
-    batch = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
-        )
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-
-
 def test_idempotent_sink_multi_batch_replay(spark):
     """Exactly-once across a MULTI-batch run: maxFilesPerTrigger=1 over
     a 3-file input produces 3 micro-batches / 3 batch_id partitions;
@@ -237,101 +201,94 @@ def test_checkpoint_restart_processes_nothing_twice(spark):
         assert spark.read.parquet(f"{d}/out").count() == n1
 
 
-def test_run_stream_to_df_concurrent_conf_restore(spark):
-    """r15 optimization: stream_windowed_aggs overlaps two harness runs
-    from driver threads, so the session-global harness conf
-    (shuffle.partitions=8) must be saved/set/restored through the
-    refcounted guard — the naive per-call save/restore races and can
-    leave the session at 8 after the LAST exiter restores the other
-    run's snapshot.  Two concurrent runs must produce the same rows as
-    sequential runs and leave the conf exactly as found."""
-    from pyspark import InheritableThread
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    results: dict[str, object] = {}
-
-    def run(name: str) -> None:
-        stream = ops.events_stream(spark, SF_SMOKE).select(
-            "event_id", "user_id"
-        )
-        results[name] = ops.run_stream_to_df(
-            stream.groupBy("user_id").count(), "complete"
-        )
-
-    threads = [
-        InheritableThread(target=run, args=(n,)) for n in ("a", "b")
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    seq = ops.run_stream_to_df(
-        ops.events_stream(spark, SF_SMOKE)
-        .select("event_id", "user_id")
-        .groupBy("user_id")
-        .count(),
-        "complete",
-    )
-    want = sorted(map(tuple, seq.collect()))
-    assert sorted(map(tuple, results["a"].collect())) == want
-    assert sorted(map(tuple, results["b"].collect())) == want
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-
-def test_run_stream_to_df_guard_is_per_session(spark):
-    """r15 review finding: the harness-conf guard state must be keyed
-    by SESSION.  Two sessions (same SparkContext, independent SQLConf)
-    running overlapped harness streams must each get the 8-partition
-    regime and each be restored to their OWN previous conf — a
-    process-wide refcount would skip setting the second session's
-    regime and cross-restore the first session's values onto it."""
-    from pyspark import InheritableThread
-
-    other = spark.newSession()
-    other.conf.set("spark.sql.shuffle.partitions", "23")
-    prev_main = spark.conf.get("spark.sql.shuffle.partitions")
-    assert prev_main != "23"
-    results: dict[str, object] = {}
-
-    def run(name: str, session) -> None:
-        stream = ops.events_stream(session, SF_SMOKE).select(
-            "event_id", "user_id"
-        )
-        results[name] = ops.run_stream_to_df(
-            stream.groupBy("user_id").count(), "complete"
-        )
-
-    threads = [
-        InheritableThread(target=run, args=("main", spark)),
-        InheritableThread(target=run, args=("other", other)),
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_main
-    assert other.conf.get("spark.sql.shuffle.partitions") == "23"
-    want = sorted(map(tuple, results["main"].collect()))
-    assert sorted(map(tuple, results["other"].collect())) == want
-    assert len(want) > 0
-
-
 def test_run_stream_to_df_row_cap_guard(spark, monkeypatch):
     """run_stream_to_df collects the memory sink to the driver — safe
     only because the harness is bounded.  The cap makes a large-stream
     misuse fail fast and loud instead of OOMing the driver (driver
-    ADVICE r7).  Verified by shrinking the cap below the fixture size."""
+    ADVICE r7).  Verified by shrinking the cap below the fixture size.
+
+    Neither the over-cap raise nor a query whose ``start()`` fails
+    (complete mode needs an aggregation) may leave the harness's
+    8-partition regime on the session or leak a memory-sink temp view.
+    The session is set to 13 first: the fixture's own value is 8."""
+    from pyspark.errors import AnalysisException
+
     stream = ops.events_stream(spark, SF_SMOKE).select("event_id", "user_id")
     monkeypatch.setattr(ops, "MAX_MEMORY_SINK_ROWS", 10)
-    with pytest.raises(RuntimeError, match="memory sink exceeded 10 rows"):
-        ops.run_stream_to_df(stream, "append")
-    # and the over-cap run must not leak its memory-sink temp view
-    assert not [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("stream_sink_")
-    ]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try:
+        for mode, err, match in (
+            ("append", RuntimeError, "memory sink exceeded 10 rows"),
+            ("complete", AnalysisException, "STREAMING_OUTPUT_MODE"),
+        ):
+            with pytest.raises(err, match=match):
+                ops.run_stream_to_df(stream, mode)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "13", mode
+            assert not [
+                t.name
+                for t in spark.catalog.listTables()
+                if t.name.startswith("stream_sink_")
+            ], mode
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_stream_windowed_aggs_is_one_streaming_query(spark, monkeypatch):
+    """Both facets come from ONE streaming query: one source, one
+    stateful aggregation (one state operator) — not a query per facet."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from parquet_to_postgres_spark.queries.streaming_q import (
+        stream_windowed_aggs,
+    )
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    got = stream_windowed_aggs(spark, SF_SMOKE)
+    assert got.select("facet").distinct().count() == 2
+    assert len(started) == 1
+    progress = started[0].lastProgress
+    assert len(progress["sources"]) == 1, progress
+    assert len(progress["stateOperators"]) == 1, progress
+
+
+def test_windowed_counts_window_edges(spark):
+    """Window starts are inclusive and epoch-aligned: an event at exactly
+    00:00 or 12:00 opens the window starting there, 23:59:59.999999
+    stays in its day and its 12:00 half, and a NULL ts is in no window
+    of either facet.  Rows hand-computed; batch mode."""
+    events = spark.sql(
+        """SELECT * FROM VALUES
+             (TIMESTAMP'2024-01-02 00:00:00', 'a', 1.0D),
+             (TIMESTAMP'2024-01-02 12:00:00', 'b', 2.0D),
+             (TIMESTAMP'2024-01-02 23:59:59.999999', 'a', 4.0D),
+             (CAST(NULL AS TIMESTAMP), 'a', 8.0D)
+           AS t(ts, event_type, value)"""
+    )
+    got = ops.windowed_counts(events).select(
+        "facet",
+        F.col("win_start").cast("string"),
+        "event_type",
+        "n_events",
+        "total_value",
+    )
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(
+        [
+            ("tumbling", "2024-01-02 00:00:00", "a", 2, 5.0),
+            ("tumbling", "2024-01-02 00:00:00", "b", 1, 2.0),
+            ("sliding", "2024-01-01 12:00:00", None, 1, 1.0),
+            ("sliding", "2024-01-02 00:00:00", None, 3, 7.0),
+            ("sliding", "2024-01-02 12:00:00", None, 2, 6.0),
+        ],
+        key=str,
+    )
 
 
 def test_stateful_user_totals_prunes_arrow_boundary(spark):
@@ -356,7 +313,3 @@ def test_stateful_user_totals_prunes_arrow_boundary(spark):
     # pinning it to a specific pretty-printed line (r15 ADVICE item —
     # indentation markers / extra nodes vary across Spark versions)
     assert re.search(r"Project \[user_id#\d+L?, value#\d+\]", plan), plan
-    # the TWS twin carries the same projection (shared §4 contract)
-    tws = ops.stateful_user_totals_tws(ops.events_stream(spark, SF_SMOKE))
-    tws_plan = tws._jdf.queryExecution().analyzed().toString()
-    assert re.search(r"Project \[user_id#\d+L?, value#\d+\]", tws_plan), tws_plan
