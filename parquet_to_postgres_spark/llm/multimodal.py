@@ -1,15 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Two decode tiers:
-
-- ``decode_media`` / ``fake_decode_meta`` — a deterministic byte-stat
-  STUB with an exact SQL twin, so the Arrow plumbing itself is
-  hash-checked by the driver gate.
-- ``decode_media_real`` — REAL decoders for the dependency-free
-  formats: uncompressed BMP, binary PPM, PCM WAV (header parse + numpy
-  pixel/sample stats; no codec libraries needed).  Compressed formats
-  (JPEG/PNG/MP4) still need PIL/ffmpeg — swapping them in is a
-  one-function change behind the same schema.
+One decode tier, ``decode_media_real``: the native decoders (JPEG
+baseline/progressive/lossless, PNG, BMP, PPM, PCM WAV — header parse +
+numpy pixel/sample stats, no codec libraries), run over Arrow batches
+via ``mapInPandas``.  The declared ``multimodal_real_decode`` query
+hash-checks its output on frozen fixtures.
 
 Everything Spark-side is real and tested: the schema contract, the
 Arrow batch boundary (``mapInPandas``), partition behavior, and batch
@@ -26,7 +21,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -38,66 +32,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("meta_height", T.IntegerType(), True),
     ]
 )
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("first_byte", T.IntegerType(), True),
-        T.StructField("byte_checksum", T.LongType(), True),
-    ]
-)
-
-
-def documents_as_media(documents: DataFrame) -> DataFrame:
-    """Synthesize a media table from documents: UTF-8 bytes as the opaque
-    payload (stands in for image/audio blobs in tests)."""
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("content"),
-        F.lit("text/plain").alias("media_type"),
-        F.col("n_chars").cast("int").alias("meta_width"),
-        F.lit(1).alias("meta_height"),
-    )
-
-
-def fake_decode_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """STUB decoder: deterministic metadata from raw bytes.
-
-    Real deployments replace the body with e.g. PIL.Image.open /
-    soundfile.read; the signature, batching, and output schema stay.
-    ``byte_checksum`` = sum of byte values mod 1e9+7 (replicable in SQL,
-    so the plumbing itself is oracle-checkable)."""
-    import numpy as np
-
-    for pdf in batches:
-        content = pdf["content"]
-        # numpy over the buffer, not a python loop over every byte — the
-        # per-byte work is the whole cost of this operator at scale
-        checksum = content.map(
-            lambda b: int(np.frombuffer(b, dtype=np.uint8).sum(dtype=np.int64))
-            % 1_000_000_007
-            if b is not None
-            else None
-        )
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"],
-                "n_bytes": content.map(lambda b: len(b) if b is not None else None),
-                "first_byte": content.map(
-                    lambda b: b[0] if b is not None and len(b) else None
-                ),
-                "byte_checksum": checksum,
-            }
-        )
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """Run the (stub) decoder over Arrow batches via mapInPandas."""
-    return media.select("media_id", "content").mapInPandas(
-        fake_decode_meta, DECODED_SCHEMA
-    )
-
 
 RESIZED_SCHEMA = T.StructType(
     [
@@ -1421,9 +1355,9 @@ REAL_DECODED_SCHEMA = T.StructType(
 
 
 def decode_media_real(media: DataFrame) -> DataFrame:
-    """Real decode over Arrow batches: BMP/PPM/WAV payloads → typed
-    metadata + pixel/sample statistics, same iterator-of-batches shape
-    as the stub (a partition of blobs is never materialized at once).
+    """Real decode over Arrow batches: media payloads → typed metadata +
+    pixel/sample statistics, batch by batch (a partition of blobs is
+    never materialized at once).
     A real decoder is inherently per-row Python — the numpy work inside
     each decode is the vectorized part."""
 

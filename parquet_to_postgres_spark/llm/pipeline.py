@@ -28,6 +28,7 @@ BASELINE.json north-star surface into its intended shape.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -52,6 +53,92 @@ class CurationReport:
         for d in self._persisted:
             d.unpersist()
         self._persisted = []
+
+
+def _recorder(report: CurationReport) -> Callable[[str, DataFrame], DataFrame]:
+    """``record(stage, d)``: persist ``d``, count it ONCE into
+    ``report.stages[stage]``, then release the previous stage's blocks.
+
+    Without this, stage k's count() replays stages 1..k-1 from the scan
+    and the funnel goes quadratic in recomputation (measured 140 s ->
+    37 s warm at sf0.1).  Peak storage is two adjacent stages,
+    disk-spillable."""
+    from pyspark import StorageLevel
+
+    prev: list[DataFrame] = []
+
+    def record(stage: str, d: DataFrame) -> DataFrame:
+        d = d.persist(StorageLevel.MEMORY_AND_DISK)
+        report.stages[stage] = d.count()
+        if prev:
+            prev.pop().unpersist()
+        prev.append(d)
+        return d
+
+    return record
+
+
+def _normalize(df: DataFrame, text_col: str) -> DataFrame:
+    """NFKC -> PII scrub -> case/whitespace normal form."""
+    from .text import normalize_text, normalize_unicode, scrub_pii
+
+    return (
+        df.withColumn(text_col, normalize_unicode(text_col))
+        .withColumn(text_col, scrub_pii(text_col))
+        .withColumn(text_col, normalize_text(text_col))
+    )
+
+
+def _rule_gate(
+    df: DataFrame, text_col: str, min_tokens: int, max_punct_ratio: float
+) -> DataFrame:
+    """Scan-level quality predicates: non-null, enough tokens, not too
+    much punctuation."""
+    from .classify import _norm_tokens
+
+    n_toks = F.size(_norm_tokens(text_col))
+    punct = (
+        F.length(text_col)
+        - F.length(F.regexp_replace(text_col, "[^a-z0-9 ]", ""))
+    ).cast("double") / F.greatest(F.length(text_col), F.lit(1))
+    return df.where(
+        F.col(text_col).isNotNull()
+        & (n_toks >= min_tokens)
+        & (punct <= max_punct_ratio)
+    )
+
+
+def _span_dedup(
+    df: DataFrame, span_n: int, min_tokens: int, id_col: str, text_col: str
+) -> DataFrame:
+    """Repeated-span dedup; it rebuilds text and may empty some docs, so
+    the token floor is applied again."""
+    from .classify import _norm_tokens
+    from .dedup import dedup_repeated_spans
+
+    return dedup_repeated_spans(
+        df, n=span_n, id_col=id_col, text_col=text_col
+    ).where(F.size(_norm_tokens(text_col)) >= min_tokens)
+
+
+def _exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact dedup on the normalized text, keeping the lowest id via a
+    map-side-combinable min-agg + AQE-skew-splittable join — NOT a
+    row_number window, which would funnel every copy of a mega-
+    duplicated document onto one reducer (same argument as
+    dedup.dedup_repeated_spans' canonical selection)."""
+    key = F.md5(F.col(text_col))
+    winners = (
+        df.select(F.col(id_col), key.alias("__k"))
+        .groupBy("__k")
+        .agg(F.min(id_col).alias("__winner"))
+    )
+    return (
+        df.withColumn("__k", key)
+        .join(winners, "__k")
+        .where(F.col(id_col) == F.col("__winner"))
+        .drop("__k", "__winner")
+    )
 
 
 def curate_corpus(
@@ -87,64 +174,24 @@ def curate_corpus(
     Returns ``(curated_df, report)``; ``curated_df`` keeps the input
     columns (with ``text_col`` fully normalized) plus ``split``."""
     from ..etl import write_training_shards
-    from .classify import _norm_tokens
-    from .dedup import dedup_repeated_spans, near_dedup_corpus
-    from .text import (
-        decontaminate,
-        normalize_text,
-        normalize_unicode,
-        score_char_lm,
-        scrub_pii,
-        strip_markup,
-        train_char_lm,
-    )
+    from .dedup import near_dedup_corpus
+    from .text import decontaminate, score_char_lm, strip_markup, train_char_lm
 
     if splits is None:
         splits = {"train": 0.9, "val": 0.05, "test": 0.05}
     report = CurationReport()
-
-    # Each recorded stage is persisted and counted ONCE, then the
-    # previous stage's blocks are released: without this, stage k's
-    # count() replays stages 1..k-1 from the scan and the funnel goes
-    # quadratic in recomputation (measured 140 s -> 37 s warm at
-    # sf0.1).  Peak storage is two adjacent stages, disk-spillable.
-    from pyspark import StorageLevel
-
-    prev: list[DataFrame] = []
-
-    def record(stage: str, d: DataFrame) -> DataFrame:
-        d = d.persist(StorageLevel.MEMORY_AND_DISK)
-        report.stages[stage] = d.count()
-        if prev:
-            prev.pop().unpersist()
-        prev.append(d)
-        return d
+    record = _recorder(report)
 
     cur = record("input", df)
 
     # 1. normalize: [markup strip ->] NFKC -> PII scrub -> case/ws form
     if markup:
         cur = cur.withColumn(text_col, strip_markup(text_col))
-    cur = record(
-        "normalized",
-        cur.withColumn(text_col, normalize_unicode(text_col))
-        .withColumn(text_col, scrub_pii(text_col))
-        .withColumn(text_col, normalize_text(text_col)),
-    )
+    cur = record("normalized", _normalize(cur, text_col))
 
     # 2. rule quality gate (scan-level predicates)
-    n_toks = F.size(_norm_tokens(text_col))
-    punct = (
-        F.length(text_col)
-        - F.length(F.regexp_replace(text_col, "[^a-z0-9 ]", ""))
-    ).cast("double") / F.greatest(F.length(text_col), F.lit(1))
     cur = record(
-        "rule_gate",
-        cur.where(
-            F.col(text_col).isNotNull()
-            & (n_toks >= min_tokens)
-            & (punct <= max_punct_ratio)
-        ),
+        "rule_gate", _rule_gate(cur, text_col, min_tokens, max_punct_ratio)
     )
 
     # 3. char-LM perplexity gate (optional; model bounded by charset^n)
@@ -162,30 +209,11 @@ def curate_corpus(
 
     # 4. repeated-span dedup (rebuilds text; may empty some docs)
     cur = record(
-        "span_dedup",
-        dedup_repeated_spans(
-            cur, n=span_n, id_col=id_col, text_col=text_col
-        ).where(F.size(_norm_tokens(text_col)) >= min_tokens),
+        "span_dedup", _span_dedup(cur, span_n, min_tokens, id_col, text_col)
     )
 
-    # 5. exact dedup on the normalized text: keep the lowest id via a
-    # map-side-combinable min-agg + AQE-skew-splittable join — NOT a
-    # row_number window, which would funnel every copy of a mega-
-    # duplicated document onto one reducer (same argument as
-    # dedup.dedup_repeated_spans' canonical selection)
-    key = F.md5(F.col(text_col))
-    winners = (
-        cur.select(F.col(id_col), key.alias("__k"))
-        .groupBy("__k")
-        .agg(F.min(id_col).alias("__winner"))
-    )
-    cur = record(
-        "exact_dedup",
-        cur.withColumn("__k", key)
-        .join(winners, "__k")
-        .where(F.col(id_col) == F.col("__winner"))
-        .drop("__k", "__winner"),
-    )
+    # 5. exact dedup on the normalized text (lowest id wins)
+    cur = record("exact_dedup", _exact_dedup(cur, id_col, text_col))
 
     # 6. MinHash near-dedup (keep one representative per cluster)
     cur = record(
@@ -273,67 +301,22 @@ def curate_increment(
     that are a small fraction of the corpus (one md5 row per doc; one
     row per (doc, band)); the increment — typically orders of magnitude
     smaller than history — is the only data in flight."""
-    from .classify import _norm_tokens
-    from .dedup import (
-        band_keys,
-        dedup_repeated_spans,
-        minhash_profiles_arrow,
-        near_dedup_corpus,
-    )
-    from .text import normalize_text, normalize_unicode, scrub_pii
-
     from pyspark import StorageLevel
 
-    report = CurationReport()
-    prev: list[DataFrame] = []
+    from .dedup import band_keys, minhash_profiles_arrow, near_dedup_corpus
 
-    def record(stage: str, d: DataFrame) -> DataFrame:
-        d = d.persist(StorageLevel.MEMORY_AND_DISK)
-        report.stages[stage] = d.count()
-        if prev:
-            prev.pop().unpersist()
-        prev.append(d)
-        return d
+    report = CurationReport()
+    record = _recorder(report)
 
     cur = record("input", df)
+    cur = record("normalized", _normalize(cur, text_col))
     cur = record(
-        "normalized",
-        cur.withColumn(text_col, normalize_unicode(text_col))
-        .withColumn(text_col, scrub_pii(text_col))
-        .withColumn(text_col, normalize_text(text_col)),
-    )
-    n_toks = F.size(_norm_tokens(text_col))
-    punct = (
-        F.length(text_col)
-        - F.length(F.regexp_replace(text_col, "[^a-z0-9 ]", ""))
-    ).cast("double") / F.greatest(F.length(text_col), F.lit(1))
-    cur = record(
-        "rule_gate",
-        cur.where(
-            F.col(text_col).isNotNull()
-            & (n_toks >= min_tokens)
-            & (punct <= max_punct_ratio)
-        ),
+        "rule_gate", _rule_gate(cur, text_col, min_tokens, max_punct_ratio)
     )
     cur = record(
-        "span_dedup",
-        dedup_repeated_spans(
-            cur, n=span_n, id_col=id_col, text_col=text_col
-        ).where(F.size(_norm_tokens(text_col)) >= min_tokens),
+        "span_dedup", _span_dedup(cur, span_n, min_tokens, id_col, text_col)
     )
-    key = F.md5(F.col(text_col))
-    winners = (
-        cur.select(F.col(id_col), key.alias("__k"))
-        .groupBy("__k")
-        .agg(F.min(id_col).alias("__winner"))
-    )
-    cur = record(
-        "exact_dedup",
-        cur.withColumn("__k", key)
-        .join(winners, "__k")
-        .where(F.col(id_col) == F.col("__winner"))
-        .drop("__k", "__winner"),
-    )
+    cur = record("exact_dedup", _exact_dedup(cur, id_col, text_col))
     if exact_store is not None:
         cur = record(
             "exact_vs_store",

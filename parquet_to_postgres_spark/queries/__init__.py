@@ -1,9 +1,13 @@
-"""Declared-query registry.
+"""Query registry: every oracle-checked query, declared or not.
 
-Every operator from SURVEY.md §2 is declared here exactly once as a
-``QuerySpec``: a Spark DataFrame builder plus (where SQL-expressible) a
-DuckDB oracle SQL twin.  ``__spark_entry__.py`` re-exports this registry
-to the driver; tests iterate it.
+Every operator from SURVEY.md §2 is registered here as a ``QuerySpec``:
+a Spark DataFrame builder plus (where SQL-expressible) a DuckDB oracle
+SQL twin.  A query is *declared* iff it is listed in ``DRIVER_ORDER``;
+``load_all()`` returns exactly the declared queries, and
+``__spark_entry__.py``, ``bench.py`` and the tools see only those.  The
+few registered-but-undeclared queries are each the only path to a
+library operator no declared query reaches; the parametrized oracle
+test iterates the whole ``REGISTRY``, so they keep the same gate.
 
 Alias discipline: the driver's correctness gate sorts columns by name and
 hashes values, so every computed column is aliased identically in the
@@ -46,7 +50,7 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 # Declared order for the driver: cheapest queries first, the expensive
 # tails (streaming harness, MinHash, the mapInPandas byte decode) last —
 # if the correctness gate ever runs under a time budget, a cutoff costs
-# the least coverage.  The registry is exactly 50 queries because the
+# the least coverage.  Exactly 50 queries are declared because the
 # driver's gate observes at most 50; every SURVEY.md §2B id keeps at
 # least one declared query (several same-grain demos share one).
 DRIVER_ORDER: tuple[str, ...] = (
@@ -108,7 +112,7 @@ DRIVER_ORDER: tuple[str, ...] = (
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: fills REGISTRY); returns
-    the registry in DRIVER_ORDER (unlisted names, if any, append last)."""
+    the declared queries, in DRIVER_ORDER."""
     from . import (  # noqa: F401
         aggregates_q,
         analytics_q,
@@ -123,9 +127,7 @@ def load_all() -> dict[str, QuerySpec]:
         windows_q,
     )
 
-    ordered = {n: REGISTRY[n] for n in DRIVER_ORDER if n in REGISTRY}
-    ordered.update({n: s for n, s in REGISTRY.items() if n not in ordered})
-    return ordered
+    return {n: REGISTRY[n] for n in DRIVER_ORDER}
 
 
 def queries() -> dict[str, Builder]:

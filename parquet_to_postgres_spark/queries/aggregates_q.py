@@ -152,98 +152,25 @@ def collect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXACT_STATS_ORACLE = f"""
-    WITH s AS (
-      SELECT l_returnflag,
-             COUNT(*) AS n,
-             CAST(SUM({sql_dec("l_quantity")}) AS DOUBLE) AS sq,
-             CAST(SUM({sql_dec("l_quantity")} * {sql_dec("l_quantity")}) AS DOUBLE) AS sqq,
-             CAST(SUM({sql_dec("l_discount")}) AS DOUBLE) AS sd,
-             CAST(SUM({sql_dec("l_discount")} * {sql_dec("l_discount")}) AS DOUBLE) AS sdd,
-             CAST(SUM({sql_dec("l_quantity")} * {sql_dec("l_discount")}) AS DOUBLE) AS sqd,
-             median(l_quantity) AS med,
-             min(l_quantity) AS mn,
-             max(l_quantity) AS mx
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag,
-           n AS n_items,
-           sq / n AS mean_qty,
-           sqrt((sqq - sq * sq / n) / (n - 1)) AS stddev_qty,
-           (n * sqd - sq * sd) / sqrt((n * sqq - sq * sq) * (n * sdd - sd * sd)) AS corr_qty_disc,
-           med AS median_qty,
-           mn AS min_qty,
-           mx AS max_qty
-    FROM s
-    """
-
-
-def exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7: exact mean/stddev/correlation/median/min/max per group.
-
-    Native ``stddev_samp``/``corr`` accumulate doubles in partition order
-    (nondeterministic last-ulp); computing the moments as exact decimal
-    sums and combining them with identical double arithmetic gives
-    bit-identical results in Spark and DuckDB.  Median is exact (both
-    engines interpolate the middle pair).  Single shuffle, map-side
-    partial sums — same cost as the native versions at 100 TB.
-
-    Rotated out of the 50-slot registry in round 12; A7 stays declared
-    via approx_sketches and profile_drift_report.  Full oracle coverage
-    continues in tests/test_registry.py."""
-    t = Catalog(spark, sf_dir)
-    q, d = dec("l_quantity"), dec("l_discount")
-    s = t.lineitem.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).cast("double").alias("sq"),
-        F.sum(q * q).cast("double").alias("sqq"),
-        F.sum(d).cast("double").alias("sd"),
-        F.sum(d * d).cast("double").alias("sdd"),
-        F.sum(q * d).cast("double").alias("sqd"),
-        F.median("l_quantity").alias("med"),
-        F.min("l_quantity").alias("mn"),
-        F.max("l_quantity").alias("mx"),
-    )
-    n, sq, sqq, sd, sdd, sqd = (
-        F.col("n"),
-        F.col("sq"),
-        F.col("sqq"),
-        F.col("sd"),
-        F.col("sdd"),
-        F.col("sqd"),
-    )
-    return s.select(
-        "l_returnflag",
-        n.alias("n_items"),
-        (sq / n).alias("mean_qty"),
-        F.sqrt((sqq - sq * sq / n) / (n - 1)).alias("stddev_qty"),
-        (
-            (n * sqd - sq * sd)
-            / F.sqrt((n * sqq - sq * sq) * (n * sdd - sd * sd))
-        ).alias("corr_qty_disc"),
-        F.col("med").alias("median_qty"),
-        F.col("mn").alias("min_qty"),
-        F.col("mx").alias("max_qty"),
-    )
-
-
-SALTED_USER_TOTALS_ORACLE = """
+@register(
+    "salted_user_totals",
+    oracle="""
     SELECT user_id, COUNT(*) AS n_events,
            CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
     FROM events GROUP BY user_id
-    """
-
-
+    """,
+)
 def salted_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe salted two-stage aggregation over the hot-key events
     table (few users, many events — exactly the shape that pins one
     reducer at 100 TB).  Identical results to a plain GROUP BY; the
     salt only reshapes the shuffle.
 
-    Rotated out of the 50-slot registry in round 14 (slot given to
-    attribution_report, the same events/user grain); A1 stays declared
-    via pricing_summary, and the skew-salting machinery keeps its full
-    oracle coverage in tests/test_registry.py."""
+    Registered but not declared (not in DRIVER_ORDER) since round 14,
+    when its slot went to attribution_report, the same events/user
+    grain; A1 stays declared via pricing_summary.  It is the only query
+    that reaches operators.salted_agg, so the registry's parametrized
+    oracle test keeps the salting machinery checked."""
     from ..operators import salted_agg
 
     t = Catalog(spark, sf_dir)
@@ -299,51 +226,4 @@ def pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("2-HIGH_n"), F.lit(0)).alias("high"),
         F.coalesce(F.col("3-MEDIUM_n"), F.lit(0)).alias("medium"),
         F.col("1-URGENT_total").alias("urgent_total"),
-    )
-
-
-DAILY_COUNTS_GAPFILL_ORACLE = """
-    WITH bounds AS (
-      SELECT date_trunc('day', MIN(ts)) AS lo, date_trunc('day', MAX(ts)) AS hi
-      FROM events
-    ),
-    spine AS (
-      SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS day FROM bounds
-    ),
-    daily AS (
-      SELECT date_trunc('day', ts) AS day, COUNT(*) AS n
-      FROM events GROUP BY 1
-    )
-    SELECT s.day, COALESCE(d.n, 0) AS n_events
-    FROM spine s LEFT JOIN daily d USING (day)
-    """
-
-
-def daily_counts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series gap fill: a generated date spine (sequence + explode)
-    left-joined to daily counts, missing days zero-filled — the
-    hypertable-rollup shape.  The spine generates from ONE aggregated
-    row, so at 100 TB it costs one min/max pass plus a broadcast join.
-
-    Rotated out of the 50-slot registry in round 13 (slot given to the
-    funnel/retention/cube/ivfpq promotion); F2 stays declared via
-    scalar_functions.  Full oracle coverage continues in
-    tests/test_registry.py."""
-    t = Catalog(spark, sf_dir)
-    daily = t.events.groupBy(
-        F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    spine = (
-        t.events.agg(
-            F.date_trunc("day", F.min("ts")).alias("lo"),
-            F.date_trunc("day", F.max("ts")).alias("hi"),
-        )
-        .select(
-            F.explode(
-                F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))
-            ).alias("day")
-        )
-    )
-    return spine.join(daily, "day", "left").select(
-        "day", F.coalesce("n", F.lit(0)).alias("n_events")
     )

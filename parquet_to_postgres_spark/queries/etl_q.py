@@ -2,7 +2,7 @@
 driven end-to-end and hash-checked.
 
 Each round-trip builder materializes a table through a non-parquet format
-(or through the full etl() pipeline) into a scratch dir, reads it back
+or a live database (Derby over JDBC, Postgres over COPY), reads it back
 with an explicit schema, and aggregates.  The oracle aggregates the
 ORIGINAL parquet view — so any corruption introduced by the format
 round-trip (type collapse, precision loss, null mangling: all bugs the
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..concurrency import overlap
-from ..etl import JdbcSink, ParquetSink, etl, read_source, schema_to_pg_ddl
+from ..etl import JdbcSink, read_source
 from ..tables import Catalog
 from . import register
 from ._util import sql_dsum
@@ -196,40 +196,6 @@ def multi_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------- E1–E3 ----
-
-
-ETL_ROUNDTRIP_AGG_ORACLE = f"""
-    SELECT l_linestatus,
-           COUNT(*) AS n_items,
-           {sql_dsum("l_extendedprice", "total_price")}
-    FROM lineitem GROUP BY l_linestatus
-    """
-
-
-def etl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1–E3: the whole reference program (read → DDL → batched sink,
-    main.rs:49-102) through etl() with the parquet sink, then an
-    aggregate over the SINK output.  DDL generation runs on the real
-    lineitem schema; a malformed sink write breaks the hash-match.
-
-    Rotated out of the 50-slot registry in round 13 (slot given to the
-    funnel/retention/cube/ivfpq promotion): E1–E3 stay declared via
-    pricing_summary + etl_jdbc_roundtrip + etl_pg_roundtrip, which
-    exercise the same scan→DDL→sink path against LIVE engines.  Full
-    oracle coverage continues in tests/test_registry.py."""
-    path = _scratch("etl/lineitem_sink")
-    ddl = etl(spark, f"{sf_dir}/lineitem.parquet", ParquetSink(path))
-    assert ddl.startswith("CREATE TABLE IF NOT EXISTS")
-    back = spark.read.parquet(path)
-    return back.groupBy("l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-        .cast("double")
-        .alias("total_price"),
-    )
-
-
 # ------------------------------------------------------------------ E3 ----
 
 # Embedded Derby ships on Spark's own classpath (it backs the Hive
@@ -378,7 +344,7 @@ def etl_pg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton (started once, reused across bench repeats and gate
     runs — the reference connects to an always-on server, main.rs:60).
     Where no postgres toolchain exists the same columns round-trip
-    through :class:`ParquetSink` instead, so the declared result is
+    through a plain Parquet write instead, so the declared result is
     engine-independent and the gate stays green either way."""
     t = Catalog(spark, sf_dir)
     src = t.lineitem.select(

@@ -2,8 +2,9 @@
 
 ``scalar_functions`` carries the per-row families F1/F2/F3/F7 in one
 declared query (the driver's correctness gate observes at most 50
-queries, so same-grain families share one); F4/F5/F6 keep their own
-queries.  Dialect edges handled here:
+queries, so same-grain families share one); F5/F6 share
+``semi_structured_functions``, and F4 (higher-order arrays) is declared
+via ``embedding_profile`` (llm_q).  Dialect edges handled here:
 
 - ``floor``/``ceil`` return BIGINT in Spark but DOUBLE in DuckDB → cast.
 - ``round`` on raw doubles can straddle ties differently → round on the
@@ -123,62 +124,6 @@ def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("string").cast("bigint").alias("key_back"),
         F.col("o_custkey").cast("double").alias("cust_dbl"),
         (F.col("o_totalprice") > 150000).cast("int").alias("big_flag"),
-    )
-
-
-ARRAY_FUNCTIONS_ORACLE = """
-    SELECT vec_id,
-           len(embedding) AS dim,
-           CAST(list_reduce(list_transform(embedding[1:4], x -> CAST(x AS DOUBLE)),
-                            (a, b) -> a + b) AS DOUBLE) AS head4_sum,
-           CAST(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                            (a, b) -> a + b) AS DOUBLE) AS vec_sum,
-           len(list_filter(embedding, x -> x > 0)) AS n_positive,
-           CAST(list_sort(embedding[1:4])[1] AS DOUBLE) AS head4_min,
-           len(list_distinct([label % 3, label % 2, 0])) AS n_distinct_small
-    FROM embeddings
-    """
-
-
-def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F4: higher-order array family over embeddings.
-
-    Rotated OUT of the 50-slot declared registry in round 5 (the slot
-    funds ``profile_drift_report``; F4 keeps its green row via
-    ``embedding_profile``, and every higher-order primitive here also
-    runs inside the declared cosine/ANN family via similarity.dot).
-    Still oracle-checked by tests/test_registry.py::test_rotated_out_
-    array_functions_still_matches_oracle against ARRAY_FUNCTIONS_ORACLE.
-
-    ``aggregate`` starts from 0.0 and folds left; DuckDB ``list_reduce``
-    starts from the first element — IEEE ``0.0 + x == x``, so the folds
-    agree bit-for-bit.  Collection intermediates (slice, array_sort) are
-    reduced to scalar outputs (sum / min) because the correctness gate
-    hashes cell values and cannot digest array cells; float→double casts
-    are exact, so the scalars remain bit-checkable."""
-    t = Catalog(spark, sf_dir)
-    return t.embeddings.select(
-        "vec_id",
-        F.size("embedding").cast("long").alias("dim"),
-        F.aggregate(
-            F.transform(F.slice("embedding", 1, 4), lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("head4_sum"),
-        F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("vec_sum"),
-        F.size(F.filter("embedding", lambda x: x > 0)).cast("long").alias("n_positive"),
-        F.element_at(F.array_sort(F.slice("embedding", 1, 4)), 1)
-        .cast("double")
-        .alias("head4_min"),
-        F.size(
-            F.array_distinct(
-                F.array(F.col("label") % 3, F.col("label") % 2, F.lit(0))
-            )
-        ).cast("long").alias("n_distinct_small"),
     )
 
 

@@ -281,11 +281,9 @@ def _simhash_oracle(n_bits: int = 48, max_hamming: int = 3) -> str:
     """
 
 
-# Rotated out of the 50-slot registry in round 7 (its slot went to
-# etl_pg_roundtrip — the reference's actual target engine on the hash
-# gate); L2 stays declared via minhash_near_dup / near_dedup_corpus,
-# and this query keeps full oracle coverage in tests/test_registry.py.
-TEXTSIM_PAIRS_ORACLE = f"""
+@register(
+    "textsim_pairs",
+    oracle=f"""
     SELECT 'simhash' AS method, id_a, id_b, CAST(hamming AS DOUBLE) AS score
     FROM ({_simhash_oracle()})
     UNION ALL
@@ -301,9 +299,8 @@ TEXTSIM_PAIRS_ORACLE = f"""
                / len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard3
       FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
     )
-    """
-
-
+    """,
+)
 def textsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 (SimHash + n-gram Jaccard): two text-similarity pair families,
     method-tagged in one declared query.
@@ -315,7 +312,12 @@ def textsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``ngram3``: character-3-gram Jaccard on consecutive doc pairs
     (linear pairing demonstrates the shingle metric without O(n²)
-    pairs).  score = Jaccard."""
+    pairs).  score = Jaccard.
+
+    Registered but not declared (not in DRIVER_ORDER) since round 7,
+    when its slot went to etl_pg_roundtrip; L2 stays declared via
+    minhash_near_dup / near_dedup_corpus.  It is the only query that
+    reaches dedup.simhash_pairs."""
     t = Catalog(spark, sf_dir)
     sim = D.simhash_pairs(t.documents).select(
         F.lit("simhash").alias("method"),
@@ -343,7 +345,9 @@ def textsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------- L3/L4 ----
 
 
-COSINE_TOPK_ORACLE = f"""
+@register(
+    "cosine_topk",
+    oracle=f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
     c AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings WHERE vec_id >= 5),
     scored AS (
@@ -355,20 +359,19 @@ COSINE_TOPK_ORACLE = f"""
                                    ORDER BY score DESC, neighbor_id) AS rnk
       FROM scored
     ) WHERE rnk <= 10
-    """
-
-
+    """,
+)
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3: cosine top-k via the two-stage distributed plan (partition-
     local top-k then global merge — identical results to brute force,
     k·P rows through the final shuffle instead of the full corpus).
 
-    Rotated out of the 50-slot registry in round 13 (slot given to the
-    funnel/retention/cube/ivfpq promotion); L3 stays declared via
-    ann_topk + embedding_profile + ivfpq_index_probe, and the two-stage
+    Registered but not declared (not in DRIVER_ORDER) since round 13,
+    when its slot went to the funnel/retention/cube/ivfpq promotion; L3
+    stays declared via ann_topk + embedding_profile + ivfpq_index_probe.
+    It is the only query that reaches similarity.two_stage_topk, whose
     plan shape is pinned in tests/test_plans.py
-    (test_cosine_two_stage_topk_plan_shape).  Full oracle coverage
-    continues in tests/test_registry.py."""
+    (test_cosine_two_stage_topk_plan_shape)."""
     t = Catalog(spark, sf_dir)
     emb = t.embeddings
     out = S.two_stage_topk(
@@ -379,23 +382,24 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COSINE_THRESHOLD_JOIN_ORACLE = f"""
+@register(
+    "cosine_threshold_join",
+    oracle=f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            {S.sql_cosine("a.embedding", "b.embedding")} AS score
     FROM embeddings a JOIN embeddings b
       ON a.label = b.label AND a.vec_id < b.vec_id
     WHERE {S.sql_cosine("a.embedding", "b.embedding")} >= 0.2
-    """
-
-
+    """,
+)
 def cosine_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4: pairwise similarity join with threshold, blocked by label so
     the pair space is per-group, not corpus².
 
-    Rotated out of the 50-slot registry in round 14 (slot given to
-    sketch_cube_slice); L4 stays declared via ann_topk and
-    ivfpq_index_probe, and this query keeps full oracle coverage in
-    tests/test_registry.py."""
+    Registered but not declared (not in DRIVER_ORDER) since round 14,
+    when its slot went to sketch_cube_slice; L4 stays declared via
+    ann_topk and ivfpq_index_probe.  It is the only query that reaches
+    similarity.cosine_self_join."""
     t = Catalog(spark, sf_dir)
     return S.cosine_self_join(t.embeddings, threshold=0.2, partition_col="label")
 
@@ -440,37 +444,6 @@ def _lsh_oracle(k: int = 10, n_bits: int = 4, n_probes: int = 5) -> str:
 
 
 # ---------------------------------------------------------------- L5 ----
-
-
-# Rotated out of the 50-slot registry in round 7 (its slot went to
-# join_interval_overlap); L5 stays declared via tf_idf_top and
-# text_metrics, and this query keeps full oracle coverage in
-# tests/test_registry.py exactly like array_functions before it.
-TERM_FREQUENCY_TOP_ORACLE = """
-    SELECT lang, token, cnt, rnk FROM (
-      SELECT lang, token, cnt,
-             ROW_NUMBER() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
-      FROM (
-        SELECT lang, token, COUNT(*) AS cnt
-        FROM (SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents)
-        GROUP BY lang, token
-      )
-    ) WHERE rnk <= 5
-    """
-
-
-def term_frequency_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5: term frequencies + top-5 terms per language."""
-    t = Catalog(spark, sf_dir)
-    tf = (
-        t.documents.select("lang", F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("lang", "token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("token"))
-    return tf.withColumn("rnk", F.row_number().over(w).cast("long")).where(
-        F.col("rnk") <= 5
-    )
 
 
 @register(
@@ -600,30 +573,6 @@ def embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc.unionByName(cent)
 
 
-MULTIMODAL_STUB_DECODE_ORACLE = """
-    SELECT doc_id AS media_id,
-           CAST(length(text) AS BIGINT) AS n_bytes,
-           ascii(text[1:1]) AS first_byte,
-           list_reduce(list_transform(range(1, length(text) + 1),
-                                      i -> CAST(ascii(text[i:i]) AS BIGINT)),
-                       (a, b) -> a + b) % 1000000007 AS byte_checksum
-    FROM documents
-    """
-
-
-def multimodal_stub_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L7: binary-column plumbing — documents as opaque bytes through the
-    mapInPandas (stub) decoder.  The byte-derived metadata has an exact
-    SQL twin, so the Arrow-batch plumbing itself is hash-checked.
-
-    Rotated out of the registry in round 10 (slot given to
-    :func:`multimodal_real_decode` — VERDICT r9 item 2: the driver gate
-    must witness the NATIVE decoder, not the stub); full oracle coverage
-    continues in tests/test_registry.py."""
-    t = Catalog(spark, sf_dir)
-    return M.decode_media(M.documents_as_media(t.documents))
-
-
 def _real_decode_oracle() -> str:
     """Literal-VALUES oracle for the frozen media fixtures: the decode
     is deterministic, so the expected stats are pinned constants (see
@@ -728,103 +677,6 @@ def udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- training-data ops ----
-
-
-STRATIFIED_SAMPLE_ORACLE = """
-    SELECT lang, COUNT(*) AS n_sampled,
-           CAST(SUM(n_chars) AS BIGINT) AS sampled_chars
-    FROM documents
-    WHERE ((doc_id % 2147483648) * 2654435761 % 4294967296) % 100 < 10
-    GROUP BY lang
-    """
-
-
-def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~10% sample via Knuth multiplicative hashing of the
-    stable doc id — NOT an RNG sample.  Reproducible across runs, engines
-    and cluster sizes (same rows every time), which is what a training-
-    data pipeline needs for auditable splits; df.sample() is none of
-    those.  Per-language counts verify the strata.
-
-    doc_id is reduced mod 2^31 BEFORE the multiply: 2^31·2654435761 <
-    2^63, so the product never wraps int64 — a raw doc_id above ~3.5e9
-    would silently wrap in Spark (non-ANSI) while DuckDB errors, breaking
-    cross-engine reproducibility exactly where a 100 TB corpus lives.
-
-    Rotated out of the 50-slot registry in round 12 (slot given to the
-    A-ES weighted_sample); L6 stays declared via text_metrics and
-    corpus_preprocess.  Full oracle coverage continues in
-    tests/test_registry.py."""
-    t = Catalog(spark, sf_dir)
-    bucket = (
-        F.pmod(F.col("doc_id"), F.lit(2147483648)) * F.lit(2654435761)
-    ) % F.lit(4294967296) % 100
-    return (
-        t.documents.where(bucket < 10)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.sum("n_chars").alias("sampled_chars"),
-        )
-    )
-
-
-TRAINING_DATA_PREP_ORACLE = f"""
-    WITH filtered AS (
-      SELECT doc_id, source, text, n_chars
-      FROM documents
-      WHERE lang = 'en'
-        AND len(string_split(text, ' ')) >= 10
-        AND CAST(length(text) - length(regexp_replace(text, '[^a-z ]', '', 'g')) AS DOUBLE)
-              / length(text) < 0.3
-    ),
-    deduped AS (
-      SELECT * FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        FROM filtered
-      ) WHERE rn = 1
-    )
-    SELECT source,
-           COUNT(*) AS n_docs,
-           CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM deduped GROUP BY source
-    """
-
-
-def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed training-data pipeline: language filter → quality
-    gate (min tokens, max punctuation ratio) → exact dedup keeping the
-    lowest doc_id → per-source corpus stats.
-
-    One linear pass plus one dedup shuffle plus one agg shuffle — the
-    shape that survives 100 TB: every predicate is scan-level, dedup
-    shuffles only the filtered survivors, stats are map-side partial.
-
-    Rotated out of the declared registry in round 7 (its L1/L5/L6 axes
-    stay declared via corpus_preprocess / near_dedup_corpus /
-    text_metrics / tf_idf_top / stratified_sample); oracle coverage
-    continues in tests/test_registry.py against
-    TRAINING_DATA_PREP_ORACLE."""
-    t = Catalog(spark, sf_dir)
-    n_tokens = F.size(F.split(F.col("text"), " "))
-    punct_ratio = (
-        F.length("text") - F.length(F.regexp_replace("text", "[^a-z ]", ""))
-    ).cast("double") / F.length("text")
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
-    return (
-        t.documents.where(F.col("lang") == "en")
-        .where(n_tokens >= 10)
-        .where(punct_ratio < 0.3)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(n_tokens.cast("bigint")).alias("total_tokens"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-    )
 
 
 _SPAN_DEDUP_N = 4

@@ -1,7 +1,8 @@
 """Pipeline-operator queries: the round-2 library operators a real
 training-data / warehouse user hits constantly — sessionization, SCD2
-history, token-budget packing, TF-IDF, end-to-end near-dedup — promoted
-to declared queries with exact DuckDB oracles.
+history, token-budget packing, TF-IDF, end-to-end near-dedup — each a
+registered query with an exact DuckDB oracle (sessionization and TF-IDF
+are registered but not declared: they are not in DRIVER_ORDER).
 
 Each builder drives the LIBRARY operator (operators.py / etl.py /
 llm/text.py / llm/dedup.py), not a reimplementation, so the oracle row
@@ -24,7 +25,9 @@ from .llm_q import _minhash_oracle
 # ------------------------------------------------------------ sessionize ----
 
 
-SESSIONIZE_EVENTS_ORACLE = """
+@register(
+    "sessionize_events",
+    oracle="""
     WITH o AS (
       SELECT user_id, ts,
              CASE WHEN LAG(ts) OVER w IS NULL
@@ -42,17 +45,17 @@ SESSIONIZE_EVENTS_ORACLE = """
            MIN(ts) AS sess_start, MAX(ts) AS sess_last,
            COUNT(*) AS n_events
     FROM s GROUP BY user_id, session_id
-    """
-
-
+    """,
+)
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (operators.sessionize): 30-minute-gap
     sessions per user, aggregated to one row per session.
 
-    Rotated out of the 50-slot registry in round 13 (slot given to the
-    funnel/retention/cube/ivfpq promotion); T3 stays declared via
-    stream_session_windows, the streaming twin with the same boundary
-    rule.  Full oracle coverage continues in tests/test_registry.py.
+    Registered but not declared (not in DRIVER_ORDER) since round 13,
+    when its slot went to the funnel/retention/cube/ivfpq promotion; T3
+    stays declared via stream_session_windows, the streaming twin with
+    the same boundary rule.  It is the only query that reaches
+    operators.sessionize.
 
     The operator is two stacked windows over the SAME key partitioning
     (one shuffle, parallel across keys, no global window); gaps are
@@ -170,7 +173,9 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------------------- TF-IDF ----
 
 
-TF_IDF_TOP_ORACLE = """
+@register(
+    "tf_idf_top",
+    oracle="""
     WITH tc AS (
       SELECT doc_id, token AS term, COUNT(*) AS n_term
       FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
@@ -198,9 +203,8 @@ TF_IDF_TOP_ORACLE = """
                                    ORDER BY tfidf DESC, term) AS rnk
       FROM scored
     ) WHERE rnk <= 3
-    """
-
-
+    """,
+)
 def tf_idf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top-3 terms per document (llm/text.tf_idf): smoothed
     sklearn-style ``tf·(ln((N+1)/(df+1))+1)``.
@@ -213,9 +217,9 @@ def tf_idf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     may disagree in the last ulp; everything else (tf, counts, rank)
     is exact.
 
-    Rotated out of the 50-slot registry in round 12; L5 stays declared
-    via text_metrics and corpus_preprocess.  Full oracle coverage
-    continues in tests/test_registry.py."""
+    Registered but not declared (not in DRIVER_ORDER) since round 12;
+    L5 stays declared via text_metrics and corpus_preprocess.  It is the
+    only query that reaches text.tf_idf."""
     t = Catalog(spark, sf_dir)
     scored = X.tf_idf(t.documents, top_k=None)
     from pyspark.sql import Window

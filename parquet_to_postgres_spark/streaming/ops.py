@@ -82,7 +82,8 @@ def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
     the previous value is restored afterwards, also when the query fails
     to start.  Harness runs on one session are therefore sequential: two
     overlapped runs would each save the other's 8 and one could leave it
-    set.
+    set.  A query that fails while running also drops its memory-sink
+    view before the error propagates.
 
     LIFETIME CONTRACT (driver ADVICE r8): the returned frame is backed
     by ``localCheckpoint`` blocks and is NOT recomputable — its
@@ -96,10 +97,10 @@ def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
     (bench) or the same test before any release, which is why the
     fast in-memory copy is the right default here."""
     spark = result.sparkSession
+    name = f"stream_sink_{next(_SINK_IDS)}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        name = f"stream_sink_{next(_SINK_IDS)}"
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -108,6 +109,12 @@ def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+    except BaseException:
+        # start() registers the sink's view; only the success path below
+        # reaches the drop, so a query that fails mid-run drops it here
+        # (a no-op when start() itself failed before registering it)
+        spark.catalog.dropTempView(name)
+        raise
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     # Copy the sink's rows out via localCheckpoint and DROP the memory

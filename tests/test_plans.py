@@ -11,12 +11,13 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
-from parquet_to_postgres_spark.queries import load_all
+from parquet_to_postgres_spark.queries import REGISTRY, load_all
 
 from .conftest import SF_SMOKE
 
-SPECS = load_all()
+load_all()  # fills REGISTRY: declared and undeclared queries alike
 
 
 def plan(df, mode: str = "formatted") -> str:
@@ -27,7 +28,7 @@ def plan(df, mode: str = "formatted") -> str:
 
 
 def build(name: str, spark):
-    return SPECS[name].builder(spark, SF_SMOKE)
+    return REGISTRY[name].builder(spark, SF_SMOKE)
 
 
 def test_pricing_summary_pushdown_and_pruning(spark):
@@ -84,14 +85,14 @@ def test_no_python_in_jvm_hot_paths(spark):
 
 
 def test_projection_prunes_scan_schema(spark):
-    # rotated out of the registry in r7 but still the cleanest pruning
-    # probe: two columns used out of five.
-    from parquet_to_postgres_spark.queries.llm_q import term_frequency_top
-
-    p = plan(term_frequency_top(spark, SF_SMOKE))
-    # documents has (doc_id, text, lang, source, n_chars); only two used.
-    assert "n_chars" not in p
-    assert "source" not in p
+    # documents has (doc_id, text, lang, source, n_chars); text_metrics
+    # reads three.  Pin the scan's ReadSchema, not the whole plan: the
+    # query emits n_chars_calc, which contains "n_chars".
+    p = plan(build("text_metrics", spark))
+    schemas = re.findall(
+        r"Location: \S+ \[\S*/documents\.parquet\]\s*ReadSchema: (\S+)", p
+    )
+    assert schemas == ["struct<doc_id:bigint,text:string,lang:string>"], p
 
 
 def test_interval_overlap_join_is_banded_equi(spark):
@@ -149,10 +150,7 @@ def test_minhash_profiles_arrow_zero_shuffle(spark):
 def test_simhash_pairs_blocked_not_allpairs(spark):
     # Candidate generation must be the (band, key) equi-join, never a
     # cartesian / broadcast-nested-loop all-pairs comparison.
-    # (rotated out of the registry in r7; the plan contract holds.)
-    from parquet_to_postgres_spark.queries.llm_q import textsim_pairs
-
-    p = plan(textsim_pairs(spark, SF_SMOKE))
+    p = plan(build("textsim_pairs", spark))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -232,9 +230,7 @@ def test_sessionize_single_keyed_shuffle(spark):
     # aggregate reuses it too (its grouping keys are a superset of the
     # partitioning key), so the whole query is scan → one Exchange →
     # windows → partial+final agg.
-    from parquet_to_postgres_spark.queries.pipeline_q import sessionize_events
-
-    p = plan(sessionize_events(spark, SF_SMOKE), mode="simple")
+    p = plan(build("sessionize_events", spark), mode="simple")
     assert "windowspecdefinition(user_id" in p
     assert p.count("Exchange") == 1, p
 
@@ -250,11 +246,7 @@ def test_pack_token_budget_is_distributed_cumsum(spark):
 def test_tf_idf_windows_are_doc_partitioned(spark):
     # doc-length and rank windows reuse the (doc_id, term) aggregate's
     # partitioning key; the corpus-count side must broadcast.
-    # (tf_idf_top rotated out of the registry in r12 — build the plan
-    # from the module function, the shape contract is unchanged)
-    from parquet_to_postgres_spark.queries.pipeline_q import tf_idf_top
-
-    p = plan(tf_idf_top(spark, SF_SMOKE))
+    p = plan(build("tf_idf_top", spark))
     assert "windowspecdefinition(doc_id" in p
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
@@ -862,12 +854,11 @@ def test_cdc_apply_state_partial_aggregates_before_exchange(spark):
 
 
 def test_cosine_two_stage_topk_plan_shape(spark):
-    """The two-stage top-k contract the rotated-out cosine_topk row
-    certified: stage 1 ranks within (query, input-partition) — a
-    WindowGroupLimit whose FIRST pass runs pre-shuffle — so only k rows
-    per (query, partition) reach the exchange; no global sort of the
-    full score stream appears (r13 review finding: this pin was claimed
-    but didn't exist)."""
+    """The two-stage top-k contract behind the cosine_topk query: stage
+    1 ranks within (query, input-partition) — a WindowGroupLimit whose
+    FIRST pass runs pre-shuffle — so only k rows per (query, partition)
+    reach the exchange; no global sort of the full score stream appears
+    (r13 review finding: this pin was claimed but didn't exist)."""
     from parquet_to_postgres_spark.llm import similarity as S
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")

@@ -207,29 +207,34 @@ def test_run_stream_to_df_row_cap_guard(spark, monkeypatch):
     misuse fail fast and loud instead of OOMing the driver (driver
     ADVICE r7).  Verified by shrinking the cap below the fixture size.
 
-    Neither the over-cap raise nor a query whose ``start()`` fails
-    (complete mode needs an aggregation) may leave the harness's
+    Neither the over-cap raise, nor a query whose ``start()`` fails
+    (complete mode needs an aggregation), nor one that fails while
+    running (``raise_error`` in a projection) may leave the harness's
     8-partition regime on the session or leak a memory-sink temp view.
     The session is set to 13 first: the fixture's own value is 8."""
-    from pyspark.errors import AnalysisException
+    from pyspark.errors import AnalysisException, StreamingQueryException
 
     stream = ops.events_stream(spark, SF_SMOKE).select("event_id", "user_id")
+    failing = stream.select(
+        "event_id", F.raise_error(F.lit("boom in batch")).alias("user_id")
+    )
     monkeypatch.setattr(ops, "MAX_MEMORY_SINK_ROWS", 10)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     try:
-        for mode, err, match in (
-            ("append", RuntimeError, "memory sink exceeded 10 rows"),
-            ("complete", AnalysisException, "STREAMING_OUTPUT_MODE"),
+        for frame, mode, err, match in (
+            (stream, "append", RuntimeError, "memory sink exceeded 10 rows"),
+            (stream, "complete", AnalysisException, "STREAMING_OUTPUT_MODE"),
+            (failing, "append", StreamingQueryException, "boom in batch"),
         ):
             with pytest.raises(err, match=match):
-                ops.run_stream_to_df(stream, mode)
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "13", mode
+                ops.run_stream_to_df(frame, mode)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "13", match
             assert not [
                 t.name
                 for t in spark.catalog.listTables()
                 if t.name.startswith("stream_sink_")
-            ], mode
+            ], match
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
