@@ -26,7 +26,7 @@ from ..tables import spread
 class AnnPrepHandle:
     """Release handle for the blocks :func:`ann_topk_all_methods` pins.
 
-    ``checkpoint=True`` materializes two prep subtrees via
+    That function materializes two prep subtrees via
     ``localCheckpoint``, whose blocks outlive the returned DataFrame in
     the block manager (``DataFrame.unpersist`` cannot reach them — see
     ``checkpoint.release_rdds``).  Short-lived sessions can ignore this;
@@ -84,19 +84,7 @@ def brute_force_topk(
         F.col(vec_col).alias("cvec"),
         norm(vec_col).alias("cnrm"),
     )
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        _drop_zero_norm(scored)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _score_rank(c.crossJoin(F.broadcast(q)), k)
 
 
 def two_stage_topk(
@@ -275,38 +263,12 @@ def ann_topk_lsh(
     bucket and the probed buckets are distinct.  Deterministic
     end-to-end; recall vs TRUE neighbors is measured in
     tests/test_ann_recall.py."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(vec_col).alias("cnrm"),
-        sign_lsh_bucket(vec_col, n_bits).alias("bucket"),
-    )
-    masks = F.array(*[F.lit(m) for m in lsh_probe_masks(n_bits, n_probes)])
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            norm(vec_col).alias("qnrm"),
-            sign_lsh_bucket(vec_col, n_bits).alias("__base"),
-            F.explode(masks).alias("__mask"),
-        )
-        .select(
-            "query_id",
-            "qvec",
-            "qnrm",
-            F.col("__base").bitwiseXOR(F.col("__mask")).alias("bucket"),
-        )
-    )
-    scored = c.join(F.broadcast(q), "bucket").select(
-        "query_id",
-        "neighbor_id",
-        _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return _drop_zero_norm(scored).withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    return _lsh_leg(
+        _ann_prep(corpus, id_col, vec_col, n_bits),
+        _ann_prep(queries, id_col, vec_col, n_bits),
+        k,
+        n_bits,
+        n_probes,
     )
 
 
@@ -385,34 +347,12 @@ def ann_topk_ivf(
     matches at most once — the neighbor lives in exactly one cell.
     Deterministic end-to-end; recall vs TRUE neighbors is measured in
     tests/test_ann_recall.py."""
-    cents = _centroid_arrays(corpus, by).select(
-        F.col(by).alias("cell"), "centroid"
-    )
-    # collected once for both assignments
-    cents = _local_frame(corpus.sparkSession, cents.collect(), cents.schema)
-
-    def assign(
-        df: DataFrame, id_alias: str, vec_alias: str, probes: int
-    ) -> DataFrame:
-        pre = df.select(
-            F.col(id_col).alias(id_alias), F.col(vec_col).alias(vec_alias)
-        )
-        return _nearest_cells(pre, cents, probes, vec_alias)
-
-    c = assign(corpus, "neighbor_id", "cvec", 1).withColumn("cnrm", norm("cvec"))
-    q = assign(queries, "query_id", "qvec", n_probes).withColumn(
-        "qnrm", norm("qvec")
-    )
-    scored = c.join(F.broadcast(q), "cell").select(
-        "query_id",
-        "neighbor_id",
-        _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return _drop_zero_norm(scored).withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    return _ivf_leg(
+        _ann_prep(corpus, id_col, vec_col, keep=(by,)),
+        _ann_prep(queries, id_col, vec_col),
+        k,
+        n_probes,
+        by,
     )
 
 
@@ -708,96 +648,27 @@ def ann_topk_quantized(
 
     Deterministic end-to-end: integer dots, total-order tie breaks
     (score desc, neighbor_id) in both stages."""
-    cq = quantize_embeddings(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            sign_lsh_bucket(vec_col, n_bits).alias("bucket"),
-        ),
-        "cvec",
-        "qc",
-    ).select(
-        "neighbor_id", "bucket", "qc", int_dot("qc", "qc").alias("css")
+    return _quant_leg(
+        _ann_prep(corpus, id_col, vec_col, n_bits),
+        _ann_prep(queries, id_col, vec_col, n_bits),
+        k,
+        n_bits,
+        n_probes,
+        rerank,
     )
-    masks = F.array(*[F.lit(m) for m in lsh_probe_masks(n_bits, n_probes)])
-    qq = (
-        quantize_embeddings(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qvec"),
-                sign_lsh_bucket(vec_col, n_bits).alias("__base"),
-            ),
-            "qvec",
-            "qv8",
-        )
-        .select(
-            "query_id",
-            "qv8",
-            int_dot("qv8", "qv8").alias("qss"),
-            F.explode(masks).alias("__mask"),
-            F.col("__base"),
-        )
-        .select(
-            "query_id",
-            "qv8",
-            "qss",
-            F.col("__base").bitwiseXOR(F.col("__mask")).alias("bucket"),
-        )
-    )
-    cand = cq.join(F.broadcast(qq), "bucket").select(
-        "query_id",
-        "neighbor_id",
-        quantized_cosine(
-            int_dot("qv8", "qc"), F.col("qss"), F.col("css")
-        ).alias("q_score"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("q_score").desc(), F.col("neighbor_id")
-    )
-    survivors = (
-        cand.withColumn("qrank", F.row_number().over(w1))
-        .where(F.col("qrank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    fullc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(vec_col).alias("cnrm"),
-    )
-    fullq = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(vec_col).alias("qnrm"),
-    )
-    rescored = (
-        fullc.join(F.broadcast(survivors), "neighbor_id")
-        .join(F.broadcast(fullq), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias(
-                "score"
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return _drop_zero_norm(rescored).withColumn(
-        "rank", F.row_number().over(w2)
-    ).where(F.col("rank") <= k)
 
 
 def _ann_prep(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    n_bits: int,
+    n_bits: int = 4,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Shared per-vector ANN prep: norm, sign-LSH bucket, int8
     quantization and its integer self-dot — every column at least one of
-    the three index families needs, computed in ONE corpus pass."""
+    the three index families needs, computed in ONE corpus pass.  Each
+    family's leg selects what it reads; Catalyst prunes the rest."""
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
@@ -807,6 +678,141 @@ def _ann_prep(
     )
     return quantize_embeddings(base, "vec", "q8").withColumn(
         "ss", int_dot("q8", "q8")
+    )
+
+
+def _probe_buckets(
+    qprep: DataFrame, n_bits: int, n_probes: int, **cols: str
+) -> DataFrame:
+    """The prepped queries exploded over the multi-probe masks: one row
+    per (query, probed bucket), the prep columns ``cols`` renamed
+    ``alias=column`` plus ``bucket`` = exact bucket XOR mask."""
+    masks = F.array(*[F.lit(m) for m in lsh_probe_masks(n_bits, n_probes)])
+    return qprep.select(
+        *[F.col(c).alias(a) for a, c in cols.items()],
+        F.col("bucket").alias("__base"),
+        F.explode(masks).alias("__mask"),
+    ).select(
+        *cols,
+        F.col("__base").bitwiseXOR(F.col("__mask")).alias("bucket"),
+    )
+
+
+def _score_rank(pairs: DataFrame, k: int) -> DataFrame:
+    """The float families' rank tail over (query, neighbor) candidate
+    pairs carrying ``qvec``/``qnrm``/``cvec``/``cnrm``: guarded cosine,
+    sentinel rows dropped, ``row_number`` per query by (score desc,
+    neighbor_id), rank ≤ k."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias("score"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return (
+        _drop_zero_norm(scored)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _lsh_leg(
+    cprep: DataFrame, qprep: DataFrame, k: int, n_bits: int, n_probes: int
+) -> DataFrame:
+    """Sign-LSH multi-probe top-k over :func:`_ann_prep` frames (or a
+    :func:`write_ann_index` scan, which has the prep's schema)."""
+    c = cprep.select(
+        F.col("id").alias("neighbor_id"),
+        F.col("vec").alias("cvec"),
+        F.col("nrm").alias("cnrm"),
+        "bucket",
+    )
+    q = _probe_buckets(
+        qprep, n_bits, n_probes, query_id="id", qvec="vec", qnrm="nrm"
+    )
+    return _score_rank(c.join(F.broadcast(q), "bucket"), k)
+
+
+def _ivf_leg(
+    cprep: DataFrame, qprep: DataFrame, k: int, n_probes: int, by: str
+) -> DataFrame:
+    """IVF top-k over :func:`_ann_prep` frames; ``cprep`` keeps the
+    ``by`` column the coarse quantizer is built from."""
+    cents = _centroid_arrays(cprep, by, "vec").select(
+        F.col(by).alias("cell"), "centroid"
+    )
+    # collected once for both assignments
+    cents = _local_frame(cprep.sparkSession, cents.collect(), cents.schema)
+
+    def assign(prep: DataFrame, id_alias: str, vec_alias: str, probes: int):
+        pre = prep.select(
+            F.col("id").alias(id_alias),
+            F.col("vec").alias(vec_alias),
+            F.col("nrm").alias("__nrm"),
+        )
+        return _nearest_cells(pre, cents, probes, vec_alias)
+
+    c = assign(cprep, "neighbor_id", "cvec", 1).withColumnRenamed(
+        "__nrm", "cnrm"
+    )
+    q = assign(qprep, "query_id", "qvec", n_probes).withColumnRenamed(
+        "__nrm", "qnrm"
+    )
+    return _score_rank(c.join(F.broadcast(q), "cell"), k)
+
+
+def _quant_leg(
+    cprep: DataFrame,
+    qprep: DataFrame,
+    k: int,
+    n_bits: int,
+    n_probes: int,
+    rerank: int,
+) -> DataFrame:
+    """int8-quantized prune + full-precision re-score over
+    :func:`_ann_prep` frames: LSH candidates ranked by the integer
+    cosine, the top ``k·rerank`` per query re-scored in float."""
+    cq = cprep.select(
+        F.col("id").alias("neighbor_id"),
+        "bucket",
+        F.col("q8").alias("qc"),
+        F.col("ss").alias("css"),
+    )
+    qq = _probe_buckets(
+        qprep, n_bits, n_probes, query_id="id", qv8="q8", qss="ss"
+    )
+    cand = cq.join(F.broadcast(qq), "bucket").select(
+        "query_id",
+        "neighbor_id",
+        quantized_cosine(
+            int_dot("qv8", "qc"), F.col("qss"), F.col("css")
+        ).alias("q_score"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("q_score").desc(), F.col("neighbor_id")
+    )
+    survivors = (
+        cand.withColumn("qrank", F.row_number().over(w))
+        .where(F.col("qrank") <= k * rerank)
+        .select("query_id", "neighbor_id")
+    )
+    fullc = cprep.select(
+        F.col("id").alias("neighbor_id"),
+        F.col("vec").alias("cvec"),
+        F.col("nrm").alias("cnrm"),
+    )
+    fullq = qprep.select(
+        F.col("id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("nrm").alias("qnrm"),
+    )
+    return _score_rank(
+        fullc.join(F.broadcast(survivors), "neighbor_id").join(
+            F.broadcast(fullq), "query_id"
+        ),
+        k,
     )
 
 
@@ -821,208 +827,69 @@ def ann_topk_all_methods(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     by: str = "label",
-    checkpoint: bool = True,
     handle_out: list | None = None,
 ) -> DataFrame:
     """All three ANN families (sign-LSH multi-probe, IVF, int8-quantized
     prune + re-score), method-tagged in one DataFrame — sharing ONE
     corpus-prep subtree instead of three.
 
-    Run standalone, each family re-derives its per-vector columns from
-    the raw scan (three corpus passes + three rounds of codegen over the
-    same expressions — the dominant cost of a cold ``ann_topk`` run, see
-    VERDICT r5).  Here :func:`_ann_prep` computes the union of what they
-    need (norm, bucket, int8 vector, integer self-dot) once per side;
-    ``checkpoint`` (default) eagerly materializes both preps via
+    Run standalone, each family derives its per-vector columns from its
+    own prep of the raw scan (three corpus passes + three rounds of
+    codegen over the same expressions — the dominant cost of a cold
+    ``ann_topk`` run).  Here :func:`_ann_prep` runs once
+    per side and both preps are eagerly materialized via
     :func:`..checkpoint.stable_checkpoint`, which also prevents the
     three concurrently launched broadcast subtrees from racing to
     recompute the prep (the :func:`~..queries.llm_q.minhash_near_dup`
     pattern), and upgrades to a reliable cluster-FS checkpoint when the
     session has a checkpoint dir.
 
-    Each family's candidate/score/rank pipeline below is
-    expression-identical to its standalone twin (:func:`ann_topk_lsh`,
-    :func:`ann_topk_ivf`, :func:`ann_topk_quantized`) — same fold
-    orders, same tie breaks — so results, and the SQL oracles replaying
-    them, are bit-for-bit unchanged (pinned by
-    tests/test_ann_recall.py's equivalence check).
+    The families are the same leg functions (:func:`_lsh_leg`,
+    :func:`_ivf_leg`, :func:`_quant_leg`) that :func:`ann_topk_lsh`,
+    :func:`ann_topk_ivf` and :func:`ann_topk_quantized` call, so results
+    — and the SQL oracles replaying them — match the standalone
+    operators bit-for-bit (pinned by tests/test_ann_recall.py).
 
     Long-lived sessions: pass ``handle_out=[]`` to receive an
     :class:`AnnPrepHandle`; call ``.release()`` when done with the
     result, or the two pinned prep block sets live until session end."""
     cprep = _ann_prep(corpus, id_col, vec_col, n_bits, keep=(by,))
     qprep = _ann_prep(queries, id_col, vec_col, n_bits)
-    if checkpoint:
-        sc = corpus.sparkSession.sparkContext
-        before = persistent_rdd_ids(sc)
-        # r15 (guide §2.6): the two prep materializations are
-        # independent jobs over disjoint inputs; overlapping them on
-        # driver threads removes one sequential job wall from every
-        # cold call, and each leg is the identical job it was
-        # sequentially, so results are unchanged.
-        try:
-            cprep, (qprep,) = overlap(
-                [lambda q=qprep: stable_checkpoint(q)],
-                main=lambda c=cprep: stable_checkpoint(c),
-            )
-        except BaseException:
-            # a leg that raises after another leg checkpointed would
-            # otherwise leak that leg's pinned prep blocks until session
-            # end (r15 ADVICE item): release everything this call pinned
-            # before propagating.
-            release_rdds(sc, persistent_rdd_ids(sc) - before)
-            raise
-        if handle_out is not None:
-            # Pass a list to receive an AnnPrepHandle whose release()
-            # frees the two pinned prep block sets — required hygiene in
-            # long-lived sessions (bench.py releases via its registry
-            # snapshot instead, so it does not use this).
-            handle_out.append(
-                AnnPrepHandle(sc, persistent_rdd_ids(sc) - before)
-            )
-    elif handle_out is not None:
-        handle_out.append(
-            AnnPrepHandle(corpus.sparkSession.sparkContext, set())
+    sc = corpus.sparkSession.sparkContext
+    before = persistent_rdd_ids(sc)
+    # The two prep materializations are independent jobs over disjoint
+    # inputs; overlapping them on driver threads
+    # removes one sequential job wall from every cold call, and each leg
+    # is the identical job it was sequentially, so results are unchanged.
+    try:
+        cprep, (qprep,) = overlap(
+            [lambda q=qprep: stable_checkpoint(q)],
+            main=lambda c=cprep: stable_checkpoint(c),
         )
-    masks = F.array(
-        *[F.lit(m) for m in lsh_probe_masks(n_bits, n_probes_lsh)]
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
+    except BaseException:
+        # a leg that raises after another leg checkpointed would
+        # otherwise leak that leg's pinned prep blocks until session end:
+        # release everything this call pinned before propagating.
+        release_rdds(sc, persistent_rdd_ids(sc) - before)
+        raise
+    if handle_out is not None:
+        # Pass a list to receive an AnnPrepHandle whose release() frees
+        # the two pinned prep block sets — required hygiene in long-lived
+        # sessions (bench.py releases via its registry snapshot instead,
+        # so it does not use this).
+        handle_out.append(AnnPrepHandle(sc, persistent_rdd_ids(sc) - before))
 
-    # --- sign-LSH multi-probe (twin of ann_topk_lsh) ---
-    c = cprep.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-        "bucket",
-    )
-    q = qprep.select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("__base"),
-        F.explode(masks).alias("__mask"),
-    ).select(
-        "query_id",
-        "qvec",
-        "qnrm",
-        F.col("__base").bitwiseXOR(F.col("__mask")).alias("bucket"),
-    )
-    lsh = (
-        c.join(F.broadcast(q), "bucket")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias(
-                "score"
-            ),
+    def tag(method: str, leg: DataFrame) -> DataFrame:
+        return leg.select(
+            F.lit(method).alias("method"), "query_id", "neighbor_id", "score", "rank"
         )
-        .transform(_drop_zero_norm)
-        .withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= k)
-    )
 
-    # --- IVF (twin of ann_topk_ivf) ---
-    cents = _centroid_arrays(
-        cprep.select(F.col(by), F.col("vec").alias("embedding")), by
-    ).select(F.col(by).alias("cell"), "centroid")
-    # collected once for both assignments
-    cents = _local_frame(corpus.sparkSession, cents.collect(), cents.schema)
-
-    def assign(prep: DataFrame, id_alias: str, vec_alias: str, probes: int):
-        pre = prep.select(
-            F.col("id").alias(id_alias),
-            F.col("vec").alias(vec_alias),
-            F.col("nrm").alias("__nrm"),
-        )
-        return _nearest_cells(pre, cents, probes, vec_alias)
-
-    c_ivf = assign(cprep, "neighbor_id", "cvec", 1).withColumnRenamed(
-        "__nrm", "cnrm"
-    )
-    q_ivf = assign(qprep, "query_id", "qvec", n_probes_ivf).withColumnRenamed(
-        "__nrm", "qnrm"
-    )
-    ivf = (
-        c_ivf.join(F.broadcast(q_ivf), "cell")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias(
-                "score"
-            ),
-        )
-        .transform(_drop_zero_norm)
-        .withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= k)
-    )
-
-    # --- int8-quantized prune + re-score (twin of ann_topk_quantized) ---
-    cq = cprep.select(
-        F.col("id").alias("neighbor_id"),
-        "bucket",
-        F.col("q8").alias("qc"),
-        F.col("ss").alias("css"),
-    )
-    qq = qprep.select(
-        F.col("id").alias("query_id"),
-        F.col("q8").alias("qv8"),
-        F.col("ss").alias("qss"),
-        F.col("bucket").alias("__base"),
-        F.explode(masks).alias("__mask"),
-    ).select(
-        "query_id",
-        "qv8",
-        "qss",
-        F.col("__base").bitwiseXOR(F.col("__mask")).alias("bucket"),
-    )
-    cand = cq.join(F.broadcast(qq), "bucket").select(
-        "query_id",
-        "neighbor_id",
-        quantized_cosine(
-            int_dot("qv8", "qc"), F.col("qss"), F.col("css")
-        ).alias("q_score"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("q_score").desc(), F.col("neighbor_id")
-    )
-    survivors = (
-        cand.withColumn("qrank", F.row_number().over(w1))
-        .where(F.col("qrank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    fullc = cprep.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    )
-    fullq = qprep.select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    quant = (
-        fullc.join(F.broadcast(survivors), "neighbor_id")
-        .join(F.broadcast(fullq), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias(
-                "score"
-            ),
-        )
-        .transform(_drop_zero_norm)
-        .withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= k)
-    )
-
-    cols = ["query_id", "neighbor_id", "score", "rank"]
     return (
-        lsh.select(F.lit("lsh").alias("method"), *cols)
-        .unionByName(ivf.select(F.lit("ivf").alias("method"), *cols))
-        .unionByName(quant.select(F.lit("quant").alias("method"), *cols))
+        tag("lsh", _lsh_leg(cprep, qprep, k, n_bits, n_probes_lsh))
+        .unionByName(tag("ivf", _ivf_leg(cprep, qprep, k, n_probes_ivf, by)))
+        .unionByName(
+            tag("quant", _quant_leg(cprep, qprep, k, n_bits, n_probes_lsh, rerank))
+        )
     )
 
 
@@ -1080,54 +947,23 @@ def ann_index_topk(
     scoring join below broadcasts the query side and joins on the
     partition column, so the scan receives a runtime bucket filter —
     same partitions skipped, zero driver materialization (pinned in
-    tests/test_ann_index.py).  Scoring is expression-identical to
-    :func:`ann_topk_lsh` (same fold order, same tie breaks), so against
-    the same corpus the results match the in-memory operator
-    row-for-row (pinned in tests/test_ann_index.py)."""
-    masks = F.array(*[F.lit(m) for m in lsh_probe_masks(n_bits, n_probes)])
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            norm(vec_col).alias("qnrm"),
-            sign_lsh_bucket(vec_col, n_bits).alias("__base"),
-            F.explode(masks).alias("__mask"),
-        )
-        .select(
-            "query_id",
-            "qvec",
-            "qnrm",
-            F.col("__base").bitwiseXOR(F.col("__mask")).alias("bucket"),
-        )
-    )
+    tests/test_ann_index.py).  The pruned scan feeds :func:`_lsh_leg`,
+    the leg :func:`ann_topk_lsh` runs, so against the same corpus the
+    results match the in-memory operator row-for-row (pinned in
+    tests/test_ann_index.py)."""
+    qprep = _ann_prep(queries, id_col, vec_col, n_bits)
     scan = spark.read.parquet(path)
     if 2**n_bits <= max_collect_buckets:
         # bounded driver collect: at most 2^n_bits distinct bucket ids,
         # pruned at PLANNING time via literal isin
-        probed = [
-            r["bucket"] for r in q.select("bucket").distinct().collect()
-        ]
-        scan = scan.where(F.col("bucket").isin(probed))
+        probed = _probe_buckets(qprep, n_bits, n_probes).select("bucket")
+        scan = scan.where(
+            F.col("bucket").isin([r["bucket"] for r in probed.distinct().collect()])
+        )
     # else: no driver collect — the broadcast equi-join on the partition
-    # column below hands the scan a runtime filter via dynamic partition
-    # pruning (spark.sql.dynamicPartitionPruning, on by default)
-    c = scan.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-        "bucket",
-    )
-    scored = c.join(F.broadcast(q), "bucket").select(
-        "query_id",
-        "neighbor_id",
-        _cos(dot("qvec", "cvec"), F.col("qnrm"), F.col("cnrm")).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return _drop_zero_norm(scored).withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    # column in _lsh_leg hands the scan a runtime filter via dynamic
+    # partition pruning (spark.sql.dynamicPartitionPruning, on by default)
+    return _lsh_leg(scan, qprep, k, n_bits, n_probes)
 
 
 def quantize_embeddings(
@@ -1618,6 +1454,17 @@ def _unit(vec_col: Column | str) -> Column:
     )
 
 
+def _unit_frame(
+    df: DataFrame, id_col: str, vec_col: str, a: str = "cid", b: str = "cvec"
+) -> DataFrame:
+    """``(a, b)`` = (id, :func:`_unit` vector) for the rows of ``df``
+    with a nonzero vector — the PQ families' input, zero-norm rows
+    dropped up front (:func:`_nonzero_vec`)."""
+    return df.where(_nonzero_vec(vec_col)).select(
+        F.col(id_col).alias(a), _unit(vec_col).alias(b)
+    )
+
+
 def _subvectors(
     df: DataFrame, m: int, d: int, id_col: str, vec_col: str
 ) -> DataFrame:
@@ -2103,12 +1950,8 @@ def ann_topk_pq(
     """
     sc = corpus.sparkSession.sparkContext
     before = persistent_rdd_ids(sc) if handle_out is not None else set()
-    c_unit = corpus.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-    )
-    q_unit = queries.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("query_id"), _unit(vec_col).alias("qvec")
-    )
+    c_unit = _unit_frame(corpus, id_col, vec_col)
+    q_unit = _unit_frame(queries, id_col, vec_col, "query_id", "qvec")
     if codebooks is None:
         codebooks = pq_train(
             c_unit,
@@ -2295,9 +2138,7 @@ def write_pq_index(
     an identity rather than an approximation."""
     mode = _validate_index_write_mode(mode, "append_pq_index")
     spark = corpus.sparkSession
-    c_unit = corpus.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-    )
+    c_unit = _unit_frame(corpus, id_col, vec_col)
     if codebooks is None:
         codebooks = pq_train(
             c_unit,
@@ -2332,9 +2173,7 @@ def append_pq_index(
     (Retrain only when the vector distribution drifts; then rewrite.)"""
     spark = new_vectors.sparkSession
     stored = spark.read.parquet(f"{path}/codebooks")
-    c_unit = new_vectors.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-    )
+    c_unit = _unit_frame(new_vectors, id_col, vec_col)
     pq_encode(c_unit, stored, m=m, id_col="cid", vec_col="cvec", dim=dim).write.mode(
         "append"
     ).parquet(f"{path}/codes")
@@ -2378,16 +2217,10 @@ def pq_index_topk(
     codebooks = spark.read.parquet(f"{path}/codebooks")
     m, codes, dim = _pq_codebook_shape(codebooks)
     encoded = spark.read.parquet(f"{path}/codes")  # (id, codes)
-    c_unit = (
-        corpus_unit
-        if corpus_unit is not None
-        else corpus.where(_nonzero_vec(vec_col)).select(
-            F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-        )
-    )
-    q_unit = queries.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("query_id"), _unit(vec_col).alias("qvec")
-    )
+    c_unit = corpus_unit
+    if c_unit is None:
+        c_unit = _unit_frame(corpus, id_col, vec_col)
+    q_unit = _unit_frame(queries, id_col, vec_col, "query_id", "qvec")
     return _pq_adc_topk(
         encoded, codebooks, c_unit, q_unit, k, m, codes, rerank, dim
     )
@@ -2465,9 +2298,7 @@ def ivfpq_train(
     a :func:`~..operators.hash_sample` — coarse cells and codebooks
     saturate long before a full pass — then :func:`ivfpq_encode`
     everything in one linear scan."""
-    c_unit = corpus.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-    )
+    c_unit = _unit_frame(corpus, id_col, vec_col)
     if centroids is None:
         init = hash_seed_centroids(c_unit, n_cells, id_col="cid", vec_col="cvec")
         assigned, centroids, _ = kmeans_lloyd(
@@ -2531,9 +2362,7 @@ def ivfpq_encode(
     scan, the residual is an element-wise ``zip_with``, and
     :func:`pq_encode` is itself a scan.  dim-dim
     floats become one small int + m codes."""
-    c_unit = corpus.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("id"), _unit(vec_col).alias("vec")
-    )
+    c_unit = _unit_frame(corpus, id_col, vec_col, "id", "vec")
     # L2 assignment (the Lloyd metric — NOT the cosine probe of
     # ann_topk_ivf): the inverted-list cell must be the vector's
     # nearest centroid under the same metric the residual ADC
@@ -2619,12 +2448,8 @@ def ann_topk_ivfpq(
     encoded = ivfpq_encode(
         corpus, centroids, codebooks, id_col=id_col, vec_col=vec_col, dim=dim
     )
-    c_unit = corpus.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-    )
-    q_unit = queries.where(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("query_id"), _unit(vec_col).alias("qvec")
-    )
+    c_unit = _unit_frame(corpus, id_col, vec_col)
+    q_unit = _unit_frame(queries, id_col, vec_col, "query_id", "qvec")
     return _ivfpq_adc_topk(
         encoded, centroids, codebooks, c_unit, q_unit, k, m, codes,
         n_probes, rerank, dim,
@@ -2852,16 +2677,10 @@ def ivfpq_index_topk(
         # the already-normalized (cid, cvec) re-rank side — the
         # pq_index_topk contract, including the caller-drops-zero-norms
         # note there.
-        c_unit = (
-            corpus_unit
-            if corpus_unit is not None
-            else corpus.where(_nonzero_vec(vec_col)).select(
-                F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec")
-            )
-        )
-        q_unit = queries.where(_nonzero_vec(vec_col)).select(
-            F.col(id_col).alias("query_id"), _unit(vec_col).alias("qvec")
-        )
+        c_unit = corpus_unit
+        if c_unit is None:
+            c_unit = _unit_frame(corpus, id_col, vec_col)
+        q_unit = _unit_frame(queries, id_col, vec_col, "query_id", "qvec")
         probed = _nearest_cells_l2(
             q_unit, centroids.select("cell", "centroid"), n_probes, "qvec"
         )

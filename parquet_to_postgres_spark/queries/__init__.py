@@ -28,14 +28,14 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     builder: Builder
-    oracle: str | None  # DuckDB SQL twin; None -> rows-only check
+    oracle: str  # DuckDB SQL twin
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str, tags: tuple[str, ...] = ()):
     """Decorator: add a (builder, oracle) pair to the registry."""
 
     def deco(fn: Builder) -> Builder:
@@ -135,4 +135,4 @@ def queries() -> dict[str, Builder]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {n: s.oracle for n, s in load_all().items() if s.oracle is not None}
+    return {n: s.oracle for n, s in load_all().items()}

@@ -907,8 +907,8 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") >= 5)
     queries = emb.where(F.col("vec_id") < 5)
     # One shared, checkpointed corpus-prep subtree across the three
-    # families (VERDICT r5 item 3) instead of three independent rebuilds
-    # — results are expression-identical to the standalone operators.
+    # families instead of three independent rebuilds; each family runs
+    # the same leg as its standalone operator.
     return S.ann_topk_all_methods(corpus, queries, k=10).select(
         "method",
         "query_id",
@@ -1110,9 +1110,7 @@ def ivfpq_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build():
-        c_unit_lab = corpus.where(S._nonzero_vec("embedding")).select(
-            "label", S._unit("embedding").alias("uvec")
-        )
+        c_unit_lab = S._unit_frame(corpus, "label", "embedding", "label", "uvec")
         centroids = S._centroid_arrays(
             c_unit_lab, by="label", vec_col="uvec"
         ).select(F.col("label").alias("cell"), "centroid")

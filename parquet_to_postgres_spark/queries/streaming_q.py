@@ -2,8 +2,9 @@
 
 Each builder runs a real streaming query (readStream → availableNow →
 memory sink) to completion and returns the final table; the oracle is
-the equivalent batch SQL on the same finite input.  T4 (watermark
-late-drop) withholds the final open window by design → rows-only.
+the equivalent batch SQL on the same finite input.  T4's oracle
+(watermark late-drop) withholds the final open window, as the stream
+does.
 """
 
 from __future__ import annotations

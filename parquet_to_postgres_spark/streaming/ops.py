@@ -22,6 +22,7 @@ a real cluster; only the source/sink bindings are test-local.
 from __future__ import annotations
 
 import itertools
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -57,7 +58,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fixture's physical ts type has varied across driver rounds
     (TIMESTAMP(NANOS) vs timestamp[us]); mirror tables.load_table and
-    normalize based on the footer schema actually read."""
+    normalize based on the footer schema actually read.  Like
+    load_table, it leaves the nanos reader conf set on the caller's
+    session: the stream's scan reads it when the query runs."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
@@ -578,54 +581,12 @@ def stream_pq_topk_writer(
     every call.  Inside foreachBatch the micro-batch is a plain
     DataFrame, so the exact batch operator runs unchanged — streaming
     and batch PQ ANN cannot diverge."""
-    from ..llm.similarity import _nonzero_vec, _unit, pq_index_topk
+    from ..llm.similarity import pq_index_topk
 
-    base = foreach_batch_writer(sink)
-    corpus_path = corpus if isinstance(corpus, str) else None
-    c_unit = None
-    if cache_corpus:
-        if corpus_path is not None:
-            raise ValueError(
-                "stream_pq_topk_writer: a path-form corpus is for "
-                "per-trigger re-reads (mutating index) — pass "
-                "cache_corpus=False, or read the path yourself and pass "
-                "the DataFrame to cache a fixed snapshot."
-            )
-        # zero-norm rows dropped up front — the uniform ANN contract
-        # (see similarity._nonzero_vec); the non-cached path gets the
-        # same filter inside pq_index_topk.
-        c_unit = (
-            corpus.where(_nonzero_vec(vec_col))
-            .select(F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec"))
-            .persist()
-        )
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        corpus_df = (
-            spark.read.parquet(corpus_path)
-            if corpus_path is not None
-            else corpus
-        )
-        base(
-            pq_index_topk(
-                spark,
-                index_path,
-                corpus_df,
-                batch_df,
-                k=k,
-                rerank=rerank,
-                id_col=id_col,
-                vec_col=vec_col,
-                corpus_unit=c_unit,
-            ),
-            batch_id,
-        )
-
-    _write.close = (
-        (lambda: c_unit.unpersist()) if cache_corpus else (lambda: None)
+    topk = partial(pq_index_topk, k=k, rerank=rerank, id_col=id_col, vec_col=vec_col)
+    return _pq_family_writer(
+        topk, index_path, corpus, sink, id_col, vec_col, cache_corpus
     )
-    return _write
 
 
 def stream_ivfpq_topk_writer(
@@ -655,7 +616,37 @@ def stream_ivfpq_topk_writer(
     ``cache_corpus=False`` when :func:`append_ivfpq_index` runs
     between triggers), and the ``close()`` hygiene contract are all
     exactly :func:`stream_pq_topk_writer`'s — see the ledger there."""
-    from ..llm.similarity import _nonzero_vec, _unit, ivfpq_index_topk
+    from ..llm.similarity import ivfpq_index_topk
+
+    topk = partial(
+        ivfpq_index_topk,
+        k=k,
+        n_probes=n_probes,
+        rerank=rerank,
+        id_col=id_col,
+        vec_col=vec_col,
+    )
+    return _pq_family_writer(
+        topk, index_path, corpus, sink, id_col, vec_col, cache_corpus
+    )
+
+
+def _pq_family_writer(
+    topk,
+    index_path: str,
+    corpus,
+    sink,
+    id_col: str,
+    vec_col: str,
+    cache_corpus: bool,
+) -> "callable":
+    """The shared foreachBatch body of the PQ-family writers: per
+    trigger, ``topk(spark, index_path, corpus_df, batch_df,
+    corpus_unit=...)`` against ``corpus`` (re-read per trigger when it
+    is a path), with the unit-normalized re-rank side cached up front
+    under ``cache_corpus`` and released by the returned callable's
+    ``close()``."""
+    from ..llm.similarity import _unit_frame
 
     base = foreach_batch_writer(sink)
     corpus_path = corpus if isinstance(corpus, str) else None
@@ -663,16 +654,15 @@ def stream_ivfpq_topk_writer(
     if cache_corpus:
         if corpus_path is not None:
             raise ValueError(
-                "stream_ivfpq_topk_writer: a path-form corpus is for "
-                "per-trigger re-reads (mutating index) — pass "
-                "cache_corpus=False, or read the path yourself and pass "
-                "the DataFrame to cache a fixed snapshot."
+                "a path-form corpus is for per-trigger re-reads "
+                "(mutating index) — pass cache_corpus=False, or read the "
+                "path yourself and pass the DataFrame to cache a fixed "
+                "snapshot."
             )
-        c_unit = (
-            corpus.where(_nonzero_vec(vec_col))
-            .select(F.col(id_col).alias("cid"), _unit(vec_col).alias("cvec"))
-            .persist()
-        )
+        # zero-norm rows dropped up front — the uniform ANN contract
+        # (see similarity._nonzero_vec); the non-cached path gets the
+        # same filter inside the top-k operator.
+        c_unit = _unit_frame(corpus, id_col, vec_col).persist()
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -682,18 +672,7 @@ def stream_ivfpq_topk_writer(
             else corpus
         )
         base(
-            ivfpq_index_topk(
-                spark,
-                index_path,
-                corpus_df,
-                batch_df,
-                k=k,
-                n_probes=n_probes,
-                rerank=rerank,
-                id_col=id_col,
-                vec_col=vec_col,
-                corpus_unit=c_unit,
-            ),
+            topk(spark, index_path, corpus_df, batch_df, corpus_unit=c_unit),
             batch_id,
         )
 

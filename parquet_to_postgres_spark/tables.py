@@ -214,7 +214,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     # Legacy conf is a no-op for non-nanos files; set it so a NANOS
     # column in ANY table reads as long (which normalize_to_catalog
-    # then converts) instead of failing the vectorized reader.
+    # then converts) instead of failing the vectorized reader.  It is
+    # set on the caller's session and left set: the scan reads it when
+    # the returned frame runs, and a caller's own session (not built
+    # by get_spark) has no other source for it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_to_catalog(spark.read.parquet(path), name, path)
 

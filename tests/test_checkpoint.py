@@ -98,10 +98,10 @@ def test_reliable_eager_checkpoint_computes_subtree_once(spark):
 
 
 def test_ann_all_methods_release_handle_frees_pinned_blocks(spark):
-    """Round-7 ADVICE: ann_topk_all_methods(checkpoint=True) pins two
-    localCheckpoint block sets a plain DataFrame.unpersist can't reach.
-    The handle_out AnnPrepHandle must free exactly those blocks, and
-    results must be identical whether or not a handle is requested."""
+    """ann_topk_all_methods pins two localCheckpoint block sets a
+    plain DataFrame.unpersist can't reach.  The handle_out
+    AnnPrepHandle must free exactly those blocks, and results must be
+    identical whether or not a handle is requested."""
     from parquet_to_postgres_spark.checkpoint import persistent_rdd_ids
     from parquet_to_postgres_spark.llm import similarity as S
     from parquet_to_postgres_spark.tables import load_table
@@ -123,7 +123,7 @@ def test_ann_all_methods_release_handle_frees_pinned_blocks(spark):
     assert rows  # sanity: the query ran
     assert len(handle) == 1
     pinned = persistent_rdd_ids(sc) - before
-    assert pinned, "checkpoint=True must pin prep blocks"
+    assert pinned, "the shared prep must pin its checkpoint blocks"
     handle[0].release()
     handle[0].release()  # idempotent
     assert persistent_rdd_ids(sc) & pinned == set(), (
@@ -131,15 +131,13 @@ def test_ann_all_methods_release_handle_frees_pinned_blocks(spark):
     )
 
     # Same rows without a handle (the default path is unchanged).
-    handle2 = []
     base = sorted(
         (r["method"], r["query_id"], r["neighbor_id"], r["rank"])
         for r in S.ann_topk_all_methods(
-            corpus, queries, k=3, handle_out=handle2, checkpoint=False
+            corpus, queries, k=3, handle_out=None
         ).collect()
     )
     assert base == rows
-    assert len(handle2) == 1 and handle2[0]._ids == set()
 
 
 def test_ann_shared_prep_identical_under_reliable_checkpoint(spark):

@@ -44,8 +44,10 @@ def test_topk_paths_never_emit_zero_norm_sentinel(spark):
     drop their sentinel-scored pairs before ranking, never emit a row a
     consumer could read as score=-2.0 (driver ADVICE r7).  A zero-norm
     QUERY returns no rows at all; a zero-norm CORPUS vector never
-    appears as a neighbor."""
+    appears as a neighbor.  The float families read the vector column
+    through ``vec_col``: renamed, it yields the same rows."""
     from parquet_to_postgres_spark.llm.similarity import (
+        ann_topk_all_methods,
         ann_topk_ivf,
         ann_topk_lsh,
         ann_topk_quantized,
@@ -99,6 +101,22 @@ def test_topk_paths_never_emit_zero_norm_sentinel(spark):
     a = canon(brute_force_topk(corpus, queries, k=5).toPandas())
     b = canon(two_stage_topk(corpus, queries, k=5).toPandas())
     assert a == b
+
+    handles = []
+    c_v, q_v = (df.withColumnRenamed("embedding", "v") for df in (corpus, queries))
+    for fn, kw in (
+        (ann_topk_lsh, {}),
+        (ann_topk_ivf, {}),
+        (ann_topk_quantized, {}),
+        (ann_topk_all_methods, {"handle_out": handles}),
+    ):
+        want = sorted(map(tuple, fn(corpus, queries, k=5, **kw).collect()))
+        got = sorted(
+            map(tuple, fn(c_v, q_v, k=5, vec_col="v", **kw).collect())
+        )
+        assert got == want, fn.__name__
+    for h in handles:
+        h.release()
 
 
 def test_salted_agg_equals_plain_groupby(spark):

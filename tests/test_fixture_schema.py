@@ -60,7 +60,11 @@ def _write(tmp, name, table):
 
 def test_normalizes_nanos_timestamp_drift(spark):
     """TIMESTAMP(NANOS) -> µs-truncated session-TZ timestamp, by
-    integer division (epoch nanos exceed 2^53)."""
+    integer division (epoch nanos exceed 2^53).  The loader sets the
+    nanos reader conf itself, so a session that has it off (as one not
+    built by get_spark does) still normalizes."""
+    import datetime
+
     ns = 1_700_000_000_123_456_789
     tbl = pa.table(
         {
@@ -73,19 +77,24 @@ def test_normalizes_nanos_timestamp_drift(spark):
         }
     )
     with tempfile.TemporaryDirectory() as d:
-        path = _write(d, "events", tbl)
-        out = load_table(spark, d, "events")
-        got = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-        assert got == CATALOG_SCHEMA["events"]
-        row = out.collect()[0]
-        import datetime
-
-        want_us = ns // 1000  # truncation, matching DuckDB's ns->µs cast
-        got_us = int(
-            row["ts"].replace(tzinfo=datetime.timezone.utc).timestamp() * 1e6
-        )
-        assert got_us == want_us
-        del path
+        _write(d, "events", tbl)
+        for conf_before in (None, "false"):
+            if conf_before is not None:
+                spark.conf.set(
+                    "spark.sql.legacy.parquet.nanosAsLong", conf_before
+                )
+            out = load_table(spark, d, "events")
+            got = {
+                f.name: f.dataType.simpleString() for f in out.schema.fields
+            }
+            assert got == CATALOG_SCHEMA["events"], conf_before
+            row = out.collect()[0]
+            want_us = ns // 1000  # truncation, matching DuckDB's ns->µs cast
+            got_us = int(
+                row["ts"].replace(tzinfo=datetime.timezone.utc).timestamp()
+                * 1e6
+            )
+            assert got_us == want_us, conf_before
 
 
 def test_normalizes_date_and_width_drift(spark):

