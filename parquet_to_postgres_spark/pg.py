@@ -18,31 +18,35 @@ end-to-end anyway, through the server's native bulk interface:
   scans — the read-side analogue of Spark's partitioned JDBC read —
   parsed into typed Arrow batches in the Python worker.
 
-Scale notes.  Writes: CSV lines are rendered JVM-side with ``F.to_csv``
-(exact, vectorized, inside whole-stage codegen); the Python half of the
-``mapInPandas`` sink only pipes bytes into ONE ``psql`` subprocess per
-partition, so concurrent connections are bounded by the partition count
-exactly like ``JdbcSink.num_partitions`` (the reference's 10-permit
-semaphore, ``main.rs:68``).  Reads: one task per range scan, placed by
-``spark.range`` (no shuffle); each task streams its psql's CSV stdout
-through ``pyarrow.csv.open_csv`` typed by the declared schema and hands
-the batches to Spark through ``mapInArrow`` — no per-row Python and no
-JVM re-parse.  NULL is CSV's unquoted empty field and ``''`` is ``""``,
-so the two never collide.  On a real cluster each executor streams its
-partitions straight to the server — no driver funnel; the driver only
-runs DDL.  The embedded server manager below exists for tests: point
-``conninfo`` at any real host to use the sink against one.
+Scale notes.  Writes: one stage, no shuffle.  Each scan partition
+renders its rows JVM-side (``F.to_csv`` lines or PGCOPY tuples, exact,
+inside whole-stage codegen) and its ``mapInArrow`` task writes every
+Arrow batch's values buffer into ONE ``psql`` ``COPY ... FROM STDIN``:
+no object per row, at most one batch in Python memory, and the server
+parses while the JVM renders.  ``coalesce(num_partitions)`` caps the
+connections, an upper bound like ``JdbcSink.num_partitions`` (the
+reference's 10-permit semaphore, ``main.rs:68``).  Reads: one task per range scan, placed
+by ``spark.range`` (no shuffle); each task streams its psql's CSV
+stdout through ``pyarrow.csv.open_csv`` typed by the declared schema
+and hands the batches to Spark through ``mapInArrow`` — no per-row
+Python and no JVM re-parse.  NULL is CSV's unquoted empty field and
+``''`` is ``""``, so the two never collide.  On a real cluster each
+executor streams its partitions straight to the server — no driver
+funnel; the driver only runs DDL.  The embedded server manager below
+exists for tests: point ``conninfo`` at any real host to use the sink
+against one.
 """
 
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import shutil
 import subprocess
 import tempfile
 from dataclasses import dataclass, field
-from typing import IO, Iterator
+from typing import IO, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -255,66 +259,76 @@ def _psql_argv(
     return cmd + ["-c", sql]
 
 
-def run_psql(
-    conninfo: dict[str, str], sql: str, tuples_only: bool = True
-) -> str:
-    """Client-side psql call from the driver (DDL, queries); it depends
-    only on the conninfo dict.  Executor-side COPY goes through
-    :func:`_copy_in` and :func:`_psql_stdout`."""
-    r = subprocess.run(
-        _psql_argv(conninfo, sql, tuples_only),
-        capture_output=True,
-        text=True,
-        cwd="/",
-    )
-    if r.returncode != 0:
-        raise RuntimeError(f"psql failed ({sql[:120]!r}): {r.stderr[-2000:]}")
-    return r.stdout
-
-
-def _copy_in(conninfo: dict[str, str], sql: str, payload: bytes) -> int:
-    """Run ``sql`` (ending in ``COPY ... FROM STDIN``) fed with
-    ``payload``; return the row count the server reports in its
-    ``COPY n`` command tag, which psql prints only without ``-q``."""
-    r = subprocess.run(
-        [a for a in _psql_argv(conninfo, sql) if a != "-q"],
-        input=payload,
-        capture_output=True,
-        cwd="/",
-    )
-    if r.returncode != 0:
-        err = r.stderr.decode("utf-8", "replace")
-        raise RuntimeError(f"psql failed ({sql[:120]!r}): {err[-2000:]}")
-    return int(r.stdout.split()[-1])
-
-
 @contextlib.contextmanager
-def _psql_stdout(conninfo: dict[str, str], sql: str) -> Iterator[IO[bytes]]:
-    """psql's stdout as a binary pipe, for output too large to hold.
-
-    stderr goes to a temporary file, so psql can never block on a full
-    stderr pipe while the caller reads stdout.  After the caller has read
-    to EOF, a nonzero exit raises with psql's stderr; if the caller
-    raises instead (a closed generator included), psql is killed."""
+def _psql(argv: list[str], sql: str, **pipes) -> Iterator[subprocess.Popen]:
+    """One psql process running ``sql``, its stderr in a temporary file
+    so it can never block on a full stderr pipe.  If the caller raises
+    (a closed generator included), psql is killed; otherwise, once the
+    caller is done, a nonzero exit raises with psql's stderr."""
     with tempfile.TemporaryFile() as err:
-        proc = subprocess.Popen(
-            _psql_argv(conninfo, sql, tuples_only=False),
-            stdout=subprocess.PIPE,
-            stderr=err,
-            cwd="/",
-        )
+        proc = subprocess.Popen(argv, stderr=err, cwd="/", **pipes)
         try:
-            yield proc.stdout
+            yield proc
         except BaseException:
             proc.kill()
             raise
         finally:
-            proc.stdout.close()
+            for pipe in filter(None, (proc.stdin, proc.stdout)):
+                with contextlib.suppress(BrokenPipeError):
+                    pipe.close()
             rc = proc.wait()
         if rc != 0:
             err.seek(0)
             msg = err.read().decode("utf-8", "replace")
             raise RuntimeError(f"psql failed ({sql[:120]!r}): {msg[-2000:]}")
+
+
+def run_psql(
+    conninfo: dict[str, str], sql: str, tuples_only: bool = True
+) -> str:
+    """Client-side psql call from the driver (DDL, queries); it depends
+    only on the conninfo dict.  Executor-side COPY goes through
+    :func:`_psql_stdin` and :func:`_psql_stdout`."""
+    argv = _psql_argv(conninfo, sql, tuples_only)
+    with _psql(argv, sql, stdout=subprocess.PIPE) as proc:
+        return proc.stdout.read().decode()
+
+
+@contextlib.contextmanager
+def _psql_stdout(conninfo: dict[str, str], sql: str) -> Iterator[IO[bytes]]:
+    """psql's stdout as a binary pipe, for output too large to hold; a
+    nonzero exit raises after the caller has read to EOF."""
+    argv = _psql_argv(conninfo, sql, tuples_only=False)
+    with _psql(argv, sql, stdout=subprocess.PIPE) as proc:
+        yield proc.stdout
+
+
+def _psql_stdin(conninfo: dict[str, str], sql: str, chunks: Iterable) -> str:
+    """The stdin twin of :func:`_psql_stdout`, for input too large to
+    hold: stream ``chunks`` (bytes-like) into psql running ``sql``, which
+    ends in ``COPY ... FROM STDIN``, and return its stdout, the server's
+    command tags (``COPY n``; psql prints them only without ``-q``).  If
+    ``chunks`` raises, psql is killed."""
+    argv = [a for a in _psql_argv(conninfo, sql) if a != "-q"]
+    with _psql(argv, sql, stdin=subprocess.PIPE, stdout=subprocess.PIPE) as proc:
+        # a pipe psql closed early means it quit: a nonzero exit raises
+        # with its stderr, an exit of 0 reports a short COPY count
+        with contextlib.suppress(BrokenPipeError):
+            for chunk in chunks:
+                proc.stdin.write(chunk)
+            proc.stdin.close()
+        return proc.stdout.read().decode()  # a few bytes, written at exit
+
+
+def _values(col):
+    """The bytes of a string/binary Arrow array's values, end to end: a
+    zero-copy slice of its data buffer, with no object made per row."""
+    import numpy as np
+
+    _, offsets, data = col.buffers()
+    offsets = np.frombuffer(offsets, "i8" if "large" in str(col.type) else "i4")
+    start, end = (int(o) for o in offsets[[col.offset, col.offset + len(col)]])
+    return data.slice(start, end - start)
 
 
 # ----------------------------------------------------------- CSV wire ----
@@ -547,6 +561,7 @@ class PostgresCopySink:
     conninfo: dict[str, str]
     table: str
     mode: str = "append"
+    # an upper bound: at most this many tasks, each one COPY connection
     num_partitions: int = 4
     # partition_tag=True makes per-TASK writes idempotent: rows carry a
     # __part column (the task's partition id, stable across retries),
@@ -559,12 +574,10 @@ class PostgresCopySink:
     # spark.speculation for it, and prefer write_batch for guarantees).
     partition_tag: bool = False
     # COPY wire format: 'csv' (F.to_csv lines) or 'binary' (PGCOPY
-    # tuples, also built JVM-side — binary_copy_tuples).  The e2e A/B
-    # at sf0.1 is in BASELINE.md: csv ships as the default (faster
-    # end-to-end on a shared box); binary is the option for
-    # server-CPU-bound topologies (2.1x cheaper parse).  All DDL types
-    # are supported on both wires except decimals whose point-aligned
-    # width exceeds 38 digits (binary refuses those up front).
+    # tuples, binary_copy_tuples), both rendered JVM-side and streamed
+    # as Arrow values buffers; every DDL type travels on both.  csv is
+    # the default (faster end-to-end on a shared box, BASELINE.md's sf0.1
+    # A/B); binary suits a server-CPU-bound topology (2.1x cheaper parse).
     wire_format: str = "csv"
 
     def write(self, df: DataFrame) -> str:
@@ -578,99 +591,83 @@ class PostgresCopySink:
             raise ValueError(
                 f"wire_format must be csv/binary, got {self.wire_format!r}"
             )
-        binary = self.wire_format == "binary"
-        if binary:
-            # validate EVERY column's send format BEFORE the
-            # destructive DROP — otherwise a refused type (decimal)
-            # would leave an empty shell where the populated table was
-            # (r11 second-pass review finding)
-            for f_ in schema_df.schema.fields:
-                _binary_cell(f_)
-        if self.mode == "overwrite":
-            run_psql(self.conninfo, f"DROP TABLE IF EXISTS {self.table};")
-        run_psql(self.conninfo, ddl)
+        # building the frame builds every binary cell, so a refused type
+        # raises here, before the DROP below can empty a populated table
+        copy = self._copy_frame(df)
+        # one -c string is one implicit transaction: a CREATE that fails
+        # rolls the DROP back and leaves the old table and its rows
+        drop = f"DROP TABLE IF EXISTS {self.table}; "
+        run_psql(self.conninfo, (drop if self.mode == "overwrite" else "") + ddl)
+        copy.collect()  # one row per task: the rows it shipped
+        return ddl
 
-        # HASH-partition on the first column (r15, was repartitionByRange):
-        # partition count == connection cap either way, but range
-        # partitioning pays a SEPARATE sampling pass over the input to
-        # pick boundaries (RangePartitioner) — one extra job per write —
-        # and COPY into a heap table gains nothing from range-sorted
-        # slices (no index locality to preserve during bulk load; the
-        # table's content is identical as a set).  Hash on a real key
-        # column stays DETERMINISTIC under task retry (guide §2.5 —
-        # never round-robin here), so the partition_tag idempotent-
-        # replace path keeps its stable task→rows mapping.  Measured
-        # r15 at sf0.1: 1.60 s → 1.26 s per 600k-row write (min of 3).
-        if binary:
-            prepared = df.repartition(self.num_partitions, df.columns[0])
-        else:
-            prepared = prepare_for_copy(df).repartition(
-                self.num_partitions, df.columns[0]
-            )
+    def _copy_frame(self, df: DataFrame) -> DataFrame:
+        """The COPY job as a frame: scan, render, and one ``mapInArrow``
+        task per connection that streams its rows into one psql COPY
+        and yields its row count.  Building it runs no psql."""
+        binary = self.wire_format == "binary"
+        prepared = df if binary else prepare_for_copy(df)
+        # Spark's JDBC-writer rule: coalesce to the connection cap, with
+        # no shuffle and a retried task's rows fixed (partition_tag stays
+        # exact).  A narrower input keeps its partitions; a wider one has
+        # its last stage, a join or aggregate included, run in that many.
+        prepared = prepared.coalesce(self.num_partitions)
         if self.partition_tag:
             prepared = prepared.withColumn("__part", F.spark_partition_id())
-        col_list = ", ".join(prepared.columns)
         if binary:
             lines = binary_copy_tuples(prepared)
         else:
-            line = F.to_csv(F.struct(*prepared.columns), _CSV_OPTS)
             # psql ends COPY data at a line that is exactly \. — quoted,
-            # it is the same CSV value and no longer an end marker
+            # it is the same CSV value and no longer an end marker.
+            # to_csv has its own select so it renders once, not per branch.
+            line = F.col("line")
             lines = prepared.select(
-                F.when(line == "\\.", F.lit('"\\."'))
-                .otherwise(line)
-                .alias("line")
+                F.to_csv(F.struct(*prepared.columns), _CSV_OPTS).alias("line")
+            ).select(
+                F.concat(
+                    F.when(line == "\\.", F.lit('"\\."')).otherwise(line),
+                    F.lit("\n"),
+                ).alias("line")
             )
-        conninfo, table = dict(self.conninfo), self.table
-        tagged = self.partition_tag
+        fmt = "BINARY" if binary else "CSV, NULL ''"
+        cols = ", ".join(prepared.columns)
+        copy = f"COPY {self.table} ({cols}) FROM STDIN (FORMAT {fmt})"
+        conninfo, table, tagged = dict(self.conninfo), self.table, self.partition_tag
 
         def _copy_partition(batches):
-            import pandas as pd
+            import pyarrow as pa
             from pyspark import TaskContext
 
-            n = 0
-            chunks: list = []
-            for pdf in batches:
-                if len(pdf):
-                    n += len(pdf)
-                    if binary:
-                        # ONE bytes object per Arrow batch, like the
-                        # CSV twin's per-batch join — not one PyObject
-                        # per row
-                        chunks.append(b"".join(pdf["rowbytes"]))
-                    else:
-                        chunks.append("\n".join(pdf["line"]))
-            if n:
-                fmt = "BINARY" if binary else "CSV, NULL ''"
-                copy = f"COPY {table} ({col_list}) FROM STDIN (FORMAT {fmt})"
-                if tagged:
-                    # one -c string = one implicit transaction: the
-                    # delete and the copy commit or roll back together
-                    pid = TaskContext.get().partitionId()
-                    copy = (
-                        f"DELETE FROM {table} WHERE __part = {pid}; "
-                        + copy
-                    )
+            shipped = [0]  # rows handed to psql
+
+            def values(batch):
+                shipped[0] += batch.num_rows
+                return _values(batch.column(0))
+
+            nonempty = (b for b in batches if b.num_rows)
+            # psql starts at the first non-empty batch, so an empty
+            # partition opens no connection.  The peeked batch goes back
+            # in front through a list iterator, which lets go of it once
+            # it is written: one batch in flight.
+            peeked = list(itertools.islice(nonempty, 1))
+            if peeked:
+                # one -c string = one implicit transaction: a tagged
+                # task's delete and copy commit or roll back together
+                pid = TaskContext.get().partitionId()
+                delete = f"DELETE FROM {table} WHERE __part = {pid}; "
+                sql = (delete if tagged else "") + copy
+                body = map(values, itertools.chain(iter([peeked.pop()]), nonempty))
                 if binary:
-                    payload = (
-                        _PGCOPY_HEADER + b"".join(chunks) + _PGCOPY_TRAILER
-                    )
-                else:
-                    payload = ("\n".join(chunks) + "\n").encode()
-                loaded = _copy_in(conninfo, copy, payload)
-                if loaded != n:
+                    body = itertools.chain([_PGCOPY_HEADER], body, [_PGCOPY_TRAILER])
+                loaded = int(_psql_stdin(conninfo, sql, body).split()[-1])
+                if loaded != shipped[0]:
                     raise RuntimeError(
                         f"COPY into {table} loaded {loaded} rows of the "
-                        f"{n} this task shipped"
+                        f"{shipped[0]} this task shipped"
                     )
-            yield pd.DataFrame({"n": [n]})
+            yield pa.RecordBatch.from_pydict({"n": shipped})
 
-        # the aggregate is the action that runs the COPY tasks; its value
-        # (rows shipped) is a single scalar to the driver.
-        lines.mapInPandas(_copy_partition, schema="n long").agg(
-            F.sum("n")
-        ).collect()
-        return ddl
+        return lines.mapInArrow(_copy_partition, "n long")
 
     # ---- exactly-once micro-batch publish (foreachBatch contract) ----
     #

@@ -364,7 +364,7 @@ def etl_pg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         PG_ROUNDTRIP_SINK = "postgres-copy"
         # The readback bounds are a min/max over the ORIGINAL parquet
         # projection — independent of the COPY write, so the tiny
-        # bounds job runs on a driver thread WHILE the 8 COPY
+        # bounds job runs on a driver thread WHILE the COPY
         # connections stream (guide §2.6; r15).
         _, ((lo, hi),) = overlap(
             [
@@ -389,8 +389,10 @@ def etl_pg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Arrow path.  The cap keeps a huge cluster from opening
         # hundreds of connections.  Results are partition-count-independent
         # (bounded-range scans partition the same row set).  The WRITE
-        # stays at 8: measured flat 8 vs 16 (COPY-in is server-write
-        # bound), so more connections buy nothing.
+        # caps at 8 COPY connections and adds no shuffle: lineitem is one
+        # Parquet file, which scans in 3 tasks at sf0.1, so 3 connections
+        # stream it.  Hash-spreading it onto 8 tasks first measured no
+        # faster there (write 2.02 s vs 2.38 s median of 8, 4 cores).
         back = read_back(
             spark,
             pg.conninfo(),

@@ -210,6 +210,26 @@ def test_pg_read_back_is_shuffle_free_arrow(spark):
     assert df.rdd.getNumPartitions() == 4
 
 
+def test_pg_copy_load_is_shuffle_free_arrow(spark, tmp_path):
+    """The COPY sink streams each scan partition into psql from one
+    MapInArrow, with no Exchange and no pandas; a cap below the input's
+    partition count coalesces, still with no Exchange.  Building the
+    frame runs no psql, so no server is needed."""
+    from parquet_to_postgres_spark.pg import PostgresCopySink
+
+    conninfo = {"host": "/nonexistent", "user": "nobody", "dbname": "none"}
+    spark.range(0, 400, 1, 4).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    assert len(src.inputFiles()) == 4
+    for wire, cap in (("csv", 4), ("binary", 4), ("csv", 2)):
+        sink = PostgresCopySink(conninfo, "t", num_partitions=cap, wire_format=wire)
+        frame = sink._copy_frame(src)
+        p = plan(frame, mode="simple")
+        assert "Exchange" not in p and "MapInPandas" not in p, p
+        assert p.count("MapInArrow") == 1, p
+        assert frame.rdd.getNumPartitions() <= cap
+
+
 def test_filter_pushdown_survives_spread(spark):
     """Catalyst pushes scan filters below the spread repartition — the
     Exchange must not fence off PushedFilters."""

@@ -13,6 +13,7 @@ Skipped cleanly when no postgres toolchain is installed.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import math
 from decimal import Decimal
@@ -35,6 +36,19 @@ def pgsrv(tmp_path_factory):
     srv = P.EmbeddedPostgres(str(tmp_path_factory.mktemp("pgsrv")))
     with srv:
         yield srv
+
+
+@contextlib.contextmanager
+def _batch_rows(spark, n):
+    """Arrow batches of ``n`` rows inside the block, so one COPY task
+    streams several batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _tricky_df(spark):
@@ -354,16 +368,19 @@ def test_copy_binary_matches_csv_wire(spark, pgsrv):
     temporal epoch).  The A/B wall numbers live in BASELINE.md; csv
     stays the shipped default (faster end-to-end on this topology),
     binary is the option for server-CPU-bound deployments (measured
-    2.1x cheaper server-side parse)."""
+    2.1x cheaper server-side parse).  Two-row Arrow batches make each
+    COPY span several batches, so the PGCOPY header and trailer must
+    frame the whole stream, not each batch."""
     df = _binary_tricky_df(spark)
     for wire in ("csv", "binary"):
-        P.PostgresCopySink(
-            pgsrv.conninfo(),
-            f"wire_{wire}",
-            mode="overwrite",
-            num_partitions=2,
-            wire_format=wire,
-        ).write(df)
+        with _batch_rows(spark, 2):
+            P.PostgresCopySink(
+                pgsrv.conninfo(),
+                f"wire_{wire}",
+                mode="overwrite",
+                num_partitions=2,
+                wire_format=wire,
+            ).write(df)
     diff = P.run_psql(
         pgsrv.conninfo(),
         """
@@ -475,15 +492,17 @@ def test_null_sentinel_text_and_empty_string_read_back(spark, pgsrv):
 def test_csv_wire_carries_end_of_data_marker_text(spark, pgsrv):
     """A record that is exactly ``\\.`` is psql's end-of-data line; on
     the CSV wire it must load as data, not silently end the COPY and
-    drop the rows after it.  The binary wire carries it as any text."""
+    drop the rows after it.  The binary wire carries it as any text.
+    Two-row Arrow batches put the marker at a batch's end."""
     texts = ["a", "\\.", "b", "c"]
     df = spark.createDataFrame([(t,) for t in texts], "name string")
     for wire in ("csv", "binary"):
         table = f"eod_marker_{wire}"
-        P.PostgresCopySink(
-            pgsrv.conninfo(), table, mode="overwrite", num_partitions=1,
-            wire_format=wire,
-        ).write(df)
+        with _batch_rows(spark, 2):
+            P.PostgresCopySink(
+                pgsrv.conninfo(), table, mode="overwrite", num_partitions=1,
+                wire_format=wire,
+            ).write(df)
         got = P.run_psql(pgsrv.conninfo(), f"SELECT name FROM {table}")
         assert sorted(got.splitlines()) == sorted(texts), wire
 
@@ -633,3 +652,44 @@ def test_copy_binary_decimal_edge_widths(spark, pgsrv):
         """,
     ).strip()
     assert diff == "0", diff
+
+
+def test_overwrite_keeps_old_table_when_create_fails(spark, pgsrv):
+    """Overwrite runs DROP and CREATE as one psql transaction: a CREATE
+    that fails (a column named ``select`` is a syntax error in the DDL)
+    leaves the old table and its rows, not a dropped target."""
+    P.PostgresCopySink(
+        pgsrv.conninfo(), "atomic_ow", mode="overwrite", num_partitions=1
+    ).write(spark.createDataFrame([(1, "keep")], "id long, note string"))
+    bad = spark.createDataFrame([(2, "x")], "id long, note string").toDF(
+        "id", "select"
+    )
+    sink = P.PostgresCopySink(
+        pgsrv.conninfo(), "atomic_ow", mode="overwrite", num_partitions=1
+    )
+    with pytest.raises(RuntimeError, match="syntax error"):
+        sink.write(bad)
+    out = P.run_psql(pgsrv.conninfo(), "SELECT id, note FROM atomic_ow;")
+    assert out.strip() == "1|keep"
+
+
+def test_copy_server_error_mid_stream_raises_psql_message(spark, pgsrv):
+    """The server rejects row 50 of a 100-row COPY that arrives in
+    8-row Arrow batches: the task fails with a RuntimeError carrying
+    psql's own message (not a BrokenPipeError from the pipe it was
+    writing), and the aborted COPY leaves the table empty."""
+    pgsrv.psql(
+        "DROP TABLE IF EXISTS capped; "
+        "CREATE TABLE capped (id bigint CHECK (id < 50), name text);"
+    )
+    df = spark.range(0, 100, 1, 1).selectExpr("id", "concat('r', id) AS name")
+    sink = P.PostgresCopySink(
+        pgsrv.conninfo(), "capped", mode="append", num_partitions=1
+    )
+    with _batch_rows(spark, 8), pytest.raises(Exception) as err:
+        sink.write(df)
+    msg = str(err.value)
+    assert "RuntimeError: psql failed" in msg, msg
+    assert "violates check constraint" in msg, msg
+    assert "BrokenPipeError" not in msg, msg
+    assert pgsrv.psql("SELECT count(*) FROM capped;").strip() == "0"
