@@ -5,8 +5,8 @@ The reference reads only Parquet (``/root/reference/src/main.rs:52``);
 Spark's built-in datasource, but the ``spark-avro`` module is an
 EXTERNAL jar that is not shipped in this environment and installs are
 off-limits — so Avro OCF (spec 1.11.x, a public format) is implemented
-here against the stdlib only (``zlib`` for the deflate codec) and run
-THROUGH Spark's execution model:
+here in Python (``zlib`` for the deflate codec, pyarrow's libsnappy
+binding for snappy) and run THROUGH Spark's execution model:
 
 - **read**: ``spark.read.format("binaryFile")`` lists and ships the
   container files; each file's blocks are decoded executor-side in an
@@ -882,28 +882,30 @@ def _resolving_decoder(writer, reader):
 
 # ------------------------------------------------------- snappy codec --
 #
-# Snappy is the dominant codec on wild Avro containers, and the C
-# library is absent here — so the BLOCK format (the public
-# format_description.txt: varint preamble + literal / 1-2-4-byte-offset
-# copy elements) is implemented from scratch against the stdlib, like
-# the rest of this module (r11 VERDICT item 3).  Avro frames each
-# snappy block with a 4-byte BIG-endian CRC32 of the UNCOMPRESSED data
-# (Avro spec, "Required Codecs / snappy"); helpers below implement the
-# raw block format and the Avro framing separately so each is testable.
+# Snappy is the dominant codec on wild Avro containers.  The raw BLOCK
+# format (the public format_description.txt: varint preamble + literal
+# / 1-2-4-byte-offset copy elements) goes through libsnappy via
+# pyarrow's codec.  Avro frames each snappy block with a 4-byte
+# BIG-endian CRC32 of the UNCOMPRESSED data (Avro spec, "Required
+# Codecs / snappy"); helpers below implement the raw block format and
+# the Avro framing separately so each is testable.
 
-_SNAPPY_MAX_ELEM = 64  # copy elements encode lengths 1..64 (tag>>2 <= 63)
+# Snappy's largest expansion is a 3-byte copy element emitting 64
+# bytes (64/3 ~ 21.3x), so a preamble past 22x the block is a lie.
+_SNAPPY_MAX_EXPANSION = 22
 
 
 def _snappy_decompress(buf: bytes) -> bytes:
-    """Raw snappy BLOCK format -> bytes.  Strict: validates the
-    preamble length, every element's bounds, and copy offsets —
-    untrusted container bytes must raise ValueError, never corrupt."""
-    L = len(buf)
-    n = 0
-    shift = 0
-    p = 0
+    """Raw snappy BLOCK format -> bytes.  Strict: untrusted container
+    bytes must raise ValueError, never corrupt.  The output size handed
+    to libsnappy is the block's OWN varint preamble (a larger size is
+    silently padded with garbage), refused before allocating when it
+    exceeds what the block could possibly expand to."""
+    import pyarrow as pa
+
+    n = shift = p = 0
     while True:
-        if p >= L:
+        if p >= len(buf):
             raise ValueError("snappy: truncated length preamble")
         b = buf[p]
         p += 1
@@ -913,116 +915,24 @@ def _snappy_decompress(buf: bytes) -> bytes:
         shift += 7
         if shift > 31:
             raise ValueError("snappy: length preamble varint too long")
-    out = bytearray()
-    while p < L:
-        tag = buf[p]
-        p += 1
-        typ = tag & 3
-        if typ == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:  # 60..63: length lives in the next 1..4 bytes
-                nb = ln - 59
-                if p + nb > L:
-                    raise ValueError("snappy: truncated literal length")
-                ln = int.from_bytes(buf[p : p + nb], "little")
-                p += nb
-            ln += 1
-            if p + ln > L:
-                raise ValueError("snappy: truncated literal body")
-            out += buf[p : p + ln]
-            p += ln
-            continue
-        if typ == 1:  # copy, 11-bit offset, length 4..11
-            if p >= L:
-                raise ValueError("snappy: truncated copy-1 element")
-            ln = 4 + ((tag >> 2) & 0x7)
-            off = ((tag >> 5) << 8) | buf[p]
-            p += 1
-        elif typ == 2:  # copy, 16-bit offset, length 1..64
-            if p + 2 > L:
-                raise ValueError("snappy: truncated copy-2 element")
-            ln = 1 + (tag >> 2)
-            off = int.from_bytes(buf[p : p + 2], "little")
-            p += 2
-        else:  # copy, 32-bit offset, length 1..64
-            if p + 4 > L:
-                raise ValueError("snappy: truncated copy-4 element")
-            ln = 1 + (tag >> 2)
-            off = int.from_bytes(buf[p : p + 4], "little")
-            p += 4
-        have = len(out)
-        if off == 0 or off > have:
-            raise ValueError("snappy: copy offset out of range")
-        if off >= ln:
-            out += out[have - off : have - off + ln]
-        else:
-            # overlapping copy: the pattern repeats (byte-by-byte
-            # semantics in the spec; vectorized here by tiling)
-            pat = bytes(out[have - off :])
-            out += (pat * (ln // off + 1))[:ln]
-    if len(out) != n:
+    if n > _SNAPPY_MAX_EXPANSION * len(buf):
         raise ValueError(
-            f"snappy: decompressed {len(out)} bytes, preamble says {n}"
+            f"snappy: preamble says {n} bytes, more than a {len(buf)}-byte "
+            "block can expand to"
         )
-    return bytes(out)
+    try:
+        return pa.Codec("snappy").decompress(
+            buf, decompressed_size=n, asbytes=True
+        )
+    except OSError as e:
+        raise ValueError(f"snappy: corrupt block ({e})") from e
 
 
 def _snappy_compress(data: bytes) -> bytes:
-    """Bytes -> raw snappy BLOCK format.  Greedy 4-byte-hash matcher
-    emitting 16-bit-offset copies — simple, spec-valid output (any
-    conformant decompressor accepts it), not libsnappy's exact byte
-    stream; round-trip identity is what the tests pin."""
-    out = bytearray()
-    n = len(data)
-    v = n
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
+    """Bytes -> raw snappy BLOCK format (libsnappy's byte stream)."""
+    import pyarrow as pa
 
-    def emit_literal(lit) -> None:
-        i = 0
-        while i < len(lit):
-            chunk = lit[i : i + 65536]
-            m = len(chunk) - 1
-            if m < 60:
-                out.append(m << 2)
-            elif m < 256:
-                out.append(60 << 2)
-                out.append(m)
-            else:
-                out.append(61 << 2)
-                out.extend(m.to_bytes(2, "little"))
-            out.extend(chunk)
-            i += len(chunk)
-
-    # fixed 2^14-slot hash table (libsnappy's discipline): constant
-    # memory however large or incompressible the block — a dict keyed
-    # by every 4-byte window allocated ~100x the block size on
-    # low-redundancy data (r12 review finding).  Collisions only cost
-    # a missed match; candidates are verified byte-for-byte below.
-    table = [-1] * 16384
-    i = 0
-    lit_start = 0
-    while i + 4 <= n:
-        key = data[i : i + 4]
-        h = (int.from_bytes(key, "little") * 0x1E35A7BD & 0xFFFFFFFF) >> 18
-        j = table[h]
-        table[h] = i
-        if j >= 0 and data[j : j + 4] == key and 0 < i - j <= 0xFFFF:
-            ln = 4
-            stop = min(n - i, _SNAPPY_MAX_ELEM)
-            while ln < stop and data[j + ln] == data[i + ln]:
-                ln += 1
-            emit_literal(data[lit_start:i])
-            out.append(((ln - 1) << 2) | 2)
-            out.extend((i - j).to_bytes(2, "little"))
-            i += ln
-            lit_start = i
-        else:
-            i += 1
-    emit_literal(data[lit_start:n])
-    return bytes(out)
+    return pa.Codec("snappy").compress(data, asbytes=True)
 
 
 def _avro_snappy_decode(block: bytes) -> bytes:

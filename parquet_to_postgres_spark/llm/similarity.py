@@ -1747,8 +1747,8 @@ def _pq_codes_np(
 def _pq_codebook_shape(codebooks: DataFrame) -> "tuple[int, int, int]":
     """(m, codes, dim) as defined BY a codebooks frame — one bounded agg
     over its m·codes rows.  The single source of truth shared by
-    :func:`ann_topk_pq` and :func:`pq_index_topk`, whose row-for-row
-    equivalence pin depends on both inferring identically."""
+    :func:`ann_topk_ivfpq` and the persisted-index entry points, whose
+    row-for-row equivalence pin depends on all inferring identically."""
     shape = codebooks.agg(
         (F.max("subspace") + 1).alias("m"),
         (F.max("code") + 1).alias("codes"),
@@ -1848,7 +1848,6 @@ def pq_train(
 def pq_encode(
     vectors: DataFrame,
     codebooks: DataFrame,
-    m: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
@@ -1864,16 +1863,10 @@ def pq_encode(
     ``dim``-dim floats become ``m`` small ints (64 doubles → 8 bytes at
     m=8), the 64× footprint drop that lets a 100 TB corpus's index fit
     hot.  Null vectors are dropped (no codes can be assigned).  ``m``
-    is INFERRED from the codebooks (they define the subspace
-    decomposition); the parameter is kept for signature stability but
-    a disagreeing value is ignored."""
+    is read from the codebooks: they define the subspace
+    decomposition."""
     cb_rows = codebooks.collect()  # bounded: m·codes tiny rows
     cb = {(r["subspace"], r["code"]): r["centroid"] for r in cb_rows}
-    # m is a property OF the codebooks — infer it rather than trusting
-    # the parameter (the former join-based encode silently joined only
-    # the subspaces the codebooks had, scoring d-length subvecs against
-    # differently-sized centroids when the caller's m disagreed with
-    # training's; pq_index_topk already infers from the store)
     m = max(r["subspace"] for r in cb_rows) + 1
     if dim % m:
         # same contract as pq_train: silently flooring d would encode
@@ -1898,133 +1891,6 @@ def pq_encode(
     return _pq_codes_np(_pq_barrier(vectors, id_col, vec_col), cb, m, d, n_codes)
 
 
-def ann_topk_pq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 8,
-    codes: int = 16,
-    rerank: int = 16,
-    codebooks: DataFrame | None = None,
-    max_iterations: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    handle_out: list | None = None,
-) -> DataFrame:
-    """ANN family #4 — product quantization with asymmetric distance.
-
-    Vectors are unit-normalized (so L2 order ≡ cosine order:
-    ``‖a−b‖² = 2 − 2·cos`` on the unit sphere), the corpus is encoded to
-    ``m`` codes, and each query precomputes a ``m × codes`` lookup table
-    of sub-distances to every codebook entry.  Scanning the corpus then
-    costs ``m`` table lookups per vector instead of ``dim`` multiplies —
-    the classic IVF-ADC inner loop, here expressed as one JVM-side
-    ``F.aggregate`` over the code array (no UDF).  The ADC top
-    ``k·rerank`` per query (partition-local top-k then merge — the
-    :func:`two_stage_topk` shape, never a global score sort) is
-    re-ranked with exact cosine on the original vectors via an equi-join
-    on the bounded candidate set.
-
-    ``rerank`` defaults to 16 (round-8 sweep): recall@10 at sf0.01 was
-    0.46–0.66 at rerank=4 across (m, codes) configs vs 0.92 at
-    m=8/codes=16/rerank=16 — and rerank is the CHEAPEST recall lever at
-    scale, since it widens only the bounded k·rerank candidate join per
-    query, not the per-vector encode (codes) or the codebook train (m).
-    The floor is pinned in tests/test_ann_recall.py; the sweep table is
-    in BASELINE.md.
-
-    Output schema matches the other families: (query_id, neighbor_id,
-    score=exact cosine, rank ≤ k).  Recall floors are pinned in
-    tests/test_ann_recall.py.  The zero-norm contract is UNIFORM with
-    the float families: zero-norm queries and corpus rows are dropped
-    up front (:func:`_nonzero_vec`), so a zero-norm query returns no
-    rows here exactly as it does after the sentinel-drop elsewhere —
-    the same degenerate input yields the same row count in every
-    family.
-
-    Long-lived sessions: pass ``handle_out=[]`` to receive an
-    :class:`AnnPrepHandle` covering the checkpoint blocks the training
-    loop and codebook pin; call ``.release()`` when done (the
-    :func:`ann_topk_all_methods` hygiene contract).
-    """
-    sc = corpus.sparkSession.sparkContext
-    before = persistent_rdd_ids(sc) if handle_out is not None else set()
-    c_unit = _unit_frame(corpus, id_col, vec_col)
-    q_unit = _unit_frame(queries, id_col, vec_col, "query_id", "qvec")
-    if codebooks is None:
-        codebooks = pq_train(
-            c_unit,
-            m=m,
-            codes=codes,
-            max_iterations=max_iterations,
-            id_col="cid",
-            vec_col="cvec",
-            dim=dim,
-        )
-    codebooks = stable_checkpoint(codebooks)
-    if handle_out is not None:
-        handle_out.append(AnnPrepHandle(sc, persistent_rdd_ids(sc) - before))
-    # (m, codes, dim) are properties OF the codebooks — shared inference
-    # with pq_index_topk, so caller-supplied codebooks that disagree
-    # with the defaults cannot mis-slice the query LUT or mis-index the
-    # ADC lookup (round-8 review finding — the exact bug class
-    # pq_encode's inference fixed, one level up).
-    m, codes, dim = _pq_codebook_shape(codebooks)
-    encoded = pq_encode(
-        c_unit, codebooks, m=m, id_col="cid", vec_col="cvec", dim=dim
-    )
-    return _pq_adc_topk(
-        encoded, codebooks, c_unit, q_unit, k, m, codes, rerank, dim
-    )
-
-
-def _pq_adc_topk(
-    encoded: DataFrame,
-    codebooks: DataFrame,
-    c_unit: DataFrame,
-    q_unit: DataFrame,
-    k: int,
-    m: int,
-    codes: int,
-    rerank: int,
-    dim: int,
-) -> DataFrame:
-    """Shared ADC scoring tail of :func:`ann_topk_pq` and
-    :func:`pq_index_topk` — expression-identical by construction, so the
-    persisted-index probe matches the in-memory operator row-for-row
-    (pinned in tests/test_ann_index.py)."""
-    # per-query LUT: lut[subspace*codes + code] = ‖q_sub − centroid‖²
-    luts = (
-        _subvectors(q_unit, m, dim // m, "query_id", "qvec")
-        .join(F.broadcast(codebooks), "subspace")
-        .select(
-            F.col("id").alias("query_id"),
-            "subspace",
-            "code",
-            sq_dist("subvec", "centroid").alias("dist"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "code", "dist"))),
-                lambda s: s["dist"],
-            ).alias("lut")
-        )
-    )
-    scored = (
-        encoded.withColumn("pid", F.spark_partition_id())
-        .crossJoin(F.broadcast(luts))
-        .select(
-            "pid",
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            _adc_sum(m, codes).alias("adist"),
-        )
-    )
-    return _adc_topk_tail(scored, c_unit, q_unit, k, k * rerank)
-
-
 def _adc_sum(m: int, codes: int) -> Column:
     """ADC distance over a row carrying ``lut`` and ``codes`` columns,
     as an UNROLLED scalar sum (m is a small constant): the
@@ -2032,8 +1898,7 @@ def _adc_sum(m: int, codes: int) -> Column:
     function — no codegen, no CSE (the round-7 HOF lesson) — and it
     sat on the per-(corpus-row × query) hot path; the unrolled form
     whole-stage-codegens.  Left-to-right + matches the fold's
-    association, so the doubles are bit-identical.  Shared by the PQ
-    and IVF-PQ families so their scoring cannot drift."""
+    association, so the doubles are bit-identical."""
     adc = None
     for j in range(m):
         term = F.element_at(
@@ -2056,10 +1921,7 @@ def _adc_topk_tail(
     """Two-stage ADC candidate selection + exact re-rank, over a
     ``scored`` frame of (pid, query_id, neighbor_id, adist): per-
     (query, partition) top-``kk``, global top-``kk``, then exact cosine
-    on the original vectors and the final rank ≤ k.  ONE tail shared by
-    :func:`_pq_adc_topk` and :func:`_ivfpq_adc_topk` — the families'
-    parity is structural, not asserted by comment (r12 review
-    finding)."""
+    on the original vectors and the final rank ≤ k."""
     local_w = Window.partitionBy("query_id", "pid").orderBy(
         "adist", "neighbor_id"
     )
@@ -2112,118 +1974,6 @@ def _validate_index_write_mode(mode: str, append_fn: str) -> str:
             f"{append_fn}"
         )
     return normalized
-
-
-def write_pq_index(
-    corpus: DataFrame,
-    path: str,
-    m: int = 8,
-    codes: int = 16,
-    max_iterations: int = 8,
-    mode: str = "overwrite",
-    codebooks: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> None:
-    """Persist a PQ index: ``<path>/codebooks`` (m·codes tiny rows) and
-    ``<path>/codes`` (one m-code row per vector — the 64× compressed
-    form that is the only per-vector state a 100 TB corpus keeps hot).
-
-    Codebooks are written FIRST and re-read for the encode pass, so the
-    stored codes are bit-consistent with the stored codebooks (the
-    float values that reach parquet are the ones encoding used), and
-    :func:`append_pq_index` can later encode new vectors against
-    exactly the same quantizer — which is what makes append == rebuild
-    an identity rather than an approximation."""
-    mode = _validate_index_write_mode(mode, "append_pq_index")
-    spark = corpus.sparkSession
-    c_unit = _unit_frame(corpus, id_col, vec_col)
-    if codebooks is None:
-        codebooks = pq_train(
-            c_unit,
-            m=m,
-            codes=codes,
-            max_iterations=max_iterations,
-            id_col="cid",
-            vec_col="cvec",
-            dim=dim,
-        )
-    codebooks.write.mode(mode).parquet(f"{path}/codebooks")
-    stored = spark.read.parquet(f"{path}/codebooks")
-    pq_encode(c_unit, stored, m=m, id_col="cid", vec_col="cvec", dim=dim).write.mode(
-        mode
-    ).parquet(f"{path}/codes")
-
-
-def append_pq_index(
-    new_vectors: DataFrame,
-    path: str,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> None:
-    """Incremental index maintenance: encode new vectors with the STORED
-    codebooks and append their codes.
-
-    PQ codes are a per-vector pure function of (vector, codebooks), so
-    append is EXACTLY a rebuild restricted to the new rows — no
-    retraining, no global pass, one linear encode job over the delta.
-    (Retrain only when the vector distribution drifts; then rewrite.)"""
-    spark = new_vectors.sparkSession
-    stored = spark.read.parquet(f"{path}/codebooks")
-    c_unit = _unit_frame(new_vectors, id_col, vec_col)
-    pq_encode(c_unit, stored, m=m, id_col="cid", vec_col="cvec", dim=dim).write.mode(
-        "append"
-    ).parquet(f"{path}/codes")
-
-
-def pq_index_topk(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rerank: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    corpus_unit: DataFrame | None = None,
-) -> DataFrame:
-    """Top-k against a persisted :func:`write_pq_index` store.
-
-    The scan side is the CODES table (m small ints per vector — the
-    index is 64× lighter than the float corpus, so the ADC pass streams
-    a fraction of the bytes a brute-force scan would); ``m``, ``codes``
-    and ``dim`` are inferred from the stored codebooks
-    (:func:`_pq_codebook_shape` — ``dim`` comes from the STORE, never
-    the caller: a stale argument would slice query subvectors at the
-    wrong width, NULL every ADC distance, and degrade silently).  The
-    exact re-rank joins the bounded candidate set back to the live
-    corpus table for full-precision cosine — scoring is
-    :func:`_pq_adc_topk`, expression-identical to :func:`ann_topk_pq`,
-    so results match the in-memory operator row-for-row given the same
-    codebooks.
-
-    ``corpus_unit`` lets repeat callers (the streaming writer) hand in
-    the already-normalized re-rank side as a ``(cid, cvec)`` frame
-    (e.g. persisted across triggers) instead of paying the
-    unit-normalization of the full corpus per call; when given,
-    ``corpus``/``id_col``/``vec_col`` are ignored for the corpus side.
-    A caller-built ``corpus_unit`` should drop zero-norm rows first
-    (:func:`_nonzero_vec`) to keep the uniform zero-norm contract;
-    the default path and the streaming writer do."""
-    codebooks = spark.read.parquet(f"{path}/codebooks")
-    m, codes, dim = _pq_codebook_shape(codebooks)
-    encoded = spark.read.parquet(f"{path}/codes")  # (id, codes)
-    c_unit = corpus_unit
-    if c_unit is None:
-        c_unit = _unit_frame(corpus, id_col, vec_col)
-    q_unit = _unit_frame(queries, id_col, vec_col, "query_id", "qvec")
-    return _pq_adc_topk(
-        encoded, codebooks, c_unit, q_unit, k, m, codes, rerank, dim
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2410,20 +2160,26 @@ def ann_topk_ivfpq(
     ONLY those cells' code lists: per probed cell it builds one
     ``m × codes`` LUT of sub-distances between the query's residual
     (``q − c_cell``) and the residual codebooks, then each candidate
-    costs ``m`` lookups.  Versus plain :func:`ann_topk_pq` (which ADC-
-    scans the whole corpus), the scan shrinks by ~``n_probes/n_cells``;
-    versus :func:`ann_topk_ivf` (which exact-scores probed cells), the
-    per-candidate cost drops from ``dim`` multiplies to ``m`` lookups
-    and the corpus rides as codes (64× smaller).  That double saving is
-    the billion-scale architecture.  Exact cosine re-rank of the top
-    ``k·rerank`` ADC candidates restores precision, same as the PQ
-    family.
+    costs ``m`` lookups.  Versus :func:`ann_topk_ivf` (which
+    exact-scores probed cells), the per-candidate cost drops from
+    ``dim`` multiplies to ``m`` lookups and the corpus rides as codes
+    (64× smaller).  That double saving is the billion-scale
+    architecture.  Exact cosine re-rank of the top ``k·rerank`` ADC
+    candidates restores precision.  Plain full-scan product
+    quantization is this operator with ``models`` built on ONE all-zero
+    coarse cell (``ivfpq_train(corpus, centroids=zero_cell)``) and
+    ``n_probes=1``: the residual ``x − 0`` is ``x`` itself.
 
     Deterministic end-to-end (hash seeding, fixed-point means, total-
     order ties); output schema matches every other family: (query_id,
     neighbor_id, score=exact cosine, rank ≤ k).  Zero-norm vectors are
     dropped up front (uniform family contract).  Recall floors are
-    pinned in tests/test_ann_recall.py."""
+    pinned in tests/test_ann_recall.py.
+
+    Long-lived sessions: pass ``handle_out=[]`` to receive an
+    :class:`AnnPrepHandle` covering the checkpoint blocks the training
+    loops and model pins hold; call ``.release()`` when done (the
+    :func:`ann_topk_all_methods` hygiene contract)."""
     sc = corpus.sparkSession.sparkContext
     before = persistent_rdd_ids(sc) if handle_out is not None else set()
     if models is None:
@@ -2470,12 +2226,12 @@ def _ivfpq_adc_topk(
     dim: int,
     probed: DataFrame | None = None,
 ) -> DataFrame:
-    """Cell-pruned twin of :func:`_pq_adc_topk`: the LUT is per
-    (query, probed cell) over the QUERY RESIDUAL and candidates join on
-    the cell instead of cross-joining the corpus; the ADC sum and the
-    two-stage top-k / exact re-rank tail are the SHARED
-    :func:`_adc_sum` / :func:`_adc_topk_tail` — parity with the PQ
-    family by construction."""
+    """IVF-PQ ADC scoring shared by :func:`ann_topk_ivfpq` and
+    :func:`ivfpq_index_topk`: the LUT is per (query, probed cell) over
+    the QUERY RESIDUAL, candidates join on the cell, and
+    :func:`_adc_sum` / :func:`_adc_topk_tail` score and re-rank them —
+    the persisted probe matches the in-memory operator by
+    construction."""
     if probed is None:
         probed = _nearest_cells_l2(
             q_unit, centroids.select("cell", "centroid"), n_probes, "qvec"
@@ -2557,11 +2313,11 @@ def write_ivfpq_index(
     ``<path>/codes`` hive-partitioned BY CELL — one directory per
     inverted list, so a probe opens only its cells' files.
 
-    Both models are written FIRST and re-read for the encode pass
-    (the :func:`write_pq_index` discipline): the stored codes are
-    bit-consistent with the stored models — the float values that
-    reach parquet are the ones encoding used — which is what makes
-    :func:`append_ivfpq_index`'s append == rebuild an identity."""
+    Both models are written FIRST and re-read for the encode pass: the
+    stored codes are bit-consistent with the stored models — the float
+    values that reach parquet are the ones encoding used — which is
+    what makes :func:`append_ivfpq_index`'s append == rebuild an
+    identity."""
     mode = _validate_index_write_mode(mode, "append_ivfpq_index")
     spark = corpus.sparkSession
     if models is None:
@@ -2610,7 +2366,6 @@ def append_ivfpq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
 ) -> None:
     """Incremental maintenance: encode the delta against the STORED
     models and append into the per-cell directories.  IVF-PQ codes are
@@ -2621,9 +2376,7 @@ def append_ivfpq_index(
     spark = new_vectors.sparkSession
     stored_c = spark.read.parquet(f"{path}/centroids")
     stored_b = spark.read.parquet(f"{path}/codebooks")
-    # dim from the STORE (codebooks define the decomposition) — the
-    # caller's argument is kept for signature stability but ignored,
-    # same contract as pq_encode's m inference.
+    # dim from the STORE: the codebooks define the decomposition
     _, _, dim = _pq_codebook_shape(stored_b)
     ivfpq_encode(
         new_vectors, stored_c, stored_b, id_col=id_col, vec_col=vec_col, dim=dim
@@ -2656,7 +2409,16 @@ def ivfpq_index_topk(
     :func:`_adc_topk_tail`, so results match the in-memory
     :func:`ann_topk_ivfpq` row-for-row given the same models (pinned
     in tests/test_ann_index.py).  The exact re-rank joins the bounded
-    candidate set back to the live corpus for full-precision cosine."""
+    candidate set back to the live corpus for full-precision cosine.
+
+    ``corpus_unit`` lets repeat callers (the streaming writer) hand in
+    the already-normalized re-rank side as a ``(cid, cvec)`` frame
+    (e.g. persisted across triggers) instead of paying the
+    unit-normalization of the full corpus per call; when given,
+    ``corpus``/``id_col``/``vec_col`` are ignored for the corpus side.
+    A caller-built ``corpus_unit`` should drop zero-norm rows first
+    (:func:`_nonzero_vec`) to keep the uniform zero-norm contract;
+    the default path and the streaming writer do."""
     from ..concurrency import overlap
 
     # The codebooks footer-read + shape agg and the centroids-side
@@ -2673,10 +2435,6 @@ def ivfpq_index_topk(
 
     def _probe_leg():
         centroids = spark.read.parquet(f"{path}/centroids")
-        # corpus_unit: repeat callers (the streaming writer) hand in
-        # the already-normalized (cid, cvec) re-rank side — the
-        # pq_index_topk contract, including the caller-drops-zero-norms
-        # note there.
         c_unit = corpus_unit
         if c_unit is None:
             c_unit = _unit_frame(corpus, id_col, vec_col)
@@ -2741,13 +2499,12 @@ def pq_balanced_permutation(
     subspace asc).
 
     ``normalize`` (default) measures the variances over UNIT vectors —
-    the space every PQ train/encode path actually quantizes
-    (:func:`write_pq_index` / :func:`ann_topk_pq` normalize before
-    training; raw-space variances would let a few long vectors rank
-    near-flat-after-normalization dimensions high and unbalance the
-    result in the space that matters).  For IVF-PQ, whose codebooks
-    quantize residuals, train the permutation on the residual frame
-    with ``normalize=False``.
+    the space a zero-cell :func:`ann_topk_ivfpq` quantizes (its
+    codebooks train on unit vectors; raw-space variances would let a
+    few long vectors rank near-flat-after-normalization dimensions high
+    and unbalance the result in the space that matters).  For IVF-PQ
+    over trained cells, whose codebooks quantize residuals, train the
+    permutation on the residual frame with ``normalize=False``.
 
     The scaled sums hold exactly while ``n · (4·max|x|)² · 2^20``
     stays inside int64 — fine for the sampled training sets PQ

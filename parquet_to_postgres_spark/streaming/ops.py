@@ -22,7 +22,6 @@ a real cluster; only the source/sink bindings are test-local.
 from __future__ import annotations
 
 import itertools
-from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -537,58 +536,6 @@ def stream_ann_topk_writer(
     return _write
 
 
-def stream_pq_topk_writer(
-    index_path: str,
-    corpus,
-    sink,
-    k: int = 10,
-    rerank: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cache_corpus: bool = True,
-) -> "callable":
-    """foreachBatch hook: PQ-ADC top-k for every query micro-batch
-    against a persisted :func:`~..llm.similarity.write_pq_index` store —
-    the product-quantization twin of :func:`stream_ann_topk_writer`,
-    serving the family with the best measured recall (0.92@10 at the
-    swept default, BASELINE.md).
-
-    The scan side per trigger is the CODES table (m small ints per
-    vector — 64× lighter than the float corpus); each micro-batch only
-    builds its own m·codes lookup tables and re-ranks the bounded
-    k·rerank candidates against ``corpus`` (the full-precision vectors,
-    needed ONLY for the bounded exact re-rank join, not the scan).
-    ``cache_corpus`` (default) persists the NORMALIZED re-rank side —
-    ``(cid, cvec)`` after unit-normalization, not the raw files — so a
-    long-running query neither rescans the corpus nor re-runs the
-    per-row ``_unit`` transform every trigger (round-8 review finding:
-    caching the raw frame left the transform on the per-trigger path);
-    the returned callable carries ``close()`` to release it (the
-    :func:`stream_near_dedup_writer` hygiene contract).
-
-    ``corpus`` is a DataFrame or a parquet PATH (str).  When the INDEX
-    is appended between triggers (``append_pq_index``), pass the
-    corpus as a PATH with ``cache_corpus=False``: the path is re-read
-    — fresh file listing — per trigger, so vectors appended alongside
-    the index become visible to the exact-re-rank join.  A DataFrame
-    captured at construction (cached or not) can NEVER see files
-    appended later — Spark fixes a frame's file listing at creation —
-    so with a stale frame the re-rank inner join would silently drop
-    every appended id from the top-k (same trap — and same fix — as
-    :func:`stream_near_dedup_writer`'s mutated band store; pinned in
-    tests/test_ann_index.py).  The codes side needs no such care:
-    :func:`~..llm.similarity.pq_index_topk` re-reads ``<index>/codes``
-    every call.  Inside foreachBatch the micro-batch is a plain
-    DataFrame, so the exact batch operator runs unchanged — streaming
-    and batch PQ ANN cannot diverge."""
-    from ..llm.similarity import pq_index_topk
-
-    topk = partial(pq_index_topk, k=k, rerank=rerank, id_col=id_col, vec_col=vec_col)
-    return _pq_family_writer(
-        topk, index_path, corpus, sink, id_col, vec_col, cache_corpus
-    )
-
-
 def stream_ivfpq_topk_writer(
     index_path: str,
     corpus,
@@ -602,51 +549,38 @@ def stream_ivfpq_topk_writer(
 ) -> "callable":
     """foreachBatch hook: IVF-PQ top-k for every query micro-batch
     against a persisted :func:`~..llm.similarity.write_ivfpq_index`
-    store — the cell-pruned twin of :func:`stream_pq_topk_writer`,
-    completing the streaming probe surface for ANN family #5.
+    store — the streaming probe for ANN family #5 (a store built on one
+    all-zero coarse cell serves plain full-scan PQ).
 
     Per trigger the scan side is only the PROBED cells' code
     partitions (the bounded probed-cell ``isin`` prunes at planning
     time inside :func:`~..llm.similarity.ivfpq_index_topk`); the
     micro-batch builds its own per-(query, cell) LUTs and re-ranks the
-    bounded k·rerank candidates against ``corpus``.  The
-    ``cache_corpus`` / path-form-corpus semantics, the
-    append-between-triggers trap (a DataFrame captured at construction
-    can never see files appended later — pass a PATH with
-    ``cache_corpus=False`` when :func:`append_ivfpq_index` runs
-    between triggers), and the ``close()`` hygiene contract are all
-    exactly :func:`stream_pq_topk_writer`'s — see the ledger there."""
-    from ..llm.similarity import ivfpq_index_topk
+    bounded k·rerank candidates against ``corpus`` (the full-precision
+    vectors, needed ONLY for the bounded exact re-rank join, not the
+    scan).  ``cache_corpus`` (default) persists the NORMALIZED re-rank
+    side — ``(cid, cvec)`` after unit-normalization, not the raw files
+    — so a long-running query neither rescans the corpus nor re-runs
+    the per-row ``_unit`` transform every trigger; the returned
+    callable carries ``close()`` to release it (the
+    :func:`stream_near_dedup_writer` hygiene contract).
 
-    topk = partial(
-        ivfpq_index_topk,
-        k=k,
-        n_probes=n_probes,
-        rerank=rerank,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    return _pq_family_writer(
-        topk, index_path, corpus, sink, id_col, vec_col, cache_corpus
-    )
-
-
-def _pq_family_writer(
-    topk,
-    index_path: str,
-    corpus,
-    sink,
-    id_col: str,
-    vec_col: str,
-    cache_corpus: bool,
-) -> "callable":
-    """The shared foreachBatch body of the PQ-family writers: per
-    trigger, ``topk(spark, index_path, corpus_df, batch_df,
-    corpus_unit=...)`` against ``corpus`` (re-read per trigger when it
-    is a path), with the unit-normalized re-rank side cached up front
-    under ``cache_corpus`` and released by the returned callable's
-    ``close()``."""
-    from ..llm.similarity import _unit_frame
+    ``corpus`` is a DataFrame or a parquet PATH (str).  When the INDEX
+    is appended between triggers (``append_ivfpq_index``), pass the
+    corpus as a PATH with ``cache_corpus=False``: the path is re-read
+    — fresh file listing — per trigger, so vectors appended alongside
+    the index become visible to the exact-re-rank join.  A DataFrame
+    captured at construction (cached or not) can NEVER see files
+    appended later — Spark fixes a frame's file listing at creation —
+    so with a stale frame the re-rank inner join would silently drop
+    every appended id from the top-k (same trap — and same fix — as
+    :func:`stream_near_dedup_writer`'s mutated band store; pinned in
+    tests/test_ann_index.py).  The codes side needs no such care:
+    :func:`~..llm.similarity.ivfpq_index_topk` re-reads
+    ``<index>/codes`` every call.  Inside foreachBatch the micro-batch
+    is a plain DataFrame, so the exact batch operator runs unchanged —
+    streaming and batch IVF-PQ ANN cannot diverge."""
+    from ..llm.similarity import _unit_frame, ivfpq_index_topk
 
     base = foreach_batch_writer(sink)
     corpus_path = corpus if isinstance(corpus, str) else None
@@ -672,7 +606,18 @@ def _pq_family_writer(
             else corpus
         )
         base(
-            topk(spark, index_path, corpus_df, batch_df, corpus_unit=c_unit),
+            ivfpq_index_topk(
+                spark,
+                index_path,
+                corpus_df,
+                batch_df,
+                k=k,
+                n_probes=n_probes,
+                rerank=rerank,
+                id_col=id_col,
+                vec_col=vec_col,
+                corpus_unit=c_unit,
+            ),
             batch_id,
         )
 

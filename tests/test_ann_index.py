@@ -243,212 +243,6 @@ def test_index_append_equals_full_rebuild(spark, split):
         assert a == b and a
 
 
-def test_pq_index_probe_matches_in_memory_operator(spark, split):
-    """pq_index_topk over a persisted write_pq_index store must equal
-    ann_topk_pq row-for-row when both use the same (stored) codebooks —
-    the shared _pq_adc_topk tail makes this an identity, and the test
-    pins that persistence round-trips the codebooks bit-exactly."""
-    import tempfile
-
-    corpus, queries = split
-    with tempfile.TemporaryDirectory() as d:
-        S.write_pq_index(corpus, f"{d}/idx", max_iterations=3)
-        stored_cb = spark.read.parquet(f"{d}/idx/codebooks")
-        got = S.pq_index_topk(spark, f"{d}/idx", corpus, queries, k=7)
-        mem = S.ann_topk_pq(corpus, queries, k=7, codebooks=stored_cb)
-
-        def canon(df):
-            return sorted(
-                (r["query_id"], r["neighbor_id"], repr(r["score"]), r["rank"])
-                for r in df.collect()
-            )
-
-        assert canon(got) == canon(mem)
-
-
-def test_pq_index_append_equals_full_rebuild(spark, split):
-    """Appending a delta through append_pq_index yields byte-identical
-    codes to rebuilding the whole index with the same codebooks — PQ
-    encoding is a per-vector pure function of (vector, codebooks)."""
-    import tempfile
-
-    corpus, queries = split
-    old = corpus.where(F.col("vec_id") < 300)
-    delta = corpus.where(F.col("vec_id") >= 300)
-    with tempfile.TemporaryDirectory() as d:
-        S.write_pq_index(old, f"{d}/inc", max_iterations=3)
-        S.append_pq_index(delta, f"{d}/inc")
-        cb = spark.read.parquet(f"{d}/inc/codebooks")
-        S.write_pq_index(corpus, f"{d}/full", codebooks=cb)
-
-        def canon(path):
-            return sorted(
-                (r["id"], tuple(r["codes"]))
-                for r in spark.read.parquet(f"{path}/codes").collect()
-            )
-
-        assert canon(f"{d}/inc") == canon(f"{d}/full")
-        # probing the incrementally-built index works end-to-end
-        got = S.pq_index_topk(spark, f"{d}/inc", corpus, queries, k=5)
-        assert got.count() == queries.count() * 5
-
-
-def test_streaming_pq_probe_matches_batch_operator(spark, split):
-    """availableNow query stream through stream_pq_topk_writer lands
-    exactly the batch pq_index_topk rows in the sink — the PQ twin of
-    the LSH streaming-probe pin, covering the best-recall family's
-    serving path (round 8)."""
-    import shutil
-
-    from parquet_to_postgres_spark.etl import ParquetSink
-    from parquet_to_postgres_spark.streaming import ops
-
-    corpus, queries = split
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/pqidx"
-        S.write_pq_index(corpus, path, max_iterations=2)
-
-        src = f"{d}/in"
-        os.makedirs(src)
-        shutil.copy(
-            f"{SF_SMOKE}/embeddings.parquet", f"{src}/embeddings.parquet"
-        )
-        stream = (
-            spark.readStream.schema(
-                spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").schema
-            )
-            .option("pathGlobFilter", "embeddings.parquet")
-            .parquet(src)
-            .where(F.col("vec_id") < 5)
-        )
-        sink = ParquetSink(f"{d}/out", mode="append")
-        writer = ops.stream_pq_topk_writer(path, corpus, sink, k=10)
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .option("checkpointLocation", f"{d}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        writer.close()
-
-        def canon(rows):
-            return sorted(
-                (r["query_id"], r["neighbor_id"], repr(r["score"]), r["rank"])
-                for r in rows
-            )
-
-        got = canon(spark.read.parquet(f"{d}/out").collect())
-        want = canon(
-            S.pq_index_topk(spark, path, corpus, queries, k=10).collect()
-        )
-        assert got == want and got
-
-
-def test_streaming_pq_probe_sees_index_appended_between_triggers(spark, split):
-    """The documented mutating-index serving contract, end-to-end:
-    append_pq_index between triggers with a PATH-form corpus and
-    cache_corpus=False must surface the appended ids in later
-    triggers' top-k (r8 verdict item — the LSH band-store twin had
-    this pin, the PQ writer didn't).  The delta vectors ARE the
-    trigger-2 query vectors, so if visible they MUST be each query's
-    rank-1 self-match; trigger 1 runs before the append and must not
-    see them.  A DataFrame-form corpus cannot pass this test: Spark
-    fixes a frame's file listing at creation, which is exactly why the
-    writer grew the path form."""
-    import shutil
-
-    from parquet_to_postgres_spark.etl import ParquetSink
-    from parquet_to_postgres_spark.streaming import ops
-
-    corpus, _ = split
-    old = corpus.where(F.col("vec_id") < 300)
-    # delta ids offset by +10000 so they collide with nothing
-    delta = corpus.where(F.col("vec_id") >= 300).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
-    )
-    with tempfile.TemporaryDirectory() as d:
-        idx = f"{d}/pqidx"
-        cdir = f"{d}/corpus"
-        old.select("vec_id", "embedding").write.parquet(cdir)
-        S.write_pq_index(spark.read.parquet(cdir), idx, max_iterations=2)
-
-        src = f"{d}/in"
-        os.makedirs(src)
-        schema = "vec_id long, embedding array<float>"
-        sink = ParquetSink(f"{d}/out", mode="append")
-        writer = ops.stream_pq_topk_writer(
-            idx, cdir, sink, k=5, cache_corpus=False
-        )
-
-        def run_trigger(qdf, fname):
-            qdf.coalesce(1).write.parquet(f"{d}/stage_{fname}")
-            part = [
-                f
-                for f in os.listdir(f"{d}/stage_{fname}")
-                if f.endswith(".parquet")
-            ][0]
-            shutil.copy(f"{d}/stage_{fname}/{part}", f"{src}/{fname}.parquet")
-            q = (
-                spark.readStream.schema(schema)
-                .parquet(src)
-                .writeStream.foreachBatch(writer)
-                .option("checkpointLocation", f"{d}/ckpt")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        # trigger 1: query with the (future) delta vectors under their
-        # ORIGINAL ids — the delta ids must not appear anywhere yet
-        q1 = corpus.where(F.col("vec_id") >= 300).select(
-            "vec_id", "embedding"
-        )
-        run_trigger(q1, "batch1")
-        out1 = spark.read.parquet(f"{d}/out")
-        assert out1.where(F.col("neighbor_id") >= 10000).count() == 0
-        n1 = out1.count()
-        assert n1 > 0
-
-        # mutate: append codes to the index AND vectors to the corpus dir
-        S.append_pq_index(delta, idx)
-        delta.write.mode("append").parquet(cdir)
-
-        # trigger 2: same embeddings, delta ids — each must self-match
-        run_trigger(delta, "batch2")
-        out2 = spark.read.parquet(f"{d}/out").where(
-            F.col("query_id") >= 10000
-        )
-        self_hits = {
-            r["query_id"]
-            for r in out2.where(
-                (F.col("neighbor_id") == F.col("query_id"))
-                & (F.col("rank") == 1)
-            ).collect()
-        }
-        want_ids = {r["vec_id"] for r in delta.select("vec_id").collect()}
-        assert self_hits == want_ids and want_ids
-        writer.close()  # no-op for cache_corpus=False, must not raise
-
-
-def test_streaming_pq_path_corpus_with_cache_is_rejected(spark):
-    """Path-form corpus under cache_corpus=True is a contract error —
-    the cached snapshot would silently defeat the per-trigger re-read
-    (same rule as the near-dedup writer's path-form store)."""
-    from parquet_to_postgres_spark.streaming import ops
-
-    class _NullSink:
-        mode = "append"
-
-        def write(self, df):
-            df.count()
-
-    with pytest.raises(ValueError, match="path-form"):
-        ops.stream_pq_topk_writer("/tmp/idx", "/tmp/corpus", _NullSink())
-
-
 # ----------------------------------------------------------- IVF-PQ ----
 
 
@@ -608,8 +402,8 @@ def test_ivfpq_rebuild_replaces_all_cells_under_dynamic_overwrite(spark, split):
 def test_streaming_ivfpq_probe_matches_batch_operator(spark, split):
     """availableNow query stream through stream_ivfpq_topk_writer lands
     exactly the batch ivfpq_index_topk rows in the sink — the cell-
-    pruned family's serving path, same contract as the LSH and PQ
-    streaming-probe pins."""
+    pruned family's serving path, same contract as the LSH
+    streaming-probe pin."""
     import shutil
 
     from parquet_to_postgres_spark.etl import ParquetSink
@@ -658,6 +452,110 @@ def test_streaming_ivfpq_probe_matches_batch_operator(spark, split):
         assert got == want and got
 
 
+def test_streaming_ivfpq_probe_sees_index_appended_between_triggers(
+    spark, split
+):
+    """The documented mutating-index serving contract, end-to-end:
+    append_ivfpq_index between triggers with a PATH-form corpus and
+    cache_corpus=False must surface the appended ids in later
+    triggers' top-k.  The delta vectors ARE the
+    trigger-2 query vectors, so if visible they MUST be each query's
+    rank-1 self-match; trigger 1 runs before the append and must not
+    see them.  A DataFrame-form corpus cannot pass this test: Spark
+    fixes a frame's file listing at creation, which is exactly why the
+    writer grew the path form."""
+    import shutil
+
+    from parquet_to_postgres_spark.etl import ParquetSink
+    from parquet_to_postgres_spark.streaming import ops
+
+    corpus, _ = split
+    old = corpus.where(F.col("vec_id") < 300)
+    # delta ids offset by +10000 so they collide with nothing
+    delta = corpus.where(F.col("vec_id") >= 300).select(
+        (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
+    )
+    with tempfile.TemporaryDirectory() as d:
+        idx = f"{d}/ivfpqidx"
+        cdir = f"{d}/corpus"
+        old.select("vec_id", "embedding").write.parquet(cdir)
+        S.write_ivfpq_index(spark.read.parquet(cdir), idx, **IVFPQ_KW)
+
+        src = f"{d}/in"
+        os.makedirs(src)
+        schema = "vec_id long, embedding array<float>"
+        sink = ParquetSink(f"{d}/out", mode="append")
+        writer = ops.stream_ivfpq_topk_writer(
+            idx, cdir, sink, k=5, cache_corpus=False
+        )
+
+        def run_trigger(qdf, fname):
+            qdf.coalesce(1).write.parquet(f"{d}/stage_{fname}")
+            part = [
+                f
+                for f in os.listdir(f"{d}/stage_{fname}")
+                if f.endswith(".parquet")
+            ][0]
+            shutil.copy(f"{d}/stage_{fname}/{part}", f"{src}/{fname}.parquet")
+            q = (
+                spark.readStream.schema(schema)
+                .parquet(src)
+                .writeStream.foreachBatch(writer)
+                .option("checkpointLocation", f"{d}/ckpt")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        # trigger 1: query with the (future) delta vectors under their
+        # ORIGINAL ids — the delta ids must not appear anywhere yet
+        q1 = corpus.where(F.col("vec_id") >= 300).select(
+            "vec_id", "embedding"
+        )
+        run_trigger(q1, "batch1")
+        out1 = spark.read.parquet(f"{d}/out")
+        assert out1.where(F.col("neighbor_id") >= 10000).count() == 0
+        n1 = out1.count()
+        assert n1 > 0
+
+        # mutate: append codes to the index AND vectors to the corpus dir
+        S.append_ivfpq_index(delta, idx)
+        delta.write.mode("append").parquet(cdir)
+
+        # trigger 2: same embeddings, delta ids — each must self-match
+        run_trigger(delta, "batch2")
+        out2 = spark.read.parquet(f"{d}/out").where(
+            F.col("query_id") >= 10000
+        )
+        self_hits = {
+            r["query_id"]
+            for r in out2.where(
+                (F.col("neighbor_id") == F.col("query_id"))
+                & (F.col("rank") == 1)
+            ).collect()
+        }
+        want_ids = {r["vec_id"] for r in delta.select("vec_id").collect()}
+        assert self_hits == want_ids and want_ids
+        writer.close()  # no-op for cache_corpus=False, must not raise
+
+
+def test_streaming_ivfpq_path_corpus_with_cache_is_rejected(spark):
+    """Path-form corpus under cache_corpus=True is a contract error —
+    the cached snapshot would silently defeat the per-trigger re-read
+    (same rule as the near-dedup writer's path-form store)."""
+    from parquet_to_postgres_spark.streaming import ops
+
+    class _NullSink:
+        mode = "append"
+
+        def write(self, df):
+            df.count()
+
+    with pytest.raises(ValueError, match="path-form"):
+        ops.stream_ivfpq_topk_writer("/tmp/idx", "/tmp/corpus", _NullSink())
+
+
 def test_index_model_writers_reject_append_mode(spark, split):
     """mode='append' on the MODEL writers would stack a second model
     into the same directories — the codebook dict build keeps one
@@ -665,9 +563,8 @@ def test_index_model_writers_reject_append_mode(spark, split):
     error (ADVICE r12).  The dedicated append_* entry points are the
     supported append path."""
     corpus, _ = split
-    for fn in (S.write_pq_index, S.write_ivfpq_index):
-        with pytest.raises(ValueError, match="append_"):
-            fn(corpus, "/tmp/never-written", mode="append")
+    with pytest.raises(ValueError, match="append_ivfpq_index"):
+        S.write_ivfpq_index(corpus, "/tmp/never-written", mode="append")
 
 
 def test_ivfpq_gate_probe_cache_branch(spark):

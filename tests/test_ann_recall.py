@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from parquet_to_postgres_spark.llm import similarity as S
 from parquet_to_postgres_spark.tables import load_table
 
+from .conftest import zero_cell
+
 # r16 (VERDICT r15 item 6): statistical recall sweeps over seeded vector corpora —
 # excluded from the default (< 15 min) run; `pytest -m slow` runs it.
 pytestmark = pytest.mark.slow
@@ -46,13 +48,22 @@ def _recall_at_k(spark, ann_fn, k: int = K) -> float:
     return hits.count() / (n_queries * k)
 
 
+def _pq_topk(corpus, queries, k: int = K, **train_kw):
+    """Plain product quantization: IVF-PQ over one all-zero coarse
+    cell, one probe — a full ADC scan of the corpus codes."""
+    models = S.ivfpq_train(
+        corpus, centroids=zero_cell(corpus.sparkSession), **train_kw
+    )
+    return S.ann_topk_ivfpq(corpus, queries, k=k, n_probes=1, models=models)
+
+
 @pytest.fixture(scope="module")
 def recalls(spark):
     return {
         "lsh": _recall_at_k(spark, S.ann_topk_lsh),
         "ivf": _recall_at_k(spark, S.ann_topk_ivf),
         "quant": _recall_at_k(spark, S.ann_topk_quantized),
-        "pq": _recall_at_k(spark, S.ann_topk_pq),
+        "pq": _recall_at_k(spark, _pq_topk),
         "exact_two_stage": _recall_at_k(spark, S.two_stage_topk),
     }
 
@@ -133,9 +144,10 @@ def test_all_methods_shared_prep_equals_standalone(spark):
 
 
 def test_ann_pq_recall_floor(recalls):
-    """Product quantization (m=8 subspaces × 16 codes, ADC candidates,
-    exact re-rank of 16·k — the round-8 swept default) measured 0.92
-    recall@10 at sf0.01 — the best of the four families on this corpus.
+    """Product quantization (zero-cell IVF-PQ, full ADC scan: m=8
+    subspaces × 16 codes, ADC candidates, exact re-rank of 16·k — the
+    round-8 swept default) measured 0.92 recall@10 at sf0.01 — the
+    best of the four families on this corpus.
     Floor pinned at 0.8 (the VERDICT r7 item-3 production bar) below the
     measurement.  Sweep context: rerank=4 → 0.60, rerank=8 → 0.76 on the
     same codebooks; the full (m, codes, rerank) grid is in BASELINE.md."""
@@ -151,7 +163,7 @@ def test_pq_encode_deterministic_and_shaped(spark):
 
     def run():
         cb = S.pq_train(emb, m=m, codes=codes, max_iterations=3, dim=dim)
-        enc = S.pq_encode(emb, cb, m=m, dim=dim)
+        enc = S.pq_encode(emb, cb, dim=dim)
         return cb, enc
 
     cb1, enc1 = run()
@@ -166,10 +178,10 @@ def test_pq_encode_deterministic_and_shaped(spark):
     assert sorted(map(repr, cbr)) == sorted(map(repr, cb2.collect()))
 
 
-def test_pq_handle_releases_pinned_blocks(spark):
-    """ann_topk_pq(handle_out=[]) returns a release handle that frees
-    every checkpoint block the training loop pinned (the
-    ann_topk_all_methods hygiene contract)."""
+def test_ivfpq_handle_releases_pinned_blocks(spark):
+    """ann_topk_ivfpq(handle_out=[]) returns a release handle that
+    frees every checkpoint block the training loops and model pins
+    hold (the ann_topk_all_methods hygiene contract)."""
     from parquet_to_postgres_spark.checkpoint import persistent_rdd_ids
 
     emb = load_table(spark, SF_RECALL, "embeddings").limit(300)
@@ -178,8 +190,9 @@ def test_pq_handle_releases_pinned_blocks(spark):
     sc = spark.sparkContext
     base = persistent_rdd_ids(sc)
     handles = []
-    got = S.ann_topk_pq(
-        corpus, queries, k=5, max_iterations=2, handle_out=handles
+    got = S.ann_topk_ivfpq(
+        corpus, queries, k=5, n_cells=2, coarse_iterations=2,
+        pq_iterations=2, handle_out=handles,
     )
     assert got.count() > 0
     assert len(handles) == 1
@@ -212,8 +225,11 @@ def test_pq_codebooks_dense_on_tiny_corpus(spark):
     """Review finding: hash init on a tiny corpus leaves (subspace,
     code) cells memberless, and the positional ADC lookup table then
     misaligns every index after the first gap.  Codebooks must be dense
-    (m*codes rows) regardless of corpus size, and the PQ query must
-    still return exact-k results."""
+    (m*codes rows) regardless of corpus size, and the zero-cell PQ
+    query must still return exact-k results, in memory and from a
+    persisted index."""
+    import tempfile
+
     from parquet_to_postgres_spark.llm import similarity as S
 
     emb = (
@@ -228,24 +244,39 @@ def test_pq_codebooks_dense_on_tiny_corpus(spark):
         (j, c) for j in range(4) for c in range(16)
     }
     queries = emb.limit(3)
-    out = S.ann_topk_pq(emb, queries, k=5, m=4, codes=16, max_iterations=2)
-    per_q = out.groupBy("query_id").count().collect()
-    assert len(per_q) == 3 and all(r["count"] == 5 for r in per_q)
+    models = S.ivfpq_train(
+        emb, centroids=zero_cell(spark), m=4, codes=16, pq_iterations=2
+    )
+    assert models[1].count() == 4 * 16
+    with tempfile.TemporaryDirectory() as d:
+        S.write_ivfpq_index(emb, f"{d}/idx", models=models)
+        for out in (
+            S.ann_topk_ivfpq(emb, queries, k=5, n_probes=1, models=models),
+            S.ivfpq_index_topk(
+                spark, f"{d}/idx", emb, queries, k=5, n_probes=1
+            ),
+        ):
+            per_q = out.groupBy("query_id").count().collect()
+            assert len(per_q) == 3 and all(r["count"] == 5 for r in per_q)
 
 
-def test_pq_topk_infers_shape_from_caller_codebooks(spark):
-    """ann_topk_pq must derive (m, codes, dim) from the codebooks it is
-    given, exactly like pq_index_topk does from a store: a caller who
+def test_ivfpq_topk_infers_shape_from_caller_codebooks(spark):
+    """ann_topk_ivfpq must derive (m, codes, dim) from the models it is
+    given, exactly like ivfpq_index_topk does from a store: a caller who
     trains m=4/codes=8 and passes the result with default arguments must
-    get the same answer as one who spells the shape out (round-8 review
-    finding — the mismatch previously mis-sliced the query LUT and
-    mis-indexed the ADC scan)."""
+    get the same answer as one who spells the shape out, and as a probe
+    of a store written with those models (round-8 review finding — the
+    mismatch previously mis-sliced the query LUT and mis-indexed the ADC
+    scan)."""
+    import tempfile
+
     emb = load_table(spark, SF_RECALL, "embeddings")
     corpus = emb.where(F.col("vec_id") >= 5)
     queries = emb.where(F.col("vec_id") < 5)
-    cb = S.pq_train(corpus, m=4, codes=8, max_iterations=2).localCheckpoint(
-        eager=True
+    cents, books = S.ivfpq_train(
+        corpus, centroids=zero_cell(spark), m=4, codes=8, pq_iterations=2
     )
+    models = (cents, books.localCheckpoint(eager=True))
 
     def canon(df):
         return sorted(
@@ -253,11 +284,22 @@ def test_pq_topk_infers_shape_from_caller_codebooks(spark):
             for r in df.collect()
         )
 
-    implicit = canon(S.ann_topk_pq(corpus, queries, k=5, codebooks=cb))
-    explicit = canon(
-        S.ann_topk_pq(corpus, queries, k=5, m=4, codes=8, codebooks=cb)
+    implicit = canon(
+        S.ann_topk_ivfpq(corpus, queries, k=5, n_probes=1, models=models)
     )
-    assert implicit == explicit and len(implicit) == 25
+    explicit = canon(
+        S.ann_topk_ivfpq(
+            corpus, queries, k=5, n_probes=1, m=4, codes=8, models=models
+        )
+    )
+    with tempfile.TemporaryDirectory() as d:
+        S.write_ivfpq_index(corpus, f"{d}/idx", models=models)
+        stored = canon(
+            S.ivfpq_index_topk(
+                spark, f"{d}/idx", corpus, queries, k=5, n_probes=1
+            )
+        )
+    assert implicit == explicit == stored and len(implicit) == 25
 
 
 def test_pq_argmin_budget_holds_for_every_shape(spark):
@@ -684,7 +726,7 @@ def _aniso_frame(spark, n=256, dim=16):
 def _reconstruction_mse(spark, vecs, m, dim):
     """Train+encode, decode via codebook lookup, mean squared error."""
     books = S.pq_train(vecs, m=m, codes=8, max_iterations=6, dim=dim)
-    enc = S.pq_encode(vecs, books, m=m, dim=dim)
+    enc = S.pq_encode(vecs, books, dim=dim)
     cb = {
         (r["subspace"], r["code"]): list(r["centroid"])
         for r in books.collect()

@@ -74,16 +74,17 @@ def test_topk_paths_never_emit_zero_norm_sentinel(spark):
         .select("vec_id", "embedding", label)
         .repartition(4)
     )
-    from parquet_to_postgres_spark.llm.similarity import ann_topk_pq
+    from parquet_to_postgres_spark.llm.similarity import ann_topk_ivfpq
 
     def pq(corpus, queries, k):
         # PQ pre-filters zero-norm rows (uniform contract, ADVICE r8)
         # instead of sentinel-dropping — same observable row counts.
-        return ann_topk_pq(
-            corpus, queries, k=k, m=4, dim=16, max_iterations=2
+        return ann_topk_ivfpq(
+            corpus, queries, k=k, n_cells=2, m=4, dim=16,
+            coarse_iterations=2, pq_iterations=2,
         )
 
-    pq.__name__ = "ann_topk_pq"
+    pq.__name__ = "ann_topk_ivfpq"
     for fn in (
         brute_force_topk,
         two_stage_topk,
@@ -448,6 +449,37 @@ def test_pq_encode_matches_duckdb(spark):
         assert len(want) == len(rows) - 1  # the NULL vector drops
         assert _golden_rows(got.collect()) == _golden_rows(want), copies
         con.close()
+
+
+def test_zero_cell_ivfpq_is_plain_pq(spark):
+    """With ONE all-zero coarse cell, IVF-PQ is plain product
+    quantization: the residual ``x − 0`` is ``x``, so ``ivfpq_train``'s
+    codebooks equal ``pq_train``'s over the unit vectors, and
+    ``ivfpq_encode``'s codes equal ``pq_encode``'s, id for id.  Plain
+    PQ has no entry point of its own; this pins the construction that
+    serves it against any drift in the residual math."""
+    from parquet_to_postgres_spark.llm import similarity as S
+    from parquet_to_postgres_spark.tables import load_table
+
+    from .conftest import zero_cell
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    unit = S._unit_frame(emb, "vec_id", "embedding")
+    cents, books = S.ivfpq_train(
+        emb, centroids=zero_cell(spark), pq_iterations=2
+    )
+    books = books.localCheckpoint(eager=True)
+    plain = S.pq_train(unit, max_iterations=2, id_col="cid", vec_col="cvec")
+    assert sorted(map(repr, books.collect())) == sorted(
+        map(repr, plain.collect())
+    )
+    got = S.ivfpq_encode(emb, cents, books).collect()
+    want = S.pq_encode(unit, books, id_col="cid", vec_col="cvec").collect()
+    assert {r["cell"] for r in got} == {0}
+    assert sorted((r["id"], tuple(r["codes"])) for r in got) == sorted(
+        (r["id"], tuple(r["codes"])) for r in want
+    )
+    assert len(got) == emb.where(S._nonzero_vec("embedding")).count()
 
 
 def _random_docs(spark, n, seed=23):

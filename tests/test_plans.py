@@ -507,21 +507,30 @@ def test_char_lm_scoring_model_joins_broadcast(spark):
 
 
 def test_pq_adc_scan_corpus_side_unshuffled(spark):
-    """The PQ ADC pass is a pure scan of the encoded corpus: the query
-    LUTs broadcast (nested-loop on the tiny side is the deliberate
-    brute-force-over-codes shape); the encoded corpus must reach the
-    scoring operator with no exchange keyed on its rows, and the
-    argmin/encode aggregates must be partial (map-side combined)."""
+    """The PQ ADC pass is a pure scan of the encoded corpus: the
+    per-(query, cell) LUTs broadcast to the codes (with one all-zero
+    coarse cell this is plain full-scan PQ); the encoded corpus must
+    reach the scoring operator with no exchange keyed on its rows, and
+    the argmin/encode aggregates must be partial (map-side combined)."""
     from pyspark.sql import functions as F
 
     from parquet_to_postgres_spark.llm import similarity as S
     from parquet_to_postgres_spark.tables import load_table
 
+    from .conftest import zero_cell
+
     emb = load_table(spark, SF_SMOKE, "embeddings")
     corpus = emb.where(F.col("vec_id") >= 5)
     queries = emb.where(F.col("vec_id") < 5)
-    cb = S.pq_train(corpus, max_iterations=2).localCheckpoint(eager=True)
-    p = plan(S.ann_topk_pq(corpus, queries, k=5, codebooks=cb))
+    cents, cb = S.ivfpq_train(
+        corpus, centroids=zero_cell(spark), pq_iterations=2
+    )
+    cb = cb.localCheckpoint(eager=True)
+    p = plan(
+        S.ann_topk_ivfpq(
+            corpus, queries, k=5, n_probes=1, models=(cents, cb)
+        )
+    )
     # candidate generation: broadcast of the bounded LUT set only
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     # the LUT build's reassembly aggregate is map-side combinable
