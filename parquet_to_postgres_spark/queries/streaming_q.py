@@ -129,9 +129,15 @@ def stream_watermark_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("T5",),
 )
 def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5: streaming dropDuplicates with watermark-bounded state."""
+    """T5: streaming dropDuplicates with watermark-bounded state.
+
+    Runs without the no-data batch: a watermarked ``dropDuplicates`` in
+    append mode emits each new key in the data batch, so the no-data
+    batch would only evict state."""
     return ST.run_stream_to_df(
-        ST.streaming_dedup_keys(ST.events_stream(spark, sf_dir)), "append"
+        ST.streaming_dedup_keys(ST.events_stream(spark, sf_dir)),
+        "append",
+        no_data_batch=False,
     )
 
 
@@ -175,8 +181,13 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream interval join (click attribution); on a
-    finite availableNow input it emits exactly the batch join."""
+    finite availableNow input it emits exactly the batch join.
+
+    Runs without the no-data batch: an inner interval join emits each
+    match in the data batch, so the no-data batch would only evict
+    state."""
     return ST.run_stream_to_df(
         ST.stream_stream_click_attribution(ST.events_stream(spark, sf_dir)),
         "append",
+        no_data_batch=False,
     )

@@ -206,13 +206,15 @@ def _conf_dir_skip_reason(spark_home: str) -> str | None:
 def _archive_key(spark_home: str, java: str | None, class_path: str) -> str:
     """Hash of everything the archive's classes were loaded from: the JDK
     (the ``java`` binary and its ``release`` file), ``SPARK_HOME`` and the
-    Spark version, the launch jars by name and size, and the extra
-    driver classpath."""
+    Spark version, the launch jars by name and size, the extra driver
+    classpath, and the empty conf dir that heads the launch classpath
+    (so a copied or moved checkout gets its own archive)."""
     import pyspark
 
     java = os.path.realpath(java or "java")
     parts = [java, _read(os.path.join(os.path.dirname(os.path.dirname(java)), "release"))]
     parts += [os.path.realpath(spark_home), pyspark.__version__, class_path]
+    parts.append(os.path.realpath(os.path.join(_CDS_DIR, "conf")))
     jars = os.path.join(spark_home, "jars")
     if os.path.isdir(jars):
         for name in sorted(os.listdir(jars)):

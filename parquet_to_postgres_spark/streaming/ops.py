@@ -71,21 +71,29 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
+def run_stream_to_df(
+    result: DataFrame, output_mode: str, no_data_batch: bool = True
+) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) and return
     the final result via a memory sink.
 
-    Stateful streaming allocates one state-store directory per shuffle
-    partition per batch; for the bounded test harness 8 partitions cut
-    that fixed cost 4x vs the batch default.  (On a real cluster size
-    this to key cardinality / executor count, not to the batch value.)
+    Stateful streaming opens one state store per shuffle partition per
+    batch, so the run caps ``spark.sql.shuffle.partitions`` at
+    ``min(8, session value)``: it lowers a large batch default and never
+    raises a small one.  (On a real cluster size this to key cardinality
+    / executor count, not to the batch value.)
 
-    The 8-partition regime is set on the session for the query's run and
-    the previous value is restored afterwards, also when the query fails
-    to start.  Harness runs on one session are therefore sequential: two
-    overlapped runs would each save the other's 8 and one could leave it
-    set.  A query that fails while running also drops its memory-sink
-    view before the error propagates.
+    ``no_data_batch`` sets ``spark.sql.streaming.noDataMicroBatches.enabled``
+    for the run.  The no-data batch after the data batch advances the
+    watermark: it evicts state and emits what the new watermark closes.
+    Turn it off only for a query that emits every row in its data batch
+    (a watermarked ``dropDuplicates`` or an inner interval join in append
+    mode); an append-mode window would then withhold every window.
+
+    Both confs are set on the session for the run and restored after it,
+    also when the query fails to start or while running.  Harness runs
+    on one session are therefore sequential.  A query that fails while
+    running also drops its memory-sink view before the error propagates.
 
     LIFETIME CONTRACT (driver ADVICE r8): the returned frame is backed
     by ``localCheckpoint`` blocks and is NOT recomputable — its
@@ -100,9 +108,12 @@ def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
     fast in-memory copy is the right default here."""
     spark = result.sparkSession
     name = f"stream_sink_{next(_SINK_IDS)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    parts = "spark.sql.shuffle.partitions"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = {k: spark.conf.get(k) for k in (parts, no_data)}
     try:
+        spark.conf.set(parts, str(min(8, int(prev[parts]))))
+        spark.conf.set(no_data, str(no_data_batch).lower())
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -118,33 +129,17 @@ def run_stream_to_df(result: DataFrame, output_mode: str) -> DataFrame:
         spark.catalog.dropTempView(name)
         raise
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # Copy the sink's rows out via localCheckpoint and DROP the memory
-    # table: every sink pins its full result set in driver memory for
-    # the session lifetime otherwise, and the fresh name per call makes
-    # the leak monotonic across a long test session (review finding).
-    # localCheckpoint (vs the previous driver collect + createDataFrame
-    # round-trip) keeps the copy JVM-side in executor storage — it
-    # measured ~2x faster on a 95k-row session-window result AND
-    # removes the per-row Python conversion entirely; the checkpoint
-    # blocks are persisted RDDs, so bench's between-repeat
-    # release_rdds() and session shutdown both reclaim them.  The
-    # memory sink itself still materializes on the driver, so the
-    # bounded-harness row cap is checked first (driver ADVICE r7): an
-    # oversized result that FIT in driver memory errors loudly instead
-    # of silently growing with each misuse (see MAX_MEMORY_SINK_ROWS
-    # for what the cap can and cannot protect against).
-    # Checkpoint FIRST, then count the checkpointed blocks (r15): the
-    # previous order (count the sink, then checkpoint it) scanned the
-    # sink twice — two jobs per harness run where one suffices.  The
-    # cap still errors loudly on an oversized result that fit in driver
-    # memory; the checkpointed copy does transiently coexist with the
-    # sink's rows until the guard fires (block storage is the driver
-    # JVM in local mode), the price of the saved scan.  On the over-cap
-    # path the blocks are released through the RDD registry —
-    # DataFrame.unpersist would be a no-op here because localCheckpoint
-    # persists at the RDD layer, outside the CacheManager (r15 review
-    # finding).
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    # Copy the sink's rows out with localCheckpoint and drop the memory
+    # table, which otherwise pins its rows in driver memory for the
+    # session's lifetime (a fresh name per call makes that leak grow).
+    # The copy stays JVM-side as persisted RDD blocks, which
+    # release_rdds() and session shutdown reclaim.  Checkpoint first,
+    # then count the blocks: one scan of the sink, not two.  An over-cap
+    # result (see MAX_MEMORY_SINK_ROWS) then errors loudly; its blocks
+    # are released through the RDD registry, because DataFrame.unpersist
+    # misses localCheckpoint's RDD-level persist.
     from ..checkpoint import persistent_rdd_ids, release_rdds
 
     sc = spark.sparkContext
@@ -246,8 +241,9 @@ def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 def watermarked_late_drop(stream: DataFrame) -> DataFrame:
     """T4: watermark + append-mode hourly counts.  Late data beyond 1 h
-    is dropped and only watermark-closed windows are emitted — inherently
-    a weaker (rows-only) check: the final open window is withheld."""
+    is dropped and only watermark-closed windows are emitted: the final
+    open windows are withheld.  ``stream_watermark_hourly`` checks it on
+    rows, schema and hash against an exact DuckDB oracle."""
     return (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"))

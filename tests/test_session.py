@@ -35,7 +35,7 @@ def _java(tmp_path, jdk, release):
     return str(tmp_path / jdk / "bin" / "java")
 
 
-def test_archive_key_tracks_jars_jdk_and_extra_class_path(tmp_path):
+def test_archive_key_tracks_jars_jdk_and_extra_class_path(tmp_path, monkeypatch):
     home = _spark_home(tmp_path)
     java = _java(tmp_path, "jdk", 'JAVA_VERSION="17.0.20"')
     keys = [S._archive_key(str(home), java, "")]
@@ -47,6 +47,9 @@ def test_archive_key_tracks_jars_jdk_and_extra_class_path(tmp_path):
     (tmp_path / "jdk" / "release").write_text('JAVA_VERSION="17.0.21"')
     keys.append(S._archive_key(str(home), java, ""))  # JDK updated in place
     keys.append(S._archive_key(str(home), _java(tmp_path, "jdk21", ""), ""))
+    keys.append(S._archive_key(str(home), java, "lib/driver.jar"))
+    # a copied or moved checkout: its conf dir, first on the classpath, moved
+    monkeypatch.setattr(S, "_CDS_DIR", str(tmp_path / "moved" / "cds"))
     keys.append(S._archive_key(str(home), java, "lib/driver.jar"))
     assert len(set(keys)) == len(keys)
 

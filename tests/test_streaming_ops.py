@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import tempfile
 
 import pytest
@@ -210,9 +211,13 @@ def test_run_stream_to_df_row_cap_guard(spark, monkeypatch):
     Neither the over-cap raise, nor a query whose ``start()`` fails
     (complete mode needs an aggregation), nor one that fails while
     running (``raise_error`` in a projection) may leave the harness's
-    8-partition regime on the session or leak a memory-sink temp view.
-    The session is set to 13 first: the fixture's own value is 8."""
+    regime on the session (partitions capped at 8, the no-data batch
+    off) or leak a memory-sink temp view.  The session is set to 13
+    first: the fixture's own value is 8."""
     from pyspark.errors import AnalysisException, StreamingQueryException
+
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    no_data_prev = spark.conf.get(no_data)
 
     stream = ops.events_stream(spark, SF_SMOKE).select("event_id", "user_id")
     failing = stream.select(
@@ -228,8 +233,9 @@ def test_run_stream_to_df_row_cap_guard(spark, monkeypatch):
             (failing, "append", StreamingQueryException, "boom in batch"),
         ):
             with pytest.raises(err, match=match):
-                ops.run_stream_to_df(frame, mode)
+                ops.run_stream_to_df(frame, mode, no_data_batch=False)
             assert spark.conf.get("spark.sql.shuffle.partitions") == "13", match
+            assert spark.conf.get(no_data) == no_data_prev, match
             assert not [
                 t.name
                 for t in spark.catalog.listTables()
@@ -237,6 +243,73 @@ def test_run_stream_to_df_row_cap_guard(spark, monkeypatch):
             ], match
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_query_mix_streams_batch_count_and_state_partitions(spark):
+    """The harness runs ``stream_dedup_keys`` and ``stream_stream_join``
+    as one micro-batch each (they emit in the data batch, so they skip
+    the state-only no-data batch) and ``stream_watermark_hourly`` as two
+    (its windows emit only in the no-data batch).  Their state
+    operators run on the session's shuffle partitions, capped at 8: 4
+    on a 4-partition session, 8 on a 13-partition one."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from parquet_to_postgres_spark.queries import streaming_q as Q
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.progress, self.terminated = [], 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.terminated += 1
+
+    def run(query):
+        """The query's progress events: the bus delivers them in order,
+        so they are all in once its termination event is."""
+        seen, done = len(rec.progress), rec.terminated
+        query(spark, SF_SMOKE)
+        deadline = time.monotonic() + 30
+        while rec.terminated == done and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert rec.terminated == done + 1, query.__name__
+        return rec.progress[seen:]
+
+    def state_partitions(progress):
+        return {
+            op["numShufflePartitions"]
+            for p in progress
+            for op in p["stateOperators"]
+        }
+
+    rec = Recorder()
+    spark.streams.addListener(rec)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        for query, batches in (
+            (Q.stream_dedup_keys, 1),
+            (Q.stream_stream_join, 1),
+            (Q.stream_watermark_hourly, 2),
+        ):
+            progress = run(query)
+            assert len(progress) == batches, (query.__name__, progress)
+            assert state_partitions(progress) == {4}, query.__name__
+        spark.conf.set("spark.sql.shuffle.partitions", "13")
+        assert state_partitions(run(Q.stream_dedup_keys)) == {8}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.streams.removeListener(rec)
 
 
 def test_stream_windowed_aggs_is_one_streaming_query(spark, monkeypatch):
