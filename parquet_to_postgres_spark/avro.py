@@ -6,41 +6,58 @@ Spark's built-in datasource, but the ``spark-avro`` module is an
 EXTERNAL jar that is not shipped in this environment and installs are
 off-limits — so Avro OCF (spec 1.11.x, a public format) is implemented
 here in Python (``zlib`` for the deflate codec, pyarrow's libsnappy
-binding for snappy) and run THROUGH Spark's execution model:
+binding for snappy) and run THROUGH Spark as one Spark 4 Python Data
+Source, ``avro_ocf`` (:class:`AvroOCFDataSource`):
 
-- **read**: ``spark.read.format("binaryFile")`` lists and ships the
-  container files; each file's blocks are decoded executor-side in an
-  Arrow-batched ``mapInPandas``.  The unit of parallelism is the FILE
-  (no sync-marker splitting — corpora written by this sink, Spark, or
-  any sane pipeline are many-files, so file granularity is the same
-  granularity Spark uses for gzip'd text).  Only the ONE header needed
-  for the schema is read on the driver, not the data.
-- **write**: one container file per partition via ``mapPartitions``
-  (the standard custom-sink shape; the returned manifest is
-  partition-count-bounded).  Timestamps/dates cross the Python
-  boundary as ``unix_micros``/``unix_date`` integers converted
-  JVM-side, so no Python timezone arithmetic can drift the values.
+- **read**: one input partition per container file, or per sync-marker
+  byte range (``split_bytes``; containers past
+  :data:`AUTO_SPLIT_THRESHOLD` split themselves).  Each task decodes its
+  range one block at a time.  The ``reader_schema`` option (an Avro
+  record schema as JSON) resolves schema-evolved containers by the Avro
+  spec's rules; without it, schema drift between files refuses.
+- **write**: one container per task, committed two-phase (hidden temp
+  file, renamed by the driver's commit).  An input with no partitions
+  still leaves one header-only container, so the schema survives:
+  Spark runs one write task over an empty partition for it.
+
+Temporal values are converted Python-side by :func:`_temporal_codecs`
+with exact integer timedelta arithmetic (never float seconds, never the
+session time zone).  :func:`encode_container` / :func:`decode_container`
+are the in-memory codec entry points; ``decode_container`` runs the
+same range decoder as the Data Source over an in-memory buffer.
 
 Type surface: boolean, int, long, float, double, string, bytes,
 date (int/``date``), timestamp (long/``timestamp-micros``), arrays,
 maps (string keys), and nested records — nullability as the canonical
-``["null", T]`` union.  Temporal types are supported at the TOP level
-only (nested temporal fields raise — honest refusal, same contract as
-the media decoders).  Decimal/fixed/enum are refused with a clear
-error; the sink is posix-path local (a cluster deployment would wrap
-the same encoder in a DataSource V2 writer).
+``["null", T]`` union; bytes-backed decimals (flat and struct-nested);
+on read also enum, fixed, uuid and the millis temporal variants.
+Temporal types are supported at the TOP level only (nested temporal
+fields raise — honest refusal, same contract as the media decoders).
+Paths are posix (local or ``file:``): a Python data source opens its
+files with ``open()``.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import io
 import json
+import os
+import shutil
 import struct
+import uuid
 import zlib
 from hashlib import md5
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession, types as T
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceWriter,
+    InputPartition,
+    WriterCommitMessage,
+)
 
 MAGIC = b"Obj\x01"
 
@@ -68,6 +85,23 @@ _AVRO_TO_SPARK_PRIM = {
     "bytes": T.BinaryType(),
 }
 
+_SPARK_TEMPORAL = {
+    T.TimestampType: {"type": "long", "logicalType": "timestamp-micros"},
+    T.TimestampNTZType: {
+        "type": "long",
+        "logicalType": "local-timestamp-micros",
+    },
+    T.DateType: {"type": "int", "logicalType": "date"},
+}
+
+_TEMPORAL_LOGICALS = {
+    "timestamp-micros": T.TimestampType(),
+    "timestamp-millis": T.TimestampType(),
+    "local-timestamp-micros": T.TimestampNTZType(),
+    "local-timestamp-millis": T.TimestampNTZType(),
+    "date": T.DateType(),
+}
+
 
 def spark_to_avro_schema(
     schema: T.StructType, name: str = "row", _top: bool = True
@@ -89,31 +123,20 @@ def _avro_type(dt: T.DataType, name: str, top: bool):
     for cls, prim in _SPARK_TO_AVRO_PRIM.items():
         if isinstance(dt, cls):
             return prim
-    if isinstance(dt, T.TimestampType):
-        if not top:
-            raise ValueError(
-                "avro sink: nested timestamp fields unsupported (the "
-                "JVM-side unix_micros conversion is top-level only)"
-            )
-        return {"type": "long", "logicalType": "timestamp-micros"}
-    if isinstance(dt, T.TimestampNTZType):
-        if not top:
-            raise ValueError(
-                "avro sink: nested timestamp_ntz fields unsupported (the "
-                "JVM-side epoch conversion is top-level only)"
-            )
-        return {"type": "long", "logicalType": "local-timestamp-micros"}
-    if isinstance(dt, T.DateType):
-        if not top:
-            raise ValueError(
-                "avro sink: nested date fields unsupported (the JVM-side "
-                "unix_date conversion is top-level only)"
-            )
-        return {"type": "int", "logicalType": "date"}
+    for cls, logical in _SPARK_TEMPORAL.items():
+        if isinstance(dt, cls):
+            if not top:
+                raise ValueError(
+                    f"avro sink: nested {dt.simpleString()} fields "
+                    "unsupported (the temporal conversion is top-level "
+                    "only)"
+                )
+            return dict(logical)
     if isinstance(dt, T.DecimalType):
         # bytes-backed decimal (r12): the codec converts Decimal <->
-        # big-endian two's-complement unscaled int python-side, so
-        # nesting is fine (no JVM-side restore involved)
+        # big-endian two's-complement unscaled int in the codec
+        # itself, so nesting is fine (unlike the top-level-only
+        # temporal conversion)
         return {
             "type": "bytes",
             "logicalType": "decimal",
@@ -153,34 +176,23 @@ def _avro_type(dt: T.DataType, name: str, top: bool):
     raise ValueError(f"avro: unsupported Spark type {dt.simpleString()}")
 
 
-def avro_to_spark_schema(
-    avro: dict, logical_as_temporal: bool = False
-) -> T.StructType:
+def avro_to_spark_schema(avro: dict) -> T.StructType:
     """Avro record schema -> Spark StructType.  TOP-LEVEL temporal
-    logical types map to their WIRE types (long/int) —
-    :func:`read_avro` restores Timestamp/Date JVM-side after the
-    Python decode — or, with ``logical_as_temporal`` (the Python Data
-    Source path, which emits real datetime/date objects), straight to
-    Timestamp/TimestampNTZ/Date.  NESTED temporal logicals are refused
-    (the restore loop only rewrites top-level columns; decoding them
-    silently as raw longs would be plausible-but-wrong data — the same
-    honest-refusal contract as the write side)."""
+    logical types map to Timestamp/TimestampNTZ/Date (the reader emits
+    real datetime/date objects, see :func:`_temporal_codecs`).  NESTED
+    temporal logicals are refused (the conversion only rewrites
+    top-level columns; decoding them silently as raw longs would be
+    plausible-but-wrong data — the same honest-refusal contract as the
+    write side)."""
     if avro.get("type") != "record":
         raise ValueError("avro: top-level schema must be a record")
-    temporal = {
-        "timestamp-micros": T.TimestampType(),
-        "timestamp-millis": T.TimestampType(),
-        "local-timestamp-micros": T.TimestampNTZType(),
-        "local-timestamp-millis": T.TimestampNTZType(),
-        "date": T.DateType(),
-    }
     fields = []
     for f in avro["fields"]:
         lt = _logical_of(f["type"])
-        if logical_as_temporal and lt in temporal:
-            dt, nullable = temporal[lt], isinstance(f["type"], list)
+        if lt in _TEMPORAL_LOGICALS:
+            dt, nullable = _TEMPORAL_LOGICALS[lt], isinstance(f["type"], list)
         else:
-            dt, nullable = _spark_type(f["type"], top=True)
+            dt, nullable = _spark_type(f["type"])
         fields.append(T.StructField(f["name"], dt, nullable))
     return T.StructType(fields)
 
@@ -191,15 +203,6 @@ def _logical_of(node) -> "str | None":
         branches = [b for b in node if b != "null"]
         node = branches[0] if len(branches) == 1 else None
     return node.get("logicalType") if isinstance(node, dict) else None
-
-
-_TEMPORAL_LOGICALS = (
-    "timestamp-micros",
-    "timestamp-millis",
-    "local-timestamp-micros",
-    "local-timestamp-millis",
-    "date",
-)
 
 
 def _holds_decimal(dt: T.DataType) -> bool:
@@ -229,12 +232,14 @@ def _decimal_type(t: dict) -> T.DecimalType:
     return T.DecimalType(p, s)
 
 
-def _spark_type(t, top: bool = False) -> "tuple[T.DataType, bool]":
+def _spark_type(t) -> "tuple[T.DataType, bool]":
+    """Spark type of a schema node below the top level (top-level
+    temporal logicals are mapped by :func:`avro_to_spark_schema`)."""
     if isinstance(t, list):  # union
         branches = [b for b in t if b != "null"]
         if len(branches) != 1:
             raise ValueError(f"avro: only [null, T] unions supported: {t}")
-        dt, _ = _spark_type(branches[0], top=top)
+        dt, _ = _spark_type(branches[0])
         return dt, True
     if isinstance(t, str):
         if t not in _AVRO_TO_SPARK_PRIM:
@@ -246,7 +251,7 @@ def _spark_type(t, top: bool = False) -> "tuple[T.DataType, bool]":
     lt = t.get("logicalType")
     if lt == "decimal" and kind in ("bytes", "fixed"):
         # the codec itself converts wire bytes <-> decimal.Decimal
-        # (r12), so decimals work NESTED too — no restore pass needed
+        # (r12), so decimals work NESTED too
         return _decimal_type(t), False
     if lt == "uuid" and kind == "string":
         return T.StringType(), False  # uuid rides its string wire type
@@ -255,13 +260,13 @@ def _spark_type(t, top: bool = False) -> "tuple[T.DataType, bool]":
         # silently surfacing raw wire ints would be
         # plausible-but-wrong data
         raise ValueError(f"avro: logical type {lt!r} unsupported")
-    if kind in ("long", "int"):  # logical temporal rides its wire type
-        if not top and lt in _TEMPORAL_LOGICALS:
+    if kind in ("long", "int"):
+        if lt in _TEMPORAL_LOGICALS:
             raise ValueError(
                 f"avro: nested {lt!r} unsupported (the "
-                "temporal restore is top-level only)"
+                "temporal conversion is top-level only)"
             )
-        return _AVRO_TO_SPARK_PRIM[kind], False
+        return _AVRO_TO_SPARK_PRIM[kind], False  # unknown logical: wire type
     if kind == "enum":
         return T.StringType(), False  # symbols surface as strings
     if kind == "fixed" and lt is None:
@@ -600,9 +605,6 @@ def _decoder(t):
     raise ValueError(f"avro: unsupported schema node {t!r}")
 
 
-# ------------------------------------------------------------- container --
-
-
 # ------------------------------------------------- schema resolution --
 
 
@@ -642,8 +644,8 @@ def _resolving_decoder(writer, reader):
     precision+scale (the value is scale-shaped); temporal logicals
     resolve to themselves, and millis widens to micros (×1000, exact);
     every other logical mismatch refuses — including logical↔plain,
-    which the Avro spec's resolution would silently allow but our
-    restore layer would then reinterpret (a plain long is NOT an
+    which the Avro spec's resolution would silently allow but the
+    temporal conversion would then reinterpret (a plain long is NOT an
     epoch).  uuid is annotation-only and strips like no logical.
     Enums resolve by name with per-symbol reader-default fallback;
     fixed requires matching name and size."""
@@ -997,35 +999,105 @@ def parse_header(buf: bytes) -> "tuple[dict, str, bytes, int]":
     return schema, codec, sync, r.pos
 
 
-def decode_container(
-    buf: bytes, reader_schema: dict | None = None
-) -> "tuple[dict, list[dict]]":
-    """(schema, rows) — whole-file decode, the executor-side kernel.
-    With ``reader_schema``, rows are schema-RESOLVED to it (Avro spec
-    rules — see :func:`_resolving_decoder`)."""
-    schema, codec, sync, pos = parse_header(buf)
-    dec = (
-        _resolving_decoder(schema, reader_schema)
-        if reader_schema is not None
-        else _decoder(schema)
-    )
-    r = _Reader(buf, pos)
-    rows: "list[dict]" = []
-    end = len(buf)
-    while r.pos < end:
-        count = r.long()
-        size = r.long()
-        block = r.raw(size)
+def _read_header(fh) -> "tuple[dict, str, bytes, int]":
+    """:func:`parse_header` of an OPEN container: a 64 KiB prefix
+    first, the full read only when the header is pathologically
+    large."""
+    fh.seek(0)
+    try:
+        return parse_header(fh.read(65536))
+    except (IndexError, ValueError, KeyError):
+        fh.seek(0)
+        return parse_header(fh.read())
+
+
+def _decode_range(
+    fh, start: int, end: int, want_schema: dict, resolve: bool = False
+) -> "Iterator[dict]":
+    """Rows of the blocks that ONE byte range of an open container
+    owns, decoded one block at a time — the kernel of every read.
+
+    Ownership rule (Avro's own pastSync convention): a range owns the
+    blocks whose preceding sync marker STARTS inside [start, end), i.e.
+    whose first byte lies in [start+16, end+16).  Range 0 starts at the
+    header's data offset; every other range seeks to ``start`` and
+    scans forward to the next sync marker.  A block that BEGINS inside
+    the range is decoded to completion even when its bytes run past
+    ``end``.  With ``resolve``, rows are schema-RESOLVED to
+    ``want_schema`` (see :func:`_resolving_decoder`); without it the
+    container schema must equal ``want_schema``."""
+    got_schema, codec, sync, data_off = _read_header(fh)
+    if resolve:
+        dec = _resolving_decoder(got_schema, want_schema)
+    elif got_schema != want_schema:
+        raise ValueError(
+            "avro_ocf: container schema drift between files "
+            "(pass reader_schema to schema-resolve instead)"
+        )
+    else:
+        dec = _decoder(got_schema)
+    limit = end + len(sync)
+    if start == 0:
+        pos = data_off
+    else:
+        # bounded chunked scan for the sync: 64 KiB windows with a
+        # 15-byte overlap, never materializing the whole range
+        pos = None
+        scan_at, carry = start, b""
+        while scan_at < limit:
+            fh.seek(scan_at)
+            step = min(65536, limit - scan_at)
+            window = carry + fh.read(step)
+            hit = window.find(sync)
+            if hit >= 0:
+                pos = scan_at - len(carry) + hit + len(sync)
+                break
+            carry = window[-(len(sync) - 1):]
+            scan_at += step
+        if pos is None or pos >= limit:
+            return  # no owned sync, or it starts in the NEXT range
+    fsize = fh.seek(0, 2)
+    while pos < limit and pos < fsize:
+        # block header: two varints (<= 20 bytes), then the data
+        fh.seek(pos)
+        r = _Reader(fh.read(20))
+        try:
+            count = r.long()
+            size = r.long()
+        except IndexError:
+            raise ValueError(
+                "avro: truncated block header (corrupt container)"
+            ) from None
+        fh.seek(pos + r.pos)
+        block = fh.read(size)
+        if fh.read(len(sync)) != sync:
+            raise ValueError("avro: sync marker mismatch (corrupt block)")
+        pos += r.pos + size + len(sync)
         if codec == "deflate":
             block = zlib.decompress(block, wbits=-15)
         elif codec == "snappy":
-            block = _avro_snappy_decode(bytes(block))
-        if bytes(r.raw(16)) != sync:
-            raise ValueError("avro: sync marker mismatch (corrupt block)")
+            block = _avro_snappy_decode(block)
         br = _Reader(block)
         for _ in range(count):
-            rows.append(dec(br))
-    return schema, rows
+            yield dec(br)
+
+
+def decode_container(
+    buf: bytes, reader_schema: dict | None = None
+) -> "tuple[dict, list[dict]]":
+    """(writer schema, rows) of a whole in-memory container, through
+    the same range decoder the Data Source runs.  With
+    ``reader_schema``, rows are schema-RESOLVED to it."""
+    schema = parse_header(buf)[0]
+    resolve = reader_schema is not None
+    rows = _decode_range(
+        io.BytesIO(buf),
+        0,
+        len(buf),
+        reader_schema if resolve else schema,
+        resolve=resolve,
+    )
+    return schema, list(rows)
 
 
 def encode_container(
@@ -1076,435 +1148,12 @@ def encode_container(
     return bytes(out)
 
 
-# ----------------------------------------------------------- spark glue --
-
-
-# NTZ <-> epoch micros via pure timestamp arithmetic from the NTZ epoch
-# literal: timestampdiff/timestampadd on TIMESTAMP_NTZ never consult the
-# session timezone (an NTZ has no zone to interpret), unlike
-# to_utc_timestamp/cast, which coerce through the session zone and would
-# shift wall-clock values on any non-UTC session.
-_NTZ_EPOCH = "timestamp_ntz'1970-01-01 00:00:00'"
-
-
-def _temporal_cols(
-    schema: T.StructType,
-) -> "tuple[list[str], list[str], list[str]]":
-    ts = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
-    ntz = [
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, T.TimestampNTZType)
-    ]
-    dt = [f.name for f in schema.fields if isinstance(f.dataType, T.DateType)]
-    return ts, ntz, dt
-
-
-def write_avro(
-    df: DataFrame, path: str, codec: str = "deflate", block_rows: int = 4096
-) -> dict:
-    """Write ``df`` as one Avro OCF per partition under ``path``
-    (posix-local demo sink; see module docstring).  Returns a manifest
-    ``{files, rows}`` — partition-count-bounded, never data-bounded."""
-    import os
-
-    import shutil
-
-    avro_schema = spark_to_avro_schema(df.schema)
-    ts_cols, ntz_cols, date_cols = _temporal_cols(df.schema)
-    wire = df
-    for c in ts_cols:  # JVM-side epoch conversion: tz-exact, no Python dates
-        wire = wire.withColumn(c, F.unix_micros(F.col(c)))
-    for c in ntz_cols:
-        wire = wire.withColumn(
-            c, F.expr(f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, `{c}`)")
-        )
-    for c in date_cols:
-        wire = wire.withColumn(c, F.unix_date(F.col(c)))
-    # OVERWRITE semantics, like every DataFrameWriter sibling: a re-run
-    # with fewer partitions must not leave stale part files behind for
-    # read_avro's directory listing to silently include (r11 review
-    # finding — the sf0.1 bench would have poisoned the sf0.01 gate).
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    os.makedirs(path, exist_ok=True)
-    schema_json = json.dumps(avro_schema)
-
-    def write_part(rows) -> "Iterator[tuple[int, int, str]]":
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        it = iter(rows)
-        try:
-            first = next(it)
-        except StopIteration:
-            return  # empty partition -> no file
-        import itertools
-
-        schema = json.loads(schema_json)
-        sync = md5((schema_json + str(pid)).encode()).digest()
-        fname = os.path.join(path, f"part-{pid:05d}.avro")
-        total = 0
-
-        def counted():
-            nonlocal total
-            for r in itertools.chain([first], it):
-                total += 1
-                yield tuple(r)
-
-        buf = encode_container(
-            schema, counted(), codec=codec, sync=sync, block_rows=block_rows
-        )
-        with open(fname, "wb") as fh:
-            fh.write(buf)
-        yield pid, total, fname
-
-    manifest = wire.rdd.mapPartitions(write_part).collect()
-    if not manifest:  # all-empty frame: header-only file keeps the schema
-        with open(os.path.join(path, "part-00000.avro"), "wb") as fh:
-            fh.write(encode_container(avro_schema, [], codec=codec))
-        manifest = [(0, 0, os.path.join(path, "part-00000.avro"))]
-    return {
-        "files": len(manifest),
-        "rows": sum(m[1] for m in manifest),
-    }
-
-
-def _decode_file_range(
-    local_path: str,
-    start: int,
-    end: int,
-    want_schema: dict,
-    resolve: bool = False,
-) -> "list[dict]":
-    """Decode the blocks of ONE byte range of an OCF file — the
-    executor-side kernel of split reads.
-
-    Ownership rule (the standard Avro split convention): a block
-    belongs to the range in which its first byte — the byte after the
-    previous sync marker — falls.  Range 0 starts at the header's data
-    offset; every other range seeks to ``start`` and scans forward to
-    the next sync marker.  A block that BEGINS inside the range is
-    decoded to completion even when its bytes run past ``end``."""
-    with open(local_path, "rb") as fh:
-        head = fh.read(65536)
-        try:
-            got_schema, codec, sync, data_off = parse_header(head)
-        except (IndexError, ValueError, KeyError):
-            fh.seek(0)
-            got_schema, codec, sync, data_off = parse_header(fh.read())
-        if resolve:
-            dec = _resolving_decoder(got_schema, want_schema)
-        elif got_schema != want_schema:
-            raise ValueError(
-                "read_avro: container schema drift between files "
-                "(pass reader_schema= to schema-resolve instead)"
-            )
-        else:
-            dec = _decoder(got_schema)
-        # Ownership (Avro's own pastSync convention): the range owns
-        # blocks whose preceding sync STARTS inside [start, end) —
-        # i.e. blockStart in [start+16, end+16).  Using plain `end`
-        # on both sides orphans any block whose sync straddles the
-        # boundary (observed: 2 blocks lost at a 1000-byte split).
-        if start == 0:
-            pos = data_off
-        else:
-            # bounded chunked scan for the sync: 64 KiB windows with a
-            # 15-byte overlap, never materializing the whole range (r11
-            # third-pass review finding — a 512 MB split allocated a
-            # 512 MB bytes object per task just to find a marker that
-            # sits at most one block past `start`)
-            pos = None
-            chunk = 65536
-            scan_at = start
-            limit = end + len(sync)
-            carry = b""
-            while scan_at < limit:
-                fh.seek(scan_at)
-                window = carry + fh.read(
-                    min(chunk, limit - scan_at)
-                )
-                hit = window.find(sync)
-                if hit >= 0:
-                    pos = (
-                        scan_at - len(carry) + hit + len(sync)
-                    )
-                    break
-                carry = window[-(len(sync) - 1):]
-                scan_at += min(chunk, limit - scan_at)
-            if pos is None or pos >= end + len(sync):
-                return []  # no owned sync, or it starts in the NEXT range
-        rows: "list[dict]" = []
-        fh.seek(0, 2)
-        fsize = fh.tell()
-        fh.seek(pos)
-        while pos < end + len(sync) and pos < fsize:
-            # block header: two varints (<= 20 bytes), then the data
-            hdr = fh.read(20)
-            if not hdr:
-                break
-            r = _Reader(hdr)
-            try:
-                count = r.long()
-                size = r.long()
-            except IndexError:
-                break  # trailing bytes shorter than a block header
-            body_off = pos + r.pos
-            fh.seek(body_off)
-            block = fh.read(size)
-            tail = fh.read(len(sync))
-            if tail != sync:
-                raise ValueError("avro: sync marker mismatch (corrupt block)")
-            if codec == "deflate":
-                block = zlib.decompress(block, wbits=-15)
-            elif codec == "snappy":
-                block = _avro_snappy_decode(block)
-            br = _Reader(block)
-            for _ in range(count):
-                rows.append(dec(br))
-            pos = body_off + size + len(sync)
-            fh.seek(pos)
-        return rows
-
-
-# Auto-split policy (r12, VERDICT r11 item 3 rider): a container past
-# the threshold never serializes on ONE core by default — read_avro and
-# the avro_ocf data source carve it into AUTO_SPLIT_BYTES sync-marker
-# ranges.  read_avro only auto-splits file:-scheme paths (split mode
-# opens with posix open()); the data source is posix by definition.
-AUTO_SPLIT_THRESHOLD = 128 * 1024 * 1024
-AUTO_SPLIT_BYTES = 32 * 1024 * 1024
-
-
-def _rows_frame(pd, rows: "list[dict]", names: "list[str]"):
-    """Decoded rows -> pandas frame with OBJECT dtype columns: pandas
-    would otherwise infer float64 for an all-None batch column, and
-    Arrow then refuses to build e.g. struct<...decimal...> from a
-    float64 series ('Expected struct array', r12 finding on the
-    decimal tests — any per-file all-null struct column hit it)."""
-    return pd.DataFrame(
-        {
-            n: pd.Series([r[n] for r in rows], dtype=object)
-            for n in names
-        },
-        columns=names,
-    )
-
-
-def read_avro(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    split_bytes: "int | str | None" = "auto",
-    reader_schema: dict | None = None,
-) -> DataFrame:
-    """Distributed Avro OCF read: binaryFile listing + per-file
-    ``mapInPandas`` decode.  Self-describing — no inference pass, so
-    ``etl.read_source``'s CSV/JSON infer guard does not apply.  The
-    driver reads ONE file header for the schema (``spark.read`` does
-    the same for Parquet footers); block data never hits the driver.
-
-    ``split_bytes`` turns on SYNC-MARKER INPUT SPLITTING (the classic
-    Avro split algorithm): each file is carved into byte ranges of
-    roughly that size, a task seeks to its range start, scans forward
-    to the next 16-byte sync marker, and decodes blocks whose start
-    falls inside its range — so one multi-GB container parallelizes
-    across the cluster instead of serializing on one core (a
-    2^-128-per-byte false-sync probability is the standard Avro
-    assumption).  Splitting opens files with ``open()`` — posix/NFS
-    paths only, like :func:`write_avro`; the default unsplit path
-    stays Hadoop-FS-safe via binaryFile.
-
-    ``reader_schema`` (an Avro record schema dict) turns on SCHEMA
-    RESOLUTION: containers whose schemas EVOLVED over time all resolve
-    to the given reader schema by the Avro spec's rules — fields match
-    by name, writer-only fields are decoded and discarded, reader-only
-    fields take their ``default`` (or null for a [null, T] union), and
-    int->long->float->double / string<->bytes promotions apply.
-    Without it, any schema drift between files refuses honestly.
-
-    ``split_bytes`` defaults to ``"auto"``: local (file:-scheme)
-    containers larger than :data:`AUTO_SPLIT_THRESHOLD` are split at
-    :data:`AUTO_SPLIT_BYTES` automatically; everything else reads
-    whole-file.  Pass an int to force a split size, ``None`` to force
-    whole-file reads."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path)
-    listing = None
-    if split_bytes == "auto":
-        # metadata-only listing (no content read) decides the mode; the
-        # collect is reused as the split listing below, so auto mode
-        # costs one file-listing job either way
-        listing = sorted(
-            (r["path"], int(r["length"]))
-            for r in files.select("path", "length").collect()
-        )
-        if not listing:
-            raise ValueError(f"read_avro: no files under {path}")
-        if max(n for _, n in listing) > AUTO_SPLIT_THRESHOLD and all(
-            p.startswith("file:") for p, _ in listing
-        ):
-            split_bytes = AUTO_SPLIT_BYTES
-        else:
-            split_bytes = None
-    elif isinstance(split_bytes, str):
-        raise ValueError(
-            f"read_avro: split_bytes must be an int, None, or 'auto' "
-            f"(got {split_bytes!r})"
-        )
-    if split_bytes is not None:
-        # split mode already requires posix paths (open() in
-        # _decode_file_range), so the schema comes from a driver-side
-        # 64 KiB open() of the first listed file — binaryFile's
-        # `content` column hard-fails past 2 GiB, which is exactly the
-        # file size split reads exist for (r11 third-pass finding).
-        # ONE listing collect serves both discovery and the range
-        # build below (no extra sort job — fourth-pass finding);
-        # auto mode already collected it.
-        if listing is None:
-            listing = sorted(
-                (r["path"], int(r["length"]))
-                for r in files.select("path", "length").collect()
-            )
-        if not listing:
-            raise ValueError(f"read_avro: no files under {path}")
-        if reader_schema is not None:
-            avro_schema = reader_schema
-        else:
-            with open(_strip_file(listing[0][0]), "rb") as fh:
-                avro_schema = _header_of(fh)
-    else:
-        # schema discovery: a 64 KiB PREFIX of one file, not its whole
-        # content (r11 review finding: head() on `content` materialized
-        # entire multi-GB containers on the driver).  A header larger
-        # than the prefix (pathological schema JSON) falls back to the
-        # full read.
-        head = files.select(
-            F.substring("content", 1, 65536).alias("prefix")
-        ).head()
-        if head is None:
-            raise ValueError(f"read_avro: no files under {path}")
-        if reader_schema is not None:
-            avro_schema = reader_schema
-        else:
-            try:
-                avro_schema, _, _, _ = parse_header(bytes(head["prefix"]))
-            except (IndexError, ValueError, KeyError):
-                full = files.select("content").head()
-                avro_schema, _, _, _ = parse_header(
-                    bytes(full["content"])
-                )
-    wire_schema = avro_to_spark_schema(avro_schema)
-    if schema is not None:
-        want = {f.name for f in schema.fields}
-        have = {f.name for f in wire_schema.fields}
-        if not want <= have:
-            raise ValueError(
-                f"read_avro: requested columns {sorted(want - have)} "
-                "absent from the container schema"
-            )
-
-    names = [f.name for f in wire_schema.fields]
-
-    resolving = reader_schema is not None
-
-    def decode_files(batches) -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            for content in pdf["content"]:
-                if resolving:
-                    _, rows = decode_container(
-                        bytes(content), reader_schema=avro_schema
-                    )
-                else:
-                    got_schema, rows = decode_container(bytes(content))
-                    if got_schema != avro_schema:
-                        raise ValueError(
-                            "read_avro: container schema drift between "
-                            "files (pass reader_schema= to resolve)"
-                        )
-                yield _rows_frame(pd, rows, names)
-
-    if split_bytes is not None:
-        if split_bytes < 1:
-            raise ValueError("read_avro: split_bytes must be positive")
-        ranges = []
-        for fpath, length in listing:
-            start = 0
-            while start < length:
-                ranges.append(
-                    (fpath, start, min(start + split_bytes, length))
-                )
-                start += split_bytes
-        schema_json = json.dumps(avro_schema)
-
-        def decode_ranges(batches) -> "Iterator[pd.DataFrame]":
-            import pandas as pd
-
-            want = json.loads(schema_json)
-            for pdf in batches:
-                for fpath, start, end in zip(
-                    pdf["path"], pdf["start"], pdf["end"]
-                ):
-                    local = fpath.removeprefix("file:")
-                    rows = _decode_file_range(
-                        local, int(start), int(end), want,
-                        resolve=resolving,
-                    )
-                    yield _rows_frame(pd, rows, names)
-
-        rdf = spark.createDataFrame(
-            ranges, "path string, start long, end long"
-        ).repartition(max(len(ranges), 1))
-        out = rdf.mapInPandas(decode_ranges, wire_schema)
-    else:
-        out = files.select("content").mapInPandas(decode_files, wire_schema)
-    # restore temporal logical types JVM-side
-    logical = {
-        f["name"]: f["type"]
-        for f in avro_schema["fields"]
-        if isinstance(f["type"], (dict, list))
-    }
-
-    for name, node in logical.items():
-        kind = _logical_of(node)
-        if kind == "timestamp-micros":
-            out = out.withColumn(name, F.timestamp_micros(F.col(name)))
-        elif kind == "timestamp-millis":
-            out = out.withColumn(name, F.timestamp_millis(F.col(name)))
-        elif kind == "local-timestamp-micros":
-            out = out.withColumn(
-                name,
-                F.expr(f"timestampadd(MICROSECOND, `{name}`, {_NTZ_EPOCH})"),
-            )
-        elif kind == "local-timestamp-millis":
-            out = out.withColumn(
-                name,
-                F.expr(f"timestampadd(MILLISECOND, `{name}`, {_NTZ_EPOCH})"),
-            )
-        elif kind == "date":
-            out = out.withColumn(name, F.date_from_unix_date(F.col(name)))
-        elif kind in ("decimal", "uuid"):
-            pass  # already final: the codec decodes these python-side
-        elif kind is not None:
-            raise ValueError(f"avro logical type {kind!r} unsupported")
-    if schema is not None:
-        # read_source's contract: schema both PROJECTS and sets types
-        # (r11 review finding — it used to project by name only,
-        # silently keeping the wire types)
-        out = out.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-    return out
-
-
 # ----------------------------------------------- Python Data Source ----
 #
-# The same OCF codec exposed through Spark 4's Python Data Source API,
-# so the format composes with the whole DataFrame surface natively:
+# The OCF codec exposed through Spark 4's Python Data Source API, so the
+# format composes with the whole DataFrame surface natively:
 #
-#     spark.dataSource.register(AvroOCFDataSource)
+#     register(spark)                                   # once per session
 #     spark.read.format("avro_ocf").load(dir)           # schema inferred
 #     df.write.format("avro_ocf").mode("overwrite").save(dir)
 #
@@ -1513,33 +1162,35 @@ def read_avro(
 # surface as real Timestamp/TimestampNTZ/Date values — converted with
 # exact timedelta arithmetic from the epoch (never float seconds, never
 # the session timezone; TimestampType rides tz-aware UTC datetimes).
-# Paths are posix/NFS like write_avro (a Python data source executes
-# Python-side by definition).
+# Paths are posix (a Python data source executes Python-side by
+# definition).
 
-def _header_of(fh) -> dict:
-    """Parse the container schema from an OPEN file: 64 KiB prefix
-    first, full read only when the header is pathologically large."""
-    head = fh.read(65536)
-    try:
-        avro_schema, _, _, _ = parse_header(head)
-    except (IndexError, ValueError, KeyError):
-        fh.seek(0)
-        avro_schema, _, _, _ = parse_header(fh.read())
-    return avro_schema
+# Auto-split policy: a container past the threshold never serializes on
+# ONE core by default — with no explicit split_bytes, the reader carves
+# it into AUTO_SPLIT_BYTES sync-marker ranges.
+AUTO_SPLIT_THRESHOLD = 128 * 1024 * 1024
+AUTO_SPLIT_BYTES = 32 * 1024 * 1024
 
 
-def _first_header(root: str) -> dict:
-    """Container schema from the first file under ``root`` (posix)."""
-    import os
+def _strip_file(path: str) -> str:
+    return path.removeprefix("file:")
 
-    for name in sorted(os.listdir(root)):
-        if name.startswith((".", "_")):
-            continue  # hidden/temp files (Hadoop convention)
-        fpath = os.path.join(root, name)
-        if os.path.isfile(fpath):
-            with open(fpath, "rb") as fh:
-                return _header_of(fh)
-    raise ValueError(f"avro_ocf: no files under {root}")
+
+def _container_files(root: str) -> "list[str]":
+    """The container files a read covers: ``root`` itself when it is a
+    file, else the visible files directly under it, sorted (hidden and
+    temp names are skipped — the Hadoop convention)."""
+    if os.path.isfile(root):
+        return [root]
+    files = [
+        os.path.join(root, name)
+        for name in sorted(os.listdir(root))
+        if not name.startswith((".", "_"))
+        and os.path.isfile(os.path.join(root, name))
+    ]
+    if not files:
+        raise ValueError(f"avro_ocf: no files under {root}")
+    return files
 
 
 def _refuse_millis_write(v):
@@ -1608,238 +1259,207 @@ def _temporal_codecs(avro_schema: dict):
     return dec, enc
 
 
-try:  # the Data Source API needs pyspark >= 4; the module works without
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceWriter,
-        InputPartition,
-        WriterCommitMessage,
-    )
+class _OCFPartition(InputPartition):
+    def __init__(self, path: str, start: int, end: int):
+        self.path = path
+        self.start = start
+        self.end = end
 
-    class _OCFPartition(InputPartition):
-        def __init__(self, path: str, start: int, end: int):
-            self.path = path
-            self.start = start
-            self.end = end
 
-    class _OCFReader(DataSourceReader):
-        def __init__(self, options: dict, avro_schema: dict):
-            self.options = options
-            self.avro_schema = avro_schema
+class _OCFReader(DataSourceReader):
+    def __init__(self, options: dict, avro_schema: dict, resolve: bool):
+        self.root = _strip_file(options["path"])
+        split = options.get("split_bytes")
+        self.split = int(split) if split is not None else None
+        if self.split is not None and self.split < 1:
+            raise ValueError(
+                f"avro_ocf: split_bytes must be positive (got {split!r})"
+            )
+        self.avro_schema = avro_schema
+        self.resolve = resolve
 
-        def partitions(self):
-            import os
-
-            root = _strip_file(self.options["path"])
-            split = self.options.get("split_bytes")
-            split = int(split) if split is not None else None
-            parts = []
-            for name in sorted(os.listdir(root)):
-                if name.startswith((".", "_")):
-                    continue  # hidden/temp files (Hadoop convention)
-                fpath = os.path.join(root, name)
-                if not os.path.isfile(fpath):
-                    continue
-                length = os.path.getsize(fpath)
-                # auto-split oversized containers when the user gave no
-                # explicit split_bytes: a multi-GB file must never
-                # serialize on one core by default (r12; the DS is
-                # posix-path by definition, so always eligible).
-                # Options override the module thresholds — partitions()
-                # executes in a separate Python worker, so options are
-                # the only per-read control surface.
-                eff = split
-                if eff is None and length > int(
-                    self.options.get(
-                        "auto_split_threshold", AUTO_SPLIT_THRESHOLD
-                    )
-                ):
-                    eff = int(
-                        self.options.get("auto_split_bytes", AUTO_SPLIT_BYTES)
-                    )
-                if eff:
-                    s = 0
-                    while s < length:
-                        parts.append(
-                            _OCFPartition(fpath, s, min(s + eff, length))
-                        )
-                        s += eff
-                else:
-                    parts.append(_OCFPartition(fpath, 0, length))
-            if not parts:
-                raise ValueError(
-                    f"avro_ocf: no files under {root}"
+    def partitions(self):
+        parts = []
+        for fpath in _container_files(self.root):
+            length = os.path.getsize(fpath)
+            step = self.split
+            if step is None:
+                # auto-split an oversized container when no explicit
+                # split_bytes was given: a multi-GB file must never
+                # serialize on one core by default
+                step = (
+                    AUTO_SPLIT_BYTES
+                    if length > AUTO_SPLIT_THRESHOLD
+                    else max(length, 1)
                 )
-            return parts
+            parts.extend(
+                _OCFPartition(fpath, s, min(s + step, length))
+                for s in range(0, max(length, 1), step)
+            )
+        return parts
 
-        def read(self, partition: "_OCFPartition"):
-            rows = _decode_file_range(
-                partition.path,
+    def read(self, partition: "_OCFPartition"):
+        names = [f["name"] for f in self.avro_schema["fields"]]
+        dec, _ = _temporal_codecs(self.avro_schema)
+        with open(partition.path, "rb") as fh:
+            for r in _decode_range(
+                fh,
                 partition.start,
                 partition.end,
                 self.avro_schema,
-            )
-            names = [f["name"] for f in self.avro_schema["fields"]]
-            dec, _ = _temporal_codecs(self.avro_schema)
-            for r in rows:
+                resolve=self.resolve,
+            ):
                 vals = [r[n] for n in names]
                 for i, fn in dec.items():
                     if vals[i] is not None:
                         vals[i] = fn(vals[i])
                 yield tuple(vals)
 
-    import dataclasses
 
-    @dataclasses.dataclass
-    class _OCFCommit(WriterCommitMessage):
-        tmp: str
-        final: str
+@dataclasses.dataclass
+class _OCFCommit(WriterCommitMessage):
+    tmp: str
+    final: str
 
-    class _OCFWriter(DataSourceWriter):
-        def __init__(self, options: dict, schema: T.StructType,
-                     overwrite: bool):
-            import os
-            import shutil
-            import uuid
 
-            self.path = _strip_file(options["path"])
-            self.codec = options.get("codec", "deflate")
-            self.avro_schema = spark_to_avro_schema(schema)
-            # One token per WRITE JOB (driver-side __init__, serialized
-            # into every task): temp names carry it so abort()/commit()
-            # sweep only THIS job's leftovers — an aborted job must
-            # never remove a concurrent writer's in-flight temps
-            # (r11 ADVICE, low).
-            self.job_token = uuid.uuid4().hex
-            if self.codec not in ("null", "deflate", "snappy"):
-                raise ValueError(
-                    f"avro codec {self.codec!r} unsupported "
-                    "(null/deflate/snappy)"
-                )
-            # driver-side, before any task runs — same overwrite
-            # semantics as write_avro
-            if overwrite and os.path.isdir(self.path):
-                shutil.rmtree(self.path)
-            os.makedirs(self.path, exist_ok=True)
-
-        def write(self, rows) -> "_OCFCommit":
-            # Two-phase commit (r11 fourth-pass review findings): the
-            # task writes a HIDDEN temp file (uuid-named — unique
-            # across applications, unlike taskAttemptId, so append
-            # from a fresh run can never clobber) and only the
-            # driver-side commit() renames the files of SUCCESSFUL
-            # attempts to their visible names.  A retried/speculative
-            # attempt's orphan temp is ignored by the reader (hidden
-            # files are excluded from listings) and swept by abort().
-            import os
-            import uuid
-
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            _, enc = _temporal_codecs(self.avro_schema)
-
-            def wire_rows():
-                for row in rows:
-                    vals = list(row)
-                    for i, fn in enc.items():
-                        if vals[i] is not None:
-                            vals[i] = fn(vals[i])
-                    yield tuple(vals)
-
-            sync = md5(
-                (json.dumps(self.avro_schema) + str(pid)).encode()
-            ).digest()
-            buf = encode_container(
-                self.avro_schema, wire_rows(), codec=self.codec, sync=sync
+class _OCFWriter(DataSourceWriter):
+    def __init__(self, options: dict, schema: T.StructType, overwrite: bool):
+        self.path = _strip_file(options["path"])
+        self.codec = options.get("codec", "deflate")
+        self.avro_schema = spark_to_avro_schema(schema)
+        # One token per WRITE JOB (driver-side __init__, serialized
+        # into every task): temp names carry it so abort()/commit()
+        # sweep only THIS job's leftovers — an aborted job must never
+        # remove a concurrent writer's in-flight temps (r11 ADVICE, low).
+        self.job_token = uuid.uuid4().hex
+        if self.codec not in ("null", "deflate", "snappy"):
+            raise ValueError(
+                f"avro codec {self.codec!r} unsupported "
+                "(null/deflate/snappy)"
             )
-            token = uuid.uuid4().hex
-            final = f"part-{pid:05d}-{token}.avro"
-            tmp = f"._tmp-{self.job_token}-{final}"
-            with open(os.path.join(self.path, tmp), "wb") as fh:
-                fh.write(buf)
-            return _OCFCommit(tmp=tmp, final=final)
+        # driver-side, before any task runs: a re-run with fewer
+        # partitions must not leave stale part files behind
+        if overwrite and os.path.isdir(self.path):
+            shutil.rmtree(self.path)
+        os.makedirs(self.path, exist_ok=True)
 
-        def _sweep_job_temps(self) -> None:
-            # Remove THIS job's remaining temps (failed/speculative
-            # attempts that never reached commit).  Scoped by
-            # job_token: a concurrent append job's temps are untouched.
-            import os
+    def write(self, rows) -> "_OCFCommit":
+        # Two-phase commit (r11 fourth-pass review findings): the task
+        # writes a HIDDEN temp file (uuid-named — unique across
+        # applications, unlike taskAttemptId, so append from a fresh
+        # run can never clobber) and only the driver-side commit()
+        # renames the files of SUCCESSFUL attempts to their visible
+        # names.  A retried/speculative attempt's orphan temp is
+        # ignored by the reader (hidden files are excluded from
+        # listings) and swept by abort().
+        from pyspark import TaskContext
 
-            prefix = f"._tmp-{self.job_token}-"
-            for name in os.listdir(self.path):
-                if name.startswith(prefix):
-                    try:
-                        os.remove(os.path.join(self.path, name))
-                    except OSError:
-                        pass
+        pid = TaskContext.get().partitionId()
+        _, enc = _temporal_codecs(self.avro_schema)
 
-        def commit(self, messages) -> None:
-            import os
+        def wire_rows():
+            for row in rows:
+                vals = list(row)
+                for i, fn in enc.items():
+                    if vals[i] is not None:
+                        vals[i] = fn(vals[i])
+                yield tuple(vals)
 
-            for m in messages:
-                os.replace(
-                    os.path.join(self.path, m.tmp),
-                    os.path.join(self.path, m.final),
-                )
-            self._sweep_job_temps()
+        sync = md5((json.dumps(self.avro_schema) + str(pid)).encode()).digest()
+        buf = encode_container(
+            self.avro_schema, wire_rows(), codec=self.codec, sync=sync
+        )
+        final = f"part-{pid:05d}-{uuid.uuid4().hex}.avro"
+        tmp = f"._tmp-{self.job_token}-{final}"
+        with open(os.path.join(self.path, tmp), "wb") as fh:
+            fh.write(buf)
+        return _OCFCommit(tmp=tmp, final=final)
 
-        def abort(self, messages) -> None:
-            self._sweep_job_temps()
+    def _sweep_job_temps(self) -> None:
+        # Remove THIS job's remaining temps (failed/speculative
+        # attempts that never reached commit).  Scoped by job_token: a
+        # concurrent append job's temps are untouched.
+        prefix = f"._tmp-{self.job_token}-"
+        for name in os.listdir(self.path):
+            if name.startswith(prefix):
+                try:
+                    os.remove(os.path.join(self.path, name))
+                except OSError:
+                    pass
 
-    class AvroOCFDataSource(DataSource):
-        """`avro_ocf` — the OCF codec as a first-class Spark 4 Python
-        Data Source (register once per session):
-
-        >>> spark.dataSource.register(AvroOCFDataSource)
-        >>> spark.read.format("avro_ocf").load(path)
-        >>> df.write.format("avro_ocf").mode("overwrite").save(path)
-
-        Options: ``split_bytes`` (read: sync-marker range splitting),
-        ``codec`` (write: null/deflate/snappy)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "avro_ocf"
-
-        def schema(self):
-            avro_schema = _first_header(_strip_file(self.options["path"]))
-            return avro_to_spark_schema(
-                avro_schema, logical_as_temporal=True
+    def commit(self, messages) -> None:
+        for m in messages:
+            os.replace(
+                os.path.join(self.path, m.tmp),
+                os.path.join(self.path, m.final),
             )
+        self._sweep_job_temps()
 
-        def reader(self, schema: T.StructType) -> "_OCFReader":
-            # read() decodes every container field and emits
-            # temporal objects per the CONTAINER schema, so the
-            # declared schema must equal the inferred one — names AND
-            # types (a name-only check let .schema('ts long') pass and
-            # then die deep in Arrow conversion; r11 third-pass review
-            # finding).  Project/cast after load.
-            avro_schema = _first_header(_strip_file(self.options["path"]))
-            inferred = avro_to_spark_schema(
-                avro_schema, logical_as_temporal=True
+    def abort(self, messages) -> None:
+        self._sweep_job_temps()
+
+
+class AvroOCFDataSource(DataSource):
+    """`avro_ocf` — the OCF codec as a first-class Spark 4 Python
+    Data Source (register once per session, see :func:`register`):
+
+    >>> spark.read.format("avro_ocf").load(path)
+    >>> df.write.format("avro_ocf").mode("overwrite").save(path)
+
+    Options: ``split_bytes`` (read: sync-marker range splitting),
+    ``reader_schema`` (read: an Avro record schema as JSON; every
+    container resolves to it), ``codec`` (write: null/deflate/snappy)."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "avro_ocf"
+
+    def _avro_schema(self) -> dict:
+        """The read's Avro schema: the reader schema when given, else
+        the first container's own."""
+        given = self.options.get("reader_schema")
+        if given is not None:
+            return json.loads(given)
+        root = _strip_file(self.options["path"])
+        with open(_container_files(root)[0], "rb") as fh:
+            return _read_header(fh)[0]
+
+    def schema(self):
+        return avro_to_spark_schema(self._avro_schema())
+
+    def reader(self, schema: T.StructType) -> "_OCFReader":
+        # read() decodes every container field and emits temporal
+        # objects per the read's Avro schema, so the declared schema
+        # must equal the inferred one — names AND types (a name-only
+        # check let .schema('ts long') pass and then die deep in Arrow
+        # conversion; r11 third-pass review finding).  Project/cast
+        # after load.
+        avro_schema = self._avro_schema()
+        inferred = avro_to_spark_schema(avro_schema)
+        # names AND types, but NOT nullability: a DDL-parsed user
+        # schema is all-nullable while inferred non-union fields are
+        # not, and refusing over that printed two identical
+        # simpleString()s (r11 fourth-pass review finding)
+        got = [(f.name, f.dataType) for f in schema.fields]
+        want = [(f.name, f.dataType) for f in inferred.fields]
+        if got != want:
+            raise ValueError(
+                "avro_ocf: reader schema must equal the container "
+                f"schema {inferred.simpleString()} (got "
+                f"{schema.simpleString()}) — project/cast after load"
             )
-            # names AND types, but NOT nullability: a DDL-parsed user
-            # schema is all-nullable while inferred non-union fields
-            # are not, and refusing over that printed two identical
-            # simpleString()s (r11 fourth-pass review finding)
-            got = [(f.name, f.dataType) for f in schema.fields]
-            want = [(f.name, f.dataType) for f in inferred.fields]
-            if got != want:
-                raise ValueError(
-                    "avro_ocf: reader schema must equal the container "
-                    f"schema {inferred.simpleString()} (got "
-                    f"{schema.simpleString()}) — project/cast after load"
-                )
-            return _OCFReader(dict(self.options), avro_schema)
+        return _OCFReader(
+            dict(self.options),
+            avro_schema,
+            resolve="reader_schema" in self.options,
+        )
 
-        def writer(self, schema: T.StructType, overwrite: bool):
-            return _OCFWriter(dict(self.options), schema, overwrite)
-
-except ImportError:  # pragma: no cover - pyspark >= 4 everywhere here
-    AvroOCFDataSource = None  # type: ignore[assignment]
+    def writer(self, schema: T.StructType, overwrite: bool):
+        return _OCFWriter(dict(self.options), schema, overwrite)
 
 
-def _strip_file(path: str) -> str:
-    return path.removeprefix("file:")
+def register(spark: SparkSession) -> None:
+    """Register ``avro_ocf`` on ``spark`` unless it already is."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(AvroOCFDataSource.name()):
+        spark.dataSource.register(AvroOCFDataSource)

@@ -26,7 +26,9 @@ same pipeline writes Parquet.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -526,32 +528,44 @@ def read_source(
     deliberately schema-less exploration).
 
     Self-describing columnar/row formats need no guard: ``orc`` rides
-    Spark's built-in datasource; ``avro`` routes to the pure-Python
-    distributed OCF reader (the external ``spark-avro`` jar is not
-    shipped here — see avro.py)."""
+    Spark's built-in datasource; ``avro`` loads through the pure-Python
+    ``avro_ocf`` Data Source (the external ``spark-avro`` jar is not
+    shipped here — see avro.py), registered on the session when it is
+    not yet.  Its options are ``split_bytes`` and ``reader_schema`` (an
+    Avro record schema, dict or JSON); ``schema=`` projects and casts
+    after the load, and a requested column absent from the container
+    raises.  The Avro path is posix-only: a path with a scheme other
+    than ``file:`` raises."""
     if fmt == "avro":
         from . import avro as _avro
 
-        split = options.pop("split_bytes", None)
-        if options:
+        if urlsplit(path).scheme not in ("", "file"):
             raise ValueError(
-                f"read_source(avro): options {sorted(options)} unsupported "
-                "by the OCF reader (only split_bytes)"
+                f"read_source(avro): {path!r} is not a local path — the "
+                "Avro OCF path is posix-only (plain or file: paths)"
             )
-        sch = None
-        if schema is not None:
-            sch = (
-                T._parse_datatype_string(schema)
-                if isinstance(schema, str)
-                else schema
+        unknown = sorted(set(options) - {"split_bytes", "reader_schema"})
+        if unknown:
+            raise ValueError(
+                f"read_source(avro): options {unknown} unsupported by the "
+                "OCF reader (only split_bytes and reader_schema)"
             )
-        return _avro.read_avro(
-            spark,
-            path,
-            schema=sch,
-            # no explicit split -> "auto": oversized local containers
-            # split themselves (r12); explicit int forces a size
-            split_bytes=int(split) if split is not None else "auto",
+        if isinstance(options.get("reader_schema"), dict):
+            options["reader_schema"] = json.dumps(options["reader_schema"])
+        _avro.register(spark)
+        out = spark.read.format("avro_ocf").options(**options).load(path)
+        if schema is None:
+            return out
+        if isinstance(schema, str):
+            schema = T._parse_datatype_string(schema)
+        missing = [f.name for f in schema.fields if f.name not in out.columns]
+        if missing:
+            raise ValueError(
+                f"read_source(avro): requested columns {missing} absent "
+                "from the container schema"
+            )
+        return out.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
     reader = spark.read
     if schema is not None:

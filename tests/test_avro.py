@@ -1,11 +1,11 @@
 """Avro OCF source/sink (E4 source-matrix completion, VERDICT r10
-item 3): pure-Python container codec + the distributed Spark glue.
+item 3): pure-Python container codec + the ``avro_ocf`` Data Source.
 
-The external spark-avro jar is absent in this environment, so the
-reader/writer in parquet_to_postgres_spark/avro.py implement the public
-OCF spec directly; these tests pin byte-level codec behavior (zigzag
-edges, block forms, sync markers) AND the Spark-side round-trip
-through ``etl.read_source``.
+The external spark-avro jar is absent in this environment, so
+parquet_to_postgres_spark/avro.py implements the public OCF spec
+directly; these tests pin byte-level codec behavior (zigzag edges,
+block forms, sync markers) AND the Spark-side round-trip through
+``df.write.format("avro_ocf")`` and ``etl.read_source``.
 """
 
 from __future__ import annotations
@@ -31,17 +31,37 @@ def _multiset(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _write(df, path, codec="deflate"):
+    A.register(df.sparkSession)
+    df.write.format("avro_ocf").mode("overwrite").option(
+        "codec", codec
+    ).save(path)
+
+
+def _parts(path):
+    return sorted(n for n in os.listdir(path) if n.endswith(".avro"))
+
+
+def _write_container(path, schema, rows, codec="deflate", block_rows=4096):
+    """One container written by the codec directly (block size under
+    the test's control), as ``path/part-00000.avro``."""
+    os.makedirs(path)
+    with open(f"{path}/part-00000.avro", "wb") as fh:
+        fh.write(
+            A.encode_container(schema, rows, codec, block_rows=block_rows)
+        )
+
+
 @pytest.mark.smoke
 def test_avro_roundtrip_lineitem_timestamps(spark):
     """lineitem (bigint/int/double/string/timestamp_ntz) survives a
     4-partition write + distributed read bit-exactly; the temporal
-    columns cross the Python boundary as JVM-converted epoch micros,
-    so the values cannot drift with the session timezone."""
+    columns are converted with exact integer timedelta arithmetic, so
+    the values cannot drift with the session timezone."""
     src = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
     with tempfile.TemporaryDirectory() as d:
-        manifest = A.write_avro(src.repartition(4), f"{d}/avro")
-        assert manifest["files"] == 4
-        assert manifest["rows"] == src.count()
+        _write(src.repartition(4), f"{d}/avro")
+        assert len(_parts(f"{d}/avro")) == 4
         back = read_source(spark, f"{d}/avro", "avro")
         assert back.schema == src.schema
         assert _multiset(back) == _multiset(src)
@@ -58,7 +78,7 @@ def test_avro_nested_types_and_null_codec(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         for codec in ("null", "deflate"):
-            A.write_avro(df, f"{d}/{codec}", codec=codec)
+            _write(df, f"{d}/{codec}", codec=codec)
             back = read_source(spark, f"{d}/{codec}", "avro")
             assert back.schema == df.schema
             assert _multiset(back) == _multiset(df)
@@ -69,27 +89,39 @@ def test_avro_empty_frame_keeps_schema(spark):
         F.col("id"), F.lit("x").alias("s"), F.current_timestamp().alias("ts")
     )
     with tempfile.TemporaryDirectory() as d:
-        manifest = A.write_avro(df.where(F.lit(False)), f"{d}/avro")
-        assert manifest["rows"] == 0
+        # no partitions: Spark still runs one write task over an empty
+        # partition, which leaves one header-only container
+        empty = df.where(F.lit(False))
+        assert empty.rdd.getNumPartitions() == 0
+        _write(empty, f"{d}/avro")
+        (part,) = _parts(f"{d}/avro")
+        with open(f"{d}/avro/{part}", "rb") as fh:
+            assert A.decode_container(fh.read())[1] == []
         back = read_source(spark, f"{d}/avro", "avro")
         assert back.count() == 0
         assert [f.name for f in back.schema.fields] == ["id", "s", "ts"]
 
 
 def test_avro_schema_projection_and_missing_column(spark):
+    """read_source's contract: schema both PROJECTS and sets types
+    (r11 review finding — it used to project by name only), and a
+    requested column absent from the container raises."""
     src = spark.read.parquet(f"{SF_SMOKE}/nation.parquet")
     with tempfile.TemporaryDirectory() as d:
-        A.write_avro(src, f"{d}/avro")
+        _write(src, f"{d}/avro")
         want = T.StructType(
             [
                 T.StructField("n_name", T.StringType()),
                 T.StructField("n_regionkey", T.LongType()),
             ]
         )
+        assert src.schema["n_regionkey"].dataType == T.IntegerType()
         back = read_source(spark, f"{d}/avro", "avro", schema=want)
-        assert back.columns == ["n_name", "n_regionkey"]
+        assert back.schema.simpleString() == (
+            "struct<n_name:string,n_regionkey:bigint>"
+        )
         assert _multiset(back) == _multiset(
-            src.select("n_name", "n_regionkey")
+            src.select("n_name", F.col("n_regionkey").cast("long"))
         )
         with pytest.raises(ValueError, match="absent"):
             read_source(
@@ -105,7 +137,7 @@ def test_avro_is_self_describing_no_infer_warning(spark, recwarn):
     (CSV/JSON without a schema do warn — pinned in test_etl.py)."""
     src = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
     with tempfile.TemporaryDirectory() as d:
-        A.write_avro(src, f"{d}/avro")
+        _write(src, f"{d}/avro")
         read_source(spark, f"{d}/avro", "avro").collect()
     assert not [w for w in recwarn if issubclass(w.category, UserWarning)]
 
@@ -146,6 +178,25 @@ def test_avro_refusals(spark):
         )
     with pytest.raises(ValueError, match="not an Avro"):
         A.parse_header(b"PAR1notavro" * 4)
+    # the Avro path opens files with open(): any scheme but file: refuses
+    # before Spark touches the path
+    for url in ("hdfs://nn:8020/data/avro", "s3a://bucket/avro"):
+        with pytest.raises(ValueError, match="posix-only"):
+            read_source(spark, url, "avro")
+
+
+def test_avro_split_bytes_must_be_positive(spark):
+    """split_bytes below 1 refuses up front: 0 would read whole-file
+    silently, and a negative step plans no byte ranges (an empty read)."""
+    for bad in ("0", "-1"):
+        with pytest.raises(ValueError, match="must be positive"):
+            A._OCFReader({"path": "unused", "split_bytes": bad}, {}, False)
+    with pytest.raises(ValueError, match="invalid literal"):
+        A._OCFReader({"path": "unused", "split_bytes": "big"}, {}, False)
+    with tempfile.TemporaryDirectory() as d:
+        _write(spark.range(10), f"{d}/avro")
+        with pytest.raises(Exception, match="must be positive"):
+            read_source(spark, f"{d}/avro", "avro", split_bytes="0").collect()
 
 
 def test_codec_zigzag_edges_and_block_forms():
@@ -193,44 +244,19 @@ def test_codec_sync_marker_mismatch_detected():
     buf[-1] ^= 0xFF  # corrupt the trailing sync marker
     with pytest.raises(ValueError, match="sync marker"):
         A.decode_container(bytes(buf))
-
-
-def test_write_avro_overwrites_stale_part_files(spark):
-    """r11 review finding: a re-run with FEWER partitions must not
-    leave stale part files for read_avro's directory listing to
-    silently include — write_avro owns overwrite semantics exactly
-    like DataFrameWriter.mode('overwrite')."""
-    with tempfile.TemporaryDirectory() as d:
-        big = spark.range(100).select("id", F.lit("x").alias("s"))
-        A.write_avro(big.repartition(4), f"{d}/avro")
-        small = spark.range(7).select("id", F.lit("y").alias("s"))
-        A.write_avro(small.repartition(1), f"{d}/avro")
-        back = read_source(spark, f"{d}/avro", "avro")
-        assert back.count() == 7
-        assert set(r["s"] for r in back.collect()) == {"y"}
-
-
-def test_read_avro_schema_casts_types(spark):
-    """read_source's contract: schema both projects AND sets types
-    (r11 review finding — it used to project by name only)."""
-    src = spark.read.parquet(f"{SF_SMOKE}/supplier.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        A.write_avro(src.select("s_suppkey", "s_acctbal"), f"{d}/avro")
-        back = read_source(
-            spark, f"{d}/avro", "avro",
-            schema="s_suppkey int, s_acctbal float",
-        )
-        assert back.schema.simpleString() == (
-            "struct<s_suppkey:int,s_acctbal:float>"
-        )
-        assert back.count() == src.count()
+    # a container cut inside a block header refuses instead of dropping
+    # the block: 200 rows make a two-byte count varint, cut after byte 1
+    full = A.encode_container(schema, [(1,)] * 200, codec="null")
+    data_off = A.parse_header(full)[3]
+    with pytest.raises(ValueError, match="truncated block header"):
+        A.decode_container(full[: data_off + 1])
 
 
 def test_avro_nested_logical_temporal_refused():
     """r11 review finding: an externally-written container with a
     NESTED temporal logical type must refuse, not decode the field as
-    a plausible-but-wrong raw long (the restore loop is top-level
-    only — same honest-refusal contract as the write side)."""
+    a plausible-but-wrong raw long (the temporal conversion is
+    top-level only — same honest-refusal contract as the write side)."""
     bad = {
         "type": "record",
         "name": "r",
@@ -255,7 +281,7 @@ def test_avro_nested_logical_temporal_refused():
     }
     with pytest.raises(ValueError, match="nested 'timestamp-micros'"):
         A.avro_to_spark_schema(bad)
-    # top-level temporal logicals still map to their wire type
+    # top-level temporal logicals map to Spark temporal types
     ok = {
         "type": "record",
         "name": "r",
@@ -266,10 +292,10 @@ def test_avro_nested_logical_temporal_refused():
             }
         ],
     }
-    assert A.avro_to_spark_schema(ok)["ts"].dataType == T.LongType()
+    assert A.avro_to_spark_schema(ok)["ts"].dataType == T.TimestampType()
 
 
-def test_read_avro_header_prefix_and_giant_header_fallback(spark):
+def test_avro_header_prefix_and_giant_header_fallback(spark):
     """r11 review finding: schema discovery reads a 64 KiB PREFIX, not
     the whole first file; a pathological header larger than the prefix
     still works through the full-content fallback."""
@@ -277,7 +303,7 @@ def test_read_avro_header_prefix_and_giant_header_fallback(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df = spark.range(20).select("id")
-        A.write_avro(df, f"{d}/small")
+        _write(df, f"{d}/small")
         assert read_source(spark, f"{d}/small", "avro").count() == 20
 
         # hand-build a container whose header alone exceeds 64 KiB via
@@ -287,17 +313,17 @@ def test_read_avro_header_prefix_and_giant_header_fallback(spark):
             "name": "r",
             "fields": [{"name": "x" * 70000, "type": "long"}],
         }
-        buf = A.encode_container(schema, [(1,), (2,)], codec="null")
         assert len(A._header(schema, "null", b"\x00" * 16)) > 65536
-        os.makedirs(f"{d}/big")
-        with open(f"{d}/big/part-00000.avro", "wb") as fh:
-            fh.write(buf)
-        back = A.read_avro(spark, f"{d}/big")
+        _write_container(f"{d}/big", schema, [(1,), (2,)], "null")
+        back = read_source(spark, f"{d}/big", "avro")
         assert back.count() == 2
+        # a path naming one container reads just that file
+        one = read_source(spark, f"{d}/big/part-00000.avro", "avro")
+        assert one.count() == 2
         assert _json.loads(_json.dumps(schema)) == schema  # sanity
 
 
-def test_read_avro_sync_marker_splitting(spark):
+def test_avro_sync_marker_splitting(spark):
     """r11 scale path: one large container parallelizes across byte
     ranges via the sync-marker split algorithm.  The ownership rule is
     Avro's own pastSync convention — a range owns blocks whose
@@ -308,28 +334,26 @@ def test_read_avro_sync_marker_splitting(spark):
         "id", (F.col("id") * 3).alias("x"),
         F.concat(F.lit("r"), F.col("id")).alias("s"),
     )
-    want = _multiset(df)
+    rows = df.collect()
+    want = sorted(map(tuple, rows))
+    schema = A.spark_to_avro_schema(df.schema)
     with tempfile.TemporaryDirectory() as d:
         for codec in ("deflate", "null"):
-            A.write_avro(
-                df.coalesce(1), f"{d}/{codec}", codec=codec, block_rows=400
+            _write_container(
+                f"{d}/{codec}", schema, rows, codec, block_rows=400
             )
             size = os.path.getsize(f"{d}/{codec}/part-00000.avro")
             one_block = size * 400 // 20000  # ~ bytes per block
             for sb in (size + 10, size // 7, one_block + 1, one_block - 1,
                        97):
-                got = A.read_avro(spark, f"{d}/{codec}", split_bytes=sb)
+                got = read_source(spark, f"{d}/{codec}", "avro", split_bytes=sb)
                 assert _multiset(got) == want, (codec, sb)
-            many = A.read_avro(spark, f"{d}/{codec}", split_bytes=size // 7)
+            many = read_source(
+                spark, f"{d}/{codec}", "avro", split_bytes=size // 7
+            )
             assert many.rdd.getNumPartitions() >= 7
-        # read_source plumbs the option through (string-typed, as all
-        # datasource options are)
-        from parquet_to_postgres_spark.etl import read_source as rs
-
-        got = rs(spark, f"{d}/deflate", "avro", split_bytes="5000")
-        assert _multiset(got) == want
         with pytest.raises(ValueError, match="only split_bytes"):
-            rs(spark, f"{d}/deflate", "avro", bogus="1")
+            read_source(spark, f"{d}/deflate", "avro", bogus="1")
 
 
 def test_avro_python_data_source_roundtrip(spark):
@@ -338,63 +362,33 @@ def test_avro_python_data_source_roundtrip(spark):
     one registration.  Round-trip is multiset-exact including temporal
     columns (timestamp_ntz via naive-datetime timedelta arithmetic,
     timestamp via tz-aware UTC, date via ordinal — never float seconds,
-    never the session timezone), split_bytes partitions the read, and
-    mode('overwrite') clears stale part files."""
+    never the session timezone), and mode('overwrite') clears stale
+    part files."""
     import datetime
 
-    spark.dataSource.register(A.AvroOCFDataSource)
+    rows = [
+        (
+            1,
+            datetime.datetime(2024, 6, 15, 2, 30, 0, 123456),
+            datetime.datetime(1969, 12, 31, 23, 59, 59, 999999),
+            datetime.date(1999, 12, 31),
+        ),
+        (2, None, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, ts timestamp, ntz timestamp_ntz, day date"
+    )
     with tempfile.TemporaryDirectory() as d:
-        li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        li.repartition(3).write.format("avro_ocf").mode("overwrite").save(
-            f"{d}/li"
-        )
-        back = spark.read.format("avro_ocf").load(f"{d}/li")
-        assert back.schema == li.schema
-        assert _multiset(back) == _multiset(li)
-        sp = (
-            spark.read.format("avro_ocf")
-            .option("split_bytes", "20000")
-            .load(f"{d}/li")
-        )
-        assert sp.rdd.getNumPartitions() > 3
-        assert _multiset(sp) == _multiset(li)
-
-        rows = [
-            (
-                1,
-                datetime.datetime(2024, 6, 15, 2, 30, 0, 123456),
-                datetime.datetime(1969, 12, 31, 23, 59, 59, 999999),
-                datetime.date(1999, 12, 31),
-            ),
-            (2, None, None, None),
-        ]
-        df = spark.createDataFrame(
-            rows, "id long, ts timestamp, ntz timestamp_ntz, day date"
-        )
-        df.write.format("avro_ocf").mode("overwrite").save(f"{d}/t")
+        _write(df.repartition(4), f"{d}/t")
+        assert len(_parts(f"{d}/t")) == 4
         got = spark.read.format("avro_ocf").load(f"{d}/t")
         assert got.schema == df.schema
         assert _multiset(got) == _multiset(df)
 
         # overwrite drops stale parts (4 files -> 1)
-        df.limit(1).repartition(1).write.format("avro_ocf").mode(
-            "overwrite"
-        ).save(f"{d}/t")
-        assert spark.read.format("avro_ocf").load(f"{d}/t").count() == 1
-
-        # interop both ways: containers written by the mapPartitions
-        # sink read through the data source, and data-source output
-        # reads through the mapInPandas reader — same values
-        A.write_avro(df, f"{d}/x")
-        assert _multiset(spark.read.format("avro_ocf").load(f"{d}/x")) == (
-            _multiset(df)
-        )
-        df.limit(2).write.format("avro_ocf").mode("overwrite").save(
-            f"{d}/y"
-        )
-        assert _multiset(read_source(spark, f"{d}/y", "avro")) == (
-            _multiset(df.limit(2))
-        )
+        _write(df.limit(1).repartition(1), f"{d}/t")
+        assert len(_parts(f"{d}/t")) == 1
+        assert read_source(spark, f"{d}/t", "avro").count() == 1
 
 
 def test_avro_data_source_append_and_schema_refusal(spark):
@@ -403,7 +397,7 @@ def test_avro_data_source_append_and_schema_refusal(spark):
     later job clobbers), and a declared reader schema that differs
     from the container schema — by TYPE, not just name — refuses up
     front instead of dying in Arrow conversion."""
-    spark.dataSource.register(A.AvroOCFDataSource)
+    A.register(spark)
     with tempfile.TemporaryDirectory() as d:
         df = spark.range(10).select("id", F.lit("a").alias("s"))
         df.repartition(2).write.format("avro_ocf").mode("overwrite").save(
@@ -468,18 +462,18 @@ def test_avro_schema_resolution_across_evolved_files(spark):
         want = sorted(
             [(1, None, 2.5), (2, None, 2.5), (3, "x", 2.5), (4, None, 2.5)]
         )
-        got = A.read_avro(spark, f"{d}/data", reader_schema=reader)
+        got = read_source(spark, f"{d}/data", "avro", reader_schema=reader)
         assert got.schema.simpleString() == (
             "struct<id:bigint,s:string,n:double>"
         )
         assert _multiset(got) == want
-        split = A.read_avro(
-            spark, f"{d}/data", reader_schema=reader, split_bytes=50
+        split = read_source(
+            spark, f"{d}/data", "avro", reader_schema=reader, split_bytes=50
         )
         assert _multiset(split) == want
         # without a reader schema, drift still refuses honestly
         with pytest.raises(Exception, match="schema drift"):
-            A.read_avro(spark, f"{d}/data").collect()
+            read_source(spark, f"{d}/data", "avro").collect()
 
     # build-time refusals: missing default, unresolvable primitive
     with pytest.raises(ValueError, match="no default"):
@@ -573,7 +567,7 @@ def test_avro_data_source_write_non_utc_host_tz():
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
-        spark.dataSource.register(A.AvroOCFDataSource)
+        A.register(spark)
         df = spark.createDataFrame(
             [(1, datetime.datetime(2024, 1, 15, 12, 0, 0))],
             "id long, ts timestamp",
@@ -586,10 +580,7 @@ def test_avro_data_source_write_non_utc_host_tz():
         rows = []
         for f in sorted(glob.glob(os.path.join(d, "part-*.avro"))):
             with open(f, "rb") as fh:
-                schema, _, _, _ = A.parse_header(fh.read(65536))
-            rows += A._decode_file_range(
-                f, 0, os.path.getsize(f), schema
-            )
+                rows += A.decode_container(fh.read())[1]
         assert len(rows) == 1, rows
         # 2024-01-15 12:00 America/New_York == 2024-01-15T17:00:00Z
         want = 1705338000000000
@@ -697,85 +688,53 @@ def test_snappy_roundtrip_and_avro_framing():
 
 
 def test_avro_snappy_container_spark_roundtrip(spark):
-    """codec='snappy' through every distributed path: the
-    mapPartitions sink, the whole-file read, the sync-split read, and
-    the avro_ocf Data Source writer option."""
+    """codec='snappy' through the distributed paths: the avro_ocf
+    writer option, the whole-file read and the sync-split read."""
     src = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").limit(4000)
     with tempfile.TemporaryDirectory() as d:
-        A.write_avro(src.repartition(3), f"{d}/s", codec="snappy")
-        with open(
-            next(
-                os.path.join(f"{d}/s", n)
-                for n in sorted(os.listdir(f"{d}/s"))
-                if n.endswith(".avro")
-            ),
-            "rb",
-        ) as fh:
+        _write(src.repartition(3), f"{d}/s", codec="snappy")
+        with open(f"{d}/s/{_parts(f'{d}/s')[0]}", "rb") as fh:
             _, codec, _, _ = A.parse_header(fh.read(65536))
         assert codec == "snappy"
         back = read_source(spark, f"{d}/s", "avro")
         assert back.schema == src.schema
         assert _multiset(back) == _multiset(src)
-        split = A.read_avro(spark, f"{d}/s", split_bytes=20000)
+        split = read_source(spark, f"{d}/s", "avro", split_bytes=20000)
         assert _multiset(split) == _multiset(src)
-
-        spark.dataSource.register(A.AvroOCFDataSource)
-        df = spark.range(100).select(
-            "id", (F.col("id") % 7).cast("string").alias("s")
-        )
-        df.write.format("avro_ocf").mode("overwrite").option(
-            "codec", "snappy"
-        ).save(f"{d}/ds")
-        got = spark.read.format("avro_ocf").load(f"{d}/ds")
-        assert _multiset(got) == _multiset(df)
 
 
 def test_avro_auto_split_large_container(spark, monkeypatch):
-    """r12: split_bytes defaults to 'auto' — a local container past
-    AUTO_SPLIT_THRESHOLD splits itself (read_avro AND the avro_ocf
-    data source), small ones read whole-file, and explicit None forces
-    whole-file.  Thresholds monkeypatched so a small fixture exercises
-    the policy."""
+    """r12: with no split_bytes, a container past AUTO_SPLIT_THRESHOLD
+    splits itself into AUTO_SPLIT_BYTES ranges and a small one reads
+    whole-file.  partitions() runs in a separate Python worker, where a
+    monkeypatch is invisible, so the split plan is checked in-process
+    on the reader with the constants patched; the rows of such a plan
+    are checked with an explicit split_bytes read."""
     df = spark.range(2000).select(
         "id", (F.col("id") % 13).cast("string").alias("s")
     )
+    rows = df.collect()
+    schema = A.spark_to_avro_schema(df.schema)
     with tempfile.TemporaryDirectory() as d:
-        A.write_avro(df.coalesce(1), f"{d}/one", codec="null", block_rows=64)
-        size = sum(
-            os.path.getsize(os.path.join(f"{d}/one", n))
-            for n in os.listdir(f"{d}/one")
-            if n.endswith(".avro")
-        )
+        _write_container(f"{d}/one", schema, rows, "null", block_rows=64)
+        size = os.path.getsize(f"{d}/one/part-00000.avro")
+        reader = A._OCFReader({"path": f"{d}/one"}, schema, False)
+
         monkeypatch.setattr(A, "AUTO_SPLIT_THRESHOLD", size // 2)
         monkeypatch.setattr(A, "AUTO_SPLIT_BYTES", max(size // 5, 1))
+        plan = reader.partitions()
+        assert len(plan) >= 5
+        assert [(p.start, p.end) for p in plan][:2] == [
+            (0, size // 5),
+            (size // 5, 2 * (size // 5)),
+        ]
+        got = read_source(spark, f"{d}/one", "avro", split_bytes=size // 5)
+        assert got.rdd.getNumPartitions() == len(plan)
+        assert _multiset(got) == sorted(map(tuple, rows))
 
-        got = A.read_avro(spark, f"{d}/one")  # default == "auto"
-        assert got.rdd.getNumPartitions() >= 5
-        assert _multiset(got) == _multiset(df)
-        # explicit None: whole-file
-        whole = A.read_avro(spark, f"{d}/one", split_bytes=None)
-        assert _multiset(whole) == _multiset(df)
         # below threshold: no split
         monkeypatch.setattr(A, "AUTO_SPLIT_THRESHOLD", size * 10)
-        small = A.read_avro(spark, f"{d}/one")
-        assert small.rdd.getNumPartitions() == 1
-        assert _multiset(small) == _multiset(df)
-
-        # data source path: same policy, posix by definition.
-        # partitions() executes in a separate Python worker where the
-        # monkeypatch is invisible, so the thresholds ride options.
-        spark.dataSource.register(A.AvroOCFDataSource)
-        ds = (
-            spark.read.format("avro_ocf")
-            .option("auto_split_threshold", str(size // 2))
-            .option("auto_split_bytes", str(max(size // 5, 1)))
-            .load(f"{d}/one")
-        )
-        assert ds.rdd.getNumPartitions() >= 5
-        assert _multiset(ds) == _multiset(df)
-
-        with pytest.raises(ValueError, match="int, None, or 'auto'"):
-            A.read_avro(spark, f"{d}/one", split_bytes="big")
+        assert [(p.start, p.end) for p in reader.partitions()] == [(0, size)]
 
 
 def test_avro_decimal_roundtrip_and_nesting(spark):
@@ -798,19 +757,13 @@ def test_avro_decimal_roundtrip_and_nesting(spark):
     schema = "id long, d decimal(7,2), st struct<big:decimal(38,3)>"
     df = spark.createDataFrame(rows, schema)
     with tempfile.TemporaryDirectory() as d:
-        A.write_avro(df, f"{d}/w")
+        _write(df, f"{d}/w")
         back = read_source(spark, f"{d}/w", "avro")
         assert back.schema == df.schema
         assert _multiset(back) == _multiset(df)
         # split read decodes the same
-        sp = A.read_avro(spark, f"{d}/w", split_bytes=200)
+        sp = read_source(spark, f"{d}/w", "avro", split_bytes=200)
         assert _multiset(sp) == _multiset(df)
-
-        spark.dataSource.register(A.AvroOCFDataSource)
-        df.write.format("avro_ocf").mode("overwrite").save(f"{d}/ds")
-        got = spark.read.format("avro_ocf").load(f"{d}/ds")
-        assert got.schema == df.schema
-        assert _multiset(got) == _multiset(df)
 
     # wire-level pin: unscaled big-endian two's complement, minimal
     # length for bytes-backed decimals (Avro spec)
@@ -887,7 +840,7 @@ def test_avro_wild_logicals_enum_fixed_uuid_millis(spark):
     """r12 interop read: containers from OTHER writers carrying enum
     (-> string), fixed (-> binary), uuid (-> string), and
     timestamp-millis / local-timestamp-millis (-> timestamp / ntz via
-    JVM-side restore) all read correctly; time-of-day logicals refuse
+    the datetime codec) all read correctly; time-of-day logicals refuse
     honestly (Spark has no TIME type here)."""
     import datetime
 
@@ -929,7 +882,7 @@ def test_avro_wild_logicals_enum_fixed_uuid_millis(spark):
         os.makedirs(f"{d}/w")
         with open(f"{d}/w/a.avro", "wb") as fh:
             fh.write(A.encode_container(sch, rows, "snappy"))
-        got = A.read_avro(spark, f"{d}/w")
+        got = read_source(spark, f"{d}/w", "avro")
         assert got.schema.simpleString() == (
             "struct<color:string,fx:binary,u:string,"
             "ts:timestamp,lts:timestamp_ntz>"
@@ -954,12 +907,6 @@ def test_avro_wild_logicals_enum_fixed_uuid_millis(spark):
         bad[r.pos] = 14
         with pytest.raises(ValueError, match="out of range"):
             A.decode_container(bytes(bad))
-        # DS path reads the same container (millis via datetime codec)
-        spark.dataSource.register(A.AvroOCFDataSource)
-        ds = spark.read.format("avro_ocf").load(f"{d}/w")
-        assert sorted(
-            (r["u"], r["ts"], r["lts"]) for r in ds.collect()
-        ) == sorted((r["u"], r["ts"], r["lts"]) for r in got.collect())
 
     # time-of-day logicals refuse at schema-mapping time
     tsch = {
@@ -1228,7 +1175,9 @@ def test_avro_resolution_nonunion_writer_to_union_reader(spark):
                     w_nullable, [(None, None, None)], "null"
                 )
             )
-        out = A.read_avro(spark, f"{d}/data", reader_schema=r_nullable)
+        out = read_source(
+            spark, f"{d}/data", "avro", reader_schema=r_nullable
+        )
         assert sorted(
             ((r0["x"], r0["d"], r0["s"]) for r0 in out.collect()),
             key=repr,
